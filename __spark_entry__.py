@@ -4858,89 +4858,6 @@ def _q_readability_scores(spark, sf_dir):
     return with_readability(_docs(spark, sf_dir).select("doc_id", "text"))
 
 
-def _q_dedup_clusters_affinity(spark, sf_dir):
-    """E198 acting mode (cfg.affinity_rounds): full pipeline clusters
-    with the SIMILAR labeling produced by ONE Borůvka contraction
-    round — only mutual-best-edge stars merge (the finest hierarchy
-    cut), borderline edges defer; size >= 2 by construction. Oracle:
-    the standard twin's edges + 1 unrolled contraction + the same
-    score/keeper tail over the affinity labels
-    (dedup_clusters_affinity_sql)."""
-    import dataclasses
-
-    from mediaduplicatefinder_spark.pipeline import run_dedup
-
-    cfg = dataclasses.replace(DEFAULT_CONFIG, affinity_rounds=1)
-    res = run_dedup(
-        spark, _docs_as_pages(spark, sf_dir), cfg, use_html=False
-    )
-    return res.clusters.select(
-        "url", "cluster_id", "kind", "score", "is_keeper"
-    )
-
-
-def _q_dedup_clusters_lpa(spark, sf_dir):
-    """E192 acting mode (cfg.lpa_refine_rounds): full pipeline
-    clusters with the SIMILAR labeling produced by 4 synchronous
-    label-propagation rounds instead of connected components —
-    community seams inside chained components become cluster
-    boundaries, min-url relabel keeps the cluster_id contract, size-1
-    communities drop (F3). Oracle: the standard twin's edges + 4
-    unrolled vote rounds + relabel + the same score/keeper tail over
-    the LPA labels (dedup_clusters_lpa_sql)."""
-    import dataclasses
-
-    from mediaduplicatefinder_spark.pipeline import run_dedup
-
-    cfg = dataclasses.replace(DEFAULT_CONFIG, lpa_refine_rounds=4)
-    res = run_dedup(
-        spark, _docs_as_pages(spark, sf_dir), cfg, use_html=False
-    )
-    return res.clusters.select(
-        "url", "cluster_id", "kind", "score", "is_keeper"
-    )
-
-
-def _q_dedup_clusters_truss(spark, sf_dir):
-    """E191 acting mode (cfg.truss_filter): full pipeline clusters
-    with the verified edge relation restricted to its 4-truss (round-3
-    state) before connected components — single-linkage chaining is
-    gone because every cluster merge is witnessed by >= 2 triangles;
-    exact sha clusters unaffected. Oracle: the standard dedup twin up
-    through edges + 3 unrolled truss rounds + the same closure/keeper
-    tail over the survivors (dedup_clusters_truss_sql)."""
-    import dataclasses
-
-    from mediaduplicatefinder_spark.pipeline import run_dedup
-
-    cfg = dataclasses.replace(
-        DEFAULT_CONFIG, truss_filter=4, truss_rounds=3
-    )
-    res = run_dedup(
-        spark, _docs_as_pages(spark, sf_dir), cfg, use_html=False
-    )
-    return res.clusters.select(
-        "url", "cluster_id", "kind", "score", "is_keeper"
-    )
-
-
-def _q_dedup_clusters_exact(spark, sf_dir):
-    """Full pipeline clusters with the EXACT candidate channel
-    (cfg.exact_candidates, E160): candidates from the prefix-filtered
-    exact join instead of LSH banding — recall 1.0 by construction.
-    Oracle: oracle/lsh_sql.dedup_clusters_exact_sql — the naive gated
-    all-pairs candidate relation + the same fold32 verify + recursive
-    CC + keeper tail, so value-equality certifies the whole exact
-    pipeline end to end."""
-    import dataclasses
-
-    from mediaduplicatefinder_spark.pipeline import run_dedup
-
-    cfg = dataclasses.replace(DEFAULT_CONFIG, exact_candidates=True)
-    res = run_dedup(spark, _docs_as_pages(spark, sf_dir), cfg, use_html=False)
-    return res.clusters.select("url", "cluster_id", "kind", "score", "is_keeper")
-
-
 def _q_cluster_cohesion(spark, sf_dir):
     """E161 cluster cohesion audit: per SIMILAR dedup cluster, the
     exact pairwise-Jaccard profile of its members (min/mean/below-
@@ -6090,11 +6007,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "mutual_knn_clusters": _q_mutual_knn_clusters,
         "html_table_cells": _q_html_table_cells,
         "webtable_match_pairs": _q_webtable_match_pairs,
-        "dedup_clusters_truss": _q_dedup_clusters_truss,
         "affinity_clusters": _q_affinity_clusters,
         "bcubed_agreement": _q_bcubed_agreement,
-        "dedup_clusters_lpa": _q_dedup_clusters_lpa,
-        "dedup_clusters_affinity": _q_dedup_clusters_affinity,
         "readability_scores": _q_readability_scores,
         "purity_agreement": _q_purity_agreement,
         # -- session-14 block, behind session-13 (SURVEY §8.6) ----------
@@ -6124,7 +6038,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "imatch_groups": _q_imatch_groups,
         "ppjoin_pairs": _q_ppjoin_pairs,
         "weighted_jaccard_pairs": _q_weighted_jaccard_pairs,
-        "dedup_clusters_exact": _q_dedup_clusters_exact,
         "cluster_cohesion": _q_cluster_cohesion,
         "phash_media": _q_phash_media,
         "phash_dup_pairs": _q_phash_dup_pairs,
@@ -9581,12 +9494,6 @@ LEFT JOIN sizes s ON s.cluster_id = f.cluster_id
     )
     out["paragraph_dedup"] = paragraph_dedup_sql(_para_inject)
 
-    from mediaduplicatefinder_spark.oracle.lsh_sql import (
-        dedup_clusters_exact_sql,
-    )
-
-    out["dedup_clusters_exact"] = dedup_clusters_exact_sql(DEFAULT_CONFIG)
-
     from mediaduplicatefinder_spark.operators.cohesion import cohesion_tail_sql
     from mediaduplicatefinder_spark.oracle.lsh_sql import (
         _clusters_flagged_ctes,
@@ -9642,10 +9549,6 @@ LEFT JOIN sizes s ON s.cluster_id = f.cluster_id
 
     out["mutual_knn_clusters"] = mutual_knn_sql(k=5)
 
-    out["dedup_clusters_truss"] = lsh_sql.dedup_clusters_truss_sql(
-        DEFAULT_CONFIG, k=4, rounds=3
-    )
-
     from mediaduplicatefinder_spark.operators.affinity import (
         affinity_tail_sql,
     )
@@ -9654,14 +9557,6 @@ LEFT JOIN sizes s ON s.cluster_id = f.cluster_id
         lsh_sql.lsh_base_cte(DEFAULT_CONFIG, recursive=True)
         + lsh_sql._exact_and_edges_ctes(DEFAULT_CONFIG)
         + affinity_tail_sql(rounds=2)
-    )
-
-    out["dedup_clusters_lpa"] = lsh_sql.dedup_clusters_lpa_sql(
-        DEFAULT_CONFIG, rounds=4
-    )
-
-    out["dedup_clusters_affinity"] = lsh_sql.dedup_clusters_affinity_sql(
-        DEFAULT_CONFIG, rounds=1
     )
 
     from mediaduplicatefinder_spark.functions.textstats import (

@@ -100,57 +100,6 @@ def main() -> None:
     log(f"[bench] pages_dedup {best:.1f}s min of {HEADLINE_REPS} "
         f"(cold {cold:.1f}s)  pairs={m.n_similar_pairs} exact={m.n_exact_members}")
 
-    # ---- NFC-fused headline (VERDICT r3 item 8): same pipeline with
-    # cfg.nfc_normalize=True — the normalization is fused into the
-    # signature mapInPandas (signatures.py), claimed zero extra passes;
-    # the on/off steady-state delta is the published proof. Warm (the
-    # reps above already paid cold costs), min-of-HEADLINE_REPS.
-    from dataclasses import replace as _cfg_replace
-
-    cfg_nfc = _cfg_replace(DEFAULT_CONFIG, nfc_normalize=True)
-    best_nfc = float("inf")
-    for rep in range(max(1, HEADLINE_REPS)):
-        t0 = time.time()
-        res = run_dedup(spark, pages, cfg_nfc)
-        noop_write(res.clusters)
-        dt = time.time() - t0
-        best_nfc = min(best_nfc, dt)
-        res.pairs.unpersist()
-        log(f"[bench] pages_dedup_nfc rep{rep} {dt:.1f}s")
-    extras["pages_dedup_nfc_sec"] = round(best_nfc, 3)
-    extras["pages_dedup_nfc_delta_pct"] = round(
-        100.0 * (best_nfc - best) / best, 1
-    )
-    log(f"[bench] pages_dedup NFC-fused {best_nfc:.1f}s "
-        f"({extras['pages_dedup_nfc_delta_pct']:+.1f}% vs off)")
-
-    # ---- OPH headline (E172): same pipeline with cfg.use_oph=True —
-    # the 128-permutation minhash slot fill replaced by the single-pass
-    # OPH signature (functions/oph.py). The on/off steady-state delta
-    # quantifies the signature stage's share of pipeline cost; pair /
-    # exact counts are reported so recall drift (if any) is visible in
-    # the JSON, not hidden.
-    cfg_oph = _cfg_replace(DEFAULT_CONFIG, use_oph=True)
-    best_oph, m_oph = float("inf"), None
-    for rep in range(max(1, HEADLINE_REPS)):
-        t0 = time.time()
-        res = run_dedup(spark, pages, cfg_oph)
-        noop_write(res.clusters)
-        m_oph = res.metrics.collect()[0]
-        dt = time.time() - t0
-        best_oph = min(best_oph, dt)
-        res.pairs.unpersist()
-        log(f"[bench] pages_dedup_oph rep{rep} {dt:.1f}s")
-    extras["pages_dedup_oph_sec"] = round(best_oph, 3)
-    extras["pages_dedup_oph_delta_pct"] = round(
-        100.0 * (best_oph - best) / best, 1
-    )
-    extras["pages_dedup_oph_n_pairs"] = int(m_oph.n_similar_pairs)
-    extras["pages_dedup_oph_n_exact"] = int(m_oph.n_exact_members)
-    log(f"[bench] pages_dedup OPH {best_oph:.1f}s "
-        f"({extras['pages_dedup_oph_delta_pct']:+.1f}% vs std) "
-        f"pairs={m_oph.n_similar_pairs}")
-
     # ---- engine LSH vs exact-Jaccard twin on the documents table ----
     # min-of-N (VERDICT r2 item 4): the sandbox host is shared, and a
     # contended window once printed a 15x phantom regression on a query

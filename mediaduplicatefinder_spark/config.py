@@ -11,15 +11,21 @@ Thresholds mirror the reference exactly (SURVEY.md §2.2 F8):
 - ``size_ratio_min``    0.3  — document size prefilter (main_cli.cpp:297-299)
 - ``name_sim_threshold`` 0.7 — name shortcut in the doc dispatcher (main_cli.cpp:304)
 - ``tfidf_threshold``   0.6  — office TF-IDF cosine (office_comparer_batch.py:204,213)
-- ``excel_threshold``   0.7  — positional cell-match ratio (office_comparer_batch.py:196)
-- ``audio_threshold``   0.9  — audio name similarity (main_cli.cpp:256)
-- ``archive_size_ratio`` 0.8 / ``archive_name_sim`` 0.6 (main_cli.cpp:325)
 - token length filter > 2 after alnum-strip (main_cli.cpp:280)
+
+The media rules' literals (audio name > 0.9, archive size > 0.8 and
+name > 0.6, main_cli.cpp:256,325) sit with the operators and queries
+that apply them (operators/similarity.py, __spark_entry__.py).
+
+Every field here is read by the engine (guarded by
+tests/test_config_fields.py): ``run_dedup`` has one composition, and a
+knob that nothing reads is deleted rather than kept as a default-off
+mode.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -35,18 +41,9 @@ class EngineConfig:
     # profile: synthetic url slugs degenerate the char-bag metric
     # (SURVEY.md P8 note); file-path-like corpora turn it on.
     tfidf_threshold: float = 0.6
-    excel_threshold: float = 0.7
-    audio_threshold: float = 0.9
-    archive_size_ratio: float = 0.8
-    archive_name_sim: float = 0.6
     min_token_len: int = 3  # "len > 2" (main_cli.cpp:280)
 
     # ---- engine-new signature parameters (SURVEY.md §7 step 3) ----
-    nfc_normalize: bool = False  # fuse Unicode NFC into the signature
-    # pass (functions/unicodenorm.py rationale): canonically-equal but
-    # byte-different spellings then share sha256/MinHash keys. OFF by
-    # default — the reference-parity invariant is byte-identical
-    # extracted text, and NFC changes bytes.
     shingle_k: int = 1          # k=1: MinHash over the token SET, estimating
     # exactly the reference's token-set Jaccard (main_cli.cpp:285-294);
     # raise to 3+ for order-sensitive web-scale shingling profiles.
@@ -57,15 +54,6 @@ class EngineConfig:
     # J=0.85 -> 0.99999998; the >0.6 reference threshold means true pairs
     # sit above 0.6, so LSH recall clears the 0.99 bar (verified in tests).
     minhash_seed: int = 0x5EED_0001
-    use_oph: bool = False  # E172 (functions/oph.py): fill the num_perm
-    # signature slots via one-permutation hashing with rotation
-    # densification — ONE remix pass over the token stream instead of
-    # num_perm=128 (the map-side hot-loop cost at 100 TB), same
-    # downstream band fold / channels / verify. OFF by default: the
-    # parity profile keeps the standard signature so the full-pipeline
-    # SQL/python oracles stay bit-identical; the OPH profile is an
-    # unbiased Jaccard estimator with k-permutation-comparable variance
-    # (candidate recall re-measured in tests + the bench OPH window).
     simhash_bits: int = 64
     simhash_seeds: tuple[int, int] = (0x5EED_A11A, 0x5EED_D11F)
     # two independent SimHashes play the aHash/dHash pair roles
@@ -95,9 +83,7 @@ class EngineConfig:
     # (north_rule: "matching the reference's cluster assignments"), which
     # chain edges + connected components preserve for single-cluster hot
     # buckets — the dominant skew case (boilerplate farms).
-    salt_width: int = 16          # sub-buckets for hot LSH buckets
     cc_max_iterations: int = 20   # connected-components driver loop bound
-    checkpoint_every: int = 1     # localCheckpoint cadence in the CC loop
     cc_shuffle_partitions: int = 8  # FLOOR for the CC loop's exchange
     # width: parts = clamp(n_edges/100k, cc_shuffle_partitions,
     # 2*defaultParallelism). Label tables are tiny vs the corpus; small
@@ -107,71 +93,6 @@ class EngineConfig:
     # executors and LOSES them on executor failure; cluster deployments
     # set True (+ spark.sparkContext.setCheckpointDir) so CC rounds
     # checkpoint to reliable storage and survive executor loss.
-
-    # ---- candidate channels beyond minhash bands ----
-    exact_candidates: bool = False  # E160: replace LSH banding with the
-    # prefix-filtered EXACT candidate channel (operators/ppjoin.
-    # exact_candidate_pairs) — candidate recall exactly 1.0 by the
-    # prefix-filtering lemma, no banding parameters, no bucket caps.
-    # Costs one extra corpus-token-grain groupBy (per-lang df) plus a
-    # rarest-token-first prefix self-join; use for runs that must
-    # CERTIFY recall 1.0 (audits/legal holds). Downstream decisions are
-    # identical — verify/CC/keepers see the same pair contract.
-    truss_filter: int = 0  # E191 acting mode: when >= 3, restrict the
-    # verified similar-edge relation to its k-truss (operators/kcore.
-    # ktruss_peel) BEFORE connected components — every cluster merge is
-    # then witnessed by >= k-2 triangles, the published chaining remedy
-    # (Cohen 2008) with no new score threshold. 0 = off (the reference-
-    # parity default: the reference single-links). EXACT sha clusters
-    # are unaffected; member scores carry from the surviving edges.
-    truss_rounds: int | None = None  # None = peel to the true k-truss
-    # fixpoint (production); a fixed R pins the round-R state for the
-    # unrolled bit-exact oracle (dedup_clusters_truss_sql).
-    lpa_refine_rounds: int = 0  # E192 acting mode: when > 0, the
-    # SIMILAR labeling is synchronous label propagation (operators/
-    # lpa.lpa_communities, that many rounds) instead of connected
-    # components — community SEAMS inside chained components become
-    # cluster boundaries with no threshold parameter (two template
-    # farms joined by one borderline bridge split apart). Communities
-    # relabel to min member url (the cluster_id contract) and size-1
-    # communities drop (F3 group-size semantics). 0 = off (reference-
-    # parity single linkage). Mutually exclusive with truss_filter in
-    # spirit (both replace the merge rule); if both set, truss peels
-    # first and LPA votes on the survivors.
-    affinity_rounds: int = 0  # E198 acting mode: when > 0, the SIMILAR
-    # labeling is that many Borůvka contraction rounds (operators/
-    # affinity.affinity_clusters) instead of connected components —
-    # the quality-greedy merge rule: each round every cluster merges
-    # along only its single best edge, so borderline edges defer to
-    # later rounds (round-R = the NeurIPS'17 hierarchy cut; the
-    # fixpoint equals CC, so this mode only matters at small R).
-    # Every clustered node merges in round 1, so all communities have
-    # >= 2 members (F3 holds by construction). 0 = off. The third
-    # merge rule beside truss_filter (density) and lpa_refine_rounds
-    # (seams); if several are set: truss peels first, then the
-    # labeling mode (affinity wins over lpa if both > 0).
-    use_supershingle_channel: bool = False  # E132 over the SIGNATURE
-    # table: sorted band_hashes in non-overlapping groups of
-    # supershingle_group, each group hashed to one key — a collision
-    # needs g sketch values to agree, so buckets hold only
-    # near-identical docs. Additive channel (candidates only grow;
-    # verify keeps precision). supershingle_only=True drops the
-    # per-band and simhash channels entirely — the low-cost profile
-    # for a first boilerplate-collapse pass at crawl scale: ~b/g band
-    # rows per doc instead of b + 2*simhash_bands.
-    supershingle_only: bool = False
-    supershingle_group: int = 2  # groups of g BAND hashes; each band
-    # hash already condenses minhash_rows=4 raw values, so g=2 means 8
-    # consecutive sketch agreements per key — Broder's canonical
-    # super-shingle width. g=2 over b=32 -> 16 keys/doc (vs 96 band
-    # rows on the full channel); measured on the 200-doc smoke corpus:
-    # verified-pair share 0.72 overall, 0.83 at J>=0.9, 8/9 at J>=0.95
-    # (g=4 measured 0.41/0.50 — too strict). Random J=0.5 pairs
-    # collide at ~0.5^8 per group: the junk-bucket rate stays near
-    # zero, which is the profile's point.
-
-    # ---- datagen (FIXTURES.md) ----
-    datagen_seed: int = 42
 
     @property
     def num_perm(self) -> int:

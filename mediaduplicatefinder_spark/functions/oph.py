@@ -49,8 +49,7 @@ def oph_signature_flat(
     seed: int,
 ) -> np.ndarray:
     """(n_docs, num_perm) densified OPH signatures from a FLAT uint64
-    hash array with per-hash doc indices (the sigcore pipeline layout:
-    no per-doc list rebuild).  ONE remix pass + one scatter-min, then
+    hash array with per-hash doc indices (no per-doc list rebuild).  ONE remix pass + one scatter-min, then
     the vectorized circular-rotation fill."""
     n = len(lens)
     P = num_perm

@@ -86,19 +86,6 @@ class SignatureComputer:
         sig = np.full((n_docs, cfg.num_perm), np.iinfo(np.uint64).max, dtype=np.uint64)
         sims = [np.zeros(n_docs, dtype=np.uint64), np.zeros(n_docs, dtype=np.uint64)]
         total = int(lens.sum())
-        if cfg.use_oph and total:
-            # E172: one remix pass + scatter-min + rotation fill fills
-            # every signature slot — the 128-permutation loop below is
-            # skipped entirely (functions/oph.py; bit-identical to the
-            # oph_lsh_pairs SQL twin's derivation).
-            from mediaduplicatefinder_spark.functions.oph import (
-                oph_signature_flat,
-            )
-
-            doc_idx = np.repeat(np.arange(n_docs, dtype=np.int64), lens)
-            sig = oph_signature_flat(
-                flat, doc_idx, lens, cfg.num_perm, cfg.minhash_seed
-            )
         if total:
             u64max = np.uint64(np.iinfo(np.uint64).max)
             weights = np.uint64(1) << np.arange(64, dtype=np.uint64)
@@ -127,12 +114,11 @@ class SignatureComputer:
                 m = np.empty((e - s, Lc), dtype=np.uint64)  # reused buffer
 
                 # ---- MinHash: remix slice per perm, gather, masked min ----
-                if not cfg.use_oph:  # E172 fills sig in one pass above
-                    for i, seed in enumerate(self.seeds):
-                        mixed = hashing.splitmix64(flat_c ^ seed)
-                        np.take(mixed, pos, out=m)
-                        m[pad] = u64max
-                        sig[s:e, i] = m.min(axis=1)
+                for i, seed in enumerate(self.seeds):
+                    mixed = hashing.splitmix64(flat_c ^ seed)
+                    np.take(mixed, pos, out=m)
+                    m[pad] = u64max
+                    sig[s:e, i] = m.min(axis=1)
 
                 # ---- SimHash x2: gather remix, zero pads, bit sums ----
                 for k, seed in enumerate(cfg.simhash_seeds):

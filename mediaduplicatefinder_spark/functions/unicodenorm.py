@@ -15,10 +15,10 @@ compatibility sequences is the parity proof.
 Scale shape: map-only, no shuffle; the UDF is the documented slow path
 (Python), but normalization must see every byte exactly once and the
 per-row work is O(len) C code — the same cost class as the extraction
-UDF this engine already fuses into its first narrow pass. A real
-deployment fuses ``nfc_expr`` into page_signatures' mapInPandas (same
-batch loop, zero extra passes); the standalone operator exists for the
-query/oracle surface.
+UDF this engine already fuses into its first narrow pass. ``run_dedup``
+does not normalize: reference parity needs byte-identical extracted
+text, and NFC changes bytes. A corpus that wants canonical bytes runs
+this operator over its pages before dedup.
 """
 
 from __future__ import annotations

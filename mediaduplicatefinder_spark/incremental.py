@@ -92,9 +92,8 @@ from pyspark.sql import functions as F
 
 from mediaduplicatefinder_spark.config import DEFAULT_CONFIG, EngineConfig
 from mediaduplicatefinder_spark.operators.candidates import (
-    _minhash_bands,
-    _simhash_bands,
     candidate_pairs,
+    lsh_bands,
 )
 from mediaduplicatefinder_spark.operators.clustering import connected_components
 from mediaduplicatefinder_spark.operators.signatures import page_signatures
@@ -137,13 +136,6 @@ def store_exists(spark: SparkSession, db: str) -> bool:
 def init_store(spark: SparkSession, db: str, location: str | None = None) -> None:
     loc = f" LOCATION '{location}'" if location else ""
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}{loc}")
-
-
-def _bands_of(sigs: DataFrame, cfg: EngineConfig) -> DataFrame:
-    nonempty = sigs.filter(F.col("n_shingles") > 0)
-    return _minhash_bands(nonempty, cfg).unionByName(
-        _simhash_bands(nonempty, cfg)
-    )
 
 
 def _write_bucketed(df: DataFrame, table: str, bucket_cols: list[str]) -> None:
@@ -312,7 +304,7 @@ def _retract_urls(
     if synth.take(1):
         _write_bucketed(synth, _t(db, "sigs"), ["doc_key"])
         _write_bucketed(
-            _bands_of(synth.withColumn("sha256", F.lit(None).cast("string")), cfg),
+            lsh_bands(synth.withColumn("sha256", F.lit(None).cast("string")), cfg),
             _t(db, "bands"),
             ["lang", "band", "bh"],
         )
@@ -742,7 +734,7 @@ def ingest_batch(
         all_sigs = survivors
         cands = nn_cands
     if not skip_band_joins and not first:
-        bands_new = _bands_of(survivors, cfg)
+        bands_new = lsh_bands(survivors, cfg)
         bands_old = spark.table(_t(db, "bands"))
         a2 = [F.col("doc_key2").alias("key_a2")] if wide else []
         b2 = [F.col("doc_key2").alias("key_b2")] if wide else []
@@ -849,7 +841,7 @@ def ingest_batch(
 
     # ---- publish: append new rows; replace labels ----
     _write_bucketed(survivors.drop("sha256"), _t(db, "sigs"), ["doc_key"])
-    _write_bucketed(_bands_of(survivors, cfg), _t(db, "bands"), ["lang", "band", "bh"])
+    _write_bucketed(lsh_bands(survivors, cfg), _t(db, "bands"), ["lang", "band", "bh"])
     # member ledger: EVERY new identity, exact dups included
     _write_bucketed(
         sigs_new.select("sha256", "url"), _t(db, "members"), ["sha256"]

@@ -4,7 +4,7 @@ Bateni/Behnezhad/Derakhshan/Hajiaghayi/Kiveris/Lattanzi/Mirrokni,
 2017) — the MapReduce-native hierarchical clustering the paper builds
 from Borůvka's 1926 MST algorithm.
 
-Where it sits: connected components (the pipeline default) merges
+Where it sits: connected components (the pipeline's labeling) merges
 through ANY verified edge; the truss gate (kcore.py) demands triangle
 density; LPA (lpa.py) votes. Affinity clustering is the
 QUALITY-GREEDY member — each round every cluster merges along only
@@ -139,9 +139,8 @@ def affinity_clusters(
 
 def affinity_ctes_sql(rounds: int = 2) -> str:
     """The unrolled Borůvka CTE chain ending in ``amap{rounds}`` over
-    the dedup oracle's ``edges`` CTE (no final SELECT — composable
-    into the standalone tail and the ``cfg.affinity_rounds`` clusters
-    oracle; requires ``lsh_base_cte(recursive=True)``)."""
+    the dedup oracle's ``edges`` CTE (no final SELECT; the standalone
+    tail appends it; requires ``lsh_base_cte(recursive=True)``)."""
     parts = [
         """,
 ed0 AS MATERIALIZED (SELECT url_a, url_b, score FROM edges),

@@ -15,10 +15,9 @@ Plan shape (scale rationale): ONE groupBy shuffle on (lang, band, bh)
 collects each bucket, then an Arrow mapInPandas expands pairs map-side
 with numpy (`triu_indices` for normal buckets) — no window sorts, no
 self-join. Pair dedupe across bands/channels is the one remaining
-shuffle (SE4: score each pair once). For 10^12-doc corpora, a
-pre-grouping salt split of ultra-hot buckets (cfg.salt_width) bounds
-collect_list size; at bench scale the bucket cap already bounds
-expansion.
+shuffle (SE4: score each pair once). The bucket cap below bounds pair
+expansion, not a hot bucket's ``collect_list`` size, which grows with
+the bucket.
 
 Cheap prefilters run INSIDE the expansion, before the dedupe shuffle
 (the reference's cheap-predicate-first staging, §4.1):
@@ -108,38 +107,11 @@ def _simhash_bands(sigs: DataFrame, cfg: EngineConfig) -> DataFrame:
     ).select(*cols, F.col("c.band").alias("band"), F.col("c.bh").alias("bh"))
 
 
-def _supershingle_bands(sigs: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """E132 super-shingles OVER the MinHash band hashes
-    (operators/supershingle.py is the standalone text-level operator;
-    this is the signature-table integration): sort the doc's
-    ``band_hashes``, hash non-overlapping groups of ``g`` consecutive
-    values — a bucket collision needs g sketch values to agree, so
-    this channel's buckets hold only near-identical docs (Broder
-    WWW'97). Band ids offset past the minhash + simhash channels to
-    keep key spaces disjoint."""
-    g = cfg.supershingle_group
-    nss = cfg.minhash_bands // g
-    base = cfg.minhash_bands + 2 * cfg.simhash_bands
-    sorted_bh = F.array_sort("band_hashes")
-    chunks = [
-        F.struct(
-            F.lit(base + i).alias("band"),
-            F.xxhash64(
-                F.concat_ws(
-                    "-",
-                    F.transform(
-                        F.slice(sorted_bh, i * g + 1, g),
-                        lambda x: x.cast("string"),
-                    ),
-                )
-            ).alias("bh"),
-        )
-        for i in range(nss)
-    ]
-    cols = _band_cols(cfg)
-    return sigs.select(
-        *cols, F.explode(F.array(*chunks)).alias("c")
-    ).select(*cols, F.col("c.band").alias("band"), F.col("c.bh").alias("bh"))
+def lsh_bands(sigs: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG) -> DataFrame:
+    """Both band channels (MinHash + SimHash) of the non-empty docs —
+    the one band relation every LSH join in the engine keys on."""
+    nonempty = sigs.filter(F.col("n_shingles") > 0)
+    return _minhash_bands(nonempty, cfg).unionByName(_simhash_bands(nonempty, cfg))
 
 
 def _expand_buckets(cfg: EngineConfig):
@@ -221,9 +193,7 @@ def _expand_buckets(cfg: EngineConfig):
 
 
 def candidate_pairs(
-    sigs: DataFrame,
-    cfg: EngineConfig = DEFAULT_CONFIG,
-    use_simhash_channel: bool = True,
+    sigs: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG
 ) -> CandidateResult:
     """signature table -> (candidates(lang, key_a, key_b, size_ratio),
     bucket_metrics). Pair identity is canonicalized key_a < key_b over
@@ -231,15 +201,7 @@ def candidate_pairs(
     — any total order works; doc_key order shuffles 8 bytes, not urls).
     The verify stage restores urls and re-canonicalizes url_a < url_b."""
     wide = cfg.doc_key_bits == 128
-    nonempty = sigs.filter(F.col("n_shingles") > 0)
-    if cfg.supershingle_only:
-        bands = _supershingle_bands(nonempty, cfg)
-    else:
-        bands = _minhash_bands(nonempty, cfg)
-        if use_simhash_channel:
-            bands = bands.unionByName(_simhash_bands(nonempty, cfg))
-        if cfg.use_supershingle_channel:
-            bands = bands.unionByName(_supershingle_bands(nonempty, cfg))
+    bands = lsh_bands(sigs, cfg)
 
     aggs = [
         F.collect_list("doc_key").alias("keys"),

@@ -44,7 +44,11 @@ def connected_components(
     reliable ``checkpoint()`` (caller must have set
     ``spark.sparkContext.setCheckpointDir``) so the loop survives
     executor loss on real clusters; default stays ``localCheckpoint``
-    (faster, single-process sandbox)."""
+    (faster, single-process sandbox).
+
+    Raises ``RuntimeError`` when labels still change after
+    ``cfg.cc_max_iterations`` rounds, rather than returning unconverged
+    labels (which would split true components)."""
     spark = edges.sparkSession
     conf = spark.conf
     shuf_before = conf.get("spark.sql.shuffle.partitions")
@@ -121,6 +125,12 @@ def connected_components(
             # round (star components exit immediately)
             if ck.filter(F.col("new_id") != F.col("cluster_id")).count() == 0:
                 break
+        else:
+            raise RuntimeError(
+                "connected_components did not converge in "
+                f"cc_max_iterations={cfg.cc_max_iterations} rounds; "
+                "raise the bound"
+            )
         return labels
     finally:
         conf.set("spark.sql.shuffle.partitions", shuf_before)

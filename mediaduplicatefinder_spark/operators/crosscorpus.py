@@ -56,25 +56,8 @@ from pyspark.sql import functions as F
 
 from mediaduplicatefinder_spark.config import DEFAULT_CONFIG, EngineConfig
 from mediaduplicatefinder_spark.functions.text import hamming_expr
-from mediaduplicatefinder_spark.operators.candidates import (
-    _minhash_bands,
-    _simhash_bands,
-    _supershingle_bands,
-)
+from mediaduplicatefinder_spark.operators.candidates import lsh_bands
 from mediaduplicatefinder_spark.operators.verify import jaccard_hashes_udf
-
-
-def _bands(sigs: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """All configured band channels for one side (the candidate_pairs
-    channel set, bit-identical band ids / hashes)."""
-    nonempty = sigs.filter(F.col("n_shingles") > 0)
-    if cfg.supershingle_only:
-        return _supershingle_bands(nonempty, cfg)
-    bands = _minhash_bands(nonempty, cfg)
-    bands = bands.unionByName(_simhash_bands(nonempty, cfg))
-    if cfg.use_supershingle_channel:
-        bands = bands.unionByName(_supershingle_bands(nonempty, cfg))
-    return bands
 
 
 def _side(sigs: DataFrame, cfg: EngineConfig, tag: str) -> DataFrame:
@@ -86,7 +69,7 @@ def _side(sigs: DataFrame, cfg: EngineConfig, tag: str) -> DataFrame:
     ]
     if wide:
         cols.append(F.col("doc_key2").alias(f"key2_{tag}"))
-    return _bands(sigs, cfg).select("lang", "band", "bh", *cols)
+    return lsh_bands(sigs, cfg).select("lang", "band", "bh", *cols)
 
 
 def cross_corpus_candidates(

@@ -227,9 +227,8 @@ def ktruss_peel(
 
 def ktruss_ctes_sql(k: int = 4, rounds: int = 3) -> str:
     """The unrolled truss-peel CTE chain ``e0 .. e{rounds}`` over the
-    dedup oracle's ``edges`` CTE (no final SELECT — composable into
-    both the standalone tail and the truss-filtered clusters
-    oracle)."""
+    dedup oracle's ``edges`` CTE (no final SELECT; the standalone tail
+    appends it)."""
     parts = [",\ne0 AS MATERIALIZED (SELECT url_a, url_b, score FROM edges)"]
     for r in range(1, rounds + 1):
         p = r - 1

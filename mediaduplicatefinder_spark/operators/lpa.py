@@ -117,9 +117,8 @@ def lpa_communities(
 
 def lpa_ctes_sql(rounds: int = 4) -> str:
     """The unrolled synchronous-vote CTE chain ``lab0 .. lab{rounds}``
-    over the dedup oracle's ``sym`` CTE (no final SELECT — composable
-    into the standalone tail and the ``cfg.lpa_refine_rounds``
-    clusters oracle)."""
+    over the dedup oracle's ``sym`` CTE (no final SELECT; the standalone
+    tail appends it)."""
     parts = [
         """,
 lab0 AS MATERIALIZED (SELECT DISTINCT src AS url, src AS community FROM sym)"""

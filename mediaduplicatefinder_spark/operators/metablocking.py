@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mediaduplicatefinder_spark.config import DEFAULT_CONFIG, EngineConfig
-from mediaduplicatefinder_spark.operators.crosscorpus import _bands
+from mediaduplicatefinder_spark.operators.candidates import lsh_bands
 
 
 def metablocking_pairs(
@@ -52,8 +52,8 @@ def metablocking_pairs(
     """(url_a, url_b, weight): CBS-weighted candidate pairs surviving
     weighted node pruning, from the engine's band block collection
     (same channels as candidate_pairs; blocks purged at block_cap)."""
-# _bands keys rows by doc_key; carry url for the output contract
-    blocks = _bands(sigs, cfg).select("lang", "band", "bh", "doc_key").join(
+# lsh_bands keys rows by doc_key; carry url for the output contract
+    blocks = lsh_bands(sigs, cfg).select("lang", "band", "bh", "doc_key").join(
         sigs.select("doc_key", "url"), "doc_key"
     )
 

@@ -243,138 +243,6 @@ def weighted_ppjoin_pairs(
     ).withColumnRenamed("jaccard", "wjaccard")
 
 
-def exact_candidate_pairs(sigs, cfg):
-    """EXACT candidate channel for the flagship pipeline: the drop-in
-    replacement for the LSH ``candidate_pairs`` (same
-    ``CandidateResult`` contract) with candidate recall exactly 1.0 by
-    the prefix-filtering lemma — no banding parameters, no probabilistic
-    bound, no bucket caps.
-
-    Completeness vs the pipeline's decision rule: the verify stage
-    marks a pair similar iff token-set Jaccard > ``jaccard_threshold``
-    (verify.py:169 — hamming/simhash is informational, the name
-    shortcut is config-gated off in the webtext profile), and every
-    pair with ``J > t`` shares an element inside the rarest-first
-    ``n - ceil(t*n) + 1`` prefixes of the distinct ``token_hashes``
-    sets — exactly the arrays the verify stage will intersect. The F2
-    size-ratio prefilter (main_cli.cpp:297-299) and the F1 same-lang
-    gate are applied identically to the LSH channel's bucket expander,
-    so downstream decisions are unchanged; only the candidate
-    GENERATOR differs.
-
-    Cost vs LSH: one extra corpus-token-grain groupBy (per-lang hash
-    document frequencies) plus a prefix-token self-join whose key
-    distribution is inverted-skew (rarest tokens first). Use it when
-    the run must certify recall 1.0 (audit/legal holds); the LSH
-    channel remains the cheaper default. Metrics mirror the bucket
-    metrics schema with posting lists as buckets; ``capped_*`` are 0
-    by construction (capping would break the exactness contract).
-    """
-    from mediaduplicatefinder_spark.functions.text import size_ratio_expr
-    from mediaduplicatefinder_spark.operators.candidates import (
-        CandidateResult,
-        pair_key_cols,
-    )
-
-    t = float(cfg.jaccard_threshold)
-    wide = cfg.doc_key_bits == 128
-    keep = ["doc_key"] + (["doc_key2"] if wide else [])
-
-    base = sigs.filter(F.col("n_shingles") > 0).select(
-        *keep,
-        "lang",
-        "size_bytes",
-        F.array_distinct("token_hashes").alias("els"),
-    )
-    ex = base.select(*keep, "lang", "size_bytes", F.explode("els").alias("th"))
-    df_t = ex.groupBy("lang", "th").agg(F.count(F.lit(1)).alias("df"))
-    by_df = (
-        ex.join(df_t, ["lang", "th"])
-        .groupBy(*keep, "lang", "size_bytes")
-        .agg(F.array_sort(F.collect_list(F.struct("df", "th"))).alias("st"))
-        .select(
-            *keep,
-            "lang",
-            "size_bytes",
-            F.transform("st", lambda s: s["th"]).alias("by_df"),
-            F.size("st").alias("n"),
-        )
-    )
-    p = F.col("n") - F.greatest(
-        F.ceil(F.lit(t) * F.col("n") - F.lit(_EPS)), F.lit(1)
-    ) + F.lit(1)
-    pref = by_df.select(
-        *keep,
-        "lang",
-        "size_bytes",
-        "n",
-        F.posexplode(F.slice("by_df", 1, p.cast("int"))).alias("pos", "th"),
-    ).persist()
-
-    a, b = pref.alias("a"), pref.alias("b")
-    # positional filter (Xiao WWW'08 lemma 2 — see ppjoin_pairs): the
-    # earliest shared prefix token bounds the reachable overlap
-    alpha = (
-        F.lit(t / (1.0 + t)) * (F.col("a.n") + F.col("b.n")) - F.lit(_EPS)
-    )
-    ubound = F.lit(1) + F.least(
-        F.col("a.n") - (F.col("a.pos") + F.lit(1)),
-        F.col("b.n") - (F.col("b.pos") + F.lit(1)),
-    )
-    ratio = size_ratio_expr(F.col("a.size_bytes"), F.col("b.size_bytes"))
-    sel = [
-        F.col("a.lang").alias("lang"),
-        F.col("a.doc_key").alias("key_a"),
-        F.col("b.doc_key").alias("key_b"),
-        ratio.alias("size_ratio"),
-    ]
-    if wide:
-        sel += [
-            F.col("a.doc_key2").alias("key_a2"),
-            F.col("b.doc_key2").alias("key_b2"),
-        ]
-    # canonical pair order: LEXICOGRAPHIC on (doc_key, doc_key2) in
-    # 128-bit mode — a bare doc_key < comparison would drop pairs whose
-    # 64-bit halves collide (the exact case the wide profile exists
-    # for), breaking the certified recall-1.0 contract; this matches
-    # the LSH channel's np.lexsort canonicalization (candidates.py).
-    if wide:
-        key_lt = (F.col("a.doc_key") < F.col("b.doc_key")) | (
-            (F.col("a.doc_key") == F.col("b.doc_key"))
-            & (F.col("a.doc_key2") < F.col("b.doc_key2"))
-        )
-    else:
-        key_lt = F.col("a.doc_key") < F.col("b.doc_key")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.lang") == F.col("b.lang"))
-            & (F.col("a.th") == F.col("b.th"))
-            & key_lt
-            & (
-                F.least(F.col("a.n"), F.col("b.n"))
-                >= F.lit(t) * F.greatest(F.col("a.n"), F.col("b.n")) - F.lit(_EPS)
-            )
-            & (ubound.cast("double") >= alpha),
-        )
-        .select(*sel)
-        .filter(F.col("size_ratio") >= F.lit(float(cfg.size_ratio_min)))
-        .dropDuplicates(pair_key_cols(cfg))
-    )
-
-    posting = pref.groupBy("lang", "th").agg(F.count(F.lit(1)).alias("bn"))
-    metrics = posting.select(
-        F.sum(F.when(F.col("bn") >= 2, 1).otherwise(0)).alias("n_buckets"),
-        F.sum(F.when(F.col("bn") >= 2, F.col("bn")).otherwise(0)).alias(
-            "n_bucket_members"
-        ),
-        F.max("bn").alias("max_bucket"),
-        F.lit(0).cast("long").alias("capped_buckets"),
-        F.lit(0).cast("long").alias("capped_docs"),
-    )
-    return CandidateResult(cands, metrics, pref)
-
-
 def ppjoin_candidate_count(
     docs: DataFrame,
     id_col: str = "doc_id",

@@ -130,22 +130,6 @@ def page_signatures(
             index=texts.index,
         )
 
-    def maybe_nfc(texts: pd.Series) -> pd.Series:
-        # cfg.nfc_normalize: canonicalize INSIDE the fused pass (the
-        # zero-extra-pass fusion unicodenorm.py documents) so sha256,
-        # size_bytes, and every signature see canonical bytes
-        if not cfg.nfc_normalize:
-            return texts
-        import unicodedata
-
-        return pd.Series(
-            [
-                unicodedata.normalize("NFC", t) if t is not None else None
-                for t in texts
-            ],
-            index=texts.index,
-        )
-
     schema = (SIG_SCHEMA if include_minhash else SIG_SCHEMA_SLIM) + ", sha256 string"
     has_html = use_html and "html" in pages.columns
 
@@ -158,7 +142,6 @@ def page_signatures(
             comp = SignatureComputer(cfg)
             for pdf in batches:
                 docs = extract_pdf(pdf)
-                docs["text"] = maybe_nfc(docs["text"])
                 docs["sha256"] = sha_series(docs["text"])
                 yield _sig_pdf(docs, comp, cfg, include_minhash, True)
 
@@ -168,7 +151,6 @@ def page_signatures(
         def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             comp = SignatureComputer(cfg)
             for pdf in batches:
-                pdf = pdf.assign(text=maybe_nfc(pdf["text"]))
                 pdf = pdf.assign(
                     size_bytes=pdf["text"]
                     .str.encode("utf-8")

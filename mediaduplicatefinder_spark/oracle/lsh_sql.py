@@ -1025,38 +1025,26 @@ WHERE (bit_count(xor(dh_a, dh_b)) + bit_count(xor(ah_a, ah_b))) / 2.0
 """
 
 
-def flagged_tail_sql(
-    edges_cte: str = "edges",
-    sym_cte: str = "sym",
-    labels_cte: str | None = None,
-) -> str:
-    """The closure -> labels -> scores -> keeper tail over a
-    parameterizable similar-edge relation: the default names replay
-    run_dedup's standard path; ``cfg.truss_filter`` oracles pass the
-    truss-surviving edge CTE instead (dedup_clusters_truss_sql), and
-    ``labels_cte`` substitutes a precomputed (url, cluster_id)
-    relation for the transitive-closure labeling entirely
-    (``cfg.lpa_refine_rounds`` — dedup_clusters_lpa_sql)."""
-    closure = (
-        f""",
+def flagged_tail_sql() -> str:
+    """The closure -> labels -> scores -> keeper tail of ``run_dedup``
+    over the ``edges``/``sym`` similar-edge CTEs: transitive closure
+    for the connected-components labels (min url per component), max
+    incident edge score per member, the EXACT + SIMILAR union, and the
+    keeper rank (operators/keeper.py)."""
+    return """,
 reach AS (  -- transitive closure; component = reachable set
-  SELECT src AS url, src AS lab FROM {sym_cte}
+  SELECT src AS url, src AS lab FROM sym
   UNION
-  SELECT s.dst, r.lab FROM reach r JOIN {sym_cte} s ON s.src = r.url
+  SELECT s.dst, r.lab FROM reach r JOIN sym s ON s.src = r.url
 ),
 labels AS (
   SELECT url, min(lab) AS cluster_id FROM reach GROUP BY url
-)"""
-        if labels_cte is None
-        else f""",
-labels AS (SELECT url, cluster_id FROM {labels_cte})"""
-    )
-    return closure + f""",
+),
 mscore AS (
   SELECT url, max(score) AS score
-  FROM (SELECT url_a AS url, score FROM {edges_cte}
+  FROM (SELECT url_a AS url, score FROM edges
         UNION ALL
-        SELECT url_b, score FROM {edges_cte})
+        SELECT url_b, score FROM edges)
   GROUP BY url
 ),
 sim_cl AS (
@@ -1081,9 +1069,6 @@ flagged AS (
 )"""
 
 
-_FLAGGED_TAIL = flagged_tail_sql()
-
-
 def _clusters_flagged_ctes(
     cfg: EngineConfig, docs_sql: str = DEFAULT_DOCS_SQL
 ) -> str:
@@ -1094,198 +1079,7 @@ def _clusters_flagged_ctes(
     return (
         lsh_base_cte(cfg, recursive=True, docs_sql=docs_sql)
         + _exact_and_edges_ctes(cfg)
-        + _FLAGGED_TAIL
-    )
-
-
-
-def exact_base_cte(
-    cfg: EngineConfig = DEFAULT_CONFIG,
-    recursive: bool = False,
-    docs_sql: str = DEFAULT_DOCS_SQL,
-) -> str:
-    """Exact-channel sibling of :func:`lsh_base_cte`: the SAME
-    ``src_docs/docs0/tok/th/doc_stats`` head and the SAME fold32
-    ``jac`` verify representation, but ``cand`` is the NAIVE gated
-    all-pairs relation (same-lang, size-ratio >= min, shingle-count
-    ratio > t — the upper-bound prune the bucket expander also applies)
-    instead of the banded LSH replay. This is the oracle twin of
-    ``cfg.exact_candidates`` (operators/ppjoin.exact_candidate_pairs):
-    the engine generates candidates by prefix filtering, the oracle by
-    brute force, and both verify with the identical fold32 Jaccard —
-    so cluster equality checks the WHOLE exact pipeline."""
-    fnv = (
-        "list_reduce("
-        f"list_prepend({_FNV_OFFSET}::HUGEINT, "
-        "list_transform(range(1, len(token) + 1), "
-        "i -> unicode(token[i])::HUGEINT)), "
-        f"(h, c) -> ((xor(h::UBIGINT, c::UBIGINT)::HUGEINT * {_FNV_PRIME})"
-        f" % {M64}))::UBIGINT"
-    )
-    return f"""
-WITH {"RECURSIVE" if recursive else ""} src_docs AS MATERIALIZED ({docs_sql}),
-docs0 AS MATERIALIZED (
-  SELECT url, lang,
-         octet_length(encode(text)) AS size_bytes,
-         lower(regexp_replace(text, '[^a-zA-Z0-9 \\t\\n\\r\\f]', '', 'g')) AS cleaned
-  FROM src_docs
-),
-tok AS (
-  SELECT url, token
-  FROM docs0,
-       unnest(list_distinct(list_filter(
-         string_split_regex(cleaned, '\\s+'), x -> len(x) > 2))) AS u(token)
-),
-th AS MATERIALIZED (
-  SELECT url, {fnv} AS h FROM tok
-),
-doc_stats AS MATERIALIZED (
-  SELECT th.url, any_value(d.lang) AS lang,
-         any_value(d.size_bytes) AS size_bytes, count(*) AS n_shingles
-  FROM th JOIN docs0 d USING (url) GROUP BY th.url
-),
-cand AS MATERIALIZED (
-  SELECT a.url AS url_a, b.url AS url_b
-  FROM doc_stats a
-  JOIN doc_stats b ON a.lang = b.lang AND a.url < b.url
-  WHERE least(a.size_bytes, b.size_bytes)::DOUBLE
-          / greatest(a.size_bytes, b.size_bytes, 1) >= {cfg.size_ratio_min}
-    AND least(a.n_shingles, b.n_shingles)::DOUBLE
-          / greatest(a.n_shingles, b.n_shingles) > {cfg.jaccard_threshold}
-),
-fold AS MATERIALIZED (
-  SELECT DISTINCT url, xor(h, h >> 32) % 4294967296 AS f
-  FROM th
-),
-nfold AS MATERIALIZED (
-  SELECT url, count(*) AS nf FROM fold GROUP BY url
-),
-jac AS (
-  SELECT c.url_a, c.url_b,
-         coalesce(i.inter, 0)::DOUBLE
-           / (na.nf + nb.nf - coalesce(i.inter, 0)) AS jaccard
-  FROM cand c
-  JOIN nfold na ON na.url = c.url_a
-  JOIN nfold nb ON nb.url = c.url_b
-  LEFT JOIN (
-    SELECT c2.url_a, c2.url_b, count(*) AS inter
-    FROM cand c2
-    JOIN fold fa ON fa.url = c2.url_a
-    JOIN fold fb ON fb.url = c2.url_b AND fb.f = fa.f
-    GROUP BY c2.url_a, c2.url_b
-  ) i ON i.url_a = c.url_a AND i.url_b = c.url_b
-)
-"""
-
-
-def dedup_clusters_exact_sql(
-    cfg: EngineConfig = DEFAULT_CONFIG, docs_sql: str = DEFAULT_DOCS_SQL
-) -> str:
-    """``run_dedup(cfg.exact_candidates=True)`` clusters in SQL: the
-    naive-candidate exact base + the shared exact/edges/closure/keeper
-    tail. Value-equality with the engine certifies the exact channel
-    end to end (candidates -> verify -> CC -> keepers)."""
-    return (
-        exact_base_cte(cfg, recursive=True, docs_sql=docs_sql)
-        + _exact_and_edges_ctes(cfg)
-        + _FLAGGED_TAIL
-        + """
-SELECT url, cluster_id, kind, score, keep_rank = 1 AS is_keeper
-FROM flagged
-"""
-    )
-
-
-def dedup_clusters_truss_sql(
-    cfg: EngineConfig = DEFAULT_CONFIG,
-    k: int = 4,
-    rounds: int = 3,
-    docs_sql: str = DEFAULT_DOCS_SQL,
-) -> str:
-    """``run_dedup`` clusters with ``cfg.truss_filter`` (E191 acting
-    mode): the standard pipeline twin up through the verified edge
-    relation, then ``rounds`` unrolled truss-peel CTEs
-    (operators/kcore.ktruss_ctes_sql), then the SAME closure/score/
-    keeper tail over the surviving edges — chaining-resistant clusters
-    where every merge is triangle-witnessed k-2 times."""
-    from mediaduplicatefinder_spark.operators.kcore import ktruss_ctes_sql
-
-    return (
-        lsh_base_cte(cfg, recursive=True, docs_sql=docs_sql)
-        + _exact_and_edges_ctes(cfg)
-        + ktruss_ctes_sql(k, rounds)
-        + f""",
-symt AS (
-  SELECT url_a AS src, url_b AS dst FROM e{rounds}
-  UNION SELECT url_b, url_a FROM e{rounds}
-)"""
-        + flagged_tail_sql(edges_cte=f"e{rounds}", sym_cte="symt")
-        + """
-SELECT url, cluster_id, kind, score, keep_rank = 1 AS is_keeper
-FROM flagged
-"""
-    )
-
-
-def dedup_clusters_lpa_sql(
-    cfg: EngineConfig = DEFAULT_CONFIG,
-    rounds: int = 4,
-    docs_sql: str = DEFAULT_DOCS_SQL,
-) -> str:
-    """``run_dedup`` clusters with ``cfg.lpa_refine_rounds`` (E192
-    acting mode): the standard twin up through the verified edges,
-    then ``rounds`` unrolled synchronous-vote CTEs
-    (operators/lpa.lpa_ctes_sql) whose communities relabel to min
-    member url with size-1 communities dropped (F3), then the SAME
-    score/keeper tail over the LPA labels."""
-    from mediaduplicatefinder_spark.operators.lpa import lpa_ctes_sql
-
-    return (
-        lsh_base_cte(cfg, docs_sql=docs_sql)
-        + _exact_and_edges_ctes(cfg)
-        + lpa_ctes_sql(rounds)
-        + f""",
-lpalab AS (
-  SELECT url, min(url) OVER (PARTITION BY community) AS cluster_id,
-         count(*) OVER (PARTITION BY community) AS csz
-  FROM lab{rounds}
-),
-lpalab2 AS (SELECT url, cluster_id FROM lpalab WHERE csz >= 2)"""
-        + flagged_tail_sql(labels_cte="lpalab2")
-        + """
-SELECT url, cluster_id, kind, score, keep_rank = 1 AS is_keeper
-FROM flagged
-"""
-    )
-
-
-def dedup_clusters_affinity_sql(
-    cfg: EngineConfig = DEFAULT_CONFIG,
-    rounds: int = 1,
-    docs_sql: str = DEFAULT_DOCS_SQL,
-) -> str:
-    """``run_dedup`` clusters with ``cfg.affinity_rounds`` (E198
-    acting mode): the standard twin up through the verified edges,
-    then ``rounds`` unrolled Borůvka contraction rounds
-    (operators/affinity.affinity_ctes_sql), then the SAME score/
-    keeper tail over the affinity labels (size >= 2 holds by
-    construction — every node merges through its best edge in round
-    1)."""
-    from mediaduplicatefinder_spark.operators.affinity import (
-        affinity_ctes_sql,
-    )
-
-    return (
-        lsh_base_cte(cfg, recursive=True, docs_sql=docs_sql)
-        + _exact_and_edges_ctes(cfg)
-        + affinity_ctes_sql(rounds)
-        + f""",
-afflab AS (SELECT url, lab AS cluster_id FROM amap{rounds})"""
-        + flagged_tail_sql(labels_cte="afflab")
-        + """
-SELECT url, cluster_id, kind, score, keep_rank = 1 AS is_keeper
-FROM flagged
-"""
+        + flagged_tail_sql()
     )
 
 

@@ -24,13 +24,21 @@ Shuffle budget at scale (the plan the judge should see):
   2× key joins                  (pairs → signatures; broadcast when small)
   O(log n)× CC rounds           (near-clique components: 2-4 rounds)
   1× exchange on cluster_id     (keeper window + rollups)
+
+This is the engine's one composition: candidates come only from the
+MinHash + SimHash LSH bands (operators/candidates.py) and SIMILAR labels
+only from connected components over the verified edges (the reference's
+single linkage). Alternative candidate generators and merge rules stay
+standalone operators (ppjoin, supershingle, kcore, lpa, affinity) and
+are not switchable here. ``perfbench/spans.layered_pass`` replays this
+composition layer by layer and must stay in step with it.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mediaduplicatefinder_spark.config import DEFAULT_CONFIG, EngineConfig
@@ -66,7 +74,6 @@ def run_dedup(
     cfg: EngineConfig = DEFAULT_CONFIG,
     scan_root: str = "",
     use_html: bool = True,
-    use_simhash_channel: bool = True,
     sigs_all: DataFrame | None = None,
 ) -> DedupResult:
     n_par = spark.sparkContext.defaultParallelism
@@ -100,63 +107,10 @@ def run_dedup(
     # already on the sha256 shuffle's partitions — no extra exchange
     sigs = exact_ops.similarity_survivors(grouped).drop("sha256")
 
-    if cfg.exact_candidates:
-        from mediaduplicatefinder_spark.operators.ppjoin import (
-            exact_candidate_pairs,
-        )
-
-        cands, bucket_metrics, buckets = exact_candidate_pairs(sigs, cfg)
-    else:
-        cands, bucket_metrics, buckets = candidate_pairs(
-            sigs, cfg, use_simhash_channel=use_simhash_channel
-        )
+    cands, bucket_metrics, buckets = candidate_pairs(sigs, cfg)
     verified = verify_pairs(cands, sigs, cfg).persist()
     edges = similar_edges(verified)
-
-    if cfg.truss_filter >= 3:
-        # E191 acting mode: only triangle-witnessed edges may merge
-        # clusters (cfg.truss_filter-truss of the verified graph);
-        # scores and CC run on the survivors
-        from mediaduplicatefinder_spark.operators.kcore import ktruss_peel
-
-        edges = ktruss_peel(
-            edges, k=cfg.truss_filter, rounds=cfg.truss_rounds
-        ).select("url_a", "url_b", "score")
-
-    if cfg.affinity_rounds > 0:
-        # E198 acting mode: Borůvka quality-greedy labeling — labels
-        # are already min-url per cluster, every member merged through
-        # a best edge so size >= 2 holds by construction
-        from mediaduplicatefinder_spark.operators.affinity import (
-            affinity_clusters,
-        )
-
-        labels = affinity_clusters(
-            edges, rounds=cfg.affinity_rounds, cfg=cfg
-        ).select(
-            "url", "cluster_id"
-        )
-    elif cfg.lpa_refine_rounds > 0:
-        # E192 acting mode: label propagation instead of single-linkage
-        # CC — seams inside chained components become cluster
-        # boundaries; min-url relabel + size >= 2 keep the cluster_id
-        # and F3 contracts
-        from mediaduplicatefinder_spark.operators.lpa import (
-            lpa_communities,
-        )
-
-        comm = lpa_communities(edges, rounds=cfg.lpa_refine_rounds)
-        labels = (
-            comm.filter(F.col("n_members") >= 2)
-            .select("url", "community")
-            .withColumn(
-                "cluster_id",
-                F.min("url").over(Window.partitionBy("community")),
-            )
-            .select("url", "cluster_id")
-        )
-    else:
-        labels = connected_components(edges, cfg)
+    labels = connected_components(edges, cfg)
 
     # member score = max similarity of any edge that touches the member
     # (relaxed C3 carry; the cluster_id owner scores 1.0 like a seed)

@@ -29,6 +29,25 @@ def _ensure_importable() -> None:
         )
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Half of the host's physical memory (``MemTotal``) as a Spark size,
+    at least 1g; ``4g`` when ``meminfo`` cannot be read (non-Linux).
+
+    The local-mode JVM holds driver and executors in one heap, and the
+    python workers and page cache need the other half — a fixed large
+    default lets the heap grow past physical memory until the kernel
+    OOM-kills the JVM."""
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    kib = int(line.split()[1])
+                    return f"{max(1, kib // (2 * 1024 * 1024))}g"
+    except OSError:
+        pass
+    return "4g"
+
+
 def get_spark(
     app_name: str = "mediaduplicatefinder-spark",
     parallelism: int | None = None,
@@ -38,6 +57,9 @@ def get_spark(
     """Build (or reuse) a SparkSession.
 
     parallelism: local core count; None -> $SPARK_GRAFT_CPUS or all cores.
+    Driver heap: $SPARK_DRIVER_MEMORY, else half of physical memory
+    (:func:`default_driver_memory`). Local dir: $SPARK_LOCAL_DIRS, else
+    /tmp/spark-local. ``extra_conf`` overrides every setting.
     """
     _ensure_importable()
     if parallelism is None:
@@ -56,22 +78,18 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # Shuffle/spill blocks live in tmpfs: the sandbox VM's disk
-        # throughput is erratic under concurrent writers, and with 128 GiB
-        # RAM the BENCH-scale shuffle working set always fits. A real
-        # cluster keeps the default (executor-local SSDs).
-        # CAVEAT (round-5 finding): tmpfs "spill to disk" consumes RAM —
-        # at >= 500k-doc probe scale heap + tmpfs spill exceeds the VM
-        # and the KERNEL OOM-kills the JVM (looks like GC churn). Large
-        # jobs must export SPARK_LOCAL_DIRS to a real-disk path, as
-        # scripts/flagship_scale_probe.py does; stale /dev/shm/
-        # spark-local dirs from killed JVMs must be swept (71 GB of
-        # leftovers were silently shrinking every earlier session's
-        # usable RAM — the likely source of much "host contention").
-        .config("spark.local.dir", os.environ.get("SPARK_LOCAL_DIRS", "/dev/shm/spark-local"))
+        # Shuffle/spill blocks go to disk by default: a tmpfs local dir
+        # (/dev/shm) spends RAM on spill, and heap + tmpfs spill beyond
+        # physical memory gets the JVM OOM-killed. Hosts with RAM to
+        # spare can point SPARK_LOCAL_DIRS at tmpfs; stale spark-local
+        # dirs left by killed JVMs must be swept either way.
+        .config("spark.local.dir", os.environ.get("SPARK_LOCAL_DIRS", "/tmp/spark-local"))
         # Split single-file parquet scans into >= core-count partitions so
         # the extraction/signature UDFs parallelize WITHOUT a repartition
         # shuffle of the raw text/html bytes (a cluster reading thousands

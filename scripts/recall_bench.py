@@ -144,60 +144,6 @@ def main() -> None:
     missed = sorted(truth - engine)[:5]
     extra = sorted(engine - truth)[:5]
 
-    # ---- supershingle-only profile (E132 channel, config.py): the
-    # low-cost first-pass — published next to the default so the
-    # recall trade-off is a measured number, not a claim
-    from dataclasses import replace as _replace
-
-    t0 = time.time()
-    res_ss = run_dedup(
-        spark, pages, _replace(DEFAULT_CONFIG, supershingle_only=True)
-    )
-    engine_ss = {
-        (r.url_a, r.url_b)
-        for r in res_ss.pairs.filter("similar").select("url_a", "url_b").collect()
-    }
-    ss_groups: dict[str, list[str]] = {}
-    for r in (
-        res_ss.clusters.filter("kind = 'SIMILAR'")
-        .select("cluster_id", "url")
-        .collect()
-    ):
-        ss_groups.setdefault(r.cluster_id, []).append(r.url)
-    ss_pairs = comembers(list(ss_groups.values()))
-    t_ss = time.time() - t0
-    recall_ss_cluster = (
-        len(ss_pairs & ref_pairs) / len(ref_pairs) if ref_pairs else 1.0
-    )
-    tp_ss = len(engine_ss & truth)
-    recall_ss = tp_ss / len(truth) if truth else 1.0
-    precision_ss = tp_ss / len(engine_ss) if engine_ss else 1.0
-
-    # ---- OPH profile (E172, cfg.use_oph): the single-pass signature —
-    # same banding/verify, the minhash slots estimated by one
-    # permutation + rotation densification; recall published next to
-    # the default so the speed/recall trade is a measured number
-    t0 = time.time()
-    res_oph = run_dedup(spark, pages, _replace(DEFAULT_CONFIG, use_oph=True))
-    engine_oph = {
-        (r.url_a, r.url_b)
-        for r in res_oph.pairs.filter("similar").select("url_a", "url_b").collect()
-    }
-    oph_groups: dict[str, list[str]] = {}
-    for r in (
-        res_oph.clusters.filter("kind = 'SIMILAR'")
-        .select("cluster_id", "url")
-        .collect()
-    ):
-        oph_groups.setdefault(r.cluster_id, []).append(r.url)
-    oph_pairs = comembers(list(oph_groups.values()))
-    t_oph = time.time() - t0
-    recall_oph_cluster = (
-        len(oph_pairs & ref_pairs) / len(ref_pairs) if ref_pairs else 1.0
-    )
-    tp_oph = len(engine_oph & truth)
-    recall_oph = tp_oph / len(truth) if truth else 1.0
-    precision_oph = tp_oph / len(engine_oph) if engine_oph else 1.0
     print(f"[recall] engine {len(engine)} verified pairs, "
           f"{len(eng_pairs)} co-membership pairs ({t_engine:.1f}s)",
           file=sys.stderr)
@@ -254,38 +200,6 @@ nor needed for cluster assignments). Cluster-assignment recall is
 unaffected: capped buckets stay connected, so co-membership survives.
 Missed verified pairs (first 5): {missed}
 Extra verified pairs (first 5): {extra}
-
-## supershingle-only profile (E132; cfg.supershingle_only)
-
-The cheap first-pass channel measured against the same exhaustive
-truth — the recall trade-off as a number (the default profile above is
-the north-rule configuration; this one is for boilerplate-collapse
-pre-passes where candidate volume, not recall, is the binding
-constraint):
-
-| metric | default | supershingle_only |
-|---|---|---|
-| cluster-assignment recall | {recall_cluster:.4f} | {recall_ss_cluster:.4f} |
-| verified-pair recall | {recall:.4f} | {recall_ss:.4f} |
-| verified-pair precision | {precision:.4f} | {precision_ss:.4f} |
-| band rows per doc | {DEFAULT_CONFIG.minhash_bands + 2 * DEFAULT_CONFIG.simhash_bands} | {DEFAULT_CONFIG.minhash_bands // DEFAULT_CONFIG.supershingle_group} |
-| engine wall | {t_engine:.1f}s | {t_ss:.1f}s |
-
-## OPH profile (E172; cfg.use_oph)
-
-The single-pass signature (one-permutation hashing + rotation
-densification, functions/oph.py) against the same exhaustive truth:
-same band fold / channels / verify gate, so precision is the exact
-Jaccard decision either way — what this measures is candidate recall
-of the OPH-estimated bands vs the 128-permutation default:
-
-| metric | default | use_oph |
-|---|---|---|
-| cluster-assignment recall | {recall_cluster:.4f} | {recall_oph_cluster:.4f} |
-| verified-pair recall | {recall:.4f} | {recall_oph:.4f} |
-| verified-pair precision | {precision:.4f} | {precision_oph:.4f} |
-| signature remix passes | {DEFAULT_CONFIG.num_perm} | 1 |
-| engine wall | {t_engine:.1f}s | {t_oph:.1f}s |
 """)
     print(f"RESULT cluster_recall={recall_cluster:.4f} star_recall={recall_star:.4f} "
           f"pair_recall={recall:.4f} precision={precision:.4f} "

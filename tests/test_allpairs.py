@@ -109,10 +109,14 @@ def test_blocked_pairs_plan_has_no_cartesian(spark):
     assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
 
 
-def test_segmented_jaccard_bit_identical_to_merge():
-    """verify.segmented_jaccard == the per-pair binary-search merge it
-    replaced, including int32 extremes, empties, and full overlap."""
-    from mediaduplicatefinder_spark.operators.verify import segmented_jaccard
+def test_sorted_intersect_kernel_matches_set_jaccard():
+    """verify.jaccard_hashes_udf's per-pair kernel (_sorted_intersect_size
+    and the Jaccard around it) == set arithmetic, including int32
+    extremes, empties, and full overlap."""
+    from mediaduplicatefinder_spark.operators.verify import (
+        _sorted_intersect_size,
+        jaccard_hashes_udf,
+    )
 
     def ref_one(a, b):
         sa, sb = set(a.tolist()), set(b.tolist())
@@ -136,6 +140,13 @@ def test_segmented_jaccard_bit_identical_to_merge():
         (np.array([1, 2, 3], np.int32), np.array([1, 2, 3], np.int32)),
         (np.array([5], np.int32), np.array([], np.int32)),
     ]
-    got = segmented_jaccard([a for a, _ in pairs], [b for _, b in pairs])
+    for a, b in pairs:
+        want = len(set(a.tolist()) & set(b.tolist()))
+        assert _sorted_intersect_size(a, b) == want
+        assert _sorted_intersect_size(b, a) == want
+    got = jaccard_hashes_udf.func(
+        pd.Series([a for a, _ in pairs], dtype=object),
+        pd.Series([b for _, b in pairs], dtype=object),
+    )
     want = np.array([ref_one(a, b) for a, b in pairs])
-    assert (got == want).all()
+    assert (got.to_numpy() == want).all()

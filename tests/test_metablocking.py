@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mediaduplicatefinder_spark.config import DEFAULT_CONFIG
-from mediaduplicatefinder_spark.operators.crosscorpus import _bands
+from mediaduplicatefinder_spark.operators.candidates import lsh_bands
 from mediaduplicatefinder_spark.operators.extract import (
     extracted_or_given_text,
 )
@@ -41,7 +41,7 @@ def setup(spark, tiny_pages_df):
 def _python_replay(sigs) -> dict:
     """Independent replay from the collected band relation."""
     band_rows = (
-        _bands(sigs, DEFAULT_CONFIG)
+        lsh_bands(sigs, DEFAULT_CONFIG)
         .join(sigs.select("doc_key", "url"), "doc_key")
         .select("lang", "band", "bh", "url")
         .collect()
@@ -102,7 +102,7 @@ def test_pruning_is_strict_subset_with_high_weight_survivors(setup):
     from collections import defaultdict as dd
 
     band_rows = (
-        _bands(sigs, DEFAULT_CONFIG)
+        lsh_bands(sigs, DEFAULT_CONFIG)
         .join(sigs.select("doc_key", "url"), "doc_key")
         .select("lang", "band", "bh", "url")
         .collect()

@@ -143,45 +143,3 @@ def test_partition_invariance(spark):
         }
         outs.append(got)
     assert outs[0] == outs[1] == _naive(docs, 0.6)
-
-
-def test_wide_key_collision_pairs_not_dropped(spark):
-    """Review r5: in 128-bit key mode, two docs whose 64-bit doc_key
-    halves collide (differing only in doc_key2) must still form a
-    candidate pair — the bare doc_key < predicate dropped exactly the
-    collision case the wide profile exists for.  Ordering is
-    lexicographic on (doc_key, doc_key2), the LSH channel's
-    np.lexsort convention."""
-    import dataclasses
-
-    from mediaduplicatefinder_spark.config import DEFAULT_CONFIG
-    from mediaduplicatefinder_spark.operators.ppjoin import (
-        exact_candidate_pairs,
-    )
-
-    cfg = dataclasses.replace(
-        DEFAULT_CONFIG, doc_key_bits=128, exact_candidates=True
-    )
-    toks = [11, 22, 33, 44, 55]
-    sigs = spark.createDataFrame(
-        [
-            # identical token sets, SAME doc_key, different doc_key2
-            (7, 1, "en", 100, len(toks), toks),
-            (7, 2, "en", 100, len(toks), toks),
-            # a third doc, distinct doc_key, same tokens
-            (9, 3, "en", 100, len(toks), toks),
-        ],
-        "doc_key long, doc_key2 long, lang string, size_bytes long,"
-        " n_shingles int, token_hashes array<long>",
-    )
-    res = exact_candidate_pairs(sigs, cfg)
-    pairs = {
-        (r["key_a"], r["key_a2"], r["key_b"], r["key_b2"])
-        for r in res.cands.select(
-            "key_a", "key_a2", "key_b", "key_b2"
-        ).collect()
-    }
-    res.buckets.unpersist()
-    # all three C(3,2) pairs, including the colliding (7,1)-(7,2)
-    assert (7, 1, 7, 2) in pairs
-    assert len(pairs) == 3

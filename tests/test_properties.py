@@ -193,18 +193,24 @@ def test_intersect_count_matrix_property(side_a, side_b, chunk):
     st.lists(st.lists(st.integers(-(2**31), 2**31 - 1), max_size=30), max_size=20)
 )
 @settings(max_examples=40, deadline=None)
-def test_segmented_jaccard_property(raw):
-    """segmented_jaccard == set-based Jaccard for arbitrary int32 pairs
-    (consecutive list pairs)."""
-    from mediaduplicatefinder_spark.operators.verify import segmented_jaccard
+def test_sorted_intersect_kernel_property(raw):
+    """jaccard_hashes_udf's per-pair kernel == set-based Jaccard for
+    arbitrary int32 pairs (consecutive list pairs)."""
+    import pandas as pd
+
+    from mediaduplicatefinder_spark.operators.verify import (
+        _sorted_intersect_size,
+        jaccard_hashes_udf,
+    )
 
     sets = [np.array(sorted(set(x)), dtype=np.int32) for x in raw]
     if len(sets) % 2:
         sets.append(np.array([], dtype=np.int32))
     a, b = sets[0::2], sets[1::2]
-    got = segmented_jaccard(a, b)
+    got = jaccard_hashes_udf.func(pd.Series(a, dtype=object), pd.Series(b, dtype=object))
     for i, (x, y) in enumerate(zip(a, b)):
         sx, sy = set(x.tolist()), set(y.tolist())
+        assert _sorted_intersect_size(x, y) == len(sx & sy)
         union = len(sx | sy)
         want = len(sx & sy) / union if union else 0.0
         assert got[i] == want

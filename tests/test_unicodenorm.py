@@ -37,31 +37,3 @@ def test_idempotent(spark):
     once = nfc_normalize(df).select("doc_id", "text_nfc")
     twice = nfc_normalize(once, text_col="text_nfc", out_col="t2").collect()[0]
     assert twice.t2 == twice.text_nfc and not twice.changed
-
-
-def test_nfc_fused_into_signature_pass(spark):
-    """cfg.nfc_normalize fuses canonicalization into page_signatures:
-    byte-different but canonically-equal pages share sha256 (one exact
-    cluster) with the flag on, and stay distinct with it off."""
-    from mediaduplicatefinder_spark.config import DEFAULT_CONFIG, EngineConfig
-    from mediaduplicatefinder_spark.operators.signatures import (
-        page_signatures,
-    )
-
-    composed = "café menu " * 20
-    decomposed = "café menu " * 20
-    assert composed != decomposed
-    df = spark.createDataFrame(
-        [("u1", "en", composed), ("u2", "en", decomposed)],
-        "url: string, lang: string, text: string",
-    )
-    off = {r.url: r.sha256 for r in page_signatures(
-        df, DEFAULT_CONFIG, use_html=False).collect()}
-    assert off["u1"] != off["u2"]
-    on_rows = page_signatures(
-        df, EngineConfig(nfc_normalize=True), use_html=False
-    ).collect()
-    on = {r.url: r for r in on_rows}
-    assert on["u1"].sha256 == on["u2"].sha256
-    # canonical bytes drive size too
-    assert on["u1"].size_bytes == on["u2"].size_bytes
