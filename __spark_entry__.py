@@ -1160,199 +1160,6 @@ def _fusion_docs(spark, sf_dir):
     return j.select("doc_id", text.alias("text"))
 
 
-def _q_crawl_frontier(spark, sf_dir):
-    """E96 composed crawl-side flagship: the frontier decision table a
-    scheduler consumes — per url, robots permission (E95) AND the
-    per-host quota lottery (E83), carrying host PageRank (E77) as the
-    priority signal and the quota rank as the politeness wave. One
-    row per url: (host, path, robots_allowed, kept_quota, wave,
-    pr_scaled, eligible). The oracle composes the three stage twins."""
-    from mediaduplicatefinder_spark.operators.hostquota import (
-        host_quota_sample,
-    )
-    from mediaduplicatefinder_spark.operators.linkgraph import (
-        linkgraph_pagerank,
-    )
-    from mediaduplicatefinder_spark.operators.robots import (
-        evaluate_urls,
-        parse_robots_rules,
-    )
-
-    d = _docs(spark, sf_dir)
-    doc = F.col("doc_id")
-    h = F.pmod(doc, F.lit(40))
-    host = F.format_string("site-%03d.example.org", h)
-    path = F.when(
-        F.pmod(doc, F.lit(5)) == 2, F.format_string("/priv/p%07d", doc)
-    ).otherwise(F.format_string("/p%07d", doc))
-    key = F.format_string("doc://%010d", doc)
-    base = d.select(
-        doc.alias("doc_id"),
-        host.alias("host"),
-        path.alias("path"),
-        key.alias("url"),
-    ).persist()
-
-    # stage 1: host PageRank over the E77 page graph (same synthesis)
-    anchors = [
-        F.format_string(
-            '<a href="http://site-%%03d.example.org/q%d">l</a>' % k,
-            F.pmod(doc * 3 + F.lit(17 * k + 1), F.lit(40)),
-        )
-        for k in range(3)
-    ]
-    pages = d.select(
-        F.format_string("http://site-%03d.example.org/p%07d", h, doc).alias(
-            "url"
-        ),
-        F.concat(
-            F.lit("<html><body>"), *anchors, F.lit("</body></html>")
-        ).alias("html"),
-    )
-    pr = linkgraph_pagerank(pages).select("host", "pr_scaled")
-
-    # stage 2: robots permission
-    robots = d.select(
-        host.alias("host"),
-        F.concat_ws(
-            "\n", F.lit("User-agent: *"), F.lit("Disallow: /priv")
-        ).alias("payload"),
-    ).distinct()
-    perm = evaluate_urls(
-        base.select("host", "path"), parse_robots_rules(robots)
-    ).select("host", "path", F.col("allowed").alias("robots_allowed"))
-
-    # stage 3: per-host quota lottery (wave = pick_rank)
-    quota = host_quota_sample(
-        base.select("host", "url"), quota=8
-    ).select(
-        "host",
-        "url",
-        F.col("kept").alias("kept_quota"),
-        F.col("pick_rank").alias("wave"),
-    )
-
-    out = (
-        base.join(perm, ["host", "path"])
-        .join(quota, ["host", "url"])
-        .join(pr, "host", "left")
-        .select(
-            "host",
-            "path",
-            "robots_allowed",
-            "kept_quota",
-            "wave",
-            F.coalesce("pr_scaled", F.lit(0)).alias("pr_scaled"),
-            (F.col("robots_allowed") & F.col("kept_quota")).alias(
-                "eligible"
-            ),
-        )
-    )
-    return out
-
-
-def _q_robots_eval(spark, sf_dir):
-    """E95 robots.txt evaluation (operators/robots.py): parse each
-    host's payload ONCE into a rule relation (User-agent-group
-    tracking via last_value over line order), then the RFC 9309
-    longest-match decision as a join + window — allow beats disallow
-    at equal length, no match allows. Paths hit all four outcomes."""
-    from mediaduplicatefinder_spark.operators.robots import (
-        evaluate_urls,
-        parse_robots_rules,
-    )
-
-    d = _docs(spark, sf_dir)
-    doc = F.col("doc_id")
-    h = F.pmod(doc, F.lit(10))
-    host = F.format_string("site-%d.example.org", h)
-    payload = F.concat_ws(
-        "\n",
-        F.lit("# crawl rules"),
-        F.lit("User-agent: googlebot"),
-        F.lit("Disallow: /gbot"),
-        F.lit("User-agent: *"),
-        F.lit("Disallow: /private"),
-        F.format_string("Disallow: /tmp/%d", h),
-        F.lit("Allow: /private/pub"),
-        F.lit("User-agent: other"),
-        F.lit("Disallow: /"),
-    )
-    robots = d.select(
-        host.alias("host"), payload.alias("payload")
-    ).distinct()
-    m4 = F.pmod(doc, F.lit(4))
-    path = (
-        F.when(m4 == 0, F.format_string("/private/pub/x%d", doc))
-        .when(m4 == 1, F.format_string("/private/x%d", doc))
-        .when(m4 == 2, F.format_string("/pub/x%d", doc))
-        .otherwise(F.format_string("/tmp/%d/f", h))
-    )
-    urls = d.select(host.alias("host"), path.alias("path"))
-    return evaluate_urls(urls, parse_robots_rules(robots))
-
-
-def _sitemaps_df(spark, sf_dir):
-    """Shared 25-host sitemap synthesis (E97 + the E104 composition):
-    full / loc-only / loc-less / loc+freq blocks per payload."""
-    d = _docs(spark, sf_dir)
-    h = F.pmod(F.col("doc_id"), F.lit(25))
-    host = F.format_string("site-%02d.example.org", h)
-    payload = F.concat_ws(
-        "\n",
-        F.lit('<?xml version="1.0"?><urlset>'),
-        F.format_string(
-            "<url><loc>http://site-%02d.example.org/a%d</loc>"
-            "<lastmod>2026-0%d-11</lastmod>"
-            "<changefreq>daily</changefreq></url>",
-            h,
-            h,
-            F.pmod(h, F.lit(9)) + F.lit(1),
-        ),
-        F.format_string(
-            "<url><loc>http://site-%02d.example.org/b%d</loc></url>",
-            h,
-            h,
-        ),
-        F.lit("<url><lastmod>2026-02-02</lastmod></url>"),
-        F.format_string(
-            "<url><loc>http://site-%02d.example.org/c%d</loc>"
-            "<changefreq>weekly</changefreq></url>",
-            h,
-            h,
-        ),
-        F.lit("</urlset>"),
-    )
-    return d.select(host.alias("host"), payload.alias("payload")).distinct()
-
-
-def _q_sitemap_urls(spark, sf_dir):
-    """E97 sitemap extraction (operators/sitemap.py): explode <url>
-    blocks from per-host sitemap payloads into frontier seed rows.
-    Payloads exercise all branches: full block (loc+lastmod+
-    changefreq), loc-only block, a loc-less block (dropped), and a
-    loc+changefreq block — 3 seed rows per host survive."""
-    from mediaduplicatefinder_spark.operators.sitemap import (
-        extract_sitemap_urls,
-    )
-
-    return extract_sitemap_urls(_sitemaps_df(spark, sf_dir))
-
-
-_MAGIC_HEX = (
-    "89504E470D0A1A0AAA",  # png
-    "474946383961",  # gif
-    "504B030414",  # zip
-    "255044462D312E34",  # pdf
-    "FFD8FFE000",  # jpeg
-    "424D3A000000",  # bmp
-    "1F8B0800",  # gzip
-    "524946461000000057415645",  # wav (RIFF....WAVE)
-    "3C68746D6C3E",  # '<html>' -> unknown
-)
-_MAGIC_EXT = ("png", "gif", "zip", "pdf", "jpg", "bmp", "gz", "wav", "html")
-
-
 def _dust_pages(spark, sf_dir):
     """Shared E115/E116 synthesis: 3-url content groups over 9 hosts
     with utm/sid/ref param variants."""
@@ -1394,97 +1201,6 @@ def _q_dust_rules(spark, sf_dir):
     return dust_rules(_dust_pages(spark, sf_dir))
 
 
-def _q_politeness_schedule(spark, sf_dir):
-    """E129 politeness schedule (composition): E83's quota wave rank
-    x E128's learned Crawl-delay = the earliest fetch tick per kept
-    url — the reference's scan pacing (progress cadence O4) lifted to
-    a polite distributed frontier. fetch_tick_ms = (wave - 1) *
-    delay_ms, default 1000 ms for hosts without a directive."""
-    from mediaduplicatefinder_spark.operators.hostquota import (
-        host_quota_sample,
-    )
-    from mediaduplicatefinder_spark.operators.robots import (
-        parse_crawl_delay,
-    )
-
-    d = _docs(spark, sf_dir)
-    doc = F.col("doc_id")
-    h = F.pmod(doc, F.lit(20))
-    host = F.format_string("site-%02d.example.org", h)
-    # 16-byte url surrogate: the pinned-XXH64 contract of the quota twin
-    # (E96 precedent)
-    urls = d.select(
-        host.alias("host"),
-        F.format_string("doc://%010d", doc).alias("url"),
-    )
-    m = F.pmod(h, F.lit(5))
-    payload = (
-        F.when(
-            m == 0,
-            F.format_string(
-                "User-agent: *\nCrawl-delay: %d", F.pmod(h, F.lit(7)) + 1
-            ),
-        )
-        .when(m == 1, F.lit("User-agent: *\nCrawl-delay: 0.5"))
-        .otherwise(F.lit("User-agent: *\nDisallow: /none"))
-    )
-    robots = d.select(
-        host.alias("host"), payload.alias("payload")
-    ).distinct()
-    kept = host_quota_sample(urls, quota=8).filter(F.col("kept")).select(
-        "host", "url", F.col("pick_rank").alias("wave")
-    )
-    delays = parse_crawl_delay(robots)
-    return kept.join(delays, "host", "left").select(
-        "url",
-        "host",
-        F.col("wave").cast("long").alias("wave"),
-        F.coalesce("delay_ms", F.lit(1000)).cast("long").alias("delay_ms"),
-        ((F.col("wave") - 1) * F.coalesce("delay_ms", F.lit(1000)))
-        .cast("long")
-        .alias("fetch_tick_ms"),
-    )
-
-
-def _q_crawl_delays(spark, sf_dir):
-    """E128 robots Crawl-delay extraction (operators/robots.py
-    parse_crawl_delay): group-scoped politeness delays in integer
-    milliseconds, largest * -group value wins. h%5: integer / decimal
-    "0.5" / two-delays-max-wins / wrong-group-only (absent) /
-    non-numeric (absent)."""
-    from mediaduplicatefinder_spark.operators.robots import (
-        parse_crawl_delay,
-    )
-
-    d = _docs(spark, sf_dir)
-    h = F.pmod(F.col("doc_id"), F.lit(20))
-    host = F.format_string("site-%02d.example.org", h)
-    m = F.pmod(h, F.lit(5))
-    payload = (
-        F.when(
-            m == 0,
-            F.format_string(
-                "User-agent: *\nCrawl-delay: %d\nDisallow: /x",
-                F.pmod(h, F.lit(7)) + 1,
-            ),
-        )
-        .when(m == 1, F.lit("User-agent: *\nCrawl-delay: 0.5"))
-        .when(
-            m == 2,
-            F.lit("User-agent: *\nCrawl-delay: 2\nCrawl-delay: 10"),
-        )
-        .when(
-            m == 3,
-            F.lit("User-agent: googlebot\nCrawl-delay: 9"),
-        )
-        .otherwise(F.lit("User-agent: *\nCrawl-delay: fast"))
-    )
-    robots = d.select(
-        host.alias("host"), payload.alias("payload")
-    ).distinct()
-    return parse_crawl_delay(robots)
-
-
 def _q_host_lang_profile(spark, sf_dir):
     """E127 host language-consistency rollup (operators/stats.py
     host_lang_profile): mixed-language hosts signal failed extraction
@@ -1514,30 +1230,6 @@ def _q_host_lang_profile(spark, sf_dir):
     )
 
 
-def _q_param_stats(spark, sf_dir):
-    """E126 query-param value-cardinality classification (operators/
-    paramstats.py): learn session-like (unique-per-request) and
-    constant params per host from the url log alone. id=doc is
-    session-like, page=doc%5 mid-cardinality, v=1 constant; doc%6==5
-    urls carry a rare once-per-host token under min_n."""
-    from mediaduplicatefinder_spark.operators.paramstats import (
-        param_value_stats,
-    )
-
-    d = _docs(spark, sf_dir)
-    doc = F.col("doc_id")
-    h = F.pmod(doc, F.lit(8))
-    host = F.format_string("h%02d", h)
-    url = F.concat(
-        F.format_string("http://h%02d/p?id=%d&page=%d&v=1", h, doc, F.pmod(doc, F.lit(5))),
-        F.when(
-            F.pmod(doc, F.lit(6)) == 5,
-            F.format_string("&rare=%d", doc),
-        ).otherwise(F.lit("")),
-    )
-    return param_value_stats(d.select(host.alias("host"), url.alias("url")))
-
-
 def _q_dup_histogram(spark, sf_dir):
     """E125 duplicate-family size histogram (operators/
     duphistogram.py): the corpus-card duplication table. Each 10-doc
@@ -1558,81 +1250,6 @@ def _q_dup_histogram(spark, sf_dir):
         .otherwise(F.concat(F.col("text"), F.format_string(" solo%d", doc)))
     )
     return dup_family_histogram(d.select("doc_id", text.alias("text")))
-
-
-def _q_feed_urls(spark, sf_dir):
-    """E124 RSS/Atom feed extraction (operators/feeds.py): the fourth
-    discovery channel — freshest seeds with publish hints. h%3 picks
-    the payload: RSS 2-item / Atom 2-entry / mixed with a url-less
-    item (dropped) and a date-less entry (NULL published)."""
-    from mediaduplicatefinder_spark.operators.feeds import (
-        extract_feed_urls,
-    )
-
-    d = _docs(spark, sf_dir)
-    h = F.pmod(F.col("doc_id"), F.lit(15))
-    host = F.format_string("feed-%02d.example.org", h)
-    base = F.format_string("http://feed-%02d.example.org", h)
-    rss_items = F.concat(
-        F.lit("<rss><channel>"),
-        F.lit("<item><link>"),
-        base,
-        F.format_string("/r%d</link><pubDate>Mon, 0%d Aug 2026</pubDate></item>", h, F.pmod(h, F.lit(9)) + 1),
-        F.lit("<item><link>"),
-        base,
-        F.format_string("/r%db</link></item>", h),
-        F.lit("</channel></rss>"),
-    )
-    atom_entries = F.concat(
-        F.lit('<feed><entry><link rel="alternate" href="'),
-        base,
-        F.format_string('/a%d"/><published>2026-08-0%d</published></entry>', h, F.pmod(h, F.lit(9)) + 1),
-        F.lit('<entry><link href="'),
-        base,
-        F.format_string('/a%db"/></entry></feed>', h),
-    )
-    mixed = F.concat(
-        F.lit("<rss><channel><item><pubDate>no url</pubDate></item>"),
-        F.lit("<item><link>"),
-        base,
-        F.format_string("/m%d</link></item></channel></rss>", h),
-    )
-    m = F.pmod(h, F.lit(3))
-    payload = (
-        F.when(m == 0, rss_items).when(m == 1, atom_entries).otherwise(mixed)
-    )
-    feeds = d.select(
-        host.alias("host"), payload.alias("payload")
-    ).distinct()
-    return extract_feed_urls(feeds)
-
-
-def _q_dot_segments(spark, sf_dir):
-    """E123 RFC 3986 dot-segment removal (functions/dotsegments.py):
-    the stack rule E37 deferred, as an array fold. doc%7 picks the
-    path shape: clean / ./..' mix / root-escape / over-pop / trailing
-    slash / trailing '..' / bare '/./'."""
-    from mediaduplicatefinder_spark.functions.dotsegments import (
-        remove_dot_segments,
-    )
-
-    d = _docs(spark, sf_dir)
-    doc = F.col("doc_id")
-    m = F.pmod(doc, F.lit(7))
-    path = (
-        F.when(m == 0, F.format_string("/a/b/p%d", doc))
-        .when(m == 1, F.format_string("/a/./b/../c%d", doc))
-        .when(m == 2, F.format_string("/../x%d", doc))
-        .when(m == 3, F.format_string("/a/b/../../../y%d", doc))
-        .when(m == 4, F.format_string("/dir%d/", doc))
-        .when(m == 5, F.format_string("/a/b%d/..", doc))
-        .otherwise(F.lit("/./"))
-    )
-    urls = d.select(
-        F.format_string("http://h/u%d", doc).alias("url"),
-        path.alias("path"),
-    )
-    return remove_dot_segments(urls)
 
 
 def _q_edit_pairs(spark, sf_dir):
@@ -1667,60 +1284,6 @@ def _q_edit_pairs(spark, sf_dir):
     return edit_pair_stats(pairs)
 
 
-def _q_fetch_plan(spark, sf_dir):
-    """E121 per-url fetch planning (operators/fetchplan.py): robots
-    (E95) x trap (E100) x stored validators (E118) x recrawl tier
-    (E110) -> skip / conditional / full per url. m4==0 paths are
-    robots-denied, m4==1 urls trap-scored; doc%3==1 has an ETag,
-    doc%7==3 a Last-Modified; host tier cycles hot/warm/cold."""
-    from mediaduplicatefinder_spark.operators.fetchplan import plan_fetches
-    from mediaduplicatefinder_spark.operators.robots import (
-        parse_robots_rules,
-    )
-
-    d = _docs(spark, sf_dir)
-    doc = F.col("doc_id")
-    h = F.pmod(doc, F.lit(10))
-    host = F.format_string("site-%02d.example.org", h)
-    m4 = F.pmod(doc, F.lit(4))
-    path = (
-        F.when(m4 == 0, F.format_string("/priv/p%d", doc))
-        .when(m4 == 1, F.format_string("/cal/cal/p%d", doc))
-        .otherwise(F.format_string("/ok/p%d", doc))
-    )
-    url = F.concat(
-        F.lit("http://"),
-        host,
-        path,
-        F.when(m4 == 1, F.lit("?sid=1")).otherwise(F.lit("")),
-    )
-    urls = d.select(host.alias("host"), path.alias("path"), url.alias("url"))
-    robots = d.select(
-        host.alias("host"),
-        F.lit("User-agent: *\nDisallow: /priv").alias("payload"),
-    ).distinct()
-    prior = (
-        d.filter((F.pmod(doc, F.lit(3)) == 1) | (F.pmod(doc, F.lit(7)) == 3))
-        .select(
-            url.alias("url"),
-            F.when(
-                F.pmod(doc, F.lit(3)) == 1, F.format_string("e%d", doc)
-            ).alias("etag"),
-            F.when(
-                (F.pmod(doc, F.lit(7)) == 3) & (F.pmod(doc, F.lit(3)) != 1),
-                F.lit("Mon, 17 Aug 2026 00:00:00 GMT"),
-            ).alias("last_modified"),
-        )
-    )
-    tier = (
-        F.when(F.pmod(h, F.lit(3)) == 0, F.lit("hot"))
-        .when(F.pmod(h, F.lit(3)) == 1, F.lit("warm"))
-        .otherwise(F.lit("cold"))
-    )
-    schedule = d.select(host.alias("host"), tier.alias("tier")).distinct()
-    return plan_fetches(urls, prior, parse_robots_rules(robots), schedule)
-
-
 def _q_source_dedup(spark, sf_dir):
     """E120 cross-source priority dedup (operators/sourcededup.py):
     duplicate families spanning wiki/books/web keep the copy from the
@@ -1747,141 +1310,6 @@ def _q_source_dedup(spark, sf_dir):
     ).otherwise(F.concat(F.col("text"), F.format_string(" u%d", doc)))
     docs = d.select(source.alias("source"), "doc_id", text.alias("text"))
     return source_priority_dedup(docs)
-
-
-def _q_redirect_resolve(spark, sf_dir):
-    """E119 redirect-chain resolution (operators/redirects.py):
-    pointer-jumping to each chain's final url with loop detection.
-    Chains of length 1-3 per content group; c%13==7 groups are 2-cycles
-    (loop flagged, final NULL)."""
-    from mediaduplicatefinder_spark.operators.redirects import (
-        resolve_redirects,
-    )
-
-    d = _docs(spark, sf_dir)
-    doc = F.col("doc_id")
-    c = F.expr("doc_id div 4")
-    s = F.pmod(doc, F.lit(4))
-    L = F.pmod(c, F.lit(3)) + F.lit(1)
-    is_loop_grp = F.pmod(c, F.lit(13)) == 7
-    a = F.format_string("http://r/c%d_a", c)
-    b = F.format_string("http://r/c%d_b", c)
-    chain_from = F.format_string("http://r/c%d_s%d", c, s)
-    chain_to = F.when(
-        s + 1 == L, F.format_string("http://t/final%d", c)
-    ).otherwise(F.format_string("http://r/c%d_s%d", c, s + 1))
-    url = F.when(is_loop_grp, F.when(s == 0, a).otherwise(b)).otherwise(
-        chain_from
-    )
-    target = F.when(is_loop_grp, F.when(s == 0, b).otherwise(a)).otherwise(
-        chain_to
-    )
-    keep = (is_loop_grp & (s < 2)) | (~is_loop_grp & (s < L))
-    edges = d.filter(keep).select(url.alias("url"), target.alias("target"))
-    return resolve_redirects(edges)
-
-
-def _q_http_headers(spark, sf_dir):
-    """E118 HTTP response-header extraction (functions/httpheaders.py):
-    status / media type / charset / validators from the raw HTTP head
-    WARC records carry. doc%5: 200 full / 404 / 200 pdf no charset /
-    301 empty body / headless garbage (NULL fields)."""
-    from mediaduplicatefinder_spark.functions.httpheaders import (
-        parse_http_headers,
-    )
-
-    d = _docs(spark, sf_dir)
-    doc = F.col("doc_id")
-    m = F.pmod(doc, F.lit(5))
-    crlf = "\r\n"
-    payload = (
-        F.when(
-            m == 0,
-            F.concat(
-                F.lit(
-                    "HTTP/1.1 200 OK" + crlf
-                    + "Content-Type: text/html; charset=UTF-8" + crlf
-                ),
-                F.format_string('ETag: "tag-%d"', doc),
-                F.lit(crlf),
-                F.lit(
-                    "Last-Modified: Mon, 17 Aug 2026 01:02:03 GMT"
-                    + crlf + crlf
-                ),
-                F.substring(F.col("text"), 1, 80),
-            ),
-        )
-        .when(
-            m == 1,
-            F.lit(
-                "HTTP/1.1 404 Not Found" + crlf
-                + "Content-Type: text/html" + crlf + crlf
-                + "<h1>not here</h1>"
-            ),
-        )
-        .when(
-            m == 2,
-            F.concat(
-                F.lit(
-                    "HTTP/1.1 200 OK" + crlf
-                    + "Content-Type: application/pdf" + crlf + crlf
-                ),
-                F.format_string("%%PDF-1.4 fake %d", doc),
-            ),
-        )
-        .when(
-            m == 3,
-            F.lit(
-                "HTTP/1.1 301 Moved Permanently" + crlf
-                + "Location: http://elsewhere.example/" + crlf + crlf
-            ),
-        )
-        .otherwise(F.concat(F.lit("just bytes "), F.col("text")))
-    )
-    return parse_http_headers(d.select("doc_id", payload.alias("payload")))
-
-
-def _q_robots_sitemaps(spark, sf_dir):
-    """E117 Sitemap directives in robots.txt (operators/robots.py):
-    the loop-closer between E95 and E97 — global Sitemap: lines
-    extracted per host. h%4: one directive / two case-variant
-    directives / none / trailing-whitespace directive."""
-    from mediaduplicatefinder_spark.operators.robots import (
-        parse_robots_sitemaps,
-    )
-
-    d = _docs(spark, sf_dir)
-    h = F.pmod(F.col("doc_id"), F.lit(12))
-    host = F.format_string("site-%02d.example.org", h)
-    m = F.pmod(h, F.lit(4))
-    payload = F.concat(
-        F.lit("User-agent: *\nDisallow: /tmp\n"),
-        F.when(
-            m == 0,
-            F.format_string(
-                "Sitemap: http://site-%02d.example.org/sitemap.xml\n", h
-            ),
-        )
-        .when(
-            m == 1,
-            F.format_string(
-                "sitemap: http://site-%02d.example.org/sm1.xml\n"
-                "SITEMAP: http://site-%02d.example.org/sm2.xml\n",
-                h,
-                h,
-            ),
-        )
-        .when(m == 2, F.lit(""))
-        .otherwise(
-            F.format_string(
-                "Sitemap: http://site-%02d.example.org/tail.xml   \n", h
-            )
-        ),
-    )
-    robots = d.select(
-        host.alias("host"), payload.alias("payload")
-    ).distinct()
-    return parse_robots_sitemaps(robots)
 
 
 def _q_dust_collapse(spark, sf_dir):
@@ -1931,29 +1359,6 @@ def _q_norm_exact(spark, sf_dir):
     )
 
 
-def _q_reg_domains(spark, sf_dir):
-    """E113 registrable-domain extraction (functions/regdomain.py):
-    eTLD+1 over a literal suffix subset. doc%6 picks the shape:
-    plain .com / deep subdomain / co.uk multi-suffix / deep co.uk /
-    bare two-label / single-label intranet host."""
-    from mediaduplicatefinder_spark.functions.regdomain import (
-        registrable_domains,
-    )
-
-    d = _docs(spark, sf_dir)
-    doc = F.col("doc_id")
-    m = F.pmod(doc, F.lit(6))
-    url = (
-        F.when(m == 0, F.format_string("http://shop-%d.com/a", doc))
-        .when(m == 1, F.format_string("http://a.b.site-%d.org/x", doc))
-        .when(m == 2, F.format_string("http://press-%d.co.uk/y", doc))
-        .when(m == 3, F.format_string("http://en.blog.firm-%d.co.uk/z", doc))
-        .when(m == 4, F.format_string("http://plain-%d.net/", doc))
-        .otherwise(F.format_string("http://intranet%d/portal", doc))
-    )
-    return registrable_domains(d.select(url.alias("url")))
-
-
 def _q_mirror_hosts(spark, sf_dir):
     """E112 cross-host mirror detection (operators/mirrors.py): host
     pairs sharing byte-identical documents via the sha posting join.
@@ -1989,132 +1394,6 @@ def _q_mirror_hosts(spark, sf_dir):
     )
     pages = d.select(host.alias("host"), "doc_id", text.alias("text"))
     return mirror_host_pairs(pages)
-
-
-def _q_outlink_profile(spark, sf_dir):
-    """E111 outlink profiling (functions/outlinks.py): link counts,
-    internal/external split (relative = internal), nofollow count,
-    and the link-farm flag (>=20 links, >=90% external). doc%5:
-    normal mix / 24-external farm / nofollow mix / linkless /
-    20-link 50% external boundary non-farm."""
-    from mediaduplicatefinder_spark.functions.outlinks import (
-        outlink_profile,
-    )
-
-    d = _docs(spark, sf_dir)
-    doc = F.col("doc_id")
-    h = F.pmod(doc, F.lit(10))
-    url = F.format_string("http://site-%02d.example.org/p%d", h, doc)
-    internal = F.format_string(
-        '<a href="http://site-%02d.example.org/o%d">i</a>', h, doc
-    )
-    external = F.lit('<a href="http://other.example.com/x">o</a>')
-    m = F.pmod(doc, F.lit(5))
-    html = (
-        F.when(
-            m == 0,
-            F.concat(internal, F.lit('<a href="/rel">r</a>'), external),
-        )
-        .when(m == 1, F.repeat(external, 24))
-        .when(
-            m == 2,
-            F.concat(
-                internal,
-                F.lit(
-                    '<a rel="nofollow" href="http://spam.example/a">n</a>'
-                    '<a rel="nofollow" href="http://spam.example/b">n</a>'
-                ),
-            ),
-        )
-        .when(m == 3, F.lit("<p>no links at all</p>"))
-        .otherwise(F.repeat(F.concat(internal, external), 10))
-    )
-    pages = d.select(url.alias("url"), html.alias("html"))
-    return outlink_profile(pages)
-
-
-def _q_recrawl_schedule(spark, sf_dir):
-    """E110 recrawl scheduling (operators/recrawl.py): declared
-    sitemap cadence overridden by observed churn — busy hosts
-    (>=1/3 changed) halve their interval, quiet hosts (<10%) double
-    it. Hosts 0-4 rewrite half their pages (busy); 5-16 never change
-    (quiet); sitemap covers hosts 0-19 minus host 3 (default-14
-    path) with daily/weekly/monthly/unknown cadences."""
-    from mediaduplicatefinder_spark.operators.crawldiff import crawl_diff
-    from mediaduplicatefinder_spark.operators.recrawl import (
-        recrawl_schedule,
-    )
-    from mediaduplicatefinder_spark.operators.sitemap import (
-        extract_sitemap_urls,
-    )
-
-    d = _docs(spark, sf_dir)
-    doc = F.col("doc_id")
-    h17 = F.pmod(doc, F.lit(17))
-    host = F.format_string("site-%02d.example.org", h17)
-    base = d.select(
-        doc.alias("doc_id"),
-        F.format_string("doc://%010d", doc).alias("url"),
-        host.alias("host"),
-        F.col("text"),
-    )
-    old = base.filter(F.pmod(doc, F.lit(13)) != 5).select(
-        "url", "host", "text"
-    )
-    new = base.filter(F.pmod(doc, F.lit(11)) != 3).select(
-        "url",
-        "host",
-        F.when(
-            (h17 < 5) & (F.pmod(doc, F.lit(2)) == 0),
-            F.concat(F.col("text"), F.lit(" v2")),
-        )
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
-    h20 = F.pmod(doc, F.lit(20))
-    label = F.when(F.pmod(h20, F.lit(5)) == 4, F.lit("sometimes")).otherwise(
-        F.when(F.pmod(h20, F.lit(3)) == 0, F.lit("daily"))
-        .when(F.pmod(h20, F.lit(3)) == 1, F.lit("weekly"))
-        .otherwise(F.lit("monthly"))
-    )
-    sm = (
-        d.filter(h20 != 3)
-        .select(
-            F.format_string("site-%02d.example.org", h20).alias("host"),
-            F.format_string(
-                "<url><loc>http://site-%02d.example.org/s</loc>"
-                "<changefreq>%s</changefreq></url>",
-                h20,
-                label,
-            ).alias("payload"),
-        )
-        .distinct()
-    )
-    seeds = extract_sitemap_urls(sm).select("host", "changefreq")
-    return recrawl_schedule(crawl_diff(old, new), seeds)
-
-
-def _q_magic_sniff(spark, sf_dir):
-    """E109 magic-byte type sniffing (functions/magic.py): route
-    payloads by their bytes, not the url's claim. doc_id%9 picks the
-    format; doc_id%5==2 lies about the extension (.txt)."""
-    from mediaduplicatefinder_spark.functions.magic import magic_sniff
-
-    d = _docs(spark, sf_dir)
-    doc = F.col("doc_id")
-    m = F.pmod(doc, F.lit(9))
-    raw = F.lit(bytearray.fromhex(_MAGIC_HEX[0]))
-    for i in range(1, 9):
-        raw = F.when(m == i, F.lit(bytearray.fromhex(_MAGIC_HEX[i]))).otherwise(
-            raw
-        )
-    ext = F.lit(_MAGIC_EXT[0])
-    for i in range(1, 9):
-        ext = F.when(m == i, F.lit(_MAGIC_EXT[i])).otherwise(ext)
-    ext = F.when(F.pmod(doc, F.lit(5)) == 2, F.lit("txt")).otherwise(ext)
-    url = F.concat(F.format_string("http://h/f%d.", doc), ext)
-    pages = d.select("doc_id", url.alias("url"), raw.alias("raw"))
-    return magic_sniff(pages)
 
 
 def _q_shingle_novelty(spark, sf_dir):
@@ -2204,156 +1483,6 @@ def _q_title_dups(spark, sf_dir):
     return title_dup_families(pages)
 
 
-def _q_host_health(spark, sf_dir):
-    """E106 per-host health rollup (operators/hosthealth.py): the
-    E98/E99/E100/E101 channels composed to one row per host with an
-    integer penalty and a healthy verdict. 8 hosts; doc_id%11==3
-    soft-404 bodies, %9==2 pure-footer boilerplate pages, %3!=0
-    footer carriers, %17==4 trap urls, %5==1 canonical declarers
-    pointing at the crawled head page."""
-    from mediaduplicatefinder_spark.operators.hosthealth import host_health
-
-    d = _docs(spark, sf_dir)
-    doc = F.col("doc_id")
-    h = F.pmod(doc, F.lit(8))
-    host = F.format_string("h%02d", h)
-    footer = F.format_string(
-        " footer h%02d menu copyright contact about", h
-    )
-    text = (
-        F.when(
-            F.pmod(doc, F.lit(11)) == 3,
-            F.lit(
-                "error 404 page not found the page you requested"
-                " does not exist"
-            ),
-        )
-        .when(
-            F.pmod(doc, F.lit(9)) == 2,
-            F.format_string("footer h%02d menu copyright contact about", h),
-        )
-        .when(F.pmod(doc, F.lit(3)) != 0, F.concat(F.col("text"), footer))
-        .otherwise(F.col("text"))
-    )
-    url = F.when(
-        F.pmod(doc, F.lit(17)) == 4,
-        F.format_string("http://h%02d/cal/cal/p%d?sid=1", h, doc),
-    ).otherwise(F.format_string("http://h%02d/p%d", h, doc))
-    html = F.when(
-        F.pmod(doc, F.lit(5)) == 1,
-        F.format_string(
-            '<link rel="canonical" href="http://h%02d/p%d">', h, h
-        ),
-    ).otherwise(F.lit("<html></html>"))
-    pages = d.select(
-        host.alias("host"),
-        "doc_id",
-        url.alias("url"),
-        text.alias("text"),
-        html.alias("html"),
-    )
-    return host_health(pages)
-
-
-def _q_charset_sniff(spark, sf_dir):
-    """E105 charset sniffing (functions/charset.py): WHATWG order
-    BOM > meta declaration > default over synthesized byte payloads.
-    doc_id%6: meta utf-8 / utf-8 BOM / utf-16le BOM / latin1 alias /
-    http-equiv ISO-8859-1 / undeclared."""
-    from mediaduplicatefinder_spark.functions.charset import sniff_charset
-
-    d = _docs(spark, sf_dir)
-    m = F.pmod(F.col("doc_id"), F.lit(6))
-    html = (
-        F.when(
-            m == 0,
-            F.lit('<html><head><meta charset="utf-8"></head><body>p</body></html>'),
-        )
-        .when(m == 1, F.lit("<html><body>no meta</body></html>"))
-        .when(m == 2, F.lit("<html><body>le</body></html>"))
-        .when(
-            m == 3,
-            F.lit('<html><head><meta charset="latin1"></head></html>'),
-        )
-        .when(
-            m == 4,
-            F.lit(
-                '<html><head><meta http-equiv="Content-Type"'
-                ' content="text/html; charset=ISO-8859-1"></head></html>'
-            ),
-        )
-        .otherwise(F.lit("<html><body>plain</body></html>"))
-    )
-    bom = (
-        F.when(m == 1, F.lit(bytearray([0xEF, 0xBB, 0xBF])))
-        .when(m == 2, F.lit(bytearray([0xFF, 0xFE])))
-        .otherwise(F.lit(bytearray()))
-    )
-    raw = F.concat(bom, F.encode(html, "UTF-8"))
-    return sniff_charset(d.select("doc_id", raw.alias("raw")))
-
-
-def _q_frontier_seeds(spark, sf_dir):
-    """E104 frontier seed discovery (operators/frontier.py): sitemap
-    (E97) ∪ anchors ∪ canonical targets (E98 regexes), min-priority
-    dedup (sitemap > link > canonical), crawled urls anti-joined out,
-    E100 trap scores attached. doc_id%4==0 anchors overlap a sitemap
-    loc (priority exercised), doc_id%6==2 anchors are trappy
-    (cal/cal + sid), doc_id%5==1 pages declare a canonical target,
-    and every page links one already-crawled url (anti-joined)."""
-    from mediaduplicatefinder_spark.operators.frontier import (
-        frontier_seeds,
-    )
-
-    d = _docs(spark, sf_dir)
-    doc = F.col("doc_id")
-    h = F.pmod(doc, F.lit(25))
-    j = F.pmod(doc * 3, F.lit(500))
-    url = F.format_string("http://site-%02d.example.org/p%05d", h, doc)
-    a_sm = F.when(
-        F.pmod(doc, F.lit(4)) == 0,
-        F.format_string(
-            '<a href="http://site-%02d.example.org/a%d">s</a>', h, h
-        ),
-    ).otherwise(F.lit(""))
-    a_l = F.when(
-        F.pmod(doc, F.lit(6)) == 2,
-        F.format_string(
-            '<a href="http://site-%02d.example.org/cal/cal/l%d?sid=1">x</a>',
-            h,
-            doc,
-        ),
-    ).otherwise(
-        F.format_string(
-            '<a href="http://site-%02d.example.org/l%d">x</a>', h, doc
-        )
-    )
-    a_p = F.format_string(
-        '<a href="http://site-%02d.example.org/p%05d">y</a>',
-        F.pmod(j, F.lit(25)),
-        j,
-    )
-    canon = F.when(
-        F.pmod(doc, F.lit(5)) == 1,
-        F.format_string(
-            '<link rel="canonical" href="http://site-%02d.example.org/c%d">',
-            h,
-            h,
-        ),
-    ).otherwise(F.lit(""))
-    html = F.concat(
-        F.lit("<html><head>"),
-        canon,
-        F.lit("</head><body>"),
-        a_sm,
-        a_l,
-        a_p,
-        F.lit("</body></html>"),
-    )
-    pages = d.select(url.alias("url"), html.alias("html"))
-    return frontier_seeds(pages, _sitemaps_df(spark, sf_dir))
-
-
 def _q_main_content(spark, sf_dir):
     """E103 main-content extraction (functions/boilerplate.py):
     per-block link-density + length classification over synthesized
@@ -2380,198 +1509,6 @@ def _q_main_content(spark, sf_dir):
     )
     pages = d.select("doc_id", html.alias("html"))
     return extract_main_content(pages)
-
-
-def _q_hreflang_families(spark, sf_dir):
-    """E102 hreflang translation families (operators/hreflang.py):
-    declared language alternates connect en/de/fr triples into
-    families via the CC operator. g%4==3 triples declare nothing
-    (absent from output); g%5==2 triples declare asymmetrically
-    (only the en page) and still connect fully."""
-    from mediaduplicatefinder_spark.operators.hreflang import (
-        hreflang_families,
-    )
-
-    d = _docs(spark, sf_dir)
-    doc = F.col("doc_id")
-    g = F.expr("doc_id div 3")
-    m = F.pmod(doc, F.lit(3))
-    lang = (
-        F.when(m == 0, F.lit("en")).when(m == 1, F.lit("de")).otherwise(F.lit("fr"))
-    )
-    url = F.format_string(
-        "http://s.example.org/%05d/", g
-    )
-    my_url = F.concat(url, lang)
-    tag = (
-        lambda lg: F.concat(
-            F.lit('<link rel="alternate" hreflang="' + lg + '" href="'),
-            url,
-            F.lit(lg + '">'),
-        )
-    )
-    full_tags = F.concat(
-        F.when(m == 0, F.concat(tag("de"), tag("fr")))
-        .when(m == 1, F.concat(tag("en"), tag("fr")))
-        .otherwise(F.concat(tag("en"), tag("de"))),
-        F.when(
-            m == 0,
-            F.concat(
-                F.lit('<link rel="alternate" hreflang="x-default" href="'),
-                url,
-                F.lit('en">'),
-            ),
-        ).otherwise(F.lit("")),
-    )
-    silent = F.pmod(g, F.lit(4)) == 3
-    en_only = F.pmod(g, F.lit(5)) == 2
-    tags = (
-        F.when(silent, F.lit(""))
-        .when(en_only & (m != 0), F.lit(""))
-        .otherwise(full_tags)
-    )
-    html = F.concat(
-        F.lit("<html><head>"), tags, F.lit("</head><body>p</body></html>")
-    )
-    pages = d.select(my_url.alias("url"), html.alias("html"))
-    return hreflang_families(pages)
-
-
-def _q_soft404(spark, sf_dir):
-    """E101 soft-404 detection (operators/soft404.py): error-phrase
-    evidence + host-median size prior flags 200-status error pages.
-    doc_id%11==3 docs become short multi-phrase error bodies (flagged
-    by phrases alone); doc_id%13==5 docs append ONE phrase to normal
-    text (flagged only if also under half the host median)."""
-    from mediaduplicatefinder_spark.operators.soft404 import soft404_flags
-
-    d = _docs(spark, sf_dir)
-    doc = F.col("doc_id")
-    host = F.format_string("h%02d", F.pmod(doc, F.lit(10)))
-    text = (
-        F.when(
-            F.pmod(doc, F.lit(11)) == 3,
-            F.lit(
-                "error 404 page not found the page you requested"
-                " does not exist"
-            ),
-        )
-        .when(
-            F.pmod(doc, F.lit(13)) == 5,
-            F.concat(F.col("text"), F.lit(" this item is no longer available")),
-        )
-        .otherwise(F.col("text"))
-    )
-    pages = d.select(host.alias("host"), "doc_id", text.alias("text"))
-    return soft404_flags(pages)
-
-
-def _q_trap_urls(spark, sf_dir):
-    """E100 spider-trap url scoring (functions/trapurl.py): repeated
-    path segments, depth, session-id params, and param/path bloat
-    scored per url before fetch. doc_id%6 picks the trap shape:
-    0 clean, 1 calendar loop, 2 deep path, 3 session param,
-    4 param bloat, 5 oversized path segment."""
-    from mediaduplicatefinder_spark.functions.trapurl import (
-        trap_url_scores,
-    )
-
-    d = _docs(spark, sf_dir)
-    doc = F.col("doc_id")
-    m = F.pmod(doc, F.lit(6))
-    base = F.format_string("http://site-%02d.example.org", F.pmod(doc, F.lit(9)))
-    url = F.concat(
-        base,
-        F.when(m == 0, F.format_string("/a/b/p%d", doc))
-        .when(m == 1, F.format_string("/cal/2026/cal/2026/cal/p%d", doc))
-        .when(m == 2, F.format_string("/d1/d2/d3/d4/d5/d6/d7/p%d", doc))
-        .when(m == 3, F.format_string("/a/p%d?phpsessid=tok%d&x=1", doc, doc))
-        .when(
-            m == 4,
-            F.format_string("/a/p%d?a=1&b=2&c=3&d=4&e=5&f=6&g=7", doc),
-        )
-        .otherwise(
-            F.concat(
-                F.lit("/long/"),
-                F.repeat(F.lit("x"), 130),
-                F.format_string("/p%d", doc),
-            )
-        ),
-    )
-    return trap_url_scores(d.select(url.alias("url")))
-
-
-def _q_host_template(spark, sf_dir):
-    """E99 per-host template shingles (operators/hosttemplate.py):
-    shingles in >= 50% of a host's pages are template; per-page
-    template counts route pages to boilerplate stripping. 2/3 of each
-    host's docs carry an injected host-specific footer, so its
-    internal shingles cross the threshold while content shingles
-    stay below it."""
-    from mediaduplicatefinder_spark.operators.hosttemplate import (
-        host_template_stats,
-    )
-
-    d = _docs(spark, sf_dir)
-    doc = F.col("doc_id")
-    h = F.pmod(doc, F.lit(12))
-    host = F.format_string("h%02d", h)
-    text = F.when(
-        F.pmod(doc, F.lit(3)) == 0, F.col("text")
-    ).otherwise(
-        F.concat(
-            F.col("text"),
-            F.format_string(
-                " footer h%02d navigation menu copyright contact about", h
-            ),
-        )
-    )
-    pages = d.select(host.alias("host"), "doc_id", text.alias("text"))
-    return host_template_stats(pages)
-
-
-def _q_canonical_collapse(spark, sf_dir):
-    """E98 canonical-link collapse (operators/canonical.py): pages
-    declaring the same rel=canonical / og:url target form a duplicate
-    family without content comparison; the crawled target page wins.
-    doc_id%10 picks the declaration form: 1 rel-first link, 2
-    href-first link, 3 og:url, 4 link + og decoy (precedence), else
-    none (self family)."""
-    from mediaduplicatefinder_spark.operators.canonical import (
-        canonical_collapse,
-    )
-
-    d = _docs(spark, sf_dir)
-    doc = F.col("doc_id")
-    g = F.expr("doc_id div 10")
-    m = F.pmod(doc, F.lit(10))
-    head = F.format_string(
-        "http://site-%02d.example.org/p%05d", F.pmod(g, F.lit(20)), g * 10
-    )
-    url = F.format_string(
-        "http://site-%02d.example.org/p%05d", F.pmod(g, F.lit(20)), doc
-    )
-    html = F.concat(
-        F.lit("<html><head>"),
-        F.when(m == 1, F.format_string('<link rel="canonical" href="%s">', head))
-        .when(m == 2, F.format_string('<link href="%s" rel="canonical">', head))
-        .when(
-            m == 3,
-            F.format_string('<meta property="og:url" content="%s">', head),
-        )
-        .when(
-            m == 4,
-            F.format_string(
-                '<link rel="canonical" href="%s">'
-                '<meta property="og:url" content="http://decoy.example/x">',
-                head,
-            ),
-        )
-        .otherwise(F.lit("")),
-        F.lit("</head><body>page</body></html>"),
-    )
-    pages = d.select(url.alias("url"), html.alias("html"))
-    return canonical_collapse(pages)
 
 
 def _q_token_drift(spark, sf_dir):
@@ -2786,87 +1723,6 @@ def _q_vocab_profile(spark, sf_dir):
     from mediaduplicatefinder_spark.operators.stats import vocab_profile
 
     return vocab_profile(_docs(spark, sf_dir).select("source", "text"))
-
-
-def _q_anchor_terms(spark, sf_dir):
-    """E85 anchor-text host profiles (operators/anchortext.py): invert
-    the link graph with its text — per target host, the top-5 anchor
-    terms by (count desc, term asc). Synthesis reuses the E77 page
-    shape with 3 anchors per page carrying a small rotating vocab."""
-    from mediaduplicatefinder_spark.operators.anchortext import (
-        host_anchor_terms,
-    )
-
-    d = _docs(spark, sf_dir)
-    doc = F.col("doc_id")
-    anchors = [
-        F.format_string(
-            '<a href="http://site-%%03d.example.org/q%d">term%%d %s</a>'
-            % (k, ["visit", "read more", "home page"][k]),
-            F.pmod(doc * 3 + F.lit(17 * k + 1), F.lit(40)),
-            F.pmod(doc + F.lit(k), F.lit(9)),
-        )
-        for k in range(3)
-    ]
-    html = F.concat(
-        F.lit("<html><body>"), *anchors, F.lit("</body></html>")
-    )
-    return host_anchor_terms(d.select(html.alias("html")))
-
-
-def _q_crawl_diff_churn(spark, sf_dir):
-    """E84 crawl snapshot diff + host churn (operators/crawldiff.py):
-    NEW/GONE/CHANGED/UNCHANGED per url via one full-outer join on
-    sha2(text) keys, rolled up to the per-host change-rate a recrawl
-    scheduler consumes. Synthesis drops id%13==5 from old, id%11==3
-    from new, and rewrites id%7==2 — all four statuses live."""
-    from mediaduplicatefinder_spark.operators.crawldiff import (
-        crawl_diff,
-        host_churn,
-    )
-
-    d = _docs(spark, sf_dir)
-    doc = F.col("doc_id")
-    base = d.select(
-        doc.alias("doc_id"),
-        F.format_string("doc://%010d", doc).alias("url"),
-        F.format_string(
-            "site-%02d.example.org", F.pmod(doc, F.lit(17))
-        ).alias("host"),
-        F.col("text"),
-    )
-    old = base.filter(F.pmod(doc, F.lit(13)) != 5).select(
-        "url", "host", "text"
-    )
-    new = base.filter(F.pmod(doc, F.lit(11)) != 3).select(
-        "url",
-        "host",
-        F.when(
-            F.pmod(doc, F.lit(7)) == 2, F.concat(F.col("text"), F.lit(" v2"))
-        )
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
-    return host_churn(crawl_diff(old, new))
-
-
-def _q_host_quota(spark, sf_dir):
-    """E83 per-host quota sampling (operators/hostquota.py): FineWeb-
-    style domain caps with a deterministic xxhash64 lottery and the
-    local-prune-then-global-rank skew shape. 17 synthetic hosts over
-    500 docs at quota 20 keep both branches live."""
-    from mediaduplicatefinder_spark.operators.hostquota import (
-        host_quota_sample,
-    )
-
-    d = _docs(spark, sf_dir)
-    host = F.format_string(
-        "site-%02d.example.org", F.pmod(F.col("doc_id"), F.lit(17))
-    )
-    url = F.format_string("doc://%010d", F.col("doc_id"))
-    return host_quota_sample(
-        d.select(host.alias("host"), url.alias("url"))
-    )
 
 
 # E82 driver synthesis: a clean phrase double-encoded through the REAL
@@ -3275,36 +2131,6 @@ def _q_url_canon(spark, sf_dir):
         host_expr(F.col("url")).alias("host"),
         domain_expr(F.col("url")).alias("domain"),
     )
-
-
-def _q_url_filter(spark, sf_dir):
-    """E61 URL filtering (functions/urlfilter.py): deterministic varied
-    URLs injected per doc_id — some on blocklisted domains (exact host
-    and subdomain forms), some carrying scored keywords in path/query —
-    then the domain suffix-explode broadcast join + keyword scoring.
-    The corpus side is map-only codegen; the only join is against the
-    3-row broadcast blocklist."""
-    from mediaduplicatefinder_spark.functions.urlfilter import url_filter
-
-    d = _docs(spark, sf_dir)
-    doc = F.col("doc_id")
-    url = F.concat(
-        F.when(doc % 2 == 0, F.lit("https")).otherwise(F.lit("HTTP")),
-        F.lit("://"),
-        F.when(doc % 7 == 3, F.lit("ads."))
-        .when(doc % 3 == 0, F.lit("WWW."))
-        .otherwise(F.lit("")),
-        F.when(doc % 11 == 5, F.lit("Tracker-Ads.NET")).otherwise(
-            F.format_string("Site-%d.Example.ORG", F.pmod(doc, F.lit(20)))
-        ),
-        F.when(doc % 4 == 0, F.lit("")).otherwise(
-            F.format_string("/Dir/page-%d", doc)
-        ),
-        F.when(doc % 5 == 1, F.lit("/Casino/win-big"))
-        .when(doc % 5 == 3, F.lit("?q=poker&x=CASINO"))
-        .otherwise(F.lit("")),
-    )
-    return url_filter(d.select("doc_id", url.alias("url")))
 
 
 def _q_host_dup_stats(spark, sf_dir):
@@ -5949,15 +4775,11 @@ def _synth_crawl(d: DataFrame) -> tuple[DataFrame, DataFrame]:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Registry order matters: the driver's correctness gate value-checks
-    # the FIRST 50 entries. Round 5 executes the SURVEY.md §8 rotation
-    # plan verbatim: every query never driver-verified in rounds 1-4
-    # (128 of 228) is ordered never-verified-first in the §8 priority
-    # blocks, so CORRECTNESS_r05's window is drawn entirely from the
-    # unwitnessed set (cumulative driver coverage 150/228 after this
-    # round). Everything already driver-green in r1-r4 sits below the
-    # window; the full registry is still value-checked locally every
-    # session via scripts/check_oracle.py.
+    # Registry order matters: the external correctness gate value-checks
+    # the FIRST 50 entries. Queries it never verified in rounds 1-4 come
+    # first, in the SURVEY.md §8 priority blocks; everything it already
+    # passed in r1-r4 sits below the window. The full registry is
+    # value-checked locally via scripts/check_oracle.py.
     return {
         # -- r5 window block 1: sessions-1-3 backlog (SURVEY §8.1) -------
         "kmeans_fit": _q_kmeans_fit,
@@ -5975,7 +4797,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "quality_classifier": _q_quality_classifier,
         "shard_layout": _q_shard_layout,
         "host_dup_stats": _q_host_dup_stats,
-        "url_filter": _q_url_filter,
         "lang_mix": _q_lang_mix,
         # -- r5 window block 2: session-4 analytics (SURVEY §8.2) -------
         "ensemble_clusters": _q_ensemble_clusters,
@@ -5992,12 +4813,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "span_coverage": _q_span_coverage,
         "passage_windows": _q_passage_windows,
         "vocab_profile": _q_vocab_profile,
-        "anchor_terms": _q_anchor_terms,
-        "crawl_diff_churn": _q_crawl_diff_churn,
-        "host_quota": _q_host_quota,
         "repair_mojibake": _q_repair_mojibake,
-        "crawl_frontier": _q_crawl_frontier,
-        "robots_eval": _q_robots_eval,
         # -- r5 window block 3: session-13 graph-peel (SURVEY §8.3) -----
         "kcore_nodes": _q_kcore_nodes,
         "ktruss_edges": _q_ktruss_edges,
@@ -6059,36 +4875,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dust_collapse": _q_dust_collapse,
         "dust_rules": _q_dust_rules,
         "norm_exact": _q_norm_exact,
-        "reg_domains": _q_reg_domains,
         "mirror_hosts": _q_mirror_hosts,
-        "outlink_profile": _q_outlink_profile,
-        "recrawl_schedule": _q_recrawl_schedule,
-        "magic_sniff": _q_magic_sniff,
         "shingle_novelty": _q_shingle_novelty,
         "title_dups": _q_title_dups,
-        "host_health": _q_host_health,
-        "charset_sniff": _q_charset_sniff,
-        "frontier_seeds": _q_frontier_seeds,
         "main_content": _q_main_content,
-        "hreflang_families": _q_hreflang_families,
-        "soft404_flags": _q_soft404,
-        "trap_urls": _q_trap_urls,
-        "host_template": _q_host_template,
-        "canonical_collapse": _q_canonical_collapse,
-        "sitemap_urls": _q_sitemap_urls,
-        "politeness_schedule": _q_politeness_schedule,
-        "crawl_delays": _q_crawl_delays,
         "host_lang_profile": _q_host_lang_profile,
-        "param_stats": _q_param_stats,
         "dup_histogram": _q_dup_histogram,
-        "feed_urls": _q_feed_urls,
-        "dot_segments": _q_dot_segments,
         "edit_pairs": _q_edit_pairs,
-        "fetch_plan": _q_fetch_plan,
         "source_dedup": _q_source_dedup,
-        "redirect_resolve": _q_redirect_resolve,
-        "http_headers": _q_http_headers,
-        "robots_sitemaps": _q_robots_sitemaps,
         # -- veterans: driver-green in rounds 1-4 (below the window) ----
         "pii_redaction": _q_pii_redaction,
         "semdedup": _q_semdedup,
@@ -8173,26 +6967,6 @@ SELECT doc_id, url,
 FROM u
 """
 
-    from mediaduplicatefinder_spark.functions.urlfilter import (
-        url_filter_sql,
-    )
-
-    _uf_inject = (
-        "SELECT doc_id, "
-        "(CASE WHEN doc_id % 2 = 0 THEN 'https' ELSE 'HTTP' END)"
-        " || '://'"
-        " || (CASE WHEN doc_id % 7 = 3 THEN 'ads.'"
-        "          WHEN doc_id % 3 = 0 THEN 'WWW.' ELSE '' END)"
-        " || (CASE WHEN doc_id % 11 = 5 THEN 'Tracker-Ads.NET'"
-        "          ELSE printf('Site-%d.Example.ORG', doc_id % 20) END)"
-        " || (CASE WHEN doc_id % 4 = 0 THEN ''"
-        "          ELSE printf('/Dir/page-%d', doc_id) END)"
-        " || (CASE WHEN doc_id % 5 = 1 THEN '/Casino/win-big'"
-        "          WHEN doc_id % 5 = 3 THEN '?q=poker&x=CASINO'"
-        "          ELSE '' END) AS url FROM documents"
-    )
-    out["url_filter"] = url_filter_sql(_uf_inject)
-
     from mediaduplicatefinder_spark.operators.selection import (
         lang_temperature_mix_sql,
     )
@@ -8300,50 +7074,6 @@ FROM u
         _WT_CELLS_SQL, _WT_PAIRS_SQL
     )
 
-    from mediaduplicatefinder_spark.operators.hostquota import (
-        host_quota_sample_sql as _hq_sql,
-    )
-    from mediaduplicatefinder_spark.operators.robots import (
-        robots_eval_sql as _rb_sql,
-    )
-
-    _cf_base = """
-        SELECT doc_id,
-               printf('site-%03d.example.org', doc_id % 40) AS host,
-               CASE WHEN doc_id % 5 = 2
-                    THEN printf('/priv/p%07d', doc_id)
-                    ELSE printf('/p%07d', doc_id) END AS path,
-               printf('doc://%010d', doc_id) AS url
-        FROM documents
-    """
-    _cf_robots = """
-        SELECT DISTINCT printf('site-%03d.example.org', doc_id % 40) AS host,
-               'User-agent: *' || chr(10) || 'Disallow: /priv' AS payload
-        FROM documents
-    """
-    out["crawl_frontier"] = f"""
-        WITH cfbase AS ({_cf_base}),
-        cfperm AS (
-          SELECT host, path, allowed AS robots_allowed
-          FROM ({_rb_sql(_cf_robots, "SELECT host, path FROM cfbase")})
-        ),
-        cfq AS (
-          SELECT host, url, kept AS kept_quota, pick_rank AS wave
-          FROM ({_hq_sql("SELECT host, url FROM cfbase", quota=8)})
-        ),
-        cfpr AS (
-          SELECT host, pr_scaled
-          FROM ({linkgraph_pagerank_sql(_pr_pages)})
-        )
-        SELECT b.host, b.path, p.robots_allowed, q.kept_quota, q.wave,
-               coalesce(r.pr_scaled, 0) AS pr_scaled,
-               (p.robots_allowed AND q.kept_quota) AS eligible
-        FROM cfbase b
-        JOIN cfperm p ON p.host = b.host AND p.path = b.path
-        JOIN cfq q ON q.host = b.host AND q.url = b.url
-        LEFT JOIN cfpr r ON r.host = b.host
-    """
-
     from mediaduplicatefinder_spark.operators.bbit import (
         bbit_minhash_pairs_sql,
     )
@@ -8388,151 +7118,6 @@ FROM u
 
     out["vocab_profile"] = vocab_profile_sql()
 
-    from mediaduplicatefinder_spark.operators.robots import robots_eval_sql
-
-    _robots_sql = """
-        SELECT DISTINCT printf('site-%d.example.org', doc_id % 10) AS host,
-               '# crawl rules' || chr(10)
-               || 'User-agent: googlebot' || chr(10)
-               || 'Disallow: /gbot' || chr(10)
-               || 'User-agent: *' || chr(10)
-               || 'Disallow: /private' || chr(10)
-               || printf('Disallow: /tmp/%d', doc_id % 10) || chr(10)
-               || 'Allow: /private/pub' || chr(10)
-               || 'User-agent: other' || chr(10)
-               || 'Disallow: /' AS payload
-        FROM documents
-    """
-    _urls_sql = """
-        SELECT printf('site-%d.example.org', doc_id % 10) AS host,
-               CASE doc_id % 4
-                 WHEN 0 THEN printf('/private/pub/x%d', doc_id)
-                 WHEN 1 THEN printf('/private/x%d', doc_id)
-                 WHEN 2 THEN printf('/pub/x%d', doc_id)
-                 ELSE printf('/tmp/%d/f', doc_id % 10) END AS path
-        FROM documents
-    """
-    out["robots_eval"] = robots_eval_sql(_robots_sql, _urls_sql)
-
-    from mediaduplicatefinder_spark.operators.sitemap import (
-        extract_sitemap_urls_sql,
-    )
-
-    _sitemaps_sql = """
-        SELECT DISTINCT printf('site-%02d.example.org', doc_id % 25) AS host,
-               '<?xml version="1.0"?><urlset>' || chr(10)
-               || printf('<url><loc>http://site-%02d.example.org/a%d</loc><lastmod>2026-0%d-11</lastmod><changefreq>daily</changefreq></url>',
-                         doc_id % 25, doc_id % 25, (doc_id % 25) % 9 + 1) || chr(10)
-               || printf('<url><loc>http://site-%02d.example.org/b%d</loc></url>',
-                         doc_id % 25, doc_id % 25) || chr(10)
-               || '<url><lastmod>2026-02-02</lastmod></url>' || chr(10)
-               || printf('<url><loc>http://site-%02d.example.org/c%d</loc><changefreq>weekly</changefreq></url>',
-                         doc_id % 25, doc_id % 25) || chr(10)
-               || '</urlset>' AS payload
-        FROM documents
-    """
-    out["sitemap_urls"] = extract_sitemap_urls_sql(_sitemaps_sql)
-
-    from mediaduplicatefinder_spark.operators.canonical import (
-        canonical_collapse_sql,
-    )
-
-    _canon_pages_sql = """
-        SELECT printf('http://site-%02d.example.org/p%05d',
-                      (doc_id // 10) % 20, doc_id) AS url,
-               '<html><head>'
-               || CASE doc_id % 10
-                    WHEN 1 THEN printf('<link rel="canonical" href="%s">', printf('http://site-%02d.example.org/p%05d', (doc_id // 10) % 20, (doc_id // 10) * 10))
-                    WHEN 2 THEN printf('<link href="%s" rel="canonical">', printf('http://site-%02d.example.org/p%05d', (doc_id // 10) % 20, (doc_id // 10) * 10))
-                    WHEN 3 THEN printf('<meta property="og:url" content="%s">', printf('http://site-%02d.example.org/p%05d', (doc_id // 10) % 20, (doc_id // 10) * 10))
-                    WHEN 4 THEN printf('<link rel="canonical" href="%s"><meta property="og:url" content="http://decoy.example/x">', printf('http://site-%02d.example.org/p%05d', (doc_id // 10) % 20, (doc_id // 10) * 10))
-                    ELSE '' END
-               || '</head><body>page</body></html>' AS html
-        FROM documents
-    """
-    out["canonical_collapse"] = canonical_collapse_sql(_canon_pages_sql)
-
-    from mediaduplicatefinder_spark.operators.hosttemplate import (
-        host_template_stats_sql,
-    )
-
-    _templ_pages_sql = """
-        SELECT printf('h%02d', doc_id % 12) AS host, doc_id,
-               CASE WHEN doc_id % 3 = 0 THEN text
-                    ELSE text || printf(' footer h%02d navigation menu copyright contact about', doc_id % 12)
-               END AS text
-        FROM documents
-    """
-    out["host_template"] = host_template_stats_sql(_templ_pages_sql)
-
-    from mediaduplicatefinder_spark.functions.trapurl import (
-        trap_url_scores_sql,
-    )
-
-    _trap_urls_sql = """
-        SELECT printf('http://site-%02d.example.org', doc_id % 9)
-               || CASE doc_id % 6
-                    WHEN 0 THEN printf('/a/b/p%d', doc_id)
-                    WHEN 1 THEN printf('/cal/2026/cal/2026/cal/p%d', doc_id)
-                    WHEN 2 THEN printf('/d1/d2/d3/d4/d5/d6/d7/p%d', doc_id)
-                    WHEN 3 THEN printf('/a/p%d?phpsessid=tok%d&x=1', doc_id, doc_id)
-                    WHEN 4 THEN printf('/a/p%d?a=1&b=2&c=3&d=4&e=5&f=6&g=7', doc_id)
-                    ELSE '/long/' || repeat('x', 130) || printf('/p%d', doc_id)
-               END AS url
-        FROM documents
-    """
-    out["trap_urls"] = trap_url_scores_sql(_trap_urls_sql)
-
-    from mediaduplicatefinder_spark.operators.soft404 import (
-        soft404_flags_sql,
-    )
-
-    _soft404_pages_sql = """
-        SELECT printf('h%02d', doc_id % 10) AS host, doc_id,
-               CASE
-                 WHEN doc_id % 11 = 3
-                   THEN 'error 404 page not found the page you requested does not exist'
-                 WHEN doc_id % 13 = 5
-                   THEN text || ' this item is no longer available'
-                 ELSE text
-               END AS text
-        FROM documents
-    """
-    out["soft404_flags"] = soft404_flags_sql(_soft404_pages_sql)
-
-    from mediaduplicatefinder_spark.operators.hreflang import (
-        hreflang_families_sql,
-    )
-
-    _hreflang_pages_sql = """
-        SELECT b || lang AS url,
-               '<html><head>'
-               || CASE WHEN silent OR (en_only AND lang <> 'en') THEN ''
-                       ELSE CASE lang
-                         WHEN 'en' THEN
-                           '<link rel="alternate" hreflang="de" href="' || b || 'de">'
-                           || '<link rel="alternate" hreflang="fr" href="' || b || 'fr">'
-                           || '<link rel="alternate" hreflang="x-default" href="' || b || 'en">'
-                         WHEN 'de' THEN
-                           '<link rel="alternate" hreflang="en" href="' || b || 'en">'
-                           || '<link rel="alternate" hreflang="fr" href="' || b || 'fr">'
-                         ELSE
-                           '<link rel="alternate" hreflang="en" href="' || b || 'en">'
-                           || '<link rel="alternate" hreflang="de" href="' || b || 'de">'
-                       END
-                  END
-               || '</head><body>p</body></html>' AS html
-        FROM (
-          SELECT printf('http://s.example.org/%05d/', doc_id // 3) AS b,
-                 CASE doc_id % 3 WHEN 0 THEN 'en'
-                                 WHEN 1 THEN 'de' ELSE 'fr' END AS lang,
-                 (doc_id // 3) % 4 = 3 AS silent,
-                 (doc_id // 3) % 5 = 2 AS en_only
-          FROM documents
-        )
-    """
-    out["hreflang_families"] = hreflang_families_sql(_hreflang_pages_sql)
-
     from mediaduplicatefinder_spark.functions.boilerplate import (
         extract_main_content_sql,
     )
@@ -8548,77 +7133,6 @@ FROM u
         FROM documents
     """
     out["main_content"] = extract_main_content_sql(_mc_pages_sql)
-
-    from mediaduplicatefinder_spark.operators.frontier import (
-        frontier_seeds_sql,
-    )
-
-    _fr_pages_sql = """
-        SELECT printf('http://site-%02d.example.org/p%05d',
-                      doc_id % 25, doc_id) AS url,
-               '<html><head>'
-               || CASE WHEN doc_id % 5 = 1
-                       THEN printf('<link rel="canonical" href="http://site-%02d.example.org/c%d">', doc_id % 25, doc_id % 25)
-                       ELSE '' END
-               || '</head><body>'
-               || CASE WHEN doc_id % 4 = 0
-                       THEN printf('<a href="http://site-%02d.example.org/a%d">s</a>', doc_id % 25, doc_id % 25)
-                       ELSE '' END
-               || CASE WHEN doc_id % 6 = 2
-                       THEN printf('<a href="http://site-%02d.example.org/cal/cal/l%d?sid=1">x</a>', doc_id % 25, doc_id)
-                       ELSE printf('<a href="http://site-%02d.example.org/l%d">x</a>', doc_id % 25, doc_id) END
-               || printf('<a href="http://site-%02d.example.org/p%05d">y</a>',
-                         (doc_id * 3) % 500 % 25, (doc_id * 3) % 500)
-               || '</body></html>' AS html
-        FROM documents
-    """
-    out["frontier_seeds"] = frontier_seeds_sql(_fr_pages_sql, _sitemaps_sql)
-
-    from mediaduplicatefinder_spark.functions.charset import (
-        sniff_charset_sql,
-    )
-
-    _cs_pages_sql = """
-        SELECT doc_id,
-               CASE doc_id % 6
-                 WHEN 1 THEN '\\xEF\\xBB\\xBF'::BLOB
-                 WHEN 2 THEN '\\xFF\\xFE'::BLOB
-                 ELSE ''::BLOB END
-               || encode(CASE doc_id % 6
-                    WHEN 0 THEN '<html><head><meta charset="utf-8"></head><body>p</body></html>'
-                    WHEN 1 THEN '<html><body>no meta</body></html>'
-                    WHEN 2 THEN '<html><body>le</body></html>'
-                    WHEN 3 THEN '<html><head><meta charset="latin1"></head></html>'
-                    WHEN 4 THEN '<html><head><meta http-equiv="Content-Type" content="text/html; charset=ISO-8859-1"></head></html>'
-                    ELSE '<html><body>plain</body></html>' END) AS raw
-        FROM documents
-    """
-    out["charset_sniff"] = sniff_charset_sql(_cs_pages_sql)
-
-    from mediaduplicatefinder_spark.operators.hosthealth import (
-        host_health_sql,
-    )
-
-    _hh_pages_sql = """
-        SELECT printf('h%02d', doc_id % 8) AS host, doc_id,
-               CASE WHEN doc_id % 17 = 4
-                    THEN printf('http://h%02d/cal/cal/p%d?sid=1', doc_id % 8, doc_id)
-                    ELSE printf('http://h%02d/p%d', doc_id % 8, doc_id) END AS url,
-               CASE
-                 WHEN doc_id % 11 = 3
-                   THEN 'error 404 page not found the page you requested does not exist'
-                 WHEN doc_id % 9 = 2
-                   THEN printf('footer h%02d menu copyright contact about', doc_id % 8)
-                 WHEN doc_id % 3 <> 0
-                   THEN text || printf(' footer h%02d menu copyright contact about', doc_id % 8)
-                 ELSE text
-               END AS text,
-               CASE WHEN doc_id % 5 = 1
-                    THEN printf('<link rel="canonical" href="http://h%02d/p%d">', doc_id % 8, doc_id % 8)
-                    ELSE '<html></html>' END AS html
-        FROM documents
-    """
-    out["host_health"] = host_health_sql(_hh_pages_sql)
 
     from mediaduplicatefinder_spark.functions.titlemeta import (
         title_dup_families_sql,
@@ -8660,102 +7174,6 @@ FROM u
         "SELECT doc_id, text FROM documents", _nv_b_sql
     )
 
-    from mediaduplicatefinder_spark.functions.magic import magic_sniff_sql
-
-    _mg_raw_case = "\n".join(
-        f"WHEN {i} THEN unhex('{_MAGIC_HEX[i]}')" for i in range(1, 9)
-    )
-    _mg_ext_case = "\n".join(
-        f"WHEN {i} THEN '{_MAGIC_EXT[i]}'" for i in range(1, 9)
-    )
-    _mg_pages_sql = f"""
-        SELECT doc_id,
-               printf('http://h/f%d.', doc_id)
-               || CASE WHEN doc_id % 5 = 2 THEN 'txt'
-                       ELSE CASE doc_id % 9
-                              {_mg_ext_case}
-                              ELSE '{_MAGIC_EXT[0]}' END
-                  END AS url,
-               CASE doc_id % 9
-                 {_mg_raw_case}
-                 ELSE unhex('{_MAGIC_HEX[0]}') END AS raw
-        FROM documents
-    """
-    out["magic_sniff"] = magic_sniff_sql(_mg_pages_sql)
-
-    from mediaduplicatefinder_spark.operators.recrawl import (
-        recrawl_schedule_sql,
-    )
-
-    _rc_old = """
-        SELECT printf('doc://%010d', doc_id) AS url,
-               printf('site-%02d.example.org', doc_id % 17) AS host, text
-        FROM documents WHERE doc_id % 13 <> 5
-    """
-    _rc_new = """
-        SELECT printf('doc://%010d', doc_id) AS url,
-               printf('site-%02d.example.org', doc_id % 17) AS host,
-               CASE WHEN doc_id % 17 < 5 AND doc_id % 2 = 0
-                    THEN text || ' v2' ELSE text END AS text
-        FROM documents WHERE doc_id % 11 <> 3
-    """
-    _rc_diff = f"""
-        WITH rco AS (SELECT url, host AS host_o, sha256(text) AS sha_o
-                     FROM ({_rc_old})),
-        rcn AS (SELECT url, host AS host_n, sha256(text) AS sha_n
-                FROM ({_rc_new}))
-        SELECT coalesce(rcn.url, rco.url) AS url,
-               coalesce(rcn.host_n, rco.host_o) AS host,
-               CASE WHEN rco.sha_o IS NULL THEN 'NEW'
-                    WHEN rcn.sha_n IS NULL THEN 'GONE'
-                    WHEN rco.sha_o = rcn.sha_n THEN 'UNCHANGED'
-                    ELSE 'CHANGED' END AS status
-        FROM rco FULL OUTER JOIN rcn ON rco.url = rcn.url
-    """
-    _rc_sm = """
-        SELECT DISTINCT printf('site-%02d.example.org', doc_id % 20) AS host,
-               printf('<url><loc>http://site-%02d.example.org/s</loc><changefreq>%s</changefreq></url>',
-                      doc_id % 20,
-                      CASE WHEN (doc_id % 20) % 5 = 4 THEN 'sometimes'
-                           ELSE CASE (doc_id % 20) % 3
-                                  WHEN 0 THEN 'daily'
-                                  WHEN 1 THEN 'weekly'
-                                  ELSE 'monthly' END END) AS payload
-        FROM documents WHERE doc_id % 20 <> 3
-    """
-    _rc_seeds = (
-        "SELECT host, changefreq FROM ("
-        + extract_sitemap_urls_sql(_rc_sm)
-        + ")"
-    )
-    out["recrawl_schedule"] = recrawl_schedule_sql(_rc_diff, _rc_seeds)
-
-    from mediaduplicatefinder_spark.functions.outlinks import (
-        outlink_profile_sql,
-    )
-
-    _ol_pages_sql = """
-        SELECT printf('http://site-%02d.example.org/p%d', doc_id % 10, doc_id)
-                 AS url,
-               CASE doc_id % 5
-                 WHEN 0 THEN
-                   printf('<a href="http://site-%02d.example.org/o%d">i</a>', doc_id % 10, doc_id)
-                   || '<a href="/rel">r</a>'
-                   || '<a href="http://other.example.com/x">o</a>'
-                 WHEN 1 THEN repeat('<a href="http://other.example.com/x">o</a>', 24)
-                 WHEN 2 THEN
-                   printf('<a href="http://site-%02d.example.org/o%d">i</a>', doc_id % 10, doc_id)
-                   || '<a rel="nofollow" href="http://spam.example/a">n</a>'
-                   || '<a rel="nofollow" href="http://spam.example/b">n</a>'
-                 WHEN 3 THEN '<p>no links at all</p>'
-                 ELSE repeat(
-                   printf('<a href="http://site-%02d.example.org/o%d">i</a>', doc_id % 10, doc_id)
-                   || '<a href="http://other.example.com/x">o</a>', 10)
-               END AS html
-        FROM documents
-    """
-    out["outlink_profile"] = outlink_profile_sql(_ol_pages_sql)
-
     from mediaduplicatefinder_spark.operators.mirrors import (
         mirror_host_pairs_sql,
     )
@@ -8778,23 +7196,6 @@ FROM u
         FROM documents
     """
     out["mirror_hosts"] = mirror_host_pairs_sql(_mr_pages_sql)
-
-    from mediaduplicatefinder_spark.functions.regdomain import (
-        registrable_domains_sql,
-    )
-
-    _rd_urls_sql = """
-        SELECT CASE doc_id % 6
-                 WHEN 0 THEN printf('http://shop-%d.com/a', doc_id)
-                 WHEN 1 THEN printf('http://a.b.site-%d.org/x', doc_id)
-                 WHEN 2 THEN printf('http://press-%d.co.uk/y', doc_id)
-                 WHEN 3 THEN printf('http://en.blog.firm-%d.co.uk/z', doc_id)
-                 WHEN 4 THEN printf('http://plain-%d.net/', doc_id)
-                 ELSE printf('http://intranet%d/portal', doc_id)
-               END AS url
-        FROM documents
-    """
-    out["reg_domains"] = registrable_domains_sql(_rd_urls_sql)
 
     from mediaduplicatefinder_spark.operators.normexact import (
         normalized_exact_families_sql,
@@ -8841,79 +7242,6 @@ FROM u
         _du_pages_sql, dust_rules_sql(_du_pages_sql)
     )
 
-    from mediaduplicatefinder_spark.operators.robots import (
-        parse_robots_sitemaps_sql,
-    )
-
-    _rs_robots_sql = """
-        SELECT DISTINCT printf('site-%02d.example.org', doc_id % 12) AS host,
-               'User-agent: *' || chr(10) || 'Disallow: /tmp' || chr(10)
-               || CASE (doc_id % 12) % 4
-                    WHEN 0 THEN printf('Sitemap: http://site-%02d.example.org/sitemap.xml', doc_id % 12) || chr(10)
-                    WHEN 1 THEN printf('sitemap: http://site-%02d.example.org/sm1.xml', doc_id % 12) || chr(10)
-                             || printf('SITEMAP: http://site-%02d.example.org/sm2.xml', doc_id % 12) || chr(10)
-                    WHEN 2 THEN ''
-                    ELSE printf('Sitemap: http://site-%02d.example.org/tail.xml   ', doc_id % 12) || chr(10)
-                  END AS payload
-        FROM documents
-    """
-    out["robots_sitemaps"] = parse_robots_sitemaps_sql(_rs_robots_sql)
-
-    from mediaduplicatefinder_spark.functions.httpheaders import (
-        parse_http_headers_sql,
-    )
-
-    _hh_crlf = "chr(13) || chr(10)"
-    _hh_records_sql = f"""
-        SELECT doc_id,
-               CASE doc_id % 5
-                 WHEN 0 THEN 'HTTP/1.1 200 OK' || {_hh_crlf}
-                   || 'Content-Type: text/html; charset=UTF-8' || {_hh_crlf}
-                   || printf('ETag: "tag-%d"', doc_id) || {_hh_crlf}
-                   || 'Last-Modified: Mon, 17 Aug 2026 01:02:03 GMT'
-                   || {_hh_crlf} || {_hh_crlf}
-                   || substr(text, 1, 80)
-                 WHEN 1 THEN 'HTTP/1.1 404 Not Found' || {_hh_crlf}
-                   || 'Content-Type: text/html' || {_hh_crlf} || {_hh_crlf}
-                   || '<h1>not here</h1>'
-                 WHEN 2 THEN 'HTTP/1.1 200 OK' || {_hh_crlf}
-                   || 'Content-Type: application/pdf' || {_hh_crlf} || {_hh_crlf}
-                   || printf('%%PDF-1.4 fake %d', doc_id)
-                 WHEN 3 THEN 'HTTP/1.1 301 Moved Permanently' || {_hh_crlf}
-                   || 'Location: http://elsewhere.example/'
-                   || {_hh_crlf} || {_hh_crlf}
-                 ELSE 'just bytes ' || text
-               END AS payload
-        FROM documents
-    """
-    out["http_headers"] = parse_http_headers_sql(_hh_records_sql)
-
-    from mediaduplicatefinder_spark.operators.redirects import (
-        resolve_redirects_sql,
-    )
-
-    _rr_edges_sql = """
-        SELECT CASE WHEN (doc_id // 4) % 13 = 7
-                    THEN CASE WHEN doc_id % 4 = 0
-                              THEN printf('http://r/c%d_a', doc_id // 4)
-                              ELSE printf('http://r/c%d_b', doc_id // 4) END
-                    ELSE printf('http://r/c%d_s%d', doc_id // 4, doc_id % 4)
-               END AS url,
-               CASE WHEN (doc_id // 4) % 13 = 7
-                    THEN CASE WHEN doc_id % 4 = 0
-                              THEN printf('http://r/c%d_b', doc_id // 4)
-                              ELSE printf('http://r/c%d_a', doc_id // 4) END
-                    WHEN doc_id % 4 + 1 = (doc_id // 4) % 3 + 1
-                    THEN printf('http://t/final%d', doc_id // 4)
-                    ELSE printf('http://r/c%d_s%d', doc_id // 4, doc_id % 4 + 1)
-               END AS target
-        FROM documents
-        WHERE ((doc_id // 4) % 13 = 7 AND doc_id % 4 < 2)
-           OR ((doc_id // 4) % 13 <> 7
-               AND doc_id % 4 < (doc_id // 4) % 3 + 1)
-    """
-    out["redirect_resolve"] = resolve_redirects_sql(_rr_edges_sql)
-
     from mediaduplicatefinder_spark.operators.sourcededup import (
         source_priority_dedup_sql,
     )
@@ -8931,51 +7259,6 @@ FROM u
     """
     out["source_dedup"] = source_priority_dedup_sql(_sd_docs_sql)
 
-    from mediaduplicatefinder_spark.operators.fetchplan import (
-        plan_fetches_sql,
-    )
-
-    _fp_urls_sql = """
-        SELECT printf('site-%02d.example.org', doc_id % 10) AS host,
-               CASE doc_id % 4
-                 WHEN 0 THEN printf('/priv/p%d', doc_id)
-                 WHEN 1 THEN printf('/cal/cal/p%d', doc_id)
-                 ELSE printf('/ok/p%d', doc_id) END AS path,
-               'http://' || printf('site-%02d.example.org', doc_id % 10)
-               || CASE doc_id % 4
-                    WHEN 0 THEN printf('/priv/p%d', doc_id)
-                    WHEN 1 THEN printf('/cal/cal/p%d', doc_id)
-                    ELSE printf('/ok/p%d', doc_id) END
-               || CASE WHEN doc_id % 4 = 1 THEN '?sid=1' ELSE '' END AS url
-        FROM documents
-    """
-    _fp_prior_sql = """
-        SELECT 'http://' || printf('site-%02d.example.org', doc_id % 10)
-               || CASE doc_id % 4
-                    WHEN 0 THEN printf('/priv/p%d', doc_id)
-                    WHEN 1 THEN printf('/cal/cal/p%d', doc_id)
-                    ELSE printf('/ok/p%d', doc_id) END
-               || CASE WHEN doc_id % 4 = 1 THEN '?sid=1' ELSE '' END AS url,
-               CASE WHEN doc_id % 3 = 1 THEN printf('e%d', doc_id) END
-                 AS etag,
-               CASE WHEN doc_id % 7 = 3 AND doc_id % 3 <> 1
-                    THEN 'Mon, 17 Aug 2026 00:00:00 GMT' END
-                 AS last_modified
-        FROM documents
-        WHERE doc_id % 3 = 1 OR doc_id % 7 = 3
-    """
-    _fp_robots_sql = """
-        SELECT DISTINCT printf('site-%02d.example.org', doc_id % 10) AS host,
-               'User-agent: *' || chr(10) || 'Disallow: /priv' AS payload
-        FROM documents
-    """
-    _fp_sched_sql = """
-        SELECT DISTINCT printf('site-%02d.example.org', doc_id % 10) AS host,
-               CASE (doc_id % 10) % 3 WHEN 0 THEN 'hot'
-                                      WHEN 1 THEN 'warm'
-                                      ELSE 'cold' END AS tier
-        FROM documents
-    """
     from mediaduplicatefinder_spark.functions.editsim import (
         edit_pair_stats_sql,
     )
@@ -8992,56 +7275,6 @@ FROM u
         FROM documents
     """
     out["edit_pairs"] = edit_pair_stats_sql(_ep_pairs_sql)
-
-    from mediaduplicatefinder_spark.functions.dotsegments import (
-        remove_dot_segments_sql,
-    )
-
-    _ds_urls_sql = """
-        SELECT printf('http://h/u%d', doc_id) AS url,
-               CASE doc_id % 7
-                 WHEN 0 THEN printf('/a/b/p%d', doc_id)
-                 WHEN 1 THEN printf('/a/./b/../c%d', doc_id)
-                 WHEN 2 THEN printf('/../x%d', doc_id)
-                 WHEN 3 THEN printf('/a/b/../../../y%d', doc_id)
-                 WHEN 4 THEN printf('/dir%d/', doc_id)
-                 WHEN 5 THEN printf('/a/b%d/..', doc_id)
-                 ELSE '/./'
-               END AS path
-        FROM documents
-    """
-    out["dot_segments"] = remove_dot_segments_sql(_ds_urls_sql)
-
-    from mediaduplicatefinder_spark.operators.feeds import (
-        extract_feed_urls_sql,
-    )
-
-    _fd_feeds_sql = """
-        SELECT DISTINCT printf('feed-%02d.example.org', doc_id % 15) AS host,
-               CASE (doc_id % 15) % 3
-                 WHEN 0 THEN '<rss><channel>' || '<item><link>'
-                   || printf('http://feed-%02d.example.org', doc_id % 15)
-                   || printf('/r%d</link><pubDate>Mon, 0%d Aug 2026</pubDate></item>',
-                             doc_id % 15, (doc_id % 15) % 9 + 1)
-                   || '<item><link>'
-                   || printf('http://feed-%02d.example.org', doc_id % 15)
-                   || printf('/r%db</link></item>', doc_id % 15)
-                   || '</channel></rss>'
-                 WHEN 1 THEN '<feed><entry><link rel="alternate" href="'
-                   || printf('http://feed-%02d.example.org', doc_id % 15)
-                   || printf('/a%d"/><published>2026-08-0%d</published></entry>',
-                             doc_id % 15, (doc_id % 15) % 9 + 1)
-                   || '<entry><link href="'
-                   || printf('http://feed-%02d.example.org', doc_id % 15)
-                   || printf('/a%db"/></entry></feed>', doc_id % 15)
-                 ELSE '<rss><channel><item><pubDate>no url</pubDate></item>'
-                   || '<item><link>'
-                   || printf('http://feed-%02d.example.org', doc_id % 15)
-                   || printf('/m%d</link></item></channel></rss>', doc_id % 15)
-               END AS payload
-        FROM documents
-    """
-    out["feed_urls"] = extract_feed_urls_sql(_fd_feeds_sql)
 
     from mediaduplicatefinder_spark.operators.duphistogram import (
         dup_family_histogram_sql,
@@ -9062,20 +7295,6 @@ FROM u
     """
     out["dup_histogram"] = dup_family_histogram_sql(_dh_docs_sql)
 
-    from mediaduplicatefinder_spark.operators.paramstats import (
-        param_value_stats_sql,
-    )
-
-    _pv_urls_sql = """
-        SELECT printf('h%02d', doc_id % 8) AS host,
-               printf('http://h%02d/p?id=%d&page=%d&v=1',
-                      doc_id % 8, doc_id, doc_id % 5)
-               || CASE WHEN doc_id % 6 = 5
-                       THEN printf('&rare=%d', doc_id) ELSE '' END AS url
-        FROM documents
-    """
-    out["param_stats"] = param_value_stats_sql(_pv_urls_sql)
-
     from mediaduplicatefinder_spark.operators.stats import (
         host_lang_profile_sql,
     )
@@ -9090,66 +7309,6 @@ FROM u
         FROM documents
     """
     out["host_lang_profile"] = host_lang_profile_sql(_hl_docs_sql)
-
-    from mediaduplicatefinder_spark.operators.robots import (
-        parse_crawl_delay_sql,
-    )
-
-    _cd_robots_sql = """
-        SELECT DISTINCT printf('site-%02d.example.org', doc_id % 20) AS host,
-               CASE (doc_id % 20) % 5
-                 WHEN 0 THEN 'User-agent: *' || chr(10)
-                          || printf('Crawl-delay: %d', (doc_id % 20) % 7 + 1)
-                          || chr(10) || 'Disallow: /x'
-                 WHEN 1 THEN 'User-agent: *' || chr(10) || 'Crawl-delay: 0.5'
-                 WHEN 2 THEN 'User-agent: *' || chr(10) || 'Crawl-delay: 2'
-                          || chr(10) || 'Crawl-delay: 10'
-                 WHEN 3 THEN 'User-agent: googlebot' || chr(10)
-                          || 'Crawl-delay: 9'
-                 ELSE 'User-agent: *' || chr(10) || 'Crawl-delay: fast'
-               END AS payload
-        FROM documents
-    """
-    out["crawl_delays"] = parse_crawl_delay_sql(_cd_robots_sql)
-
-    _ps_urls_sql = """
-        SELECT printf('site-%02d.example.org', doc_id % 20) AS host,
-               printf('doc://%010d', doc_id) AS url
-        FROM documents
-    """
-    _ps_robots_sql = """
-        SELECT DISTINCT printf('site-%02d.example.org', doc_id % 20) AS host,
-               CASE (doc_id % 20) % 5
-                 WHEN 0 THEN 'User-agent: *' || chr(10)
-                          || printf('Crawl-delay: %d', (doc_id % 20) % 7 + 1)
-                 WHEN 1 THEN 'User-agent: *' || chr(10) || 'Crawl-delay: 0.5'
-                 ELSE 'User-agent: *' || chr(10) || 'Disallow: /none'
-               END AS payload
-        FROM documents
-    """
-    out["politeness_schedule"] = f"""
-        WITH psq AS (
-          SELECT host, url, pick_rank AS wave
-          FROM ({_hq_sql(_ps_urls_sql, quota=8)})
-          WHERE kept
-        ),
-        psd AS (
-          SELECT host, delay_ms
-          FROM ({parse_crawl_delay_sql(_ps_robots_sql)})
-        )
-        SELECT q.url, q.host, q.wave::BIGINT AS wave,
-               coalesce(d.delay_ms, 1000)::BIGINT AS delay_ms,
-               ((q.wave - 1) * coalesce(d.delay_ms, 1000))::BIGINT
-                 AS fetch_tick_ms
-        FROM psq q LEFT JOIN psd d ON d.host = q.host
-    """
-
-    out["fetch_plan"] = plan_fetches_sql(
-        _fp_urls_sql,
-        _fp_prior_sql,
-        robots_eval_sql(_fp_robots_sql, "SELECT host, path FROM fpu"),
-        _fp_sched_sql,
-    )
 
     from mediaduplicatefinder_spark.functions.drift import token_drift_sql
 
@@ -9279,52 +7438,6 @@ FROM u
                   CASE WHEN doc_id % 9 = 4
                        THEN 'Syndicated Headline: ' || text
                        ELSE text END AS text
-           FROM documents"""
-    )
-
-    from mediaduplicatefinder_spark.operators.anchortext import (
-        host_anchor_terms_sql,
-    )
-
-    out["anchor_terms"] = host_anchor_terms_sql(
-        """SELECT '<html><body>'
-                  || printf(
-                       '<a href="http://site-%03d.example.org/q0">term%d visit</a>',
-                       (doc_id * 3 + 1) % 40, doc_id % 9)
-                  || printf(
-                       '<a href="http://site-%03d.example.org/q1">term%d read more</a>',
-                       (doc_id * 3 + 18) % 40, (doc_id + 1) % 9)
-                  || printf(
-                       '<a href="http://site-%03d.example.org/q2">term%d home page</a>',
-                       (doc_id * 3 + 35) % 40, (doc_id + 2) % 9)
-                  || '</body></html>' AS html
-           FROM documents"""
-    )
-
-    from mediaduplicatefinder_spark.operators.crawldiff import (
-        crawl_diff_churn_sql,
-    )
-
-    _snap_base = """SELECT doc_id, printf('doc://%010d', doc_id) AS url,
-                           printf('site-%02d.example.org', doc_id % 17)
-                             AS host,
-                           text
-                    FROM documents"""
-    out["crawl_diff_churn"] = crawl_diff_churn_sql(
-        f"SELECT url, host, text FROM ({_snap_base}) WHERE doc_id % 13 <> 5",
-        f"""SELECT url, host,
-                   CASE WHEN doc_id % 7 = 2 THEN text || ' v2'
-                        ELSE text END AS text
-            FROM ({_snap_base}) WHERE doc_id % 11 <> 3""",
-    )
-
-    from mediaduplicatefinder_spark.operators.hostquota import (
-        host_quota_sample_sql,
-    )
-
-    out["host_quota"] = host_quota_sample_sql(
-        """SELECT printf('site-%02d.example.org', doc_id % 17) AS host,
-                  printf('doc://%010d', doc_id) AS url
            FROM documents"""
     )
 

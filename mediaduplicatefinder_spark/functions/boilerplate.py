@@ -6,7 +6,7 @@ while content blocks are long and mostly plain — so classify each
 BLOCK by length and link density, and keep the content ones.  This is
 the extraction stage a webtext pipeline runs between raw html and the
 text-level cleanups (E45 lines, E49 C4 rules), and the direct remedy
-for the template contamination E99 measures.
+for template contamination.
 
 Deterministic subset, entirely in array expressions — the whole
 operator is ONE map-side projection (no explode, no shuffle): strip

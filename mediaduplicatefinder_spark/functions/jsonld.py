@@ -1,11 +1,10 @@
 """JSON-LD structured-data extraction (E137) — the declared-metadata
-channel real crawl pipelines mine next to the DOM channels the repo
-already has (titles E101, canonical links E102, hreflang E103,
-feeds E124): schema.org blocks in
+channel real crawl pipelines mine next to the DOM title channel
+(functions/titlemeta.py): schema.org blocks in
 ``<script type="application/ld+json">`` carry the page's own claim of
 what it is (``@type``), its headline, and its publish date — inputs to
 metadata dedup (title families E101 get a typed sibling), freshness
-scheduling (E110), and article/product routing before any content
+scheduling, and article/product routing before any content
 model runs.
 
 Shape: pure JVM expressions — ``regexp_extract_all`` pulls the script

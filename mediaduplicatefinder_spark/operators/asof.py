@@ -31,7 +31,7 @@ ties-at-equal-ts match, no-earlier-version rows NULL.
 
 Reference tie-in: none (no temporal data in the reference); SURVEY §2
 E-series extension — the temporal sibling of the snapshot-dedup (E51)
-and recrawl-scheduling (E110) channels.
+channel.
 """
 
 from __future__ import annotations
@@ -91,7 +91,7 @@ def asof_join(
     out = carried.filter(F.col("_side") == 1)
     # stale is non-nullable: no-match rows are already marked by NULL
     # matched_ts, and a nullable boolean would hit the cross-engine
-    # pandas None-vs-NaN asymmetry (the E95 lesson). A match past
+    # pandas None-vs-NaN asymmetry. A match past
     # tolerance is reported, flagged — the caller decides whether stale
     # policy is usable (the robots.txt rule: expired cache => refetch,
     # never => pretend-allowed).

@@ -142,8 +142,8 @@ def trustrank_fixed(
     zero however densely they interlink.  The crawl-curation use: a
     few hundred vetted seeds score every discovered host; low-trust
     high-PR hosts are the link-farm signature (compare against E77's
-    pr_scaled), and the score gates frontier priority (E104) and
-    corpus inclusion (E61 url_filter) the same way.
+    pr_scaled), and the score can gate crawl priority and corpus
+    inclusion the same way.
 
     Same integer fixed-point contract as :func:`pagerank_fixed`
     (mass-n convention, ``div`` truncation, unrolled-CTE twin): the

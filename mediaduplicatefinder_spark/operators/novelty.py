@@ -1,12 +1,12 @@
 """Cross-snapshot shingle novelty (E108).
 
-The recrawl-value signal E84's churn rollup wants as input: for each
-page of the NEW snapshot, how much of its content already existed
-ANYWHERE in the previous snapshot?  A page that moved urls, a
-syndicated copy, or an unchanged body all score zero novelty — the
-set-membership formulation deliberately ignores which old document the
-content came from (that attribution is the dedup stages' job; the
-scheduler only needs "did this fetch buy new bytes").
+A recrawl-value signal: for each page of the NEW snapshot, how much
+of its content already existed ANYWHERE in the previous snapshot?  A
+page that moved urls, a syndicated copy, or an unchanged body all
+score zero novelty — the set-membership formulation deliberately
+ignores which old document the content came from (that attribution is
+the dedup stages' job; the scheduler only needs "did this fetch buy
+new bytes").
 
 Shape: old-snapshot shingles collapse to ONE distinct hash set; the
 new snapshot's postings left-semi-join that set and count per doc —

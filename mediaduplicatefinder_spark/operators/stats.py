@@ -73,7 +73,7 @@ def host_dup_stats(docs: DataFrame) -> DataFrame:
     """Per-host duplication rollup — the curation loop RefinedWeb-style
     pipelines run to MINE blocklist candidates: hosts whose pages are
     mostly byte-identical (mirrors, boilerplate farms, parked domains)
-    get flagged for the URL-filter stage (functions/urlfilter.py).
+    get flagged as URL-blocklist candidates.
 
     docs(doc_id, host, text) -> (host, n_docs, n_dup_docs, dup_ratio,
     blocklist_candidate): a doc is a dup when its sha256 appears more
@@ -254,7 +254,7 @@ FROM nd LEFT JOIN agg a USING (grp)
 
 # -- Host language consistency (E127) ---------------------------------
 # A host serving many languages is usually one of three things: a
-# translation site (fine — E102 groups those), a failed language-ID /
+# translation site (fine), a failed language-ID /
 # extraction path, or machine-generated spam sprayed across locales.
 # Either way the per-host language profile is a routing signal the
 # per-language stages (E11/E46 models, E62 allocation) want BEFORE

@@ -58,7 +58,8 @@ docs = pages.select(
     "lang", "text",
 )
 n = docs.count()
-assert docs.select("doc_id").distinct().count() == n, "doc_id collision"
+# row_number over a non-unique url would tie-break nondeterministically
+assert pages.select("url").distinct().count() == n, "duplicate url"
 docs = docs.persist()
 docs.count()
 

@@ -14,7 +14,7 @@ Usage (multi-executor cluster):
 Local sandbox equivalent (same code path, local master):
 
     spark-submit --master 'local[8]' --py-files dist/engine.zip \
-        scripts/submit_job.py --input .bench_cache/pages_n50000_s42/pages.parquet \
+        scripts/submit_job.py --input <pages.parquet> \
         --output /tmp/dedup_out
 
 The job builds NO SparkSession config of its own beyond app name —
