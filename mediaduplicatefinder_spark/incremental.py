@@ -14,7 +14,7 @@ Iceberg catalog on clusters via the same identifiers):
               bh)**: new-vs-old candidate generation reads the store
               co-located; only the new batch's band rows shuffle.
 - ``shas``    (sha256, cluster_id, n_dups) — the exact-dup ledger,
-              bucketed by sha256.
+              rewritten whole (unbucketed) on every increment.
 - ``labels``  (url, cluster_id) — current SIMILAR cluster assignment.
 - ``members`` (sha256, url) — EVERY ingested identity incl. exact
               dups, bucketed by sha256: the sha member ledger that
@@ -28,6 +28,14 @@ Iceberg catalog on clusters via the same identifiers):
               member could silently keep a component connected that the
               real graph splits; the edge ledger is what lets affected
               components rebuild exactly.
+
+Store-layout rule: every bucketed write (append or republish) first
+repartitions on the bucket columns — Spark's repartition hash IS the
+bucket id — so one write adds at most ``N_BUCKETS`` files per table and
+later scans, retractions and owner migrations read O(writes ×
+``N_BUCKETS``) files, never O(tasks × buckets). The label delta publish
+diffs the new labels against the on-disk ones in ONE full outer join +
+one aggregate (new-home, old-home and live partition sets).
 
 Correctness argument (incremental == full recompute, tested):
 
@@ -85,6 +93,7 @@ supported (round 3 closed the clustered-url gap):
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -94,6 +103,7 @@ from mediaduplicatefinder_spark.config import DEFAULT_CONFIG, EngineConfig
 from mediaduplicatefinder_spark.operators.candidates import (
     candidate_pairs,
     lsh_bands,
+    pair_key_cols,
 )
 from mediaduplicatefinder_spark.operators.clustering import connected_components
 from mediaduplicatefinder_spark.operators.signatures import page_signatures
@@ -138,14 +148,51 @@ def init_store(spark: SparkSession, db: str, location: str | None = None) -> Non
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}{loc}")
 
 
-def _write_bucketed(df: DataFrame, table: str, bucket_cols: list[str]) -> None:
-    (
-        df.write.mode("append")
-        .bucketBy(N_BUCKETS, *bucket_cols)
-        .sortBy(*bucket_cols)
-        .format("parquet")
-        .saveAsTable(table)
-    )
+@contextmanager
+def _session_conf(spark: SparkSession, key: str, value: str):
+    prev = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+def _write_bucketed(
+    df: DataFrame, table: str, bucket_cols: list[str], mode: str = "append"
+) -> None:
+    """Bucket-aligned write: the repartition hash equals Spark's bucket
+    id, so each task holds exactly one bucket and the write adds at most
+    ``N_BUCKETS`` files to ``table``.
+
+    When ``df`` streams a bucketed scan of the same layout (the keyed
+    republish), Spark drops the repartition as redundant and then, with
+    no join needing buckets, un-buckets the scan; auto bucketed scan is
+    therefore off for the write, which keeps one bucket per task there
+    with no shuffle at all."""
+    auto_scan = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+    with _session_conf(df.sparkSession, auto_scan, "false"):
+        (
+            df.repartition(N_BUCKETS, *bucket_cols)
+            .write.mode(mode)
+            .bucketBy(N_BUCKETS, *bucket_cols)
+            .sortBy(*bucket_cols)
+            .format("parquet")
+            .saveAsTable(table)
+        )
+
+
+def _republish(
+    spark: SparkSession, df: DataFrame, table: str, bucket_cols: list[str]
+) -> None:
+    """Replace ``table`` with ``df`` (same bucketed layout): write a
+    ``_next`` table, then drop + atomic rename — the parquet stand-in for
+    a row-level commit. ``df`` must not lazily read ``table``'s files
+    after the drop (checkpoint it, or let the write consume it first)."""
+    name = table.rsplit(".", 1)[1]
+    _write_bucketed(df, f"{table}_next", bucket_cols, "overwrite")
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    spark.sql(f"ALTER TABLE {table}_next RENAME TO {name}")
 
 
 # ---------------- keyed row-level writer (VERDICT r2 item 8) ----------------
@@ -205,17 +252,48 @@ def delete_by_key(
     remaining = spark.table(table).join(
         keys.select(*cols).distinct(), cols, "left_anti"
     )
-    db, name = table.rsplit(".", 1)
-    nxt = f"{db}.{name}_next"
-    (
-        remaining.write.mode("overwrite")
-        .bucketBy(N_BUCKETS, *bucket_cols)
-        .sortBy(*bucket_cols)
-        .format("parquet")
-        .saveAsTable(nxt)
+    _republish(spark, remaining, table, bucket_cols)
+
+
+def _delete_doc_rows(
+    spark: SparkSession, db: str, urls: DataFrame, wide: bool
+) -> None:
+    """Retract the sig rows (keyed on url) and band rows (keyed on the
+    doc key — both halves under the 128-bit profile) of ``urls``."""
+    delete_by_key(spark, _t(db, "sigs"), urls, "url", ["doc_key"])
+    band_keys = urls.select(
+        F.xxhash64("url").alias("doc_key"),
+        *([F.xxhash64("url", F.lit(1)).alias("doc_key2")] if wide else []),
     )
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    spark.sql(f"ALTER TABLE {nxt} RENAME TO {name}")
+    delete_by_key(
+        spark,
+        _t(db, "bands"),
+        band_keys,
+        ["doc_key", "doc_key2"] if wide else "doc_key",
+        ["lang", "band", "bh"],
+    )
+
+
+def _relabel(df: DataFrame, moves: DataFrame, cols: list[str]) -> DataFrame:
+    """``df`` with every value of ``cols`` that appears as a ``moves``
+    ``old_url`` replaced by its ``new_url``; values not in ``moves``
+    stay. ``moves`` is tiny (per-batch heirs or owner migrations), so
+    each lookup is a broadcast join."""
+    out = df.columns
+    for c in cols:
+        new = f"{c}__new"
+        df = (
+            df.join(
+                F.broadcast(
+                    moves.select(F.col("old_url").alias(c), F.col("new_url").alias(new))
+                ),
+                c,
+                "left",
+            )
+            .withColumn(c, F.coalesce(new, c))
+            .drop(new)
+        )
+    return df.select(*out)
 
 
 def _retract_urls(
@@ -289,18 +367,7 @@ def _retract_urls(
     synth = synth.select(*owner_rows.columns).localCheckpoint(eager=True)
 
     # retract + re-home sigs and bands (keyed writer; heir rows append)
-    delete_by_key(spark, _t(db, "sigs"), re_urls, "url", ["doc_key"])
-    band_keys = re_urls.select(
-        F.xxhash64("url").alias("doc_key"),
-        *([F.xxhash64("url", F.lit(1)).alias("doc_key2")] if wide else []),
-    )
-    delete_by_key(
-        spark,
-        _t(db, "bands"),
-        band_keys,
-        ["doc_key", "doc_key2"] if wide else "doc_key",
-        ["lang", "band", "bh"],
-    )
+    _delete_doc_rows(spark, db, re_urls, wide)
     if synth.take(1):
         _write_bucketed(synth, _t(db, "sigs"), ["doc_key"])
         _write_bucketed(
@@ -312,59 +379,20 @@ def _retract_urls(
     delete_by_key(spark, _t(db, "members"), re_urls, "url", ["sha256"])
 
     # ---- edge ledger fix: relabel heired endpoints, drop heirless ones
-    edges_t = spark.table(_t(db, "edges"))
-    no_heir = re_urls.join(heirs.select("url"), "url", "left_anti").select(
-        F.col("url").alias("gone_url")
-    )
+    no_heir = re_urls.join(heirs.select("url"), "url", "left_anti")
     fixed_edges = (
-        edges_t.join(
-            F.broadcast(
-                heirs.select(
-                    F.col("url").alias("src"), F.col("heir").alias("src_new")
-                )
-            ),
-            "src",
-            "left",
+        _relabel(
+            spark.table(_t(db, "edges")),
+            heirs.select(F.col("url").alias("old_url"), F.col("heir").alias("new_url")),
+            ["src", "dst"],
         )
-        .join(
-            F.broadcast(
-                heirs.select(
-                    F.col("url").alias("dst"), F.col("heir").alias("dst_new")
-                )
-            ),
-            "dst",
-            "left",
-        )
-        .select(
-            F.coalesce("src_new", "src").alias("src"),
-            F.coalesce("dst_new", "dst").alias("dst"),
-            "lang",
-            "score",
-        )
-        .join(
-            F.broadcast(no_heir.withColumnRenamed("gone_url", "src")),
-            "src",
-            "left_anti",
-        )
-        .join(
-            F.broadcast(no_heir.withColumnRenamed("gone_url", "dst")),
-            "dst",
-            "left_anti",
-        )
+        .join(F.broadcast(no_heir.withColumnRenamed("url", "src")), "src", "left_anti")
+        .join(F.broadcast(no_heir.withColumnRenamed("url", "dst")), "dst", "left_anti")
         .localCheckpoint(eager=True)
     )
     # republish the edge table (row-level catalogs would MERGE; the
     # parquet fallback rewrites, the documented sandbox cost)
-    db_edges = _t(db, "edges")
-    (
-        fixed_edges.write.mode("overwrite")
-        .bucketBy(N_BUCKETS, "src")
-        .sortBy("src")
-        .format("parquet")
-        .saveAsTable(f"{db_edges}_next")
-    )
-    spark.sql(f"DROP TABLE IF EXISTS {db_edges}")
-    spark.sql(f"ALTER TABLE {db_edges}_next RENAME TO edges")
+    _republish(spark, fixed_edges, _t(db, "edges"), ["src"])
 
     # ---- affected-component rebuild over the TRUE remaining edges
     labels_t = spark.table(_t(db, "labels")).select("url", "cluster_id")
@@ -426,90 +454,15 @@ def _migrate_owners(
     tiny (per-batch migrations); returns the relabeled labels."""
     moves = moves.localCheckpoint(eager=True)
     old_urls = moves.select(F.col("old_url").alias("url"))
-    wide = cfg.doc_key_bits == 128
-    delete_by_key(spark, _t(db, "sigs"), old_urls, "url", ["doc_key"])
-    band_keys = old_urls.select(
-        F.xxhash64("url").alias("doc_key"),
-        *([F.xxhash64("url", F.lit(1)).alias("doc_key2")] if wide else []),
-    )
-    delete_by_key(
-        spark,
-        _t(db, "bands"),
-        band_keys,
-        ["doc_key", "doc_key2"] if wide else "doc_key",
-        ["lang", "band", "bh"],
-    )
+    _delete_doc_rows(spark, db, old_urls, cfg.doc_key_bits == 128)
     # edge ledger: relabel both endpoints old -> new, republish
-    edges_t = spark.table(_t(db, "edges"))
-    fixed_edges = (
-        edges_t.join(
-            F.broadcast(
-                moves.select(
-                    F.col("old_url").alias("src"),
-                    F.col("new_url").alias("src_new"),
-                )
-            ),
-            "src",
-            "left",
-        )
-        .join(
-            F.broadcast(
-                moves.select(
-                    F.col("old_url").alias("dst"),
-                    F.col("new_url").alias("dst_new"),
-                )
-            ),
-            "dst",
-            "left",
-        )
-        .select(
-            F.coalesce("src_new", "src").alias("src"),
-            F.coalesce("dst_new", "dst").alias("dst"),
-            "lang",
-            "score",
-        )
-        .localCheckpoint(eager=True)
-    )
-    db_edges = _t(db, "edges")
-    (
-        fixed_edges.write.mode("overwrite")
-        .bucketBy(N_BUCKETS, "src")
-        .sortBy("src")
-        .format("parquet")
-        .saveAsTable(f"{db_edges}_next")
-    )
-    spark.sql(f"DROP TABLE IF EXISTS {db_edges}")
-    spark.sql(f"ALTER TABLE {db_edges}_next RENAME TO edges")
+    fixed_edges = _relabel(
+        spark.table(_t(db, "edges")), moves, ["src", "dst"]
+    ).localCheckpoint(eager=True)
+    _republish(spark, fixed_edges, _t(db, "edges"), ["src"])
     # label state: same identity swap on both columns; the caller's CC
     # pass recomputes each touched component's min-url cluster_id
-    relabeled = (
-        labels.join(
-            F.broadcast(
-                moves.select(
-                    F.col("old_url").alias("url"),
-                    F.col("new_url").alias("url_new"),
-                )
-            ),
-            "url",
-            "left",
-        )
-        .join(
-            F.broadcast(
-                moves.select(
-                    F.col("old_url").alias("cluster_id"),
-                    F.col("new_url").alias("cid_new"),
-                )
-            ),
-            "cluster_id",
-            "left",
-        )
-        .select(
-            F.coalesce("url_new", "url").alias("url"),
-            F.coalesce("cid_new", "cluster_id").alias("cluster_id"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    return relabeled
+    return _relabel(labels, moves, ["url", "cluster_id"]).localCheckpoint(eager=True)
 
 
 def _gate_external_candidates(
@@ -790,10 +743,6 @@ def ingest_batch(
             if wide
             else []
         )
-        from mediaduplicatefinder_spark.operators.candidates import (
-            pair_key_cols,
-        )
-
         kc = pair_key_cols(cfg)
         no_cands = (
             no.filter(
@@ -884,48 +833,36 @@ def ingest_batch(
     else:
         # diff against the ON-DISK labels (not the retraction-fixed
         # in-memory state): retraction can make disk rows VANISH, and
-        # their partitions must be rewritten too
+        # their partitions must be rewritten too. One full outer join +
+        # one aggregate: a new or changed row marks its new home, a
+        # changed or vanished row its old home, every new row its
+        # partition live (xxhash64 of NULL is not NULL, hence the guard)
         disk_labels = spark.table(labels_tbl).select(
             "url", F.col("cluster_id").alias("old_cluster_id")
         )
-        changed = (
-            with_part.join(disk_labels, "url", "left")
-            .filter(
-                F.col("old_cluster_id").isNull()
-                | (F.col("old_cluster_id") != F.col("cluster_id"))
+        new_cid, old_cid = F.col("cluster_id"), F.col("old_cluster_id")
+        moved = old_cid.isNull() | new_cid.isNull() | (old_cid != new_cid)
+        homes = (
+            with_part.join(disk_labels, "url", "full")
+            .agg(
+                F.collect_set(F.when(moved, F.col("part"))).alias("new_home"),
+                F.collect_set(
+                    F.when(moved & old_cid.isNotNull(), _label_part(old_cid))
+                ).alias("old_home"),
+                F.collect_set("part").alias("live"),
             )
+            .first()
         )
-        vanished = disk_labels.join(
-            with_part.select("url"), "url", "left_anti"
-        )
-        affected = {
-            r.part
-            for r in changed.select(
-                F.col("part")
-            ).unionByName(
-                changed.filter(F.col("old_cluster_id").isNotNull()).select(
-                    _label_part(F.col("old_cluster_id")).alias("part")
-                )
-            ).unionByName(
-                vanished.select(
-                    _label_part(F.col("old_cluster_id")).alias("part")
-                )
-            ).distinct().collect()
-        }
+        affected = set(homes.new_home) | set(homes.old_home)
         rows = with_part.filter(F.col("part").isin(list(affected) or [-1]))
-        prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
+        with _session_conf(
+            spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"
+        ):
             rows.write.mode("overwrite").insertInto(labels_tbl)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
         # an affected partition can end up with ZERO rows (its only
         # components merged into other partitions); dynamic overwrite
         # never visits empty partitions, so drop their stale files
-        remaining = {
-            r.part for r in rows.select("part").distinct().collect()
-        }
-        for p in sorted(affected - remaining):
+        for p in sorted(affected - set(homes.live)):
             spark.sql(
                 f"ALTER TABLE {labels_tbl} DROP IF EXISTS PARTITION (part={p})"
             )
