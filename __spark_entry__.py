@@ -387,16 +387,6 @@ def _q_semdedup(spark, sf_dir):
     return semdedup(_emb(spark, sf_dir), dim=64, tau=0.4)
 
 
-def _q_d4_selection(spark, sf_dir):
-    """D4 (E169, Tirumala et al. 2023): SemDeDup then SSL-prototype
-    pruning — drop the 30% most centroid-hugging survivors per cluster.
-    Scale path: the E31 blocked pair stage + the E26 two-phase exact
-    rank (no per-cluster global window)."""
-    from mediaduplicatefinder_spark.operators.d4 import d4_selection
-
-    return d4_selection(_emb(spark, sf_dir), dim=64, tau=0.4, proto_pct=30)
-
-
 def _q_cross_corpus_pairs(spark, sf_dir):
     """E170 cross-corpus near-dup join: split the corpus by doc_id
     parity into a held 'reference' side and a probing 'new' side, and
@@ -998,31 +988,6 @@ def _q_rbo_topk(spark, sf_dir):
     )
 
 
-def _q_priority_sample(spark, sf_dir):
-    """E205 priority sampling (operators/prioritysample.py, Duffield/
-    Lund/Thorup JACM'07): per-lang top-5 weighted sample, priority =
-    quality / u with u the pinned-XXH64 dyadic uniform, plus the
-    max(w, tau) subset-sum estimator term. One window, no libm pow/log
-    (the reason priorities beat the A-ES exponent key cross-engine).
-    Oracle: identical hash/priority/window/estimator
-    (priority_sample_sql over the xxh64 key CTE)."""
-    from mediaduplicatefinder_spark.functions.textstats import (
-        quality_score_expr,
-    )
-    from mediaduplicatefinder_spark.operators.prioritysample import (
-        priority_sample,
-    )
-
-    return priority_sample(
-        _docs(spark, sf_dir),
-        weight=quality_score_expr("text"),
-        key=F.format_string("doc://%010d", F.col("doc_id")),
-        group_cols=("lang",),
-        id_cols=("doc_id",),
-        k=5,
-    )
-
-
 def _q_nndescent_knn(spark, sf_dir):
     """E179 NN-Descent k-NN graph (operators/nndescent.py, Dong et al.
     WWW'11): deterministic circulant init, 4 neighbor-of-neighbor
@@ -1511,28 +1476,6 @@ def _q_main_content(spark, sf_dir):
     return extract_main_content(pages)
 
 
-def _q_token_drift(spark, sf_dir):
-    """E93 token-distribution drift (functions/drift.py): symmetric
-    chi-square-family distance between two snapshot term histograms
-    per source — the corpus-monitoring alarm. Snapshot B swaps
-    'spark'->'flink' on id%5==1 and appends fresh terms on id%7==3;
-    floats are bit-exact via the ordered-fold formulation."""
-    from mediaduplicatefinder_spark.functions.drift import token_drift
-
-    d = _docs(spark, sf_dir)
-    a = d.select(F.col("source").alias("grp"), "text")
-    tb = F.when(
-        F.pmod(F.col("doc_id"), F.lit(5)) == 1,
-        F.replace(F.col("text"), F.lit("spark"), F.lit("flink")),
-    ).otherwise(F.col("text"))
-    tb = F.when(
-        F.pmod(F.col("doc_id"), F.lit(7)) == 3,
-        F.concat(tb, F.lit(" fresh trend topic")),
-    ).otherwise(tb)
-    b = d.select(F.col("source").alias("grp"), tb.alias("text"))
-    return token_drift(a, b)
-
-
 def _q_sketch_union(spark, sf_dir):
     """E92 mergeable-sketch union (operators/sketches.hll_union_sketch):
     per-snapshot HLL register tables merged by register-wise max — the
@@ -1725,29 +1668,6 @@ def _q_vocab_profile(spark, sf_dir):
     return vocab_profile(_docs(spark, sf_dir).select("source", "text"))
 
 
-# E82 driver synthesis: a clean phrase double-encoded through the REAL
-# codecs at import time — both engines receive the same literal.
-_MOJ_CLEAN = " Café ’quoted’ naïve – dash… €5 ©ok"
-_MOJ_SUFFIX = _MOJ_CLEAN.encode("utf-8").decode("cp1252")
-
-
-def _q_repair_mojibake(spark, sf_dir):
-    """E82 mojibake repair (functions/mojibake.py, ftfy-lite): the
-    UTF-8-read-as-CP1252 repair chain, table built by round-tripping
-    the real codecs. Docs with id%7==3 get a double-encoded suffix
-    injected; repairs must shrink them by the exact char count."""
-    from mediaduplicatefinder_spark.functions.mojibake import (
-        repair_mojibake,
-    )
-
-    d = _docs(spark, sf_dir)
-    text = F.when(
-        F.pmod(F.col("doc_id"), F.lit(7)) == 3,
-        F.concat(F.col("text"), F.lit(_MOJ_SUFFIX)),
-    ).otherwise(F.col("text"))
-    return repair_mojibake(d.select("doc_id", text.alias("text")))
-
-
 def _q_passage_windows(spark, sf_dir):
     """E81 overlapping passage windowing (operators/passages.py): the
     RAG/pretraining long-doc split — 64-token windows at stride 48,
@@ -1863,18 +1783,6 @@ def _q_linkgraph_pagerank(spark, sf_dir):
     return linkgraph_pagerank(_pr_pages_df(spark, sf_dir))
 
 
-def _q_char_entropy(spark, sf_dir):
-    """E76 character-entropy quality scoring (functions/entropy.py):
-    Shannon char entropy + top-char concentration per document, the
-    cheap compressibility-proxy pre-filter. Map-only Arrow pass; the
-    kernel's log2 runs in CPython so both engines resolve to the same
-    glibc, and the term sum is a left fold in sorted-char order on
-    both sides — the doubles are bit-identical, no rounding anywhere."""
-    from mediaduplicatefinder_spark.functions.entropy import char_entropy
-
-    return char_entropy(_docs(spark, sf_dir).select("doc_id", "text"))
-
-
 def _q_cardinality_sketch(spark, sf_dir):
     """E75 distributed cardinality sketches (operators/sketches.py):
     HyperLogLog register table (m=64, trailing-zero rho via an integer
@@ -1982,18 +1890,6 @@ def _q_video_dup_pairs(spark, sf_dir):
     return video_dup_pairs(media)
 
 
-def _q_wordpiece_tokens(spark, sf_dir):
-    """E71 greedy maximal-munch subword token counting (functions/
-    wordpiece.py): the actual-tokenizer token budget the whitespace
-    counters approximate; the oracle replays the per-character munch as
-    a linear WITH RECURSIVE walk over a relational match-length table."""
-    from mediaduplicatefinder_spark.functions.wordpiece import (
-        wordpiece_token_stats,
-    )
-
-    return wordpiece_token_stats(_docs(spark, sf_dir).select("doc_id", "text"))
-
-
 def _q_leakage_split(spark, sf_dir):
     """E70 leakage-safe deterministic dataset split (operators/
     selection.leakage_split): host-keyed hash buckets so near-duplicate
@@ -2040,15 +1936,6 @@ def _q_kmeans_fit(spark, sf_dir):
     from mediaduplicatefinder_spark.operators.kmeans import kmeans_fit
 
     return kmeans_fit(_emb(spark, sf_dir).select("vec_id", "embedding"), dim=64)
-
-
-def _q_dsir_weights(spark, sf_dir):
-    """DSIR importance weights + deterministic Gumbel selection (E32,
-    Xie et al. 2023): hashed unigram+bigram bucket counts, target-slice
-    vs corpus log-likelihood ratio, map-only threshold sampling."""
-    from mediaduplicatefinder_spark.operators.dsir import dsir_weights
-
-    return dsir_weights(_docs(spark, sf_dir))
 
 
 def _q_ivf_topk(spark, sf_dir):
@@ -2166,20 +2053,6 @@ def _q_shard_layout(spark, sf_dir):
     from mediaduplicatefinder_spark.operators.packing import shard_layout
 
     return shard_layout(_docs(spark, sf_dir).select("doc_id", "text"))
-
-
-def _q_quality_classifier(spark, sf_dir):
-    """E64 hashed-feature linear quality classifier
-    (functions/classifier.py): fastText-style bag-of-words scoring via
-    the hashing trick — xxhash64 over fixed-width 16-byte word keys,
-    integer weight sum, one normalizing division. Map-only codegen; the
-    oracle re-hashes every distinct word through the pinned XXH64 SQL
-    port, so agreement re-proves the hash-parity contract per word."""
-    from mediaduplicatefinder_spark.functions.classifier import (
-        quality_classifier,
-    )
-
-    return quality_classifier(_docs(spark, sf_dir).select("doc_id", "text"))
 
 
 def _q_lang_mix(spark, sf_dir):
@@ -2914,70 +2787,6 @@ def _q_supershingle_pairs(spark, sf_dir):
     ).select("id_a", "id_b", "n_shared")
 
 
-def _q_bpe_segments(spark, sf_dir):
-    """E133 distributed BPE merge training (operators/bpetrain.py):
-    6 merge rounds over the corpus word-count table — pair counts via
-    map-side-combining agg, deterministic argmax (count DESC, l, r),
-    greedy non-overlapping fold rewrite — then every distinct word's
-    final segmentation. The oracle unrolls the SAME 6 rounds as
-    recursive-CTE walks; one wrong pair count, tie-break, or fold step
-    diverges a segmentation."""
-    from mediaduplicatefinder_spark.operators.bpetrain import bpe_train
-
-    _, segments = bpe_train(
-        _docs(spark, sf_dir).select("text"), n_merges=6
-    )
-    return segments.select("word", "wcount", "seg")
-
-
-def _q_doc_dispatch_extract(spark, sf_dir):
-    """E134 content-sniffed document dispatch (operators/docrouter.py):
-    each doc becomes a REAL docx, pptx, or PDF payload (doc_id % 3) and
-    the router must pick the extractor from the BYTES alone (PK part
-    sniff / %PDF magic) — the reference's extension dispatcher rebuilt
-    content-first. The oracle rebuilds each format's expected string."""
-    from mediaduplicatefinder_spark.operators.docrouter import (
-        route_documents,
-    )
-    from mediaduplicatefinder_spark.operators.office import (
-        make_docx,
-        make_pptx,
-    )
-    from mediaduplicatefinder_spark.operators.pdf import make_pdf
-
-    def build(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                doc_id = int(doc_id)
-                if doc_id % 3 == 0:
-                    payloads.append(make_docx([text, f"D{doc_id}"]))
-                elif doc_id % 3 == 1:
-                    payloads.append(make_pptx([[text], [f"S{doc_id}"]]))
-                else:
-                    words = text.split()
-                    payloads.append(
-                        make_pdf([" ".join(words[:3]), f"P{doc_id}"])
-                    )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].to_numpy(), "payload": payloads}
-            )
-
-    payloads = (
-        _docs(spark, sf_dir)
-        .select("doc_id", "text")
-        .mapInPandas(build, "doc_id long, payload binary")
-    )
-    return route_documents(payloads).select(
-        "doc_id",
-        "doc_kind",
-        F.md5("text").alias("extracted_md5"),
-        "valid",
-    )
-
-
 def _q_cms_heavy_hitters(spark, sf_dir):
     """E135 count-min sketch (operators/cms.py): word-bigram
     frequencies sketched into a 4x64 integer grid (one narrow shuffle
@@ -3165,28 +2974,6 @@ def _q_bm25_topk(spark, sf_dir):
     from mediaduplicatefinder_spark.operators.bm25 import bm25_topk
 
     return bm25_topk(_docs(spark, sf_dir), k=10, query_mod=100)
-
-
-_SAMPLE_RATES = {"en": 0.10, "de": 0.25, "zh": 0.50}
-_SAMPLE_COUNTS = {"en": 15, "fr": 8, "es": 400}  # es > stratum size: take all
-
-
-def _q_stratified_sample(spark, sf_dir):
-    """E141 deterministic stratified sampling (operators/sampling.py):
-    per-lang hash-threshold fraction flag AND min-hash exact-n rank
-    over the same md5-60bit hash — the unfiltered audit relation (the
-    complement is as checkable as the sample). fr/es exercise the
-    rate-0 default and the n-exceeds-stratum branches."""
-    from mediaduplicatefinder_spark.operators.sampling import (
-        stratified_sample_report,
-    )
-
-    return stratified_sample_report(
-        _docs(spark, sf_dir).select("doc_id", "lang"),
-        "lang",
-        _SAMPLE_RATES,
-        _SAMPLE_COUNTS,
-    )
 
 
 _Z_EPOCH = 1704067200  # 2024-01-01T00:00:00Z — the events table base
@@ -4070,20 +3857,6 @@ def _q_tlsh_digests(spark, sf_dir):
     return with_tlsh(_docs(spark, sf_dir))
 
 
-def _q_unigram_segments(spark, sf_dir):
-    """E163 unigram-LM Viterbi subword segmentation (SentencePiece
-    inference, Kudo 2018): optimal piece sequence under a pinned
-    integer-scored vocabulary — 100% JVM expressions (two F.aggregate
-    folds, zero UDF, map-only). Oracle: functions/unigram.viterbi_sql
-    mirrors the DP as a state-carrying WITH RECURSIVE (DuckDB 1.0
-    list_reduce drops acc-dependent appends — probed, documented)."""
-    from mediaduplicatefinder_spark.functions.unigram import with_viterbi
-
-    return with_viterbi(_docs(spark, sf_dir), "text").select(
-        "doc_id", "n_pieces", "total_score", "seg"
-    )
-
-
 def _q_softdedup_weights(spark, sf_dir):
     """E39 SoftDeDup (He et al. 2024, arXiv:2407.04203 adapted):
     instead of REMOVING duplicates, down-weight them —
@@ -4261,130 +4034,6 @@ def _q_line_cleanup(spark, sf_dir):
         "removed_chars",
         "total_chars",
         "keep_doc",
-    )
-
-
-def _q_perplexity_buckets(spark, sf_dir):
-    """CCNet LM perplexity head/middle/tail buckets
-    (operators/perplexity.py): per-lang bucketed-bigram LM fit on the
-    deterministic target slice, round-8 decimal cross-entropy, ntile
-    terciles. Oracle: perplexity_buckets_sql re-derives the whole model
-    and split in DuckDB."""
-    from mediaduplicatefinder_spark.operators.perplexity import (
-        perplexity_buckets,
-    )
-
-    return perplexity_buckets(_docs(spark, sf_dir))
-
-
-def _q_ccnet_pipeline(spark, sf_dir):
-    """The composed CCNet flow end-to-end (Wenzek et al. 2020): line
-    cleanup (E45) -> 5% doc-drop -> paragraph dedup over the survivors
-    (E40) -> per-lang LM perplexity buckets over the deduped text
-    (E46). Every stage's oracle SQL is parameterizable, so the oracle
-    is the same three derivations CHAINED — agreement proves the
-    stages compose identically, not just that each is right alone.
-    Dropped docs surface with bucket='dropped'."""
-    from mediaduplicatefinder_spark.functions.linefilter import line_cleanup
-    from mediaduplicatefinder_spark.operators.paradedup import (
-        paragraph_dedup,
-    )
-    from mediaduplicatefinder_spark.operators.perplexity import (
-        perplexity_buckets,
-    )
-
-    doc_id = F.col("doc_id")
-    injected = F.concat(
-        F.col("text"),
-        F.when(doc_id % 3 == 0, F.lit(_LINEFILTER_FURNITURE)).otherwise(
-            F.lit("")
-        ),
-        F.when(
-            doc_id % 7 == 0,
-            F.concat(
-                F.lit("\n"),
-                F.repeat(F.lit("LOUD FURNITURE EVERYWHERE "), 40),
-            ),
-        ).otherwise(F.lit("")),
-    )
-    docs = _docs(spark, sf_dir).select(
-        "doc_id", "lang", injected.alias("text")
-    )
-    # SE4: cleaned feeds the survivor branch AND the final projection;
-    # para feeds perplexity AND the final join — persist both so the
-    # map-heavy upstream evaluates once per stage (a real run would
-    # checkpoint to the stage ledger instead).
-    cleaned = line_cleanup(docs).persist()
-    survivors = cleaned.filter("keep_doc").select(
-        "doc_id", F.col("cleaned_text").alias("text")
-    )
-    para = paragraph_dedup(survivors).persist()
-    pp = perplexity_buckets(
-        para.join(docs.select("doc_id", "lang"), "doc_id").select(
-            "doc_id", "lang", F.col("text_deduped").alias("text")
-        )
-    )
-    return (
-        cleaned.select("doc_id", "n_removed_lines", "keep_doc")
-        .join(docs.select("doc_id", "lang"), "doc_id")
-        .join(
-            para.select(
-                "doc_id", F.col("n_dropped").alias("n_paras_dropped")
-            ),
-            "doc_id",
-            "left",
-        )
-        .join(pp.select("doc_id", "n_bigrams", "ce", "bucket"), "doc_id", "left")
-        .select(
-            "doc_id",
-            "lang",
-            "keep_doc",
-            "n_removed_lines",
-            F.coalesce("n_paras_dropped", F.lit(0)).cast("long").alias(
-                "n_paras_dropped"
-            ),
-            F.coalesce("n_bigrams", F.lit(0)).cast("long").alias("n_bigrams"),
-            F.coalesce("ce", F.lit(0.0)).alias("ce"),
-            F.coalesce("bucket", F.lit("dropped")).alias("bucket"),
-        )
-    )
-
-
-_C4_SURVIVOR = "\nThis sentence is long enough to survive the filter."
-_C4_DROPPED = "\nShort line.\nno terminal punctuation present here at all"
-_C4_BRACE = "\nA curly { brace lives in this sentence."
-_C4_LOREM = "\nLorem Ipsum dolor sit amet consectetur adipiscing."
-_C4_BAD = "\nSadly badword1 appears inside this long sentence."
-
-
-def _q_c4_rules(spark, sf_dir):
-    """C4 cleanup rules (functions/c4rules.py): terminal-punct + >=5
-    word line filter, then page-level sentence-count/brace/lorem/
-    bad-word gates. Injected lines (doc_id mod classes) fire every rule
-    both ways at sf0.01."""
-    from mediaduplicatefinder_spark.functions.c4rules import c4_rules
-
-    doc_id = F.col("doc_id")
-    injected = F.concat(
-        F.col("text"),
-        F.when(doc_id % 4 == 0, F.lit(_C4_SURVIVOR)).otherwise(F.lit("")),
-        F.when(doc_id % 4 == 1, F.lit(_C4_DROPPED)).otherwise(F.lit("")),
-        F.when(doc_id % 5 == 0, F.lit(_C4_BRACE)).otherwise(F.lit("")),
-        F.when(doc_id % 6 == 0, F.lit(_C4_LOREM)).otherwise(F.lit("")),
-        F.when(doc_id % 9 == 0, F.lit(_C4_BAD)).otherwise(F.lit("")),
-    )
-    d = _docs(spark, sf_dir).select("doc_id", injected.alias("text"))
-    out = c4_rules(d)
-    return out.select(
-        "doc_id",
-        F.md5("cleaned_text").alias("cleaned_md5"),
-        "n_lines",
-        "n_kept_lines",
-        "n_sentences",
-        "has_brace",
-        "has_lorem",
-        "has_badword",
-        "keep_page",
     )
 
 
@@ -4567,8 +4216,6 @@ def _q_deletion_report(spark, sf_dir):
     return deletion_report(plan_actions(res.clusters, pages))
 
 
-_BENCH_PRED = "doc_id % 7 = 3"  # deterministic in-corpus "benchmark" subset
-
 # 4-dp quality heuristic — exact SQL twin of
 # functions/textstats.quality_score_expr (shared by quality_score and
 # budget_selection oracles)
@@ -4582,20 +4229,6 @@ _QUALITY_SQL = """round(
                                        THEN len(regexp_replace(text, '[^.,;:!?''"()]', '', 'g'))::DOUBLE / len(text)
                                        ELSE 0.0 END)
                    , 4)::DOUBLE"""
-
-
-def _q_decontam_flags(spark, sf_dir):
-    """E25 benchmark decontamination: flag corpus docs sharing any word
-    5-gram with the benchmark subset (broadcast hashed-gram join; see
-    operators/decontam.py). Oracle: decontam.contamination_flags_sql."""
-    from mediaduplicatefinder_spark.operators.decontam import (
-        contamination_flags,
-    )
-
-    d = _docs(spark, sf_dir)
-    return contamination_flags(
-        d.filter(f"NOT ({_BENCH_PRED})"), d.filter(_BENCH_PRED)
-    )
 
 
 def _q_budget_selection(spark, sf_dir):
@@ -4638,45 +4271,6 @@ def _q_corpus_mix(spark, sf_dir):
     from mediaduplicatefinder_spark.operators.selection import corpus_mix
 
     return corpus_mix(_docs(spark, sf_dir))
-
-
-_PII_FMT = " contact user%d@mail.example from 10.%d.0.7 call +1555%07d"
-
-
-def _q_pii_redaction(spark, sf_dir):
-    """E30 PII redaction (functions/redact.py): emails/IPv4s/phones
-    scrubbed to placeholder tokens with per-kind counts. The corpus has
-    no organic PII, so every 5th doc gets a deterministic injected
-    footer (same printf both engines) to make the parity check
-    non-trivial."""
-    from mediaduplicatefinder_spark.functions.redact import (
-        pii_counts,
-        redact_pii,
-    )
-
-    d = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.when(
-            F.col("doc_id") % 5 == 0,
-            F.concat(
-                "text",
-                F.format_string(
-                    _PII_FMT,
-                    "doc_id",
-                    F.pmod("doc_id", F.lit(200)),
-                    "doc_id",
-                ),
-            ),
-        )
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
-    counts = pii_counts(F.col("text"))
-    return d.select(
-        "doc_id",
-        *[c.alias(n) for n, c in counts.items()],
-        redact_pii(F.col("text")).alias("text_redacted"),
-    )
 
 
 def _q_crawl_to_training(spark, sf_dir):
@@ -4793,8 +4387,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bmp_ext_roundtrip": _q_bmp_ext_roundtrip,
         "onion_dup_ratio": _q_onion_dup_ratio,
         "leakage_split": _q_leakage_split,
-        "wordpiece_tokens": _q_wordpiece_tokens,
-        "quality_classifier": _q_quality_classifier,
         "shard_layout": _q_shard_layout,
         "host_dup_stats": _q_host_dup_stats,
         "lang_mix": _q_lang_mix,
@@ -4807,13 +4399,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "snm_pairs": _q_snm_pairs,
         "cardinality_sketch": _q_cardinality_sketch,
         "sketch_union": _q_sketch_union,
-        "char_entropy": _q_char_entropy,
-        "token_drift": _q_token_drift,
         "robust_outliers": _q_robust_outliers,
         "span_coverage": _q_span_coverage,
         "passage_windows": _q_passage_windows,
         "vocab_profile": _q_vocab_profile,
-        "repair_mojibake": _q_repair_mojibake,
         # -- r5 window block 3: session-13 graph-peel (SURVEY §8.3) -----
         "kcore_nodes": _q_kcore_nodes,
         "ktruss_edges": _q_ktruss_edges,
@@ -4831,7 +4420,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dbscan_clusters": _q_dbscan_clusters,
         "hilbert_layout": _q_hilbert_layout,
         "rbo_topk": _q_rbo_topk,
-        "priority_sample": _q_priority_sample,
         "bitext_margin_pairs": _q_bitext_margin_pairs,
         "dbscan_clusters_lsh": _q_dbscan_clusters_lsh,
         "bitext_margin_pairs_lsh": _q_bitext_margin_pairs_lsh,
@@ -4857,13 +4445,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cluster_cohesion": _q_cluster_cohesion,
         "phash_media": _q_phash_media,
         "phash_dup_pairs": _q_phash_dup_pairs,
-        "unigram_segments": _q_unigram_segments,
         "tlsh_digests": _q_tlsh_digests,
         "wav_ext_roundtrip": _q_wav_ext_roundtrip,
         "medoid_keepers": _q_medoid_keepers,
         "multiprobe_topk": _q_multiprobe_topk,
         "triangle_support": _q_triangle_support,
-        "d4_selection": _q_d4_selection,
         "cross_corpus_pairs": _q_cross_corpus_pairs,
         "hamming_complete_pairs": _q_hamming_complete_pairs,
         "oph_lsh_pairs": _q_oph_lsh_pairs,
@@ -4884,9 +4470,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "edit_pairs": _q_edit_pairs,
         "source_dedup": _q_source_dedup,
         # -- veterans: driver-green in rounds 1-4 (below the window) ----
-        "pii_redaction": _q_pii_redaction,
         "semdedup": _q_semdedup,
-        "dsir_weights": _q_dsir_weights,
         "ivf_topk": _q_ivf_topk,
         "bloom_probe": _q_bloom_probe,
         "suffix_dup_spans": _q_suffix_dup_spans,
@@ -4897,25 +4481,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "gopher_quality": _q_gopher_quality,
         "dup_segments": _q_dup_segments,
         "line_cleanup": _q_line_cleanup,
-        "perplexity_buckets": _q_perplexity_buckets,
-        "ccnet_pipeline": _q_ccnet_pipeline,
         "pack_sequences": _q_pack_sequences,
-        "c4_rules": _q_c4_rules,
         "snapshot_dedup": _q_snapshot_dedup,
         "nfc_normalize": _q_nfc_normalize,
         "script_mix": _q_script_mix,
         "pdf_text_roundtrip": _q_pdf_text_roundtrip,
         "warc_gz_extract": _q_warc_gz_extract,
         "supershingle_pairs": _q_supershingle_pairs,
-        "bpe_segments": _q_bpe_segments,
-        "doc_dispatch_extract": _q_doc_dispatch_extract,
         "cms_heavy_hitters": _q_cms_heavy_hitters,
         "threshold_ladder": _q_threshold_ladder,
         "jsonld_meta": _q_jsonld_meta,
         "shard_assignment": _q_shard_assignment,
         "pq_topk": _q_pq_topk,
         "bm25_topk": _q_bm25_topk,
-        "stratified_sample": _q_stratified_sample,
         "zorder_layout": _q_zorder_layout,
         "quantile_sketch": _q_quantile_sketch,
         "skew_profile": _q_skew_profile,
@@ -4979,7 +4557,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "office_text_roundtrip": _q_office_text_roundtrip,
         "wav_roundtrip": _q_wav_roundtrip,
         "xlsx_cells_roundtrip": _q_xlsx_cells_roundtrip,
-        "decontam_flags": _q_decontam_flags,
         "budget_selection": _q_budget_selection,
         "session_windows": _q_session_windows,
         "span_dedup": _q_span_dedup,
@@ -5799,37 +5376,6 @@ SELECT doc_id, md5(cleaned_text) AS cleaned_md5, n_lines,
        n_removed_lines, removed_chars, total_chars, keep_doc
 FROM ({line_cleanup_sql(_lf_injected)})
 """
-    # Composed CCNet flow: the three parameterizable stage oracles
-    # CHAINED over the same injected corpus.
-    from mediaduplicatefinder_spark.operators.paradedup import (
-        paragraph_dedup_sql,
-    )
-    from mediaduplicatefinder_spark.operators.perplexity import (
-        perplexity_buckets_sql,
-    )
-
-    out["ccnet_pipeline"] = f"""
-WITH clean AS MATERIALIZED ({line_cleanup_sql(_lf_injected)}),
-surv AS (SELECT doc_id, cleaned_text AS text FROM clean WHERE keep_doc),
-para AS MATERIALIZED (
-  {paragraph_dedup_sql("SELECT doc_id, text FROM surv")}
-),
-pp AS MATERIALIZED (
-  {perplexity_buckets_sql(
-      "SELECT p.doc_id, d.lang, p.text_deduped AS text "
-      "FROM para p JOIN documents d USING (doc_id)"
-  )}
-)
-SELECT c.doc_id, d.lang, c.keep_doc, c.n_removed_lines,
-       coalesce(p.n_dropped, 0)::BIGINT AS n_paras_dropped,
-       coalesce(pp.n_bigrams, 0)::BIGINT AS n_bigrams,
-       coalesce(pp.ce, 0.0) AS ce,
-       coalesce(pp.bucket, 'dropped') AS bucket
-FROM clean c
-JOIN documents d USING (doc_id)
-LEFT JOIN para p USING (doc_id)
-LEFT JOIN pp USING (doc_id)
-"""
     # Tumbling 5-min windows; session tz is UTC (session.py) so
     # cast(window.start AS long) == floor(epoch(ts)) // 300 * 300.
     # Decimal sums: partial-agg order can't drift vs the oracle.
@@ -5910,6 +5456,9 @@ FROM g GROUP BY doc_id, width, height
     )
     from mediaduplicatefinder_spark.operators.onion import (
         onion_dup_ratio_sql as _onion_sql,
+    )
+    from mediaduplicatefinder_spark.operators.paradedup import (
+        paragraph_dedup_sql,
     )
 
     _ct_url = (
@@ -6516,36 +6065,6 @@ FROM (SELECT w, unnest(range(1, len(w))) AS i
         )
         + ")"
     )
-    # Content-sniffed dispatch (E134): Spark routed REAL mixed
-    # docx/pptx/PDF payloads by magic bytes; the oracle rebuilds each
-    # format's expected extraction per the builders' closed forms.
-    _pyws2 = "' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)"
-    out["doc_dispatch_extract"] = f"""
-WITH built AS (
-  SELECT doc_id, 'docx' AS doc_kind,
-         trim(text || chr(10) || 'D' || doc_id || chr(10), {_pyws2}) AS t
-  FROM documents WHERE doc_id % 3 = 0
-  UNION ALL
-  SELECT doc_id, 'pptx',
-         trim(text || ' S' || doc_id || ' ', {_pyws2})
-  FROM documents WHERE doc_id % 3 = 1
-  UNION ALL
-  SELECT doc_id, 'pdf',
-         array_to_string(list_slice(
-           list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> ''),
-           1, 3), ' ') || chr(10) || 'P' || doc_id
-  FROM documents WHERE doc_id % 3 = 2
-)
-SELECT doc_id, doc_kind, md5(t) AS extracted_md5, TRUE AS valid
-FROM built
-"""
-    # BPE training (E133): the twin unrolls all 6 rounds (counts,
-    # argmax, recursive merge walk) inside one WITH RECURSIVE block.
-    from mediaduplicatefinder_spark.operators.bpetrain import (
-        bpe_segments_sql,
-    )
-
-    out["bpe_segments"] = bpe_segments_sql(n_merges=6)
     # Broder super-shingles (E132): the parameterizable twin replays
     # the full two-level sketch (operators/supershingle.py) over the
     # same corpus+truncated-variant synthesis.
@@ -6586,13 +6105,9 @@ FROM documents
                round(jaccard, 6), true
         FROM ({out["jaccard_pairs"]})
     """
-    # E25-E27 (r3): decontamination (string-gram join — agreement with
-    # the engine's hashed-gram join doubles as the no-collision check),
-    # token-budget selection (naive window twin of the two-phase prefix
-    # sum), sessionization (gaps-and-islands twin of F.session_window).
-    from mediaduplicatefinder_spark.operators.decontam import (
-        contamination_flags_sql,
-    )
+    # E26-E27 (r3): token-budget selection (naive window twin of the
+    # two-phase prefix sum), sessionization (gaps-and-islands twin of
+    # F.session_window).
     from mediaduplicatefinder_spark.operators.selection import (
         budget_selection_sql,
     )
@@ -6600,7 +6115,6 @@ FROM documents
         session_windows_sql,
     )
 
-    out["decontam_flags"] = contamination_flags_sql(_BENCH_PRED)
     out["budget_selection"] = budget_selection_sql(_QUALITY_SQL)
     out["session_windows"] = session_windows_sql()
 
@@ -6610,39 +6124,10 @@ FROM documents
     out["span_dedup"] = span_dedup_sql()
     out["corpus_mix"] = corpus_mix_sql()
 
-    from mediaduplicatefinder_spark.functions.redact import redact_sql
-
-    _pii_inject = (
-        "CASE WHEN doc_id % 5 = 0 THEN text || printf('"
-        + _PII_FMT.replace("%07d", "%07d")
-        + "', doc_id, doc_id % 200, doc_id) ELSE text END"
-    )
-    _red, _cnts = redact_sql("t")
-    out["pii_redaction"] = f"""
-WITH injected AS (SELECT doc_id, ({_pii_inject}) AS t FROM documents)
-SELECT doc_id,
-       {_cnts['n_email']} AS n_email,
-       {_cnts['n_ipv4']} AS n_ipv4,
-       {_cnts['n_phone']} AS n_phone,
-       {_red} AS text_redacted
-FROM injected
-"""
-
     from mediaduplicatefinder_spark.operators.semdedup import semdedup_sql
 
     out["semdedup"] = semdedup_sql(dim=64, tau=0.4)
 
-    from mediaduplicatefinder_spark.operators.d4 import d4_selection_sql
-
-    out["d4_selection"] = d4_selection_sql(dim=64, tau=0.4, proto_pct=30)
-
-    from mediaduplicatefinder_spark.operators.dsir import dsir_weights_sql
-    from mediaduplicatefinder_spark.operators.perplexity import (
-        perplexity_buckets_sql,
-    )
-
-    out["dsir_weights"] = dsir_weights_sql()
-    out["perplexity_buckets"] = perplexity_buckets_sql()
     from mediaduplicatefinder_spark.operators.packing import (
         pack_sequences_sql,
     )
@@ -6694,34 +6179,6 @@ SELECT doc_id, canon_url, warc_ts,
                      ORDER BY warc_ts DESC, doc_id DESC) = 1 AS is_latest
 FROM u
 """
-    from mediaduplicatefinder_spark.functions.c4rules import c4_rules_sql
-
-    _c4_esc = {
-        k: v.replace("\n", "\\n")
-        for k, v in (
-            ("survivor", _C4_SURVIVOR),
-            ("dropped", _C4_DROPPED),
-            ("brace", _C4_BRACE),
-            ("lorem", _C4_LOREM),
-            ("bad", _C4_BAD),
-        )
-    }
-    _c4_injected = f"""
-  SELECT doc_id, text
-    || CASE WHEN doc_id % 4 = 0 THEN E'{_c4_esc["survivor"]}' ELSE '' END
-    || CASE WHEN doc_id % 4 = 1 THEN E'{_c4_esc["dropped"]}' ELSE '' END
-    || CASE WHEN doc_id % 5 = 0 THEN E'{_c4_esc["brace"]}' ELSE '' END
-    || CASE WHEN doc_id % 6 = 0 THEN E'{_c4_esc["lorem"]}' ELSE '' END
-    || CASE WHEN doc_id % 9 = 0 THEN E'{_c4_esc["bad"]}' ELSE '' END
-    AS text
-  FROM documents
-"""
-    out["c4_rules"] = f"""
-SELECT doc_id, md5(cleaned_text) AS cleaned_md5, n_lines, n_kept_lines,
-       n_sentences, has_brace, has_lorem, has_badword, keep_page
-FROM ({c4_rules_sql(_c4_injected)})
-"""
-
     from mediaduplicatefinder_spark.operators.ivf import ivf_topk_sql
 
     out["ivf_topk"] = ivf_topk_sql(dim=64, k=10)
@@ -6733,14 +6190,6 @@ FROM ({c4_rules_sql(_c4_injected)})
     from mediaduplicatefinder_spark.operators.bm25 import bm25_topk_sql
 
     out["bm25_topk"] = bm25_topk_sql(k=10, query_mod=100)
-
-    from mediaduplicatefinder_spark.operators.sampling import (
-        stratified_sample_sql,
-    )
-
-    out["stratified_sample"] = stratified_sample_sql(
-        _SAMPLE_RATES, _SAMPLE_COUNTS
-    )
 
     from mediaduplicatefinder_spark.operators.zorder import layout_report_sql
 
@@ -6971,12 +6420,6 @@ FROM u
         lang_temperature_mix_sql,
     )
 
-    from mediaduplicatefinder_spark.functions.classifier import (
-        quality_classifier_sql,
-    )
-
-    out["quality_classifier"] = quality_classifier_sql()
-
     from mediaduplicatefinder_spark.operators.stats import host_dup_stats_sql
 
     out["host_dup_stats"] = host_dup_stats_sql(
@@ -7004,12 +6447,6 @@ FROM u
         " FROM documents"
     )
 
-    from mediaduplicatefinder_spark.functions.wordpiece import (
-        wordpiece_token_stats_sql,
-    )
-
-    out["wordpiece_tokens"] = wordpiece_token_stats_sql()
-
     from mediaduplicatefinder_spark.operators.cdc import cdc_dedup_stats_sql
 
     out["cdc_dedup"] = cdc_dedup_stats_sql()
@@ -7029,10 +6466,6 @@ FROM u
         CROSS JOIN range(0, 8) AS f(f)
     """
     out["cardinality_sketch"] = cardinality_sketch_sql(_sketch_items)
-
-    from mediaduplicatefinder_spark.functions.entropy import char_entropy_sql
-
-    out["char_entropy"] = char_entropy_sql()
 
     from mediaduplicatefinder_spark.operators.linkgraph import (
         linkgraph_pagerank_sql,
@@ -7108,10 +6541,6 @@ FROM u
 
     out["passage_windows"] = passage_windows_sql(
         window=24, stride=16, min_tail=4
-    )
-
-    from mediaduplicatefinder_spark.functions.mojibake import (
-        repair_mojibake_sql,
     )
 
     from mediaduplicatefinder_spark.operators.stats import vocab_profile_sql
@@ -7310,21 +6739,6 @@ FROM u
     """
     out["host_lang_profile"] = host_lang_profile_sql(_hl_docs_sql)
 
-    from mediaduplicatefinder_spark.functions.drift import token_drift_sql
-
-    out["token_drift"] = token_drift_sql(
-        "SELECT source AS grp, text FROM documents",
-        """SELECT source AS grp,
-                  CASE WHEN doc_id % 7 = 3
-                       THEN (CASE WHEN doc_id % 5 = 1
-                                  THEN replace(text, 'spark', 'flink')
-                                  ELSE text END) || ' fresh trend topic'
-                       ELSE (CASE WHEN doc_id % 5 = 1
-                                  THEN replace(text, 'spark', 'flink')
-                                  ELSE text END) END AS text
-           FROM documents""",
-    )
-
     from mediaduplicatefinder_spark.operators.sketches import (
         hll_union_sketch_sql,
     )
@@ -7439,14 +6853,6 @@ FROM u
                        THEN 'Syndicated Headline: ' || text
                        ELSE text END AS text
            FROM documents"""
-    )
-
-    out["repair_mojibake"] = repair_mojibake_sql(
-        f"""SELECT doc_id,
-                   CASE WHEN doc_id % 7 = 3
-                        THEN text || '{_MOJ_SUFFIX}'
-                        ELSE text END AS text
-            FROM documents"""
     )
 
     # E73 video frame-sequence near-dup: closed-form pixel replay with
@@ -7682,12 +7088,6 @@ LEFT JOIN sizes s ON s.cluster_id = f.cluster_id
 
     out["phash_media"] = phash_media_sql()
 
-    from mediaduplicatefinder_spark.functions.unigram import viterbi_sql
-
-    out["unigram_segments"] = viterbi_sql(
-        "SELECT doc_id, text FROM documents"
-    )
-
     from mediaduplicatefinder_spark.oracle.lsh_sql import phash_dup_pairs_sql
 
     out["phash_dup_pairs"] = phash_dup_pairs_sql()
@@ -7755,23 +7155,6 @@ LEFT JOIN sizes s ON s.cluster_id = f.cluster_id
 
     out["rbo_topk"] = rbo_sql(
         _exact_topk_sql(10), lsh_sql.ann_lsh_topk_sql(k=10), k=10, p=0.9
-    )
-
-    from mediaduplicatefinder_spark.operators.prioritysample import (
-        priority_sample_sql,
-    )
-
-    _ps_keys = lsh_sql.xxh64_doc_key_cte(
-        "SELECT printf('doc://%010d', doc_id) AS url FROM documents"
-    )
-    out["priority_sample"] = priority_sample_sql(
-        f"""SELECT d.lang, d.doc_id, {_QUALITY_SQL} AS weight, kk.dk
-            FROM documents d
-            JOIN ({_ps_keys}) kk
-              ON kk.url = printf('doc://%010d', d.doc_id)""",
-        group_cols=("lang",),
-        id_cols=("doc_id",),
-        k=5,
     )
 
     from mediaduplicatefinder_spark.operators.bitext import margin_pairs_sql

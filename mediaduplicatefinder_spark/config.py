@@ -67,13 +67,15 @@ class EngineConfig:
 
     # ---- scale / skew knobs (SURVEY.md §4.3) ----
     doc_key_bits: int = 64  # 64 or 128. The hot path keys docs by
-    # doc_key = xxhash64(url); birthday collisions P ~ n^2/2^65 are
-    # immaterial at bench scale (n=1e5 -> 3e-10) but reach ~2.7% at
-    # n=10^12, so the 10^12-doc profile sets 128: a second independent
-    # column doc_key2 = xxhash64(url, 1) rides every band row / pair /
-    # verify join (two flat int64 columns, not a struct — same plan
-    # shape, plan-tested; struct keys would force per-element python in
-    # the numpy bucket expansion). P(collision on BOTH) ~ n^2/2^129.
+    # doc_key = xxhash64(url); the expected number of colliding url
+    # pairs is ~ n^2/2^65: immaterial at bench scale (n=1e5 -> 3e-10),
+    # a ~2.7% chance of any collision at n=10^9, ~2.7 collisions at
+    # n=10^10 and ~2.7e4 at n=10^12. So the 10^12-doc profile sets 128:
+    # a second independent column doc_key2 = xxhash64(url, 1) rides
+    # every band row / pair / verify join (two flat int64 columns, not a
+    # struct — same plan shape, plan-tested; struct keys would force
+    # per-element python in the numpy bucket expansion). Expected pairs
+    # colliding on BOTH ~ n^2/2^129 (~1.5e-15 at n=10^12).
     # (shuffle width is a SESSION property, not an engine constant:
     # session.get_spark(shuffle_partitions=...) owns it — a duplicate
     # knob here was dead and got removed, VERDICT r2 item 6)

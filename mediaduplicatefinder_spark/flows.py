@@ -22,7 +22,7 @@ fragments of several other pages) that no pairwise stage can flag.
 
 One output row per snapshot winner with every stage's verdict, so the
 DuckDB oracle (the same parameterizable stage SQL builders CHAINED —
-the E47 ccnet_pipeline pattern) checks not just each stage but their
+the E47 chained-oracle pattern) checks not just each stage but their
 composition: row counts, survivor sets, cluster keeper decisions,
 budget cutoffs and packing offsets must all agree through the chain.
 

@@ -5,7 +5,7 @@ footers, related-links boxes) are short and dominated by anchor text,
 while content blocks are long and mostly plain — so classify each
 BLOCK by length and link density, and keep the content ones.  This is
 the extraction stage a webtext pipeline runs between raw html and the
-text-level cleanups (E45 lines, E49 C4 rules), and the direct remedy
+text-level cleanups (E45 lines), and the direct remedy
 for template contamination.
 
 Deterministic subset, entirely in array expressions — the whole

@@ -197,7 +197,7 @@ def dup_segment_metrics(docs: DataFrame) -> DataFrame:
     groupBy keyed (doc_id, xxhash64(segment), length) — segment text
     never shuffles, only 24-byte keys — then a doc-keyed shrink agg.
     The oracle groups by the segment STRING, so oracle agreement
-    doubles as the 64-bit no-collision check (decontam precedent).
+    doubles as the 64-bit no-collision check.
     Docs with zero non-empty segments keep a row (all-zero, flags ok)
     via the granularity cross join.
     """

@@ -26,9 +26,8 @@ byte identity), and public-suffix-aware domain extraction (needs the
 PSL list; ``domain`` below is the last-two-labels approximation).
 
 Cross-engine parity: every regex is anchored, alternation-free or
-used only as a boolean gate (the functions/redact.py contract), so
-Java and RE2-family engines agree; sorting is on plain ASCII
-parameter strings.
+used only as a boolean gate, so Java and RE2-family engines agree;
+sorting is on plain ASCII parameter strings.
 """
 
 from __future__ import annotations

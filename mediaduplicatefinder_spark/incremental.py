@@ -465,23 +465,57 @@ def _migrate_owners(
     return _relabel(labels, moves, ["url", "cluster_id"]).localCheckpoint(eager=True)
 
 
+def _f2_gate(pairs: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """The bucket expansion's F2 pair gate over stats-joined pairs
+    (lang, key_a, key_b[, key_a2, key_b2], sz_a, sz_b, nsh_a, nsh_b) ->
+    the batch kernel's candidate schema (lang, key_a, key_b[, key_a2,
+    key_b2], size_ratio): self-pairs dropped, size ratio >= min,
+    shingle-count ratio > jaccard threshold, canonical pair order,
+    deduplicated. Under the wide profile the order is lexicographic on
+    the (key, key2) struct — the batch kernel's total order; a 64-bit
+    tie between DISTINCT docs (the collision the profile exists for)
+    orders on key2."""
+    a, b = F.col("key_a"), F.col("key_b")
+    if cfg.doc_key_bits == 128:
+        a2, b2 = F.col("key_a2"), F.col("key_b2")
+        distinct = (a != b) | (a2 != b2)
+        swap = (a > b) | ((a == b) & (a2 > b2))
+        sides = [("key_a", "key_b"), ("key_a2", "key_b2")]
+    else:
+        distinct = a != b
+        swap = a > b
+        sides = [("key_a", "key_b")]
+    ordered = [
+        col
+        for x, y in sides
+        for col in (
+            F.when(swap, F.col(y)).otherwise(F.col(x)).alias(x),
+            F.when(swap, F.col(x)).otherwise(F.col(y)).alias(y),
+        )
+    ]
+    ratio = F.least("sz_a", "sz_b") / F.greatest("sz_a", "sz_b")
+    nratio = F.least("nsh_a", "nsh_b") / F.greatest("nsh_a", "nsh_b")
+    return (
+        pairs.filter(
+            distinct
+            & (F.greatest("sz_a", "sz_b") > 0)
+            & (ratio >= cfg.size_ratio_min)
+            & (F.greatest("nsh_a", "nsh_b") > 0)
+            & (nratio > cfg.jaccard_threshold)
+        )
+        .select("lang", *ordered, ratio.alias("size_ratio"))
+        .dropDuplicates(pair_key_cols(cfg))
+    )
+
+
 def _gate_external_candidates(
     raw: DataFrame, all_sigs: DataFrame, cfg: EngineConfig
 ) -> DataFrame:
     """Raw externally-generated pairs (lang, key_a, key_b) -> the batch
-    kernel's candidate schema (lang, key_a, key_b, size_ratio):
-    re-canonicalized by signed key order (the kernel's total order),
-    deduplicated, and gated by the same F2 prefilters the bucket
-    expansion applies (size ratio >= min, shingle-count ratio >
-    jaccard threshold) using stats joined from the signature tables.
-    Without these gates a streaming-found pair could pass verify while
-    the batch path never considered it — breaking cluster parity."""
-    a, b = F.col("key_a"), F.col("key_b")
-    canon = (
-        raw.select("lang", F.least(a, b).alias("key_a"), F.greatest(a, b).alias("key_b"))
-        .filter(F.col("key_a") != F.col("key_b"))
-        .dropDuplicates(["key_a", "key_b"])
-    )
+    kernel's candidate schema through the same F2 gate the bucket
+    expansion applies, using stats joined from the signature tables.
+    Without it a streaming-found pair could pass verify while the batch
+    path never considered it — breaking cluster parity."""
     stats = all_sigs.select("doc_key", "size_bytes", "n_shingles")
     ga = stats.select(
         F.col("doc_key").alias("key_a"),
@@ -493,18 +527,9 @@ def _gate_external_candidates(
         F.col("size_bytes").alias("sz_b"),
         F.col("n_shingles").alias("nsh_b"),
     )
-    ratio = F.least("sz_a", "sz_b") / F.greatest("sz_a", "sz_b")
-    nratio = F.least("nsh_a", "nsh_b") / F.greatest("nsh_a", "nsh_b")
-    return (
-        canon.join(ga, "key_a")
-        .join(gb, "key_b")
-        .filter(
-            (F.greatest("sz_a", "sz_b") > 0)
-            & (ratio >= cfg.size_ratio_min)
-            & (F.greatest("nsh_a", "nsh_b") > 0)
-            & (nratio > cfg.jaccard_threshold)
-        )
-        .select("lang", "key_a", "key_b", ratio.alias("size_ratio"))
+    return _f2_gate(
+        raw.select("lang", "key_a", "key_b").join(ga, "key_a").join(gb, "key_b"),
+        cfg,
     )
 
 
@@ -691,7 +716,7 @@ def ingest_batch(
         bands_old = spark.table(_t(db, "bands"))
         a2 = [F.col("doc_key2").alias("key_a2")] if wide else []
         b2 = [F.col("doc_key2").alias("key_b2")] if wide else []
-        no = (
+        no_cands = _f2_gate(
             bands_new.select(
                 F.col("doc_key").alias("key_a"),
                 *a2,
@@ -700,8 +725,7 @@ def ingest_batch(
                 "lang",
                 "band",
                 "bh",
-            )
-            .join(
+            ).join(
                 bands_old.select(
                     F.col("doc_key").alias("key_b"),
                     *b2,
@@ -712,49 +736,10 @@ def ingest_batch(
                     "bh",
                 ),
                 ["lang", "band", "bh"],
-            )
-            .filter(
-                (F.col("key_a") != F.col("key_b"))
-                | (F.col("key_a2") != F.col("key_b2"))
-                if wide
-                else F.col("key_a") != F.col("key_b")
-            )
+            ),
+            cfg,
         )
-        ratio = F.least("sz_a", "sz_b") / F.greatest("sz_a", "sz_b")
-        nratio = F.least("nsh_a", "nsh_b") / F.greatest("nsh_a", "nsh_b")
-        # canonical pair order: lexicographic on the (key, key2) struct
-        # under the wide profile — the same total order the batch
-        # bucket-expansion kernel uses; a 64-bit tie between DISTINCT
-        # docs (the collision the profile exists for) orders on key2
-        swap = (
-            (F.col("key_a") > F.col("key_b"))
-            | ((F.col("key_a") == F.col("key_b")) & (F.col("key_a2") > F.col("key_b2")))
-            if wide
-            else F.col("key_a") > F.col("key_b")
-        )
-        ordered = [
-            F.when(swap, F.col("key_b")).otherwise(F.col("key_a")).alias("key_a"),
-            F.when(swap, F.col("key_a")).otherwise(F.col("key_b")).alias("key_b"),
-        ] + (
-            [
-                F.when(swap, F.col("key_b2")).otherwise(F.col("key_a2")).alias("key_a2"),
-                F.when(swap, F.col("key_a2")).otherwise(F.col("key_b2")).alias("key_b2"),
-            ]
-            if wide
-            else []
-        )
-        kc = pair_key_cols(cfg)
-        no_cands = (
-            no.filter(
-                (F.greatest("sz_a", "sz_b") > 0)
-                & (ratio >= cfg.size_ratio_min)
-                & (F.greatest("nsh_a", "nsh_b") > 0)
-                & (nratio > cfg.jaccard_threshold)
-            )
-            .select("lang", *ordered, ratio.alias("size_ratio"))
-            .dropDuplicates(kc)
-        )
-        cands = nn_cands.unionByName(no_cands).dropDuplicates(kc)
+        cands = nn_cands.unionByName(no_cands).dropDuplicates(pair_key_cols(cfg))
         all_sigs = survivors.unionByName(
             spark.table(_t(db, "sigs")), allowMissingColumns=True
         )

@@ -16,7 +16,7 @@ key is already SHA-256 hex — cryptographically uniform — so the
 the digest, mod ``M_BITS``.  Slices of independent digest bits are
 independent hashes, and both engines re-derive them exactly
 (Spark ``conv(substr(sha,..),16,10)``; DuckDB
-``('0x'||substr)::BIGINT`` — the md5-bucket precedent from dsir.py).
+``('0x'||substr)::BIGINT``).
 
 The bit array is stored as 32-bit words inside BIGINTs (shift <= 31:
 DuckDB raises on ``1 << 63`` and signed-bit semantics would differ;

@@ -11,7 +11,7 @@ Spark shape (the inverted index IS a DataFrame):
   the exploded token relation; per-doc length ``dl`` is a window sum
   over the SAME shuffle partitioning (no second exchange).
 - corpus stats (S = total tokens, N = docs) — one tiny global agg,
-  broadcast via crossJoin (the dsir.py pattern).
+  broadcast via crossJoin.
 - query terms are a handful of rows -> document frequency is computed
   ONLY for them (posting-list semi-join on a broadcast term set, the
   scale-right order: df over 10^12 docs is a full-key shuffle, df over
@@ -35,7 +35,7 @@ Cross-engine bit-parity (the E32/E46 decimal contract):
 
 Int64 bounds: 22*tf*S needs tf*S < 4e17 — exact at any bench scale; at
 a true 10^12-doc corpus S ~ 10^15 overflows the product, so the
-deployment note is the CCNet one (perplexity.py): compute S/N on a
+deployment note is the CCNet one: compute S/N on a
 sample, broadcast them as constants, and the formula becomes
 (22*tf) / (10*tf + 3 + 9*dl/avgdl) with the same single-division
 structure.
@@ -151,8 +151,8 @@ def bm25_topk(
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("doc_id")
     )
-    # rank on the EXACT decimal; publish as double (the dsir.py
-    # convention — decimal(23,8) -> float64 is an exact cast)
+    # rank on the EXACT decimal; publish as double (decimal(23,8) ->
+    # float64 is an exact cast)
     return (
         pair.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= k)

@@ -8,7 +8,7 @@ against persisted band ledgers; this operator answers it for two
 signature relations in one plan — the shape you reach for when the
 reference side is someone else's corpus (licensing audits, cross-crawl
 overlap studies, decontaminating corpus B against corpus A at the
-near-dup grain where E25's decontamination is exact-n-gram).
+near-dup grain rather than by exact n-grams).
 
 Relation to the reference: the tool compares ONE directory scan
 against itself (main_cli.cpp:598-617).  Comparing a new scan against

@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .embeddings import cosine_expr
+from .embeddings import cosine_expr, lit_array
 from .semdedup import K_CENTROIDS, assign_clusters, centroids
 
 DEFAULT_NPROBE = 2
@@ -111,7 +111,7 @@ def ivf_topk(
             F.struct(
                 cosine_expr(
                     F.col(vec_col),
-                    F.array(*[F.lit(float(x)) for x in cents[i]]),
+                    lit_array(cents[i]),
                 ).alias("cos"),
                 F.lit(-i).alias("negk"),
             )

@@ -42,7 +42,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .embeddings import cosine_expr
+from .embeddings import cosine_expr, lit_array
 from .ivf import DEFAULT_NPROBE
 from .kmeans import DEFAULT_SCALE
 from .pq import KS, M_SUB, _codes_col, _sub_dist, init_codebooks
@@ -90,7 +90,7 @@ def ivfpq_index(
     sub_d = dim // m
     cent_arrays = F.array(
         *[
-            F.array(*[F.lit(float(x)) for x in cents[i]])
+            lit_array(cents[i])
             for i in range(n_cents)
         ]
     )
@@ -143,7 +143,7 @@ def ivfpq_topk(
     sub_d = dim // m
     cent_arrays = F.array(
         *[
-            F.array(*[F.lit(float(x)) for x in cents[i]])
+            lit_array(cents[i])
             for i in range(n_cents)
         ]
     )
@@ -165,7 +165,7 @@ def ivfpq_topk(
             F.struct(
                 cosine_expr(
                     F.col(vec_col),
-                    F.array(*[F.lit(float(x)) for x in cents[i]]),
+                    lit_array(cents[i]),
                 ).alias("cos"),
                 F.lit(-i).alias("negk"),
             )

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from mediaduplicatefinder_spark.operators.embeddings import (
     cosine_expr,
     dot_expr,
+    lit_array,
 )
 
 JL_SEED = 0x1E57B33F
@@ -51,7 +52,7 @@ def jl_matrix(dim_in: int, dim_out: int, seed: int = JL_SEED) -> np.ndarray:
 
 def _proj_expr(vec, mat: np.ndarray):
     cols = [
-        F.array(*[F.lit(float(x)) for x in mat[:, j]])
+        lit_array(mat[:, j])
         for j in range(mat.shape[1])
     ]
     return F.array(*[dot_expr(vec, g) for g in cols])

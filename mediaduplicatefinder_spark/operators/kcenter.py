@@ -4,10 +4,8 @@ problem), deployed for training-data selection as the "coreset"
 rule of Sener & Savarese, "Active Learning for Convolutional Neural
 Networks: A Core-Set Approach" (ICLR'18).
 
-Completes the engine's data-PRUNING family: SemDeDup (E31) drops
-near-duplicate embeddings, D4 (E169) additionally drops the most
-prototypical survivors, DSIR (E32) reweights toward a target — all
-three are REMOVAL rules. k-center greedy is the COVERAGE rule: pick
+Complements SemDeDup (E31), which drops near-duplicate embeddings: that
+is a REMOVAL rule. k-center greedy is the COVERAGE rule: pick
 the k points such that the maximum distance from any corpus point to
 its nearest pick is (2-approximately) minimized — the subset that
 best "spans" the embedding space, the standard seed-selection /
@@ -42,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mediaduplicatefinder_spark.operators.embeddings import cosine_expr
+from mediaduplicatefinder_spark.operators.embeddings import cosine_expr, lit_array
 
 
 def kcenter_greedy(
@@ -67,7 +65,7 @@ def kcenter_greedy(
     def dist_to(vec_literal):
         return 1.0 - cosine_expr(F.col("vec"), vec_literal)
 
-    cvec = F.array(*[F.lit(float(x)) for x in seed["vec"]])
+    cvec = lit_array(seed["vec"])
     cur = base.withColumn("md", dist_to(cvec)).localCheckpoint(eager=True)
 
     for r in range(1, k):
@@ -82,7 +80,7 @@ def kcenter_greedy(
         row = cand[0]
         selected.append((r, row["vid"], float(row["md"])))
         sel_ids.add(row["vid"])
-        cvec = F.array(*[F.lit(float(x)) for x in row["vec"]])
+        cvec = lit_array(row["vec"])
         cur = cur.withColumn(
             "md", F.least(F.col("md"), dist_to(cvec))
         ).localCheckpoint(eager=True)

@@ -57,6 +57,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .embeddings import lit_array
 from .semdedup import SEMDEDUP_SEED, K_CENTROIDS
 
 DEFAULT_SCALE = 1000
@@ -105,7 +106,7 @@ def _assign_col(cents: list[list[int]]) -> Column:
     j via struct ordering inside array_min."""
     structs = []
     for j, cj in enumerate(cents):
-        arr = F.array(*[F.lit(int(v)) for v in cj])
+        arr = lit_array(cj, "int")
         d = F.aggregate(
             F.zip_with(F.col("q"), arr, lambda a, b: (a - b) * (a - b)),
             F.lit(0).cast("long"),

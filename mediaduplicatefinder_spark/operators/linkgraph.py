@@ -298,8 +298,8 @@ def hits_fixed(
     (the published L2 norm needs sqrt; max-norm has the same
     fixpoint direction and is the standard integer formulation).
     The per-sweep max is a 1-row aggregate broadcast back via
-    crossJoin (the dsir.py tiny-aggregate convention — no driver
-    collect, no extra shuffle beyond the two keyed sums).
+    crossJoin (no driver collect, no extra shuffle beyond the two
+    keyed sums).
 
     Overflow audit (ANSI mode): normalized scores <= scale, so raw
     sums <= N * scale and the normalization numerator <= N * scale^2

@@ -955,7 +955,7 @@ def wav_ext_roundtrip_check(docs: DataFrame) -> DataFrame:
     per-sample loop distinct from the block-vectorized decoder), and
     the checksums are re-derived by the SQL oracle — the G.711 segment
     expansions as closed forms, the ADPCM state machine as a
-    state-carrying recursive CTE (the unigram_segments pattern).
+    state-carrying recursive CTE.
 
     Lanes by doc_id % 4 (mono, rate = 8000 + (doc_id%5)*1000):
 

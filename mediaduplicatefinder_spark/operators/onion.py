@@ -33,7 +33,7 @@ Scale shape (10^12 docs):
    zero-gram rows.
 
 The DuckDB twin groups by the gram STRING, so oracle agreement doubles
-as the xxhash64 no-collision check (decontam/dup-segments precedent).
+as the xxhash64 no-collision check (the dup-segments precedent).
 Thresholds are integer cross-multiplied (kept = theta_den * n_dup <=
 theta_num * n_grams) so the decision carries no float.
 """
@@ -108,7 +108,7 @@ def onion_dup_ratio_sql(
     theta_den: int = THETA_DEN,
 ) -> str:
     """Naive DuckDB twin over the gram STRINGS (hash-collision check
-    rides along, per the decontam precedent)."""
+    rides along)."""
     return f"""WITH base AS ({docs_sql}),
 toks AS (
   SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t FROM base

@@ -47,8 +47,7 @@ def normalize_paragraph_expr(line: Column) -> Column:
     """CCNet paragraph normalization as codegen'd JVM expressions:
     lowercase, digits -> ``0``, strip non-alphanumeric-space, collapse
     runs of spaces, trim.  Every regex is a plain character class
-    (alternation-free — the functions/redact.py cross-engine
-    contract), so Java and RE2-family engines agree."""
+    (alternation-free), so Java and RE2-family engines agree."""
     x = F.lower(line)
     x = F.regexp_replace(x, "[0-9]", "0")
     x = F.regexp_replace(x, "[^a-z0-9 ]", "")
@@ -126,8 +125,7 @@ def paragraph_dedup_sql(docs_sql: str) -> str:
     normalization, naive ROW_NUMBER-per-normalized-paragraph winner —
     agreement proves the min-struct winner decomposition AND (joining
     on the norm STRING where the engine joins on xxhash64(norm))
-    doubles as the 64-bit no-collision check, the decontam.py
-    precedent."""
+    doubles as the 64-bit no-collision check."""
     norm = _NORM_SQL.format(c="line")
     return f"""
 WITH docs0 AS MATERIALIZED ({docs_sql}),

@@ -50,6 +50,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .embeddings import lit_array
 from .kmeans import (
     DEFAULT_SCALE,
     _assign_col,
@@ -117,7 +118,7 @@ def train_codebooks(
 
 
 def _sub_dist(q_slice: Column, codeword: list[int]) -> Column:
-    arr = F.array(*[F.lit(int(v)) for v in codeword])
+    arr = lit_array(codeword, "int")
     return F.aggregate(
         F.zip_with(q_slice, arr, lambda a, b: (a - b) * (a - b)),
         F.lit(0).cast("long"),

@@ -386,8 +386,8 @@ def leakage_split(
     (E70). Splitting per-document leaks: a near-duplicate family (same
     boilerplate host, mirrored pages) straddles train and test, and the
     eval set grades memorization — published splits of crawl corpora key
-    on url/host for exactly this reason (the decontamination channel E25
-    then only has to guard against CROSS-corpus leakage).
+    on url/host for exactly this reason (decontamination then only has
+    to guard against CROSS-corpus leakage).
 
     bucket = pmod(xxhash64(host), 100) — a pure function of the host, so
     the assignment is identical across cluster sizes, retries, re-runs,

@@ -40,7 +40,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .embeddings import cosine_expr
+from .embeddings import cosine_expr, lit_array
 
 SEMDEDUP_SEED = 0x5EED_C1A1
 K_CENTROIDS = 8
@@ -74,7 +74,7 @@ def assign_clusters(
             F.struct(
                 cosine_expr(
                     F.col(vec_col),
-                    F.array(*[F.lit(float(x)) for x in cents[i]]),
+                    lit_array(cents[i]),
                 ).alias("cos"),
                 F.lit(-i).alias("negk"),
             )
@@ -146,13 +146,12 @@ def semdedup(
     )
 
 
-def semdedup_ctes(
+def semdedup_sql(
     dim: int = 64, tau: float = DEFAULT_TAU, k: int = K_CENTROIDS
 ) -> str:
-    """The DuckDB twin's CTE chain (through ``sem``: vec_id, cluster,
-    cos_centroid, keep) without the WITH keyword or a final SELECT, so
-    composed oracles (d4_selection) can chain further CTEs on top —
-    the E47 chained-oracle pattern."""
+    """DuckDB twin: inlined centroid literals, naive within-cluster
+    self-join — agreement proves assignment parity AND the blocked
+    pair/loser decomposition at once."""
     from mediaduplicatefinder_spark.oracle.lsh_sql import _cosine_sql
 
     cents = centroids(dim, k)
@@ -160,7 +159,7 @@ def semdedup_ctes(
         f"({i}, [{', '.join(repr(float(x)) for x in cents[i])}]::DOUBLE[])"
         for i in range(k)
     )
-    return f"""
+    return "WITH " + f"""
 emb0 AS MATERIALIZED (
   SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
 ),
@@ -194,17 +193,4 @@ sem AS MATERIALIZED (
          (l.vec_id IS NULL) AS keep
   FROM best b LEFT JOIN losers l USING (vec_id)
 )
-"""
-
-
-def semdedup_sql(
-    dim: int = 64, tau: float = DEFAULT_TAU, k: int = K_CENTROIDS
-) -> str:
-    """DuckDB twin: inlined centroid literals, naive within-cluster
-    self-join — agreement proves assignment parity AND the blocked
-    pair/loser decomposition at once."""
-    return (
-        "WITH "
-        + semdedup_ctes(dim, tau, k)
-        + "SELECT vec_id, cluster, cos_centroid, keep FROM sem"
-    )
+SELECT vec_id, cluster, cos_centroid, keep FROM sem"""

@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from mediaduplicatefinder_spark.operators.embeddings import cosine_expr
+from mediaduplicatefinder_spark.operators.embeddings import cosine_expr, lit_array
 
 
 def sq8_stats(emb: DataFrame, vec_col: str = "embedding"):
@@ -67,8 +67,8 @@ def _encode_decode_expr(vec, mins: list, maxs: list):
     """Full-precision array column -> midpoint-reconstructed array
     (encode then decode fused — the codes never need materializing for
     the in-plan scorer; encode_sq8 below materializes them)."""
-    mn = F.array(*[F.lit(float(x)) for x in mins])
-    mx = F.array(*[F.lit(float(x)) for x in maxs])
+    mn = lit_array(mins)
+    mx = lit_array(maxs)
     dim = len(mins)
 
     def recon(i):
@@ -96,8 +96,8 @@ def encode_sq8(
 ) -> DataFrame:
     """Adds ``codes array<int>`` (0..255 per dim) — the storage
     relation (1 byte/dim at rest; int array in-plan)."""
-    mn = F.array(*[F.lit(float(x)) for x in mins])
-    mx = F.array(*[F.lit(float(x)) for x in maxs])
+    mn = lit_array(mins)
+    mx = lit_array(maxs)
     dim = len(mins)
 
     def code(i):

@@ -26,7 +26,7 @@ frontier-compressed):
 2. rank_1 = ORDER-COUNT rank of each token (#strictly-smaller tokens
    + 1, ordered by md5(token) — any consistent total order on the
    alphabet yields the same equal-prefix grouping, and md5 hex order
-   is engine-portable; dsir.py precedent), computed distributed:
+   is engine-portable), computed distributed:
    distinct keys + multiplicities -> repartitionByRange ->
    per-partition exclusive prefix sums + driver-side offsets (NO
    single-reducer global window anywhere).
@@ -137,7 +137,7 @@ def token_positions(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """(doc_id, pos, tok, doc_len): 0-based positions of the lowercased
-    whitespace tokens (the dsir.py token convention)."""
+    whitespace tokens."""
     toks = F.filter(
         F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
         lambda t: t != F.lit(""),

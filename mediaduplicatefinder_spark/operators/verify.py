@@ -27,6 +27,7 @@ from pyspark.sql.types import DoubleType
 
 from mediaduplicatefinder_spark.config import DEFAULT_CONFIG, EngineConfig
 from mediaduplicatefinder_spark.functions.text import hamming_expr
+from mediaduplicatefinder_spark.operators.candidates import pair_key_cols
 
 
 def _sorted_intersect_size(a: np.ndarray, b: np.ndarray) -> int:
@@ -103,8 +104,6 @@ def verify_pairs(
         F.col("simhash1").alias("sh1_b"),
         F.col("simhash2").alias("sh2_b"),
     )
-    from mediaduplicatefinder_spark.operators.candidates import pair_key_cols
-
     kc = pair_key_cols(cfg)
     pre = (
         cands.select(*kc, "size_ratio")

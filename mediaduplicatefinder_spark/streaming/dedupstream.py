@@ -25,7 +25,8 @@ union of all batches (pytest, the E20 parity pattern).  Overflowing
 buckets diverge by design: the state operator drops arrivals past the
 cap (marker rows) while the batch kernel switches to chain+star pairs
 — both bounded, differently shaped; re-verify hot components on a slow
-cadence as the incremental module documents.
+cadence as the incremental module documents.  The markers are kept:
+every batch appends its capped buckets to ``{db}.lsh_overflow``.
 
 Delivery semantics: the checkpoint makes the QUERY exactly-once, but
 ``ingest_batch`` appends are not idempotent under a mid-write crash —
@@ -58,7 +59,10 @@ def streaming_dedup(
     """pages stream -> started streaming query that maintains the
     incremental store's cluster state (labels/edges/sigs/shas tables)
     batch by batch.  ``awaitTermination()`` with availableNow to drain;
-    read ``{db}.labels`` for the current groups."""
+    read ``{db}.labels`` for the current groups.  Arrivals the bucket
+    cap dropped are appended to ``{db}.lsh_overflow`` (batch_id, lang,
+    band, bh, n_dropped = the bucket's cumulative drops), one row per
+    capped bucket per batch; no table means nothing was dropped."""
     page_rows = pages.select(
         F.lit("page").alias("kind"),
         "url",
@@ -68,20 +72,22 @@ def streaming_dedup(
         F.lit(None).cast("long").alias("key_a"),
         F.lit(None).cast("long").alias("key_b"),
     )
-    pair_rows = (
-        streaming_lsh_candidates(pages, cfg)
-        .filter("key_a IS NOT NULL")  # drop overflow-marker metric rows
-        .select(
-            F.lit("pair").alias("kind"),
-            F.lit(None).cast("string").alias("url"),
-            F.lit(None).cast("timestamp").alias("warc_ts"),
-            F.lit(None).cast("string").alias("text"),
-            "lang",
-            "key_a",
-            "key_b",
-        )
+    # pair rows and the state operator's overflow markers (null keys)
+    pair_rows = streaming_lsh_candidates(pages, cfg).select(
+        F.when(F.col("key_a").isNull(), "overflow")
+        .otherwise("pair")
+        .alias("kind"),
+        F.lit(None).cast("string").alias("url"),
+        F.lit(None).cast("timestamp").alias("warc_ts"),
+        F.lit(None).cast("string").alias("text"),
+        "lang",
+        "key_a",
+        "key_b",
+        "band",
+        "bh",
+        "n_dropped",
     )
-    unioned = page_rows.unionByName(pair_rows)
+    unioned = page_rows.unionByName(pair_rows, allowMissingColumns=True)
 
     def _merge(df: DataFrame, batch_id: int) -> None:
         # foreachBatch hands a DataFrame bound to a CLONED session; run
@@ -106,6 +112,15 @@ def streaming_dedup(
             on_recrawl=on_recrawl,
             candidates=pairs,
         )
+        overflow = df.filter("kind = 'overflow'").select(
+            F.lit(batch_id).cast("long").alias("batch_id"),
+            "lang",
+            "band",
+            "bh",
+            "n_dropped",
+        )
+        if overflow.take(1):
+            overflow.write.mode("append").saveAsTable(f"{db}.lsh_overflow")
         # the ingest REPLACED label partitions and the shas table: drop
         # the cached file listings in BOTH sessions so the next
         # micro-batch and the driver's readers list the new files

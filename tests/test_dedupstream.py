@@ -7,7 +7,7 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from mediaduplicatefinder_spark.config import DEFAULT_CONFIG
+from mediaduplicatefinder_spark.config import DEFAULT_CONFIG, EngineConfig
 from mediaduplicatefinder_spark.pipeline import run_dedup
 from mediaduplicatefinder_spark.streaming import ingest
 from mediaduplicatefinder_spark.streaming.dedupstream import streaming_dedup
@@ -97,4 +97,37 @@ def test_streaming_clusters_match_full_recompute(spark, tiny_corpus, tmp_path):
         .collect()
     }
     assert shas == want_exact
+    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+
+
+def test_bucket_cap_drops_reported_as_lsh_overflow(spark, tmp_path):
+    db = "stream_overflow_test"
+    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+    spark.sql(f"CREATE DATABASE {db} LOCATION '{tmp_path / 'store'}'")
+    inp = tmp_path / "in"
+    inp.mkdir()
+    flood = pd.DataFrame(
+        {
+            "url": [f"u://flood{i}" for i in range(4)],
+            "warc_ts": [pd.Timestamp("2025-01-01", tz="UTC")] * 4,
+            "html": [b""] * 4,
+            "text": ["same boilerplate text for every page here"] * 4,
+            "lang": ["en"] * 4,
+        }
+    )
+    _write_pages(flood, str(inp), "b0.parquet")
+    q = streaming_dedup(
+        spark,
+        ingest.read_pages_stream(spark, str(inp)),
+        db,
+        checkpoint=str(tmp_path / "ck"),
+        cfg=EngineConfig(bucket_cap=2),
+    )
+    q.awaitTermination()
+    # cap=2 keeps the first two arrivals of every shared bucket; the
+    # other two are reported per capped bucket, not silently dropped
+    overflow = spark.table(f"{db}.lsh_overflow").collect()
+    assert overflow
+    assert {r.n_dropped for r in overflow} == {2}
+    assert {r.batch_id for r in overflow} == {0}
     spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")

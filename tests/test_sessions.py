@@ -1,8 +1,8 @@
-"""Pin the semantics of the r3 pipeline-hygiene operators: E25
-benchmark decontamination, E26 token-budget selection, E27
-sessionization.  The driver's DuckDB oracle proves engine-vs-SQL
-agreement at sf0.01; these tests pin the *intended* semantics on
-hand-built inputs where the right answer is known independently."""
+"""Pin the semantics of the r3 pipeline-hygiene operators: E26
+token-budget selection, E27 sessionization.  The driver's DuckDB
+oracle proves engine-vs-SQL agreement at sf0.01; these tests pin the
+*intended* semantics on hand-built inputs where the right answer is
+known independently."""
 
 from __future__ import annotations
 
@@ -10,50 +10,8 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from mediaduplicatefinder_spark.operators.decontam import (
-    contamination_flags,
-)
 from mediaduplicatefinder_spark.operators.selection import budget_selection
 from mediaduplicatefinder_spark.operators.sessions import sessionize
-
-
-# ---------------------------------------------------------------- E25
-
-def test_decontam_planted_overlap(spark):
-    # doc 1 shares the 5-gram "a b c d e" with the benchmark; doc 2
-    # shares nothing; doc 3 is too short to have any 5-gram.
-    docs = spark.createDataFrame(
-        [
-            (1, "x y a b c d e z"),
-            (2, "p q r s t u v w"),
-            (3, "too short"),
-            (4, "a b c d e a b c d e"),  # repeated gram counts once
-        ],
-        "doc_id long, text string",
-    )
-    bench = spark.createDataFrame(
-        [("junk a b c d e junk2",)], "text string"
-    )
-    rows = {
-        r["doc_id"]: r
-        for r in contamination_flags(docs, bench, n=5).collect()
-    }
-    assert rows[1]["contaminated"] and rows[1]["n_hits"] == 1
-    assert not rows[2]["contaminated"] and rows[2]["n_hits"] == 0
-    assert rows[3]["n_grams"] == 0 and not rows[3]["contaminated"]
-    # distinct grams: "a b c d e" appears twice in doc 4 but hits once
-    assert rows[4]["n_hits"] == 1
-    # every input doc present even with zero hits (left join)
-    assert set(rows) == {1, 2, 3, 4}
-
-
-def test_decontam_benchmark_side_broadcast(spark):
-    docs = spark.createDataFrame(
-        [(1, "a b c d e f")], "doc_id long, text string"
-    )
-    bench = spark.createDataFrame([("a b c d e",)], "text string")
-    plan = contamination_flags(docs, bench)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
 
 
 # ---------------------------------------------------------------- E26
