@@ -377,16 +377,6 @@ def _q_embedding_dup_pairs(spark, sf_dir):
     return embedding_dup_pairs_exact(_emb(spark, sf_dir), threshold=0.4)
 
 
-def _q_semdedup(spark, sf_dir):
-    """SemDeDup (E31, Abbas et al. 2023): fixed-centroid semantic
-    clusters, within-cluster cosine >= 0.4 pairs, drop the member closer
-    to its centroid. Scale path: map-only assignment + per-cluster
-    triangle-blocked pairs — no CartesianProduct."""
-    from mediaduplicatefinder_spark.operators.semdedup import semdedup
-
-    return semdedup(_emb(spark, sf_dir), dim=64, tau=0.4)
-
-
 def _q_cross_corpus_pairs(spark, sf_dir):
     """E170 cross-corpus near-dup join: split the corpus by doc_id
     parity into a held 'reference' side and a probing 'new' side, and
@@ -412,31 +402,6 @@ def _q_cross_corpus_pairs(spark, sf_dir):
         .filter("similar")
         .select("url_ref", "url_new", F.col("jaccard").alias("score"))
     )
-
-
-def _q_hamming_complete_pairs(spark, sf_dir):
-    """E171 Manku multi-table Hamming search (operators/hammingindex.py):
-    ALL same-lang pairs with simhash1 Hamming distance <= 3, complete by
-    pigeonhole over C(6,3)=20 packed-key tables (32-bit keys vs the band
-    channel's 16-bit — the 10^12-doc bucket-size fix, WWW'07 §3).
-    Oracle: brute-force bit_count(xor) <= 3 over the SQL-re-derived
-    simhash relation — value equality proves completeness AND soundness."""
-    from mediaduplicatefinder_spark.operators.extract import (
-        extracted_or_given_text,
-    )
-    from mediaduplicatefinder_spark.operators.hammingindex import (
-        hamming_complete_pairs,
-    )
-    from mediaduplicatefinder_spark.operators.signatures import (
-        compute_signatures,
-    )
-
-    docs = extracted_or_given_text(_docs_as_pages(spark, sf_dir), use_html=False)
-    sigs = compute_signatures(docs, DEFAULT_CONFIG, min_partitions=32)
-    fps = sigs.select("url", "lang", F.col("simhash1").alias("h64"))
-    return hamming_complete_pairs(
-        fps, id_col="url", hash_col="h64", group_cols=("lang",), k=3, n_blocks=6
-    ).select("url_a", "url_b", "hamming")
 
 
 def _q_oph_lsh_pairs(spark, sf_dir):
@@ -473,44 +438,6 @@ def _q_metablocking_pairs(spark, sf_dir):
     return metablocking_pairs(sigs, DEFAULT_CONFIG, block_cap=64)
 
 
-def _q_lshensemble_containment(spark, sf_dir):
-    """E174 LSH Ensemble (operators/lshensemble.py, VLDB'16): size-
-    partitioned, per-partition-tuned containment search. Docs with
-    id%10==7 become 25-token quotes of their predecessor (the E80
-    fixture) and play the QUERY side; the rest are the corpus. Oracle:
-    the whole construction re-derived in SQL from the shared
-    ensemble_plan — partition folds, probe join, fold-32 containment."""
-    from mediaduplicatefinder_spark.operators.extract import (
-        extracted_or_given_text,
-    )
-    from mediaduplicatefinder_spark.operators.lshensemble import (
-        lsh_ensemble_containment,
-    )
-    from mediaduplicatefinder_spark.operators.signatures import (
-        compute_signatures,
-    )
-
-    d = _docs(spark, sf_dir).select("doc_id", "lang", "text")
-    p = d.select(F.col("doc_id").alias("pid"), F.col("text").alias("ptext"))
-    joined = d.join(p, F.col("pid") == F.col("doc_id") - 1, "left")
-    text2 = F.when(
-        (F.col("doc_id") % 10 == 7) & F.col("ptext").isNotNull(),
-        F.concat_ws(" ", F.slice(F.split(F.trim("ptext"), r"\s+"), 1, 25)),
-    ).otherwise(F.col("text"))
-    pages = joined.select(
-        F.format_string("doc://%010d", F.col("doc_id")).alias("url"),
-        F.lit(None).cast("timestamp").alias("warc_ts"),
-        text2.alias("text"),
-        "lang",
-    )
-    docs = extracted_or_given_text(pages, use_html=False)
-    sigs = compute_signatures(docs, DEFAULT_CONFIG, min_partitions=32).persist()
-    is_q = F.substring("url", 7, 10).cast("long") % 10 == 7
-    return lsh_ensemble_containment(
-        sigs.filter(~is_q), sigs.filter(is_q), t=0.5
-    )
-
-
 def _q_scan_roles(spark, sf_dir):
     """E176 SCAN structural clustering (operators/scan.py, KDD'07) over
     the full pipeline's verified similar edges: cores, borders, hubs,
@@ -526,34 +453,6 @@ def _q_scan_roles(spark, sf_dir):
     )
     return scan_clusters(
         similar_edges(res.pairs).select("url_a", "url_b", "score")
-    )
-
-
-def _q_rrf_fusion(spark, sf_dir):
-    """E188 Reciprocal Rank Fusion (operators/fusion_rank.py, SIGIR'09):
-    fuse the exact, hyperplane-LSH, and IVF top-20 channels per query
-    (vec_id%50) into one calibration-free top-10 — fused score =
-    Σ 1/(60+rank), summed in fixed channel order. Oracle: the same
-    three channel twins fused with the identical pivot/sum."""
-    from mediaduplicatefinder_spark.operators.embeddings import (
-        ann_lsh_topk,
-        cosine_topk,
-    )
-    from mediaduplicatefinder_spark.operators.fusion_rank import rrf_fuse
-    from mediaduplicatefinder_spark.operators.ivf import ivf_topk
-
-    emb = _emb(spark, sf_dir)
-    qs = emb.filter(F.pmod("vec_id", F.lit(50)) == 0)
-    score = lambda df: df.select(  # noqa: E731
-        "query_id", "vec_id", F.col("cosine").alias("score")
-    )
-    return rrf_fuse(
-        [
-            ("exact", score(cosine_topk(emb, qs, k=20))),
-            ("lsh", score(ann_lsh_topk(emb, qs, k=20))),
-            ("ivf", score(ivf_topk(emb, qs, dim=64, k=20))),
-        ],
-        k=10,
     )
 
 
@@ -633,74 +532,6 @@ def _q_fellegi_sunter(spark, sf_dir):
     from mediaduplicatefinder_spark.operators.fellegi import fellegi_sunter
 
     return fellegi_sunter(_docs(spark, sf_dir))
-
-
-def _q_kcenter_coreset(spark, sf_dir):
-    """E185 k-center greedy coreset (operators/kcenter.py, Gonzalez'85
-    / Sener-Savarese ICLR'18): the 12-round farthest-first trajectory
-    over the embeddings table with the covering-radius curve. Oracle:
-    the identical trajectory unrolled as chained CTEs."""
-    from mediaduplicatefinder_spark.operators.kcenter import kcenter_greedy
-
-    return kcenter_greedy(_emb(spark, sf_dir), k=12)
-
-
-def _q_jl_topk(spark, sf_dir):
-    """E184 Johnson-Lindenstrauss projected ANN (operators/jl.py):
-    fixed-seed Gaussian 64->16 projection (matrix literals shared with
-    the twin), rank by projected-space round-6 cosine with the exact
-    full-dim cosine beside it. Queries = vec_id%50.
-
-    Operating point: 64->16 is the ORACLE-TWIN size (small inlined
-    matrix literal), deliberately out of JL's valid regime — the
-    production rule is jl.recommended_dim_out (k = ln n / eps^2,
-    high-dim inputs only), pytest-gated at >= 0.8 recall in its
-    regime and measured in BENCH/ANN.md's JL RETUNED row."""
-    from mediaduplicatefinder_spark.operators.jl import jl_topk
-
-    emb = _emb(spark, sf_dir)
-    return jl_topk(
-        emb, emb.filter(F.pmod("vec_id", F.lit(50)) == 0), dim_in=64, k=10
-    )
-
-
-def _q_sq8_topk(spark, sf_dir):
-    """E183 SQ8 scalar-quantized ANN (operators/sq.py): per-dim min/max
-    affine int8 codes, asymmetric midpoint-reconstructed cosine ranking
-    with the exact cosine beside it (the ADC error is IN the relation).
-    Queries = vec_id%50. Oracle: identical stats/encode/decode/cosine
-    expression nesting in DuckDB."""
-    from mediaduplicatefinder_spark.operators.sq import sq8_topk
-
-    emb = _emb(spark, sf_dir)
-    return sq8_topk(emb, emb.filter(F.pmod("vec_id", F.lit(50)) == 0), k=10)
-
-
-def _q_lshforest_topk(spark, sf_dir):
-    """E182 LSH Forest top-k (operators/lshforest.py, Bawa et al.
-    WWW'05): 4 trees x depth-8 prefixes over the SAME minhash
-    signature the fixed channel computes; every doc_id%7==0 doc
-    queries the corpus, rank = (max matching prefix depth DESC, exact
-    fold-32 Jaccard DESC). Oracle: identical forest over the lsh_base
-    mh/fold relations with signed slot values."""
-    from mediaduplicatefinder_spark.operators.extract import (
-        extracted_or_given_text,
-    )
-    from mediaduplicatefinder_spark.operators.lshforest import lshforest_topk
-    from mediaduplicatefinder_spark.operators.signatures import (
-        compute_signatures,
-    )
-
-    docs = extracted_or_given_text(
-        _docs_as_pages(spark, sf_dir), use_html=False
-    )
-    # persist: the signature table feeds the index relation (query and
-    # corpus sides) AND both token-set verify joins — 4 consumers
-    sigs = compute_signatures(docs, DEFAULT_CONFIG, min_partitions=32).persist()
-    queries = _docs(spark, sf_dir).filter(F.pmod("doc_id", F.lit(7)) == 0).select(
-        F.format_string("doc://%010d", F.col("doc_id")).alias("url")
-    )
-    return lshforest_topk(sigs, queries, k=5)
 
 
 def _q_cc_twophase_groups(spark, sf_dir):
@@ -986,20 +817,6 @@ def _q_rbo_topk(spark, sf_dir):
     return rbo_topk(
         cosine_topk(emb, qs, k=10), ann_lsh_topk(emb, qs, k=10), k=10, p=0.9
     )
-
-
-def _q_nndescent_knn(spark, sf_dir):
-    """E179 NN-Descent k-NN graph (operators/nndescent.py, Dong et al.
-    WWW'11): deterministic circulant init, 4 neighbor-of-neighbor
-    rounds, exact round-6 cosine top-10 per node. Oracle: the identical
-    trajectory unrolled as chained CTEs from the same offset literals —
-    the driver value-checks the whole graph, recall vs brute force is
-    pytest-gated."""
-    from mediaduplicatefinder_spark.operators.nndescent import (
-        nndescent_knn,
-    )
-
-    return nndescent_knn(_emb(spark, sf_dir), k=10, n_iter=4)
 
 
 def _q_spotsig_pairs(spark, sf_dir):
@@ -1924,29 +1741,6 @@ def _q_onion_dup_ratio(spark, sf_dir):
         .otherwise(F.col("text"))
     )
     return onion_dup_ratio(d.select("doc_id", text.alias("text")))
-
-
-def _q_kmeans_fit(spark, sf_dir):
-    """E68 distributed fixed-point Lloyd k-means (operators/kmeans.py):
-    the centroid FIT that SemDeDup/IVF document as offline. Map-only
-    inlined-literal assignment per round, int64 sufficient-statistic
-    updates (O(k*dim) driver metadata), rounded-integer-mean centroids
-    so a multi-round iterative algorithm stays bit-identical to the
-    DuckDB naive-join twin."""
-    from mediaduplicatefinder_spark.operators.kmeans import kmeans_fit
-
-    return kmeans_fit(_emb(spark, sf_dir).select("vec_id", "embedding"), dim=64)
-
-
-def _q_ivf_topk(spark, sf_dir):
-    """IVF-probed ANN top-10 per query vector (every 50th vec_id):
-    centroid inverted lists + broadcast probe join — the cluster-probe
-    sibling of ann_lsh_topk (E33)."""
-    from mediaduplicatefinder_spark.operators.ivf import ivf_topk
-
-    emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") % 50 == 0)
-    return ivf_topk(emb, queries, dim=64, k=10)
 
 
 def _q_bloom_probe(spark, sf_dir):
@@ -2952,19 +2746,6 @@ def _q_shard_assignment(spark, sf_dir):
     )
 
 
-def _q_pq_topk(spark, sf_dir):
-    """E139 product-quantization ADC top-10 per query vector (every
-    50th vec_id, the ivf_topk query set): corpus encoded to 8 codes of
-    16 codewords each (map-only), per-query integer distance LUT built
-    on the broadcast side, ADC = 8 array lookups per corpus row —
-    the memory-side ANN scale path next to IVF's candidate-set path."""
-    from mediaduplicatefinder_spark.operators.pq import pq_adc_topk
-
-    emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") % 50 == 0)
-    return pq_adc_topk(emb, queries, dim=64, k=10)
-
-
 def _q_bm25_topk(spark, sf_dir):
     """E140 BM25 top-10 retrieval (operators/bm25.py): every 100th
     doc's first-4-token query against the corpus inverted index —
@@ -3122,38 +2903,6 @@ def _q_compaction_plan(spark, sf_dir):
         ).alias("size_bytes"),
     )
     return compaction_plan(manifest, "part", target_bytes=1_000_000)
-
-
-def _q_ivfpq_topk(spark, sf_dir):
-    """E156 IVF-PQ ANN top-10 (operators/ivfpq.py): coarse centroid
-    probing (E33) composed with PQ ADC scoring (E139) — the FAISS
-    IVFx,PQy shape; corpus scanned as (cluster, codes) only. Same
-    query set as ivf_topk/pq_topk (every 50th vec_id).
-
-    Operating point: this query runs the ORACLE-TWIN-SIZED config
-    (seeded codebooks, n_cents=8) whose value-equality with the DuckDB
-    twin is the contract being checked — NOT a recall-tuned
-    deployment. Production sizing is ivfpq.recommended_config (nlist ~
-    sqrt(n), trained residual codebooks, rerank@1000), pytest-gated at
-    >= 0.8 recall and measured in BENCH/ANN.md's RETUNED rows."""
-    from mediaduplicatefinder_spark.operators.ivfpq import ivfpq_topk
-
-    emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") % 50 == 0)
-    return ivfpq_topk(emb, queries, dim=64, k=10)
-
-
-def _q_ivfpq_rerank(spark, sf_dir):
-    """E157 ADC shortlist + exact rerank (operators/ivfpq.py): the
-    FAISS two-stage refinement — E156's code-grain scan shortlists 50
-    per query, exact cosine re-ranks only those. Same query set."""
-    from mediaduplicatefinder_spark.operators.ivfpq import (
-        ivfpq_rerank_topk,
-    )
-
-    emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") % 50 == 0)
-    return ivfpq_rerank_topk(emb, queries, dim=64, k=10, shortlist=50)
 
 
 def _q_jaccard_histogram(spark, sf_dir):
@@ -3805,21 +3554,6 @@ def _q_trustrank_scores(spark, sf_dir):
     )
 
 
-def _q_mutual_knn_clusters(spark, sf_dir):
-    """E194 mutual-kNN graph clustering (operators/mutualknn.py, Brito
-    et al. 1997): the RANK-based, threshold-free embedding dup channel
-    — edge iff both vectors sit in each other's exact top-5 (round-6
-    cosine, vec_id ties), connected components over the mutual edges,
-    outliers emit no row. Locally adaptive where every other embedding
-    channel cuts one global cosine. Oracle: exact kNN + reciprocity
-    join + recursive min-label closure (mutual_knn_sql)."""
-    from mediaduplicatefinder_spark.operators.mutualknn import (
-        mutual_knn_clusters,
-    )
-
-    return mutual_knn_clusters(_emb(spark, sf_dir), k=5)
-
-
 def _q_phash_media(spark, sf_dir):
     """E162 pHash: the DCT perceptual hash completing the aHash/dHash
     trio (P1/P2) over the FAKEMEDIA image fixture — pinned integer
@@ -4376,7 +4110,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # value-checked locally via scripts/check_oracle.py.
     return {
         # -- r5 window block 1: sessions-1-3 backlog (SURVEY §8.1) -------
-        "kmeans_fit": _q_kmeans_fit,
         "jaccard_histogram": _q_jaccard_histogram,
         "linkgraph_pagerank": _q_linkgraph_pagerank,
         "cdc_dedup": _q_cdc_dedup,
@@ -4409,7 +4142,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lpa_communities": _q_lpa_communities,
         "linkgraph_hits": _q_linkgraph_hits,
         "trustrank_scores": _q_trustrank_scores,
-        "mutual_knn_clusters": _q_mutual_knn_clusters,
         "html_table_cells": _q_html_table_cells,
         "webtable_match_pairs": _q_webtable_match_pairs,
         "affinity_clusters": _q_affinity_clusters,
@@ -4427,17 +4159,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "mirror_hosts_structural": _q_mirror_hosts_structural,
         "salsa_scores": _q_salsa_scores,
         # -- sessions 9-12 value-twin block (SURVEY §8.4) ---------------
-        "rrf_fusion": _q_rrf_fusion,
         "mmr_rerank": _q_mmr_rerank,
         "ctph_pairs": _q_ctph_pairs,
         "fellegi_sunter": _q_fellegi_sunter,
-        "kcenter_coreset": _q_kcenter_coreset,
-        "jl_topk": _q_jl_topk,
-        "sq8_topk": _q_sq8_topk,
-        "lshforest_topk": _q_lshforest_topk,
         "cc_twophase_groups": _q_cc_twophase_groups,
         "cluster_agreement": _q_cluster_agreement,
-        "nndescent_knn": _q_nndescent_knn,
         "spotsig_pairs": _q_spotsig_pairs,
         "imatch_groups": _q_imatch_groups,
         "ppjoin_pairs": _q_ppjoin_pairs,
@@ -4451,10 +4177,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "multiprobe_topk": _q_multiprobe_topk,
         "triangle_support": _q_triangle_support,
         "cross_corpus_pairs": _q_cross_corpus_pairs,
-        "hamming_complete_pairs": _q_hamming_complete_pairs,
         "oph_lsh_pairs": _q_oph_lsh_pairs,
         "metablocking_pairs": _q_metablocking_pairs,
-        "lshensemble_containment": _q_lshensemble_containment,
         "corpus_overlap": _q_corpus_overlap,
         "scan_roles": _q_scan_roles,
         # -- session-5 crawl-surface block (SURVEY §8.5) ----------------
@@ -4470,8 +4194,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "edit_pairs": _q_edit_pairs,
         "source_dedup": _q_source_dedup,
         # -- veterans: driver-green in rounds 1-4 (below the window) ----
-        "semdedup": _q_semdedup,
-        "ivf_topk": _q_ivf_topk,
         "bloom_probe": _q_bloom_probe,
         "suffix_dup_spans": _q_suffix_dup_spans,
         "exactsubstr_dedup": _q_exactsubstr_dedup,
@@ -4492,7 +4214,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "threshold_ladder": _q_threshold_ladder,
         "jsonld_meta": _q_jsonld_meta,
         "shard_assignment": _q_shard_assignment,
-        "pq_topk": _q_pq_topk,
         "bm25_topk": _q_bm25_topk,
         "zorder_layout": _q_zorder_layout,
         "quantile_sketch": _q_quantile_sketch,
@@ -4507,8 +4228,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "salted_join": _q_salted_join,
         "cluster_stability": _q_cluster_stability,
         "dup_evidence": _q_dup_evidence,
-        "ivfpq_topk": _q_ivfpq_topk,
-        "ivfpq_rerank": _q_ivfpq_rerank,
         "crawl_to_training": _q_crawl_to_training,
         "jpeg_roundtrip": _q_jpeg_roundtrip,
         "jpeg_prog_roundtrip": _q_jpeg_prog_roundtrip,
@@ -4943,31 +4662,7 @@ FROM jac
 WHERE jaccard > {DEFAULT_CONFIG.jaccard_threshold}
   AND {_par_a} <> {_par_b}
 """
-    out["hamming_complete_pairs"] = lsh_sql.lsh_base_cte() + """
-SELECT a.url AS url_a, b.url AS url_b, bit_count(xor(a.s, b.s)) AS hamming
-FROM simhash a
-JOIN simhash b ON a.k = 0 AND b.k = 0 AND a.url < b.url
-JOIN doc_stats da ON da.url = a.url
-JOIN doc_stats db ON db.url = b.url AND da.lang = db.lang
-WHERE bit_count(xor(a.s, b.s)) <= 3
-"""
     out["oph_lsh_pairs"] = lsh_sql.oph_lsh_pairs_sql()
-    from mediaduplicatefinder_spark.operators.lshensemble import (
-        lsh_ensemble_sql,
-    )
-
-    _ens_docs = """
-        SELECT printf('doc://%010d', d.doc_id) AS url, d.lang,
-               CASE WHEN d.doc_id % 10 = 7 AND p.doc_id IS NOT NULL
-                    THEN array_to_string(
-                           list_slice(
-                             string_split_regex(trim(p.text), '\\s+'),
-                             1, 25), ' ')
-                    ELSE d.text END AS text
-        FROM documents d LEFT JOIN documents p ON p.doc_id = d.doc_id - 1
-    """
-    out["lshensemble_containment"] = lsh_ensemble_sql(_ens_docs, t=0.5)
-
     from mediaduplicatefinder_spark.operators.scan import scan_tail_sql
 
     out["scan_roles"] = (
@@ -4996,26 +4691,6 @@ WHERE bit_count(xor(a.s, b.s)) <= 3
         "SELECT doc_id, lang, text FROM documents", n_variants=2
     )
 
-    from mediaduplicatefinder_spark.operators.nndescent import (
-        nndescent_knn_sql,
-    )
-
-    out["nndescent_knn"] = nndescent_knn_sql(k=10, n_iter=4)
-
-    from mediaduplicatefinder_spark.operators.sq import sq8_topk_sql
-
-    out["sq8_topk"] = sq8_topk_sql(k=10, query_mod=50)
-
-    from mediaduplicatefinder_spark.operators.jl import jl_topk_sql
-
-    out["jl_topk"] = jl_topk_sql(dim_in=64, k=10, query_mod=50)
-
-    from mediaduplicatefinder_spark.operators.kcenter import (
-        kcenter_greedy_sql,
-    )
-
-    out["kcenter_coreset"] = kcenter_greedy_sql(k=12)
-
     from mediaduplicatefinder_spark.operators.fellegi import (
         fellegi_sunter_sql,
     )
@@ -5026,11 +4701,7 @@ WHERE bit_count(xor(a.s, b.s)) <= 3
 
     out["ctph_pairs"] = ctph_pairs_sql()
 
-    from mediaduplicatefinder_spark.operators.fusion_rank import (
-        mmr_rerank_sql,
-        rrf_fuse_sql,
-    )
-    from mediaduplicatefinder_spark.operators.ivf import ivf_topk_sql
+    from mediaduplicatefinder_spark.operators.fusion_rank import mmr_rerank_sql
 
     def _exact_topk_sql(k: int) -> str:
         cos = lsh_sql._cosine_sql("q.qv", "e.embedding::DOUBLE[]")
@@ -5043,20 +4714,6 @@ SELECT query_id, vec_id, cosine
 FROM (SELECT *, row_number() OVER (PARTITION BY query_id
           ORDER BY cosine DESC, vec_id) AS rk FROM s)
 WHERE rk <= {k}"""
-
-    def _as_score(sql: str) -> str:
-        return (
-            "SELECT query_id, vec_id, cosine AS score FROM (" + sql + ")"
-        )
-
-    out["rrf_fusion"] = rrf_fuse_sql(
-        [
-            ("exact", _as_score(_exact_topk_sql(20))),
-            ("lsh", _as_score(lsh_sql.ann_lsh_topk_sql(k=20))),
-            ("ivf", _as_score(ivf_topk_sql(dim=64, k=20))),
-        ],
-        k=10,
-    )
 
     _mmr_sims_sql = f"""
 WITH sl AS ({_exact_topk_sql(15)}),
@@ -5077,17 +4734,6 @@ JOIN ev eb ON eb.vec_id = sp.vec_id_b"""
         _mmr_sims_sql,
         k=5,
         lam=0.7,
-    )
-
-    from mediaduplicatefinder_spark.operators.lshforest import (
-        lshforest_tail_sql,
-    )
-
-    out["lshforest_topk"] = (
-        lsh_sql.lsh_base_cte()
-        + lshforest_tail_sql(
-            "(CAST(substring(url, 7) AS BIGINT) % 7) = 0", k=5
-        )
     )
 
     from mediaduplicatefinder_spark.operators.twophasecc import (
@@ -6124,10 +5770,6 @@ FROM documents
     out["span_dedup"] = span_dedup_sql()
     out["corpus_mix"] = corpus_mix_sql()
 
-    from mediaduplicatefinder_spark.operators.semdedup import semdedup_sql
-
-    out["semdedup"] = semdedup_sql(dim=64, tau=0.4)
-
     from mediaduplicatefinder_spark.operators.packing import (
         pack_sequences_sql,
     )
@@ -6179,14 +5821,6 @@ SELECT doc_id, canon_url, warc_ts,
                      ORDER BY warc_ts DESC, doc_id DESC) = 1 AS is_latest
 FROM u
 """
-    from mediaduplicatefinder_spark.operators.ivf import ivf_topk_sql
-
-    out["ivf_topk"] = ivf_topk_sql(dim=64, k=10)
-
-    from mediaduplicatefinder_spark.operators.pq import pq_adc_topk_sql
-
-    out["pq_topk"] = pq_adc_topk_sql(dim=64, k=10)
-
     from mediaduplicatefinder_spark.operators.bm25 import bm25_topk_sql
 
     out["bm25_topk"] = bm25_topk_sql(k=10, query_mod=100)
@@ -6250,18 +5884,6 @@ SELECT e.event_id, e.k, e.ts_sec,
 FROM ev e ASOF LEFT JOIN vr v
   ON e.k = v.k AND e.ts_sec >= v.ts_sec
 """
-
-    # E156: the E33 probe CTEs chained with the E139 code/LUT CTEs
-    from mediaduplicatefinder_spark.operators.ivfpq import ivfpq_topk_sql
-
-    out["ivfpq_topk"] = ivfpq_topk_sql(dim=64, k=10)
-
-    # E157: the full E156 twin as the shortlist, exact cosine re-rank
-    from mediaduplicatefinder_spark.operators.ivfpq import (
-        ivfpq_rerank_topk_sql,
-    )
-
-    out["ivfpq_rerank"] = ivfpq_rerank_topk_sql(dim=64, k=10, shortlist=50)
 
     # E155: the twin buckets the same jac relation
     from mediaduplicatefinder_spark.oracle.lsh_sql import lsh_base_cte
@@ -6433,10 +6055,6 @@ FROM u
     from mediaduplicatefinder_spark.operators.packing import shard_layout_sql
 
     out["shard_layout"] = shard_layout_sql()
-
-    from mediaduplicatefinder_spark.operators.kmeans import kmeans_fit_sql
-
-    out["kmeans_fit"] = kmeans_fit_sql(dim=64)
 
     from mediaduplicatefinder_spark.operators.selection import (
         leakage_split_sql,
@@ -7063,10 +6681,6 @@ LEFT JOIN sizes s ON s.cluster_id = f.cluster_id
         + _exact_and_edges_ctes(DEFAULT_CONFIG)
         + lpa_tail_sql(rounds=4)
     )
-
-    from mediaduplicatefinder_spark.operators.mutualknn import mutual_knn_sql
-
-    out["mutual_knn_clusters"] = mutual_knn_sql(k=5)
 
     from mediaduplicatefinder_spark.operators.affinity import (
         affinity_tail_sql,

@@ -20,7 +20,7 @@ Properties that make it a dedup key:
   a hamming band-join (the E19 pixel pattern) extends it to near
   matches; the query ships the exact-group form.
 - everything after decode is integer arithmetic: partition order,
-  retries, and engines cannot perturb a bit (the E68 rationale).
+  retries, and engines cannot perturb a bit.
 
 Scale shape: decode + fingerprint is one Arrow-batched map-only pass
 (binary payloads never shuffle — only the 8-byte signature does);

@@ -3,16 +3,16 @@ Kriegel / Sander / Xu, "A Density-Based Algorithm for Discovering
 Clusters in Large Spatial Databases with Noise" (KDD 1996).
 
 Why it belongs in a dedup engine: the clustering layer already carries
-single-linkage CC (C2), the SCAN roles (E176, graph-structural), LPA /
-affinity / truss refinements, k-means and mutual-kNN — but every one of
-those operates on the VERIFIED SIMILARITY GRAPH or on centroid
-assignment.  DBSCAN is the published density answer for the EMBEDDING
-channel directly: semantic duplicate neighborhoods (SemDeDup's regime)
-are dense balls, boilerplate/template families are dense chains, and
-one-off pages are density noise — a label k-means cannot produce (it
-must assign everything) and CC over a raw eps-graph cannot either
-(it has no core/noise distinction, so one borderline vector bridges
-two dense regions).  DBSCAN's core rule is exactly that gate.
+single-linkage CC (C2), the SCAN roles (E176, graph-structural) and
+LPA / affinity / truss refinements — but every one of those operates on
+the VERIFIED SIMILARITY GRAPH.  DBSCAN is the published density
+answer for the EMBEDDING channel directly: semantic duplicate
+neighborhoods (SemDeDup's regime) are dense balls, boilerplate/template
+families are dense chains, and one-off pages are density noise — a
+label k-means cannot produce (it must assign everything) and CC over
+a raw eps-graph cannot either (it has no core/noise distinction, so
+one borderline vector bridges two dense regions).  DBSCAN's core
+rule is exactly that gate.
 
 Deterministic semantics (the classic visit-order border ambiguity is
 resolved the same way scan.py resolves it — documented min rule):

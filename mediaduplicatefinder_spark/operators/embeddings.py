@@ -26,7 +26,6 @@ Design for 100 TB scale:
 
 from __future__ import annotations
 
-import math
 from collections.abc import Iterator
 
 import numpy as np
@@ -45,22 +44,6 @@ N_BANDS = SIMHASH_BITS // BAND_BITS
 
 
 # ---------------------------------------------------------------- exprs
-
-
-def lit_array(values, elem: str = "double") -> Column:
-    """``array<double>`` (``elem="double"``) or integer array literal.
-
-    Built from SQL text, so the whole array costs one JVM call; the
-    ``F.array(*[F.lit(x) ...])`` form costs several per element, which
-    dominates building expressions over dozens of centroids or
-    codewords. ``repr`` of a finite float round-trips exactly through
-    the ``D``-suffixed double literal."""
-    if elem != "double":
-        return F.expr(f"array({', '.join(str(int(x)) for x in values)})")
-    vals = [float(x) for x in values]
-    if not all(math.isfinite(x) for x in vals):  # no SQL literal form
-        return F.array(*[F.lit(x) for x in vals])
-    return F.expr(f"array({', '.join(f'{x!r}D' for x in vals)})")
 
 
 def dot_expr(a: Column, b: Column) -> Column:

@@ -3,9 +3,8 @@ Fusion (Cormack/Clarke/Büttcher SIGIR'09 — "RRF outperforms Condorcet
 and individual rank learning methods") and Maximal Marginal Relevance
 (Carbonell/Goldstein SIGIR'98).
 
-The engine ships MANY top-k channels over the same corpus (exact
-cosine E6, hyperplane-LSH E7, IVF E33, IVF-PQ, multi-probe E167,
-NN-Descent E179, LSH Forest E182, SQ8 E183, JL E184) — production
+The engine ships several top-k channels over the same corpus (exact
+cosine E6, hyperplane-LSH E7, multi-probe E167) — production
 retrieval fuses several cheap channels instead of trusting one, and
 then diversifies what it returns. These are the two published
 primitives for exactly that:
@@ -20,9 +19,9 @@ primitives for exactly that:
   λ·rel(d) − (1−λ)·max_{s∈S} sim(d, s), k rounds. The published
   redundancy remover (near-identical crawl pages flood any top-k; MMR
   returns one per duplicate cluster "for free"). Inherently k rounds
-  (each pick changes the penalty), like the k-center loop (E185):
-  per round ONE join against the selected set + one per-query argmax
-  window; the twin unrolls the same k rounds as chained CTEs.
+  (each pick changes the penalty): per round ONE join against the
+  selected set + one per-query argmax window; the twin unrolls the
+  same k rounds as chained CTEs.
 
 Determinism: ranks from (score DESC, id ASC) windows; MMR argmax ties
 by (score DESC, id ASC); λ multiplication written identically both
@@ -158,8 +157,7 @@ def mmr_rerank(
 
     Round 0 picks max rel; round r scores every remaining candidate
     λ·rel − (1−λ)·max_sim_to_selected, ties (score DESC, vec_id ASC).
-    k driver rounds, one join + one window each (the k-center loop
-    convention)."""
+    k driver rounds, one join + one window each."""
     spark = cands.sparkSession
     sym = sims.select(
         "query_id",

@@ -20,8 +20,8 @@ edges; the peeling pair ACTS on the graph globally:
   new threshold on scores.
 
 Both are iterated-fixpoint definitions, and both iterations are pure
-relational steps, so the house iterative contract applies (the E68
-k-means / E77 PageRank precedent): a ``rounds=R`` unrolled mode whose
+relational steps, so the house iterative contract applies (the E77
+PageRank precedent): a ``rounds=R`` unrolled mode whose
 DuckDB twin chains R CTE blocks bit-exactly, and a ``rounds=None``
 production mode that loops to the fixpoint with an O(1)-per-round
 driver stability check (count + checksum, the twophasecc.py

@@ -17,7 +17,7 @@ candidates).  Two stages:
    linearly; see the flagship's localCheckpoint note).
 
 Fixed-point integer arithmetic makes the ITERATIVE result bit-exact
-cross-engine (the E68 k-means precedent): ranks are scaled by 10^12,
+cross-engine: ranks are scaled by 10^12,
 contributions use truncating integer division (Spark ``div`` ==
 DuckDB ``//`` — NOT Python ``//``, which floors), and the damping
 update is ``base + (85 * sum) div 100``.  The oracle unrolls the loop

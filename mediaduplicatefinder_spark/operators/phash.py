@@ -10,7 +10,7 @@ FREQUENCY spectrum: 32x32 downsample -> 2D DCT-II -> keep the top-left
 the robust-to-blur/brightness member — exactly the failure modes the
 mean/gradient hashes are weakest on.
 
-Cross-engine integer contract (the E156 shared-constants discipline):
+Cross-engine integer contract (shared constants):
 the DCT runs on a PINNED integer cosine table ``round(cos((2x+1)*u*pi
 / 64) * 2^14)`` — :func:`cos_table` is the single source of truth,
 imported by the Spark UDF and EMITTED AS LITERALS into the DuckDB twin

@@ -2,11 +2,11 @@
 Moffat / Zobel, "A Similarity Measure for Indefinite Rankings" (ACM
 TOIS 2010).
 
-The ANN layer ships many approximations of one exact ranking (LSH E7,
-IVF E33, IVF-PQ E140, SQ8/JL E178, NN-Descent E179, LSH Forest E180),
-and the evidence layer grades them with set recall@k (recallaudit.py,
-BENCH/ANN.md).  Recall is position-blind: a channel that returns the
-right 10 items in reverse order scores 1.0.  RBO is the published
+The ANN layer ships approximations of one exact ranking (hyperplane
+LSH E7, multi-probe LSH E167), and the evidence layer grades them with
+set recall@k (recallaudit.py, BENCH/ANN.md).  Recall is
+position-blind: a channel that returns the right 10 items in reverse
+order scores 1.0.  RBO is the published
 rank-aware complement — top-weighted (disagreement at rank 1 costs
 more than at rank 10, the geometric p-weighting), defined for
 non-conjoint lists (an ANN list missing items is measured, not an

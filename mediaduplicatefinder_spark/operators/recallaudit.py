@@ -17,8 +17,8 @@ both:
 
 Independence is by construction — the band collisions of family a are
 a function of permutations family b never sees. A recall estimate
-below target is actionable (add bands / lower rows-per-band, the E50
-lshtune knob), and the whole audit costs one extra signature pass —
+below target is actionable (add bands or lower rows-per-band), and
+the whole audit costs one extra signature pass —
 no ground truth, no pair enumeration beyond what dedup already does.
 
 All outputs are integers (ppm via integer division) on a ONE-ROW

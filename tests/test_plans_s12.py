@@ -5,7 +5,6 @@ where claimed, no row-at-a-time Python anywhere)."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.01"
 
@@ -26,46 +25,6 @@ def test_spotsig_and_imatch_no_cartesian_no_python_rows(spark):
         assert "BroadcastNestedLoopJoin" not in p, name
         # extraction is Arrow-batched mapInPandas, never per-row UDFs
         assert "BatchEvalPython" not in p, name
-
-
-def test_lshforest_broadcasts_queries_and_joins_equi(spark):
-    import __spark_entry__ as entrymod
-
-    p = plan_of(entrymod.queries()["lshforest_topk"](spark, SF))
-    assert "CartesianProduct" not in p
-    assert "BroadcastNestedLoopJoin" not in p
-    # the query-side restriction is a broadcast hash join
-    assert "BroadcastHashJoin" in p
-
-
-def test_nndescent_equi_joins_only(spark):
-    from mediaduplicatefinder_spark.operators.nndescent import (
-        nndescent_knn,
-    )
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet").limit(50)
-    p = plan_of(nndescent_knn(emb, k=4, n_iter=1))
-    assert "CartesianProduct" not in p
-    assert "BatchEvalPython" not in p  # all-JVM path
-
-
-def test_sq8_jl_broadcast_query_scoring(spark):
-    # the cosine_topk shape: corpus map-only scan x broadcast queries
-    # (the BroadcastNestedLoopJoin here is the DECLARED design — tiny
-    # broadcast side, the same shape cosine_topk ships)
-    from mediaduplicatefinder_spark.operators.jl import jl_topk
-    from mediaduplicatefinder_spark.operators.sq import sq8_topk
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    qs = emb.filter(F.col("vec_id") % 100 == 0)
-    for fn in (
-        lambda: sq8_topk(emb, qs, k=3),
-        lambda: jl_topk(emb, qs, dim_in=64, k=3),
-    ):
-        p = plan_of(fn())
-        assert "CartesianProduct" not in p
-        assert "BroadcastExchange" in p  # queries are the broadcast side
-        assert "BatchEvalPython" not in p
 
 
 def test_agreement_is_aggregates_only(spark):

@@ -1,6 +1,6 @@
 """Physical-plan assertions for the session-13 operators (graph peel,
-LPA, HITS/TrustRank, web tables, mutual-kNN): equi joins where
-claimed, broadcast only where declared, no row-at-a-time Python."""
+LPA, HITS/TrustRank, web tables): equi joins where claimed, broadcast
+only where declared, no row-at-a-time Python."""
 
 from __future__ import annotations
 
@@ -81,13 +81,3 @@ def test_webtable_queries_shapes(spark):
     assert "MapInPandas" in p
     p2 = plan_of(qs["html_table_cells"](spark, SF))
     assert "BatchEvalPython" not in p2 and "MapInPandas" in p2
-
-
-def test_mutual_knn_query_shape(spark):
-    import __spark_entry__ as entrymod
-
-    # cosine_topk's declared broadcast-queries shape feeds it; the
-    # reciprocity join and CC must stay equi/hash
-    p = plan_of(entrymod.queries()["mutual_knn_clusters"](spark, SF))
-    assert "CartesianProduct" not in p
-    assert "BatchEvalPython" not in p
