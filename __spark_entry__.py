@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 
 from mediaduplicatefinder_spark.config import DEFAULT_CONFIG
 from mediaduplicatefinder_spark.functions.text import (
-    jaccard_expr,
     size_ratio_expr,
     tokens_expr,
 )
@@ -51,12 +50,6 @@ _TOKENS_SQL = (
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _docs(spark, sf_dir).select(
-        "doc_id", "lang", "n_chars", tokens_expr("text").alias("ts")
-    )
 
 
 # All O(n^2) pair queries run on the triangle-blocked all-pairs operator
@@ -438,77 +431,6 @@ def _q_metablocking_pairs(spark, sf_dir):
     return metablocking_pairs(sigs, DEFAULT_CONFIG, block_cap=64)
 
 
-def _q_scan_roles(spark, sf_dir):
-    """E176 SCAN structural clustering (operators/scan.py, KDD'07) over
-    the full pipeline's verified similar edges: cores, borders, hubs,
-    outliers with integer-exact ε decisions (ε=0.7, μ=3). Oracle: the
-    dedup twin's survivor edges + the identical construction as a
-    recursive closure (scan_tail_sql)."""
-    from mediaduplicatefinder_spark.operators.scan import scan_clusters
-    from mediaduplicatefinder_spark.operators.verify import similar_edges
-    from mediaduplicatefinder_spark.pipeline import run_dedup
-
-    res = run_dedup(
-        spark, _docs_as_pages(spark, sf_dir), DEFAULT_CONFIG, use_html=False
-    )
-    return scan_clusters(
-        similar_edges(res.pairs).select("url_a", "url_b", "score")
-    )
-
-
-def _q_mmr_rerank(spark, sf_dir):
-    """E189 Maximal Marginal Relevance (operators/fusion_rank.py,
-    SIGIR'98): greedy diversified top-5 from each query's exact top-15
-    shortlist (λ=0.7) — near-duplicate shortlist members collapse to
-    one pick. Oracle: the identical 5 greedy rounds unrolled."""
-    from mediaduplicatefinder_spark.operators.embeddings import (
-        cosine_expr,
-        cosine_topk,
-    )
-    from mediaduplicatefinder_spark.operators.fusion_rank import mmr_rerank
-
-    emb = _emb(spark, sf_dir)
-    qs = emb.filter(F.pmod("vec_id", F.lit(50)) == 0)
-    sl = cosine_topk(emb, qs, k=15).select(
-        "query_id", "vec_id", F.col("cosine").alias("rel")
-    ).persist()
-    ids = sl.select("query_id", "vec_id")
-    pairs = (
-        ids.alias("a")
-        .join(ids.alias("b"), "query_id")
-        .filter(F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(
-            "query_id",
-            F.col("a.vec_id").alias("vec_id_a"),
-            F.col("b.vec_id").alias("vec_id_b"),
-        )
-    )
-    ev = emb.select("vec_id", "embedding")
-    sims = (
-        pairs.join(
-            ev.select(
-                F.col("vec_id").alias("vec_id_a"),
-                F.col("embedding").alias("va"),
-            ),
-            "vec_id_a",
-        )
-        .join(
-            ev.select(
-                F.col("vec_id").alias("vec_id_b"),
-                F.col("embedding").alias("vb"),
-            ),
-            "vec_id_b",
-        )
-        .select(
-            "query_id",
-            "vec_id_a",
-            "vec_id_b",
-            cosine_expr(F.col("va"), F.col("vb")).alias("sim"),
-        )
-    )
-    return mmr_rerank(sl, sims, k=5, lam=0.7)
-
-
 def _q_ctph_pairs(spark, sf_dir):
     """E187 CTPH / ssdeep-family fuzzy digests (operators/ctph.py,
     Kornblum DFRWS'06): content-triggered piecewise digests at block
@@ -519,19 +441,6 @@ def _q_ctph_pairs(spark, sf_dir):
     from mediaduplicatefinder_spark.operators.ctph import ctph_pairs
 
     return ctph_pairs(_docs(spark, sf_dir))
-
-
-def _q_fellegi_sunter(spark, sf_dir):
-    """E186 Fellegi-Sunter probabilistic linkage (operators/fellegi.py,
-    JASA'69 + Winkler EM, the Splink pattern-count formulation): 4
-    integer agreement fields per same-lang pair, EM over the 2^4
-    contingency table (driver-side on collected counts), Bayes factor +
-    posterior + link/possible/nonlink decisions. Oracle: the identical
-    EM unrolled as chained CTEs with order-pinned arithmetic — the fit
-    itself is value-checked, not just the scoring."""
-    from mediaduplicatefinder_spark.operators.fellegi import fellegi_sunter
-
-    return fellegi_sunter(_docs(spark, sf_dir))
 
 
 def _q_cc_twophase_groups(spark, sf_dir):
@@ -550,126 +459,6 @@ def _q_cc_twophase_groups(spark, sf_dir):
         spark, _docs_as_pages(spark, sf_dir), DEFAULT_CONFIG, use_html=False
     )
     return twophase_cc(similar_edges(res.pairs).select("url_a", "url_b"))
-
-
-_AGREEMENT_THRESHOLDS = (0.6, 0.9)
-
-
-def _agreement_partitions(spark, sf_dir):
-    """The two partitions (CC at Jaccard 0.6 vs 0.9 over the same
-    exact pair relation; singletons self-labeled) shared by the E181
-    pair-counting and E199 B-cubed agreement queries.  Returns
-    (side_low, side_high, pairs) — caller unpersists pairs."""
-    from mediaduplicatefinder_spark.operators.allpairs import (
-        blocked_jaccard_pairs,
-    )
-    from mediaduplicatefinder_spark.operators.clustering import (
-        connected_components,
-    )
-
-    t = _docs(spark, sf_dir).select(
-        "doc_id",
-        "lang",
-        F.array_sort(
-            F.transform(tokens_expr("text"), lambda x: F.xxhash64(x))
-        ).alias("th"),
-    )
-    pairs = (
-        blocked_jaccard_pairs(
-            t,
-            "doc_id",
-            "th",
-            group_cols=["lang"],
-            threshold=_AGREEMENT_THRESHOLDS[0],
-            n_blocks=8,
-        )
-        .select("doc_id_a", "doc_id_b", F.round("jaccard", 6).alias("j"))
-        .persist()
-    )
-    items = _docs(spark, sf_dir).select(F.col("doc_id").alias("item"))
-    sides = []
-    for thr in _AGREEMENT_THRESHOLDS:
-        edges = pairs.filter(F.col("j") > thr).select(
-            F.col("doc_id_a").alias("url_a"), F.col("doc_id_b").alias("url_b")
-        )
-        labels = connected_components(edges, DEFAULT_CONFIG).select(
-            F.col("url").alias("item"), F.col("cluster_id").alias("lab")
-        )
-        sides.append(
-            items.join(labels, "item", "left").select(
-                "item", F.coalesce("lab", "item").alias("cluster")
-            )
-        )
-    return sides[0], sides[1], pairs
-
-
-def _q_cluster_agreement(spark, sf_dir):
-    """E181 pair-counting clustering agreement (operators/agreement.py,
-    Rand'71 / Hubert-Arabie'85): Rand, ARI and pair P/R/F1 between the
-    partitions induced by CC at Jaccard 0.6 vs 0.9 over the SAME exact
-    pair relation (the threshold-tuning question as one row).
-    Singletons carry their own label (items = all docs). Oracle: the
-    identical contingency algebra over two recursive-CC closures of
-    the jp relation."""
-    from mediaduplicatefinder_spark.operators.agreement import (
-        clustering_agreement,
-    )
-
-    a, b, pairs = _agreement_partitions(spark, sf_dir)
-    out = clustering_agreement(a, b)
-    pairs.unpersist()
-    return out
-
-
-def _q_purity_agreement(spark, sf_dir):
-    """E201 purity / inverse purity (operators/agreement.py, Zhao/
-    Karypis'01 — the baseline metric pair Amigó compares B-cubed
-    against): dominant-cluster integer sums over the same contingency
-    relation as E181/E199, one final division, no fixed point needed.
-    Same two threshold partitions; the trio of metric families now
-    reports from one construction. Oracle: identical maxima sums over
-    the same recursive-CC closures."""
-    from mediaduplicatefinder_spark.operators.agreement import (
-        purity_agreement,
-    )
-
-    a, b, pairs = _agreement_partitions(spark, sf_dir)
-    out = purity_agreement(a, b)
-    pairs.unpersist()
-    return out
-
-
-def _q_bcubed_agreement(spark, sf_dir):
-    """E199 B-cubed agreement (operators/agreement.py, Bagga-Baldwin
-    COLING'98 / Amigó IR'09): item-weighted precision/recall/F of the
-    0.9-threshold partition against the 0.6 one — the published
-    complement to E181's pair counting (pair metrics weight clusters
-    quadratically; B-cubed weights each document once). Fixed-point
-    per-cluster terms (exact DECIMAL div == HUGEINT //) make the sums
-    integer-exact cross-engine. Oracle: the identical contingency
-    identity over the same two recursive-CC closures."""
-    from mediaduplicatefinder_spark.operators.agreement import (
-        bcubed_agreement,
-    )
-
-    a, b, pairs = _agreement_partitions(spark, sf_dir)
-    out = bcubed_agreement(a, b)
-    pairs.unpersist()
-    return out
-
-
-def _q_dbscan_clusters(spark, sf_dir):
-    """E202 DBSCAN (operators/dbscan.py, Ester et al. KDD'96) over the
-    embedding column: eps-graph at round-6 cosine >= 0.35 via the
-    triangle-blocked exact kernel, core ⟺ closed-neighborhood >= 3,
-    clusters = CC over core-core edges (min-vec_id label), borders
-    attach to the min adjacent core cluster, everything else noise —
-    the density complement to k-means (must-assign) and plain CC
-    (no core gate). Oracle: identical construction as a recursive
-    closure (dbscan_sql)."""
-    from mediaduplicatefinder_spark.operators.dbscan import dbscan_clusters
-
-    return dbscan_clusters(_emb(spark, sf_dir), tau=0.35, min_pts=3)
 
 
 def _q_bitext_margin_pairs_lsh(spark, sf_dir):
@@ -759,27 +548,6 @@ def _q_ra_link_pairs(spark, sf_dir):
     )
 
 
-def _q_dbscan_clusters_lsh(spark, sf_dir):
-    """E202 scale-path composition: DBSCAN roles over the
-    hyperplane-LSH verified pair channel (embedding_dup_pairs_lsh,
-    capped buckets) instead of the exact kernel — the eps_pairs plug
-    point exercised end-to-end with a driver-checkable oracle. The
-    approximate eps-graph under-approximates cores (documented);
-    both engines see the identical approximate graph. Oracle: the
-    LSH pair twin spliced into the dbscan tail (dbscan_sql
-    pairs_sql=...)."""
-    from mediaduplicatefinder_spark.operators.dbscan import dbscan_clusters
-    from mediaduplicatefinder_spark.operators.embeddings import (
-        embedding_dup_pairs_lsh,
-    )
-
-    emb = _emb(spark, sf_dir)
-    pairs = embedding_dup_pairs_lsh(emb, threshold=0.35, band_bits=8).select(
-        F.col("vec_a").alias("vec_id_a"), F.col("vec_b").alias("vec_id_b")
-    )
-    return dbscan_clusters(emb, tau=0.35, min_pts=3, eps_pairs=pairs)
-
-
 def _q_bitext_margin_pairs(spark, sf_dir):
     """E206 margin-based bitext mining (operators/bitext.py, Artetxe/
     Schwenk ACL'19 — the CCMatrix criterion): cross-side cosine pairs
@@ -796,26 +564,6 @@ def _q_bitext_margin_pairs(spark, sf_dir):
         k=4,
         floor=0.3,
         margin_threshold=1.2,
-    )
-
-
-def _q_rbo_topk(spark, sf_dir):
-    """E204 Rank-Biased Overlap (operators/rbo.py, Webber et al. TOIS'10)
-    of the hyperplane-LSH ANN top-10 against the exact cosine top-10 per
-    query — the rank-aware, top-weighted complement to the set recall@k
-    audits; coefficients injected as shared literals, fixed-order float
-    chain. Oracle: identical windows/join/chain over the two channels'
-    own SQL twins (rbo_sql)."""
-    from mediaduplicatefinder_spark.operators.embeddings import (
-        ann_lsh_topk,
-        cosine_topk,
-    )
-    from mediaduplicatefinder_spark.operators.rbo import rbo_topk
-
-    emb = _emb(spark, sf_dir)
-    qs = emb.filter(F.col("vec_id") % 50 == 0)
-    return rbo_topk(
-        cosine_topk(emb, qs, k=10), ann_lsh_topk(emb, qs, k=10), k=10, p=0.9
     )
 
 
@@ -920,26 +668,6 @@ def _q_audio_fingerprint(spark, sf_dir):
         .cast("long")
         .alias("n_same_sig"),
     )
-
-
-def _fusion_docs(spark, sf_dir):
-    """Shared E90 corpus: docs with id%8==6 become their (id-2)
-    predecessor's text minus the last 25 chars — a truncated copy that
-    fires ALL THREE pair channels (resemblance + containment + shared
-    opening) for the (id-2, id) pair."""
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    p = d.select(
-        F.col("doc_id").alias("pid"), F.col("text").alias("ptext")
-    )
-    j = d.join(p, F.col("pid") == F.col("doc_id") - 2, "left")
-    text = F.when(
-        (F.pmod(F.col("doc_id"), F.lit(8)) == 6)
-        & F.col("ptext").isNotNull(),
-        F.expr(
-            "substring(ptext, 1, int(greatest(1, length(ptext) - 25)))"
-        ),
-    ).otherwise(F.col("text"))
-    return j.select("doc_id", text.alias("text"))
 
 
 def _dust_pages(spark, sf_dir):
@@ -1321,85 +1049,6 @@ def _q_sketch_union(spark, sf_dir):
         )
     )
     return hll_union_sketch(items)
-
-
-def _q_ensemble_clusters(spark, sf_dir):
-    """E91 ensemble dedup clusters (composition): pairs confirmed by
-    >= 2 independent fusion channels (E90) become edges; the engine's
-    distributed CC (C2 machinery) labels components; output (doc_id,
-    cluster_id, cluster_size). Oracle: recursive-CTE transitive
-    closure over the same fused pair relation — min-label semantics
-    match because the padded url surrogate sorts numerically."""
-    from mediaduplicatefinder_spark.operators.clustering import (
-        connected_components,
-    )
-
-    fused = _q_channel_fusion(spark, sf_dir)
-    url = lambda c: F.format_string("doc://%010d", F.col(c))  # noqa: E731
-    edges = fused.filter(F.col("n_channels") >= 2).select(
-        url("doc_a").alias("url_a"), url("doc_b").alias("url_b")
-    )
-    labels = connected_components(edges, DEFAULT_CONFIG)
-    dec = lambda c: F.substring(F.col(c), 7, 10).cast("long")  # noqa: E731
-    out = labels.select(
-        dec("url").alias("doc_id"), dec("cluster_id").alias("cluster_id")
-    )
-    from pyspark.sql import Window as _W
-
-    return out.select(
-        "doc_id",
-        "cluster_id",
-        F.count(F.lit(1))
-        .over(_W.partitionBy("cluster_id"))
-        .cast("long")
-        .alias("cluster_size"),
-    )
-
-
-def _q_channel_fusion(spark, sf_dir):
-    """E90 multi-channel dup-evidence fusion (operators/fusion.py):
-    n-gram resemblance + shingle containment + sorted-neighborhood
-    pair relations full-outer fused on the normalized pair key with
-    per-channel flags and the n_channels agreement count."""
-    from mediaduplicatefinder_spark.operators.allpairs import (
-        blocked_jaccard_pairs,
-    )
-    from mediaduplicatefinder_spark.operators.containment import (
-        shingle_containment_pairs,
-    )
-    from mediaduplicatefinder_spark.operators.fusion import (
-        fuse_pair_channels,
-    )
-    from mediaduplicatefinder_spark.operators.sortedneighborhood import (
-        sorted_neighborhood_pairs,
-    )
-
-    docs = _fusion_docs(spark, sf_dir).persist()
-    toks = F.split(F.trim("text"), r"\s+")
-    bigrams = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - 2),
-            lambda i: F.concat_ws(
-                " ", F.element_at(toks, i + 1), F.element_at(toks, i + 2)
-            ),
-        )
-    )
-    t = docs.filter(F.size(toks) >= 2).select(
-        "doc_id",
-        F.array_sort(
-            F.transform(bigrams, lambda x: F.xxhash64(x))
-        ).alias("bh"),
-    )
-    ngram = blocked_jaccard_pairs(
-        t, "doc_id", "bh", group_cols=[], threshold=0.4, n_blocks=8
-    ).select(
-        F.col("doc_id_a").alias("doc_a"),
-        F.col("doc_id_b").alias("doc_b"),
-        F.round(F.col("jaccard"), 6).alias("ngram_jaccard"),
-    )
-    cont = shingle_containment_pairs(docs)
-    snm = sorted_neighborhood_pairs(docs)
-    return fuse_pair_channels(ngram, cont, snm)
 
 
 def _q_robust_outliers(spark, sf_dir):
@@ -2939,80 +2588,6 @@ def _q_jaccard_histogram(spark, sf_dir):
     )
 
 
-def _q_dup_evidence(spark, sf_dir):
-    """E154 duplicate-evidence localization (operators/evidence.py):
-    the engine's verified LSH pairs joined to position-carrying winnow
-    fingerprints — per pair, how many selected fingerprints the sides
-    share and the min/max k-gram spans on each side. Oracle: the full
-    LSH pipeline twin + the position-carrying winnow twin through the
-    same pre-aggregated pair algebra."""
-    from mediaduplicatefinder_spark.functions.winnow import (
-        with_winnow_positions,
-    )
-    from mediaduplicatefinder_spark.operators.candidates import (
-        candidate_pairs,
-    )
-    from mediaduplicatefinder_spark.operators.evidence import dup_evidence
-    from mediaduplicatefinder_spark.operators.extract import (
-        extracted_or_given_text,
-    )
-    from mediaduplicatefinder_spark.operators.signatures import (
-        compute_signatures,
-    )
-    from mediaduplicatefinder_spark.operators.verify import verify_pairs
-
-    docs = extracted_or_given_text(
-        _docs_as_pages(spark, sf_dir), use_html=False
-    ).persist()
-    sigs = compute_signatures(docs, DEFAULT_CONFIG, min_partitions=32).persist()
-    cands, _, _ = candidate_pairs(sigs, DEFAULT_CONFIG)
-    pairs = (
-        verify_pairs(cands, sigs, DEFAULT_CONFIG)
-        .filter("similar")
-        .select("url_a", "url_b")
-    )
-    fp_pos = with_winnow_positions(docs.select("url", "text"))
-    return dup_evidence(pairs, fp_pos)
-
-
-def _q_cluster_stability(spark, sf_dir):
-    """E153 cluster-stability churn (operators/stability.py): full
-    dedup on the 90% corpus (doc_id % 10 != 9) vs the full corpus;
-    old-document co-membership preserved/broken/merged-by-new-bridges
-    in integer ppm. Oracle: TWO full recursive dedup-oracle closures
-    (oracle/lsh_sql.dedup_clusters_sql, one per corpus) through the
-    same pair algebra."""
-    from mediaduplicatefinder_spark.operators.signatures import (
-        page_signatures,
-    )
-    from mediaduplicatefinder_spark.operators.stability import (
-        cluster_stability,
-    )
-    from mediaduplicatefinder_spark.pipeline import run_dedup
-
-    pages_b = _docs_as_pages(spark, sf_dir)
-    pages_a = _docs(spark, sf_dir).filter("doc_id % 10 != 9").select(
-        F.format_string("doc://%010d", F.col("doc_id")).alias("url"),
-        F.lit(None).cast("timestamp").alias("warc_ts"),
-        "text",
-        "lang",
-    )
-    # content-keyed signature reuse: signatures are per-row functions of
-    # (url, text), so the churn job computes them ONCE on the full
-    # corpus and filters the 90% subset instead of re-running the Arrow
-    # pass (results identical by construction; pipeline parity test)
-    sigs_full = page_signatures(pages_b, DEFAULT_CONFIG, use_html=False).persist()
-    old = F.substring("url", 7, 10).cast("long") % 10 != 9
-    ca = run_dedup(
-        spark, pages_a, DEFAULT_CONFIG, use_html=False,
-        sigs_all=sigs_full.filter(old),
-    ).clusters
-    cb = run_dedup(
-        spark, pages_b, DEFAULT_CONFIG, use_html=False, sigs_all=sigs_full
-    ).clusters
-    return cluster_stability(ca, cb, pages_a.select("url"))
-
-
 def _q_salted_join(spark, sf_dir):
     """E152 salted hash join (operators/skew.py salted_join): events
     (skewed user_id) joined to a synthesized per-user dimension with
@@ -3181,30 +2756,6 @@ def _q_dedup_clusters(spark, sf_dir):
     return res.clusters.select("url", "cluster_id", "kind", "score", "is_keeper")
 
 
-def _q_affinity_clusters(spark, sf_dir):
-    """E198 Affinity Clustering (operators/affinity.py, Bateni et al.
-    NeurIPS'17): two Borůvka contraction rounds over the pipeline's
-    verified edges — each round every cluster merges along only its
-    single highest-score incident edge (score DESC, neighbor ASC),
-    inter-cluster score = max crossing edge; the round-2 hierarchy cut
-    sits between mutual-best-match pairs and full single linkage.
-    Oracle: 2 unrolled rounds, each one window + one recursive
-    min-label closure over the picked pseudo-forest + one contraction
-    (affinity_tail_sql)."""
-    from mediaduplicatefinder_spark.operators.affinity import (
-        affinity_clusters,
-    )
-    from mediaduplicatefinder_spark.operators.verify import similar_edges
-    from mediaduplicatefinder_spark.pipeline import run_dedup
-
-    res = run_dedup(
-        spark, _docs_as_pages(spark, sf_dir), DEFAULT_CONFIG, use_html=False
-    )
-    return affinity_clusters(
-        similar_edges(res.pairs).select("url_a", "url_b", "score"), rounds=2
-    )
-
-
 def _q_readability_scores(spark, sf_dir):
     """E200 Flesch / Flesch-Kincaid readability (functions/
     textstats.with_readability): the classic cheap quality pair over
@@ -3218,73 +2769,6 @@ def _q_readability_scores(spark, sf_dir):
     )
 
     return with_readability(_docs(spark, sf_dir).select("doc_id", "text"))
-
-
-def _q_cluster_cohesion(spark, sf_dir):
-    """E161 cluster cohesion audit: per SIMILAR dedup cluster, the
-    exact pairwise-Jaccard profile of its members (min/mean/below-
-    threshold count) — the chaining-effect QA report for transitive
-    clustering. Oracle: the full dedup recursive-CTE twin's flagged
-    clusters + naive within-cluster pairs over the same fold32 sets,
-    identical round-8 DECIMAL aggregation."""
-    from mediaduplicatefinder_spark.operators.cohesion import cluster_cohesion
-    from mediaduplicatefinder_spark.operators.signatures import page_signatures
-    from mediaduplicatefinder_spark.pipeline import run_dedup
-
-    pages = _docs_as_pages(spark, sf_dir)
-    res = run_dedup(spark, pages, DEFAULT_CONFIG, use_html=False)
-    sigs = page_signatures(
-        pages, DEFAULT_CONFIG, use_html=False, include_minhash=False
-    )
-    return cluster_cohesion(
-        res.clusters,
-        sigs.select("url", "token_hashes"),
-        tokens_col="token_hashes",
-        threshold=DEFAULT_CONFIG.jaccard_threshold,
-    )
-
-
-def _q_medoid_keepers(spark, sf_dir):
-    """E166 medoid election: per SIMILAR dedup cluster, the member
-    maximizing total exact Jaccard to its audited co-members — the
-    k-medoids cluster-representative rule beside the reference's
-    metadata keeper priority (O1). Oracle: the dedup recursive-CTE
-    twin's flagged clusters + naive symmetric within-cluster pairs,
-    identical round-8 DECIMAL totals and argmax tie rule."""
-    from mediaduplicatefinder_spark.operators.cohesion import cluster_medoids
-    from mediaduplicatefinder_spark.operators.signatures import page_signatures
-    from mediaduplicatefinder_spark.pipeline import run_dedup
-
-    pages = _docs_as_pages(spark, sf_dir)
-    res = run_dedup(spark, pages, DEFAULT_CONFIG, use_html=False)
-    sigs = page_signatures(
-        pages, DEFAULT_CONFIG, use_html=False, include_minhash=False
-    )
-    return cluster_medoids(
-        res.clusters,
-        sigs.select("url", "token_hashes"),
-        tokens_col="token_hashes",
-    )
-
-
-def _q_triangle_support(spark, sf_dir):
-    """E168 triangle support per verified similar edge — the k-truss
-    quantity; support-0 edges are the chain bridges single-linkage
-    chaining rides on (the acting sibling of cluster_cohesion).
-    Oracle: the dedup twin's survivor edge relation + neighbor-array
-    intersection (triangle_support_tail_sql)."""
-    from mediaduplicatefinder_spark.operators.cohesion import (
-        edge_triangle_support,
-    )
-    from mediaduplicatefinder_spark.operators.verify import similar_edges
-    from mediaduplicatefinder_spark.pipeline import run_dedup
-
-    res = run_dedup(
-        spark, _docs_as_pages(spark, sf_dir), DEFAULT_CONFIG, use_html=False
-    )
-    return edge_triangle_support(
-        similar_edges(res.pairs).select("url_a", "url_b", "score")
-    )
 
 
 def _q_kcore_nodes(spark, sf_dir):
@@ -4124,8 +3608,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "host_dup_stats": _q_host_dup_stats,
         "lang_mix": _q_lang_mix,
         # -- r5 window block 2: session-4 analytics (SURVEY §8.2) -------
-        "ensemble_clusters": _q_ensemble_clusters,
-        "channel_fusion": _q_channel_fusion,
         "containment_pairs": _q_containment_pairs,
         "weighted_simhash": _q_weighted_simhash,
         "bbit_minhash_pairs": _q_bbit_minhash_pairs,
@@ -4144,43 +3626,30 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "trustrank_scores": _q_trustrank_scores,
         "html_table_cells": _q_html_table_cells,
         "webtable_match_pairs": _q_webtable_match_pairs,
-        "affinity_clusters": _q_affinity_clusters,
-        "bcubed_agreement": _q_bcubed_agreement,
         "readability_scores": _q_readability_scores,
-        "purity_agreement": _q_purity_agreement,
         # -- session-14 block, behind session-13 (SURVEY §8.6) ----------
-        "dbscan_clusters": _q_dbscan_clusters,
         "hilbert_layout": _q_hilbert_layout,
-        "rbo_topk": _q_rbo_topk,
         "bitext_margin_pairs": _q_bitext_margin_pairs,
-        "dbscan_clusters_lsh": _q_dbscan_clusters_lsh,
         "bitext_margin_pairs_lsh": _q_bitext_margin_pairs_lsh,
         "ra_link_pairs": _q_ra_link_pairs,
         "mirror_hosts_structural": _q_mirror_hosts_structural,
         "salsa_scores": _q_salsa_scores,
         # -- sessions 9-12 value-twin block (SURVEY §8.4) ---------------
-        "mmr_rerank": _q_mmr_rerank,
         "ctph_pairs": _q_ctph_pairs,
-        "fellegi_sunter": _q_fellegi_sunter,
         "cc_twophase_groups": _q_cc_twophase_groups,
-        "cluster_agreement": _q_cluster_agreement,
         "spotsig_pairs": _q_spotsig_pairs,
         "imatch_groups": _q_imatch_groups,
         "ppjoin_pairs": _q_ppjoin_pairs,
         "weighted_jaccard_pairs": _q_weighted_jaccard_pairs,
-        "cluster_cohesion": _q_cluster_cohesion,
         "phash_media": _q_phash_media,
         "phash_dup_pairs": _q_phash_dup_pairs,
         "tlsh_digests": _q_tlsh_digests,
         "wav_ext_roundtrip": _q_wav_ext_roundtrip,
-        "medoid_keepers": _q_medoid_keepers,
         "multiprobe_topk": _q_multiprobe_topk,
-        "triangle_support": _q_triangle_support,
         "cross_corpus_pairs": _q_cross_corpus_pairs,
         "oph_lsh_pairs": _q_oph_lsh_pairs,
         "metablocking_pairs": _q_metablocking_pairs,
         "corpus_overlap": _q_corpus_overlap,
-        "scan_roles": _q_scan_roles,
         # -- session-5 crawl-surface block (SURVEY §8.5) ----------------
         "dust_collapse": _q_dust_collapse,
         "dust_rules": _q_dust_rules,
@@ -4226,8 +3695,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "training_funnel": _q_training_funnel,
         "warc_export_roundtrip": _q_warc_export_roundtrip,
         "salted_join": _q_salted_join,
-        "cluster_stability": _q_cluster_stability,
-        "dup_evidence": _q_dup_evidence,
         "crawl_to_training": _q_crawl_to_training,
         "jpeg_roundtrip": _q_jpeg_roundtrip,
         "jpeg_prog_roundtrip": _q_jpeg_prog_roundtrip,
@@ -4663,14 +4130,6 @@ WHERE jaccard > {DEFAULT_CONFIG.jaccard_threshold}
   AND {_par_a} <> {_par_b}
 """
     out["oph_lsh_pairs"] = lsh_sql.oph_lsh_pairs_sql()
-    from mediaduplicatefinder_spark.operators.scan import scan_tail_sql
-
-    out["scan_roles"] = (
-        lsh_sql.lsh_base_cte(recursive=True)
-        + lsh_sql._exact_and_edges_ctes(DEFAULT_CONFIG)
-        + scan_tail_sql()
-    )
-
     from mediaduplicatefinder_spark.operators.corpusoverlap import (
         corpus_overlap_sql,
     )
@@ -4691,50 +4150,9 @@ WHERE jaccard > {DEFAULT_CONFIG.jaccard_threshold}
         "SELECT doc_id, lang, text FROM documents", n_variants=2
     )
 
-    from mediaduplicatefinder_spark.operators.fellegi import (
-        fellegi_sunter_sql,
-    )
-
-    out["fellegi_sunter"] = fellegi_sunter_sql()
-
     from mediaduplicatefinder_spark.operators.ctph import ctph_pairs_sql
 
     out["ctph_pairs"] = ctph_pairs_sql()
-
-    from mediaduplicatefinder_spark.operators.fusion_rank import mmr_rerank_sql
-
-    def _exact_topk_sql(k: int) -> str:
-        cos = lsh_sql._cosine_sql("q.qv", "e.embedding::DOUBLE[]")
-        return f"""
-WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-           FROM embeddings WHERE vec_id % 50 = 0),
-s AS (SELECT q.query_id, e.vec_id, {cos} AS cosine
-      FROM q, embeddings e WHERE e.vec_id != q.query_id)
-SELECT query_id, vec_id, cosine
-FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-          ORDER BY cosine DESC, vec_id) AS rk FROM s)
-WHERE rk <= {k}"""
-
-    _mmr_sims_sql = f"""
-WITH sl AS ({_exact_topk_sql(15)}),
-ev AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-sp AS (SELECT a.query_id, a.vec_id AS vec_id_a, b.vec_id AS vec_id_b
-       FROM sl a JOIN sl b
-         ON a.query_id = b.query_id AND a.vec_id < b.vec_id)
-SELECT sp.query_id, sp.vec_id_a, sp.vec_id_b,
-       {lsh_sql._cosine_sql('ea.v', 'eb.v')} AS sim
-FROM sp
-JOIN ev ea ON ea.vec_id = sp.vec_id_a
-JOIN ev eb ON eb.vec_id = sp.vec_id_b"""
-
-    out["mmr_rerank"] = mmr_rerank_sql(
-        "SELECT query_id, vec_id, cosine AS rel FROM ("
-        + _exact_topk_sql(15)
-        + ")",
-        _mmr_sims_sql,
-        k=5,
-        lam=0.7,
-    )
 
     from mediaduplicatefinder_spark.operators.twophasecc import (
         cc_labels_tail_sql,
@@ -4744,63 +4162,6 @@ JOIN ev eb ON eb.vec_id = sp.vec_id_b"""
         lsh_sql.lsh_base_cte(recursive=True)
         + lsh_sql._exact_and_edges_ctes(DEFAULT_CONFIG)
         + cc_labels_tail_sql()
-    )
-
-    from mediaduplicatefinder_spark.operators.agreement import (
-        clustering_agreement_sql,
-    )
-
-    def _agreement_side_sql(thr: float) -> str:
-        # the threshold_ladder jp kernel + one recursive closure; the
-        # LEFT JOIN gives singletons their own label (items = all docs)
-        return f"""
-WITH RECURSIVE t AS (SELECT doc_id, lang, {_TOKENS_SQL} AS ts FROM documents),
-jp AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         round(len(list_intersect(a.ts, b.ts))::DOUBLE
-               / (len(a.ts) + len(b.ts) - len(list_intersect(a.ts, b.ts))),
-               6) AS j
-  FROM t a JOIN t b ON a.lang = b.lang AND a.doc_id < b.doc_id
-  WHERE len(a.ts) + len(b.ts) - len(list_intersect(a.ts, b.ts)) > 0
-),
-edges AS (
-  SELECT doc_a AS s, doc_b AS d FROM jp WHERE j > {thr}
-  UNION SELECT doc_b, doc_a FROM jp WHERE j > {thr}
-),
-reach(s, d) AS (
-  SELECT s, d FROM edges
-  UNION
-  SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s
-),
-labels AS (
-  SELECT s AS doc_id, least(s, min(d)) AS cluster_id
-  FROM reach GROUP BY s
-)
-SELECT d.doc_id AS item, coalesce(l.cluster_id, d.doc_id) AS cluster
-FROM documents d LEFT JOIN labels l USING (doc_id)
-"""
-
-    out["cluster_agreement"] = clustering_agreement_sql(
-        _agreement_side_sql(_AGREEMENT_THRESHOLDS[0]),
-        _agreement_side_sql(_AGREEMENT_THRESHOLDS[1]),
-    )
-
-    from mediaduplicatefinder_spark.operators.agreement import (
-        bcubed_agreement_sql,
-    )
-
-    out["bcubed_agreement"] = bcubed_agreement_sql(
-        _agreement_side_sql(_AGREEMENT_THRESHOLDS[0]),
-        _agreement_side_sql(_AGREEMENT_THRESHOLDS[1]),
-    )
-
-    from mediaduplicatefinder_spark.operators.agreement import (
-        purity_agreement_sql,
-    )
-
-    out["purity_agreement"] = purity_agreement_sql(
-        _agreement_side_sql(_AGREEMENT_THRESHOLDS[0]),
-        _agreement_side_sql(_AGREEMENT_THRESHOLDS[1]),
     )
 
     out["metablocking_pairs"] = lsh_sql.lsh_base_cte() + """
@@ -5893,42 +5254,6 @@ SELECT CAST(floor(jaccard * 20) AS BIGINT) AS bucket,
        CAST(count(*) AS BIGINT) AS n_pairs
 FROM jac GROUP BY 1"""
 
-    # E154: full LSH pipeline twin + position-carrying winnow twin
-    from mediaduplicatefinder_spark.functions.winnow import K_GRAM, WINDOW
-    from mediaduplicatefinder_spark.operators.evidence import (
-        dup_evidence_tail_sql,
-    )
-    from mediaduplicatefinder_spark.oracle.lsh_sql import lsh_base_cte
-
-    out["dup_evidence"] = lsh_base_cte(DEFAULT_CONFIG) + dup_evidence_tail_sql(
-        K_GRAM,
-        WINDOW,
-        "SELECT printf('doc://%010d', doc_id) AS url, "
-        "lower(regexp_replace(text, '[^a-zA-Z0-9]', '', 'g')) AS s "
-        "FROM documents",
-        threshold=DEFAULT_CONFIG.jaccard_threshold,
-    )
-
-    # E153: two full recursive dedup closures (90% corpus vs full)
-    # through the same pair algebra
-    from mediaduplicatefinder_spark.operators.stability import (
-        cluster_stability_sql,
-    )
-    from mediaduplicatefinder_spark.oracle.lsh_sql import (
-        dedup_clusters_sql as _dc_sql,
-    )
-
-    _docs_a_sql = (
-        "SELECT printf('doc://%010d', doc_id) AS url, lang, text "
-        "FROM documents WHERE doc_id % 10 != 9"
-    )
-    out["cluster_stability"] = cluster_stability_sql(
-        _dc_sql(DEFAULT_CONFIG, docs_sql=_docs_a_sql),
-        _dc_sql(DEFAULT_CONFIG),
-        "SELECT printf('doc://%010d', doc_id) AS url FROM documents "
-        "WHERE doc_id % 10 != 9",
-    )
-
     # E152: the twin is the PLAIN inner join — salting must be
     # semantically invisible
     out["salted_join"] = """
@@ -6372,74 +5697,6 @@ FROM u
            CROSS JOIN range(0, 2) AS j(j)"""
     )
 
-    from mediaduplicatefinder_spark.operators.containment import (
-        shingle_containment_pairs_sql,
-    )
-    from mediaduplicatefinder_spark.operators.fusion import (
-        fuse_pair_channels_sql,
-    )
-    from mediaduplicatefinder_spark.operators.sortedneighborhood import (
-        sorted_neighborhood_pairs_sql,
-    )
-
-    _fusion_docs_sql = """
-        SELECT d.doc_id,
-               CASE WHEN d.doc_id % 8 = 6 AND p.doc_id IS NOT NULL
-                    THEN substr(p.text, 1,
-                                greatest(1, length(p.text) - 25))
-                    ELSE d.text END AS text
-        FROM documents d LEFT JOIN documents p ON p.doc_id = d.doc_id - 2
-    """
-    _fusion_ngram_sql = f"""
-        WITH fd AS ({_fusion_docs_sql}),
-        t AS (
-          SELECT doc_id,
-                 list_distinct(list_transform(
-                   generate_series(1, len(ws) - 1),
-                   i -> ws[i] || ' ' || ws[i+1])) AS bg
-          FROM (SELECT doc_id,
-                       string_split_regex(trim(text), '\\s+') AS ws
-                FROM fd)
-          WHERE len(ws) >= 2)
-        SELECT * FROM (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                 round(len(list_intersect(a.bg, b.bg))::DOUBLE
-                       / (len(a.bg) + len(b.bg)
-                          - len(list_intersect(a.bg, b.bg))), 6)
-                   AS ngram_jaccard
-          FROM t a JOIN t b ON a.doc_id < b.doc_id)
-        WHERE ngram_jaccard > 0.4
-    """
-    _fusion_sql = fuse_pair_channels_sql(
-        _fusion_ngram_sql,
-        shingle_containment_pairs_sql(_fusion_docs_sql),
-        sorted_neighborhood_pairs_sql(_fusion_docs_sql),
-    )
-    out["channel_fusion"] = _fusion_sql
-
-    out["ensemble_clusters"] = f"""
-        WITH RECURSIVE fpairs AS (
-          SELECT doc_a, doc_b FROM ({_fusion_sql}) WHERE n_channels >= 2
-        ),
-        fedges AS (
-          SELECT doc_a AS s, doc_b AS d FROM fpairs
-          UNION SELECT doc_b, doc_a FROM fpairs
-        ),
-        reach(s, d) AS (
-          SELECT s, d FROM fedges
-          UNION
-          SELECT r.s, e.d FROM reach r JOIN fedges e ON r.d = e.s
-        ),
-        labels AS (
-          SELECT s AS doc_id, least(s, min(d)) AS cluster_id
-          FROM reach GROUP BY s
-        )
-        SELECT doc_id, cluster_id,
-               count(*) OVER (PARTITION BY cluster_id)::BIGINT
-                 AS cluster_size
-        FROM labels
-    """
-
     from mediaduplicatefinder_spark.operators.robuststats import (
         robust_length_outliers_sql,
     )
@@ -6631,33 +5888,9 @@ LEFT JOIN sizes s ON s.cluster_id = f.cluster_id
     )
     out["paragraph_dedup"] = paragraph_dedup_sql(_para_inject)
 
-    from mediaduplicatefinder_spark.operators.cohesion import cohesion_tail_sql
-    from mediaduplicatefinder_spark.oracle.lsh_sql import (
-        _clusters_flagged_ctes,
-    )
-
-    out["cluster_cohesion"] = _clusters_flagged_ctes(
-        DEFAULT_CONFIG
-    ) + cohesion_tail_sql(threshold=DEFAULT_CONFIG.jaccard_threshold)
-
-    from mediaduplicatefinder_spark.operators.cohesion import medoid_tail_sql
-
-    out["medoid_keepers"] = _clusters_flagged_ctes(
-        DEFAULT_CONFIG
-    ) + medoid_tail_sql()
-
-    from mediaduplicatefinder_spark.operators.cohesion import (
-        triangle_support_tail_sql,
-    )
     from mediaduplicatefinder_spark.oracle.lsh_sql import (
         _exact_and_edges_ctes,
         lsh_base_cte,
-    )
-
-    out["triangle_support"] = (
-        lsh_base_cte(DEFAULT_CONFIG)
-        + _exact_and_edges_ctes(DEFAULT_CONFIG)
-        + triangle_support_tail_sql()
     )
 
     from mediaduplicatefinder_spark.operators.kcore import (
@@ -6680,16 +5913,6 @@ LEFT JOIN sizes s ON s.cluster_id = f.cluster_id
         lsh_base_cte(DEFAULT_CONFIG)
         + _exact_and_edges_ctes(DEFAULT_CONFIG)
         + lpa_tail_sql(rounds=4)
-    )
-
-    from mediaduplicatefinder_spark.operators.affinity import (
-        affinity_tail_sql,
-    )
-
-    out["affinity_clusters"] = (
-        lsh_sql.lsh_base_cte(DEFAULT_CONFIG, recursive=True)
-        + lsh_sql._exact_and_edges_ctes(DEFAULT_CONFIG)
-        + affinity_tail_sql(rounds=2)
     )
 
     from mediaduplicatefinder_spark.functions.textstats import (
@@ -6755,38 +5978,16 @@ LEFT JOIN sizes s ON s.cluster_id = f.cluster_id
         WHERE iw::DOUBLE / (ta.w + tb.w - iw) >= 0.5
     """
 
-    from mediaduplicatefinder_spark.operators.dbscan import dbscan_sql
-
-    out["dbscan_clusters"] = dbscan_sql(tau=0.35, min_pts=3)
-
     from mediaduplicatefinder_spark.operators.hilbert import (
         hilbert_layout_sql,
     )
 
     out["hilbert_layout"] = hilbert_layout_sql(bits=8, k=4)
 
-    from mediaduplicatefinder_spark.operators.rbo import rbo_sql
-
-    out["rbo_topk"] = rbo_sql(
-        _exact_topk_sql(10), lsh_sql.ann_lsh_topk_sql(k=10), k=10, p=0.9
-    )
-
     from mediaduplicatefinder_spark.operators.bitext import margin_pairs_sql
 
     out["bitext_margin_pairs"] = margin_pairs_sql(
         k=4, floor=0.3, margin_threshold=1.2
-    )
-
-    out["dbscan_clusters_lsh"] = dbscan_sql(
-        tau=0.35,
-        min_pts=3,
-        pairs_sql=(
-            "SELECT vec_a AS id_a, vec_b AS id_b FROM ("
-            + lsh_sql.embedding_dup_pairs_lsh_sql(
-                threshold=0.35, band_bits=8
-            )
-            + ")"
-        ),
     )
 
     from mediaduplicatefinder_spark.operators.linkgraph import (

@@ -28,7 +28,9 @@ Writers (make_docx / make_xlsx / make_pptx) produce minimal
 deterministic OOXML packages (fixed zip timestamps) — used by datagen
 and the round-trip oracle queries; make_xlsx writes via sharedStrings
 so the reader's shared-string path is exercised, plus one numeric
-sheet.
+sheet. Text outside XML 1.0's ``Char`` production (C0 controls other
+than tab/LF/CR, lone surrogates, U+FFFE, U+FFFF) raises ``ValueError``:
+written raw it would make the part unparseable.
 
 Spark surface: ``extract_office_text`` and ``extract_xlsx_cells`` are
 Arrow-batched ``mapInPandas`` operators — binary payloads never leave
@@ -293,9 +295,27 @@ def _zip_write(parts: dict[str, str | bytes]) -> bytes:
     return buf.getvalue()
 
 
+# everything outside XML 1.0 ``Char`` (W3C XML 1.0 §2.2)
+_NON_XML_CHAR = re.compile(
+    "[^\t\n\r\x20-\ud7ff\ue000-\ufffd\U00010000-\U0010ffff]"
+)
+
+
+def _xml_text(text: str) -> str:
+    """``escape(text)`` for a writer; raises ValueError on a character
+    that XML 1.0 forbids, which no reader could parse back."""
+    bad = _NON_XML_CHAR.search(text)
+    if bad:
+        raise ValueError(
+            f"U+{ord(bad.group()):04X} at index {bad.start()} is not an "
+            "XML 1.0 character"
+        )
+    return escape(text)
+
+
 def _w_p(text: str) -> str:
     return (
-        f'<w:p><w:r><w:t xml:space="preserve">{escape(text)}</w:t></w:r></w:p>'
+        f'<w:p><w:r><w:t xml:space="preserve">{_xml_text(text)}</w:t></w:r></w:p>'
     )
 
 
@@ -387,7 +407,7 @@ def make_xlsx(sheets: dict[str, list[list[object]]]) -> bytes:
             f'<sheetData>{"".join(xml_rows)}</sheetData></worksheet>'
         )
         wb_sheets.append(
-            f'<sheet name="{escape(name)}" sheetId="{i}" r:id="rId{i}"/>'
+            f'<sheet name="{_xml_text(name)}" sheetId="{i}" r:id="rId{i}"/>'
         )
         wb_rels.append(
             f'<Relationship Id="rId{i}" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/worksheet" Target="worksheets/sheet{i}.xml"/>'
@@ -411,7 +431,7 @@ def make_xlsx(sheets: dict[str, list[list[object]]]) -> bytes:
         '<sst xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" '
         f'count="{len(shared)}" uniqueCount="{len(shared)}">'
         + "".join(
-            f'<si><t xml:space="preserve">{escape(s)}</t></si>' for s in shared
+            f'<si><t xml:space="preserve">{_xml_text(s)}</t></si>' for s in shared
         )
         + "</sst>"
     )
@@ -443,7 +463,7 @@ def make_pptx(slides: list[list[str]]) -> bytes:
         sp_xml = []
         for text in shapes:
             paras = "".join(
-                f'<a:p><a:r><a:t>{escape(line)}</a:t></a:r></a:p>'
+                f'<a:p><a:r><a:t>{_xml_text(line)}</a:t></a:r></a:p>'
                 for line in text.split("\n")
             )
             sp_xml.append(f"<p:sp><p:txBody>{paras}</p:txBody></p:sp>")

@@ -69,9 +69,8 @@ def webtable_match_pairs(
     # fixed-point per-table score (n_match * 10^9 div n_cells): the
     # per-pair mean of raw double ratios is a float sum with
     # heterogeneous denominators, whose value depends on partition
-    # arrival order (the agreement.py B-cubed hazard) — integer
-    # scaling makes the sum EXACT in both engines, with one final
-    # correctly-rounded division (review r5).
+    # arrival order — integer scaling makes the sum EXACT in both
+    # engines, with one final correctly-rounded division (review r5).
     per_table = joined.groupBy("url_a", "url_b", "table_idx").agg(
         F.expr(
             "sum(CASE WHEN va = vb THEN 1 ELSE 0 END) * 1000000000L"

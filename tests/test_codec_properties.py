@@ -53,12 +53,15 @@ def test_png_rgb_and_bmp_roundtrip_property(img, fc):
 
 
 # XML 1.0 printable text (no control chars below 0x20 except \t\n which
-# docx runs cannot carry raw anyway — tabs/newlines are separate elements)
+# docx runs cannot carry raw anyway — tabs/newlines are separate elements;
+# U+FFFE/U+FFFF are outside XML's Char production and the writers reject
+# them)
 _xmltext = st.text(
     alphabet=st.characters(
         min_codepoint=0x20,
         max_codepoint=0x2FA1D,
         blacklist_categories=("Cs",),  # no lone surrogates
+        blacklist_characters="\ufffe\uffff",
     ),
     max_size=60,
 )

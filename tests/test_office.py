@@ -147,6 +147,26 @@ def test_deterministic_bytes():
     assert make_xlsx({"s": [["a", 1]]}) == make_xlsx({"s": [["a", 1]]})
 
 
+@pytest.mark.parametrize(
+    "bad",
+    ["\ufffe", "\uffff", "\x00", "\x1f", "\ud800"],
+    ids=["U+FFFE", "U+FFFF", "U+0000", "U+001F", "U+D800"],
+)
+def test_writers_reject_non_xml_chars(bad):
+    # XML 1.0 forbids these code points; written raw they leave a part
+    # that no reader can parse (the extractors return None), so every
+    # writer refuses them instead of emitting a corrupt package
+    for make in (
+        lambda: make_docx([f"a{bad}b"]),
+        lambda: make_docx(["ok"], [[[bad]]]),
+        lambda: make_xlsx({"s": [["ok", bad]]}),
+        lambda: make_xlsx({bad: [["ok"]]}),
+        lambda: make_pptx([[f"ok\n{bad}"]]),
+    ):
+        with pytest.raises(ValueError, match="XML 1.0"):
+            make()
+
+
 # ---------------------------------------------------- Spark surface
 
 

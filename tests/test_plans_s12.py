@@ -4,8 +4,6 @@ where claimed, no row-at-a-time Python anywhere)."""
 
 from __future__ import annotations
 
-import pytest
-
 SF = "/root/testdata/sf0.01"
 
 
@@ -25,24 +23,6 @@ def test_spotsig_and_imatch_no_cartesian_no_python_rows(spark):
         assert "BroadcastNestedLoopJoin" not in p, name
         # extraction is Arrow-batched mapInPandas, never per-row UDFs
         assert "BatchEvalPython" not in p, name
-
-
-def test_agreement_is_aggregates_only(spark):
-    from mediaduplicatefinder_spark.operators.agreement import (
-        clustering_agreement,
-    )
-
-    a = spark.createDataFrame(
-        [(i, i % 3) for i in range(30)], "item long, cluster long"
-    )
-    b = spark.createDataFrame(
-        [(i, i % 5) for i in range(30)], "item long, cluster long"
-    )
-    p = plan_of(clustering_agreement(a, b))
-    # pair counting NEVER materializes pairs: no joins beyond the
-    # item join + the three one-row aggregate crossJoins
-    assert "SortMergeJoin" in p or "BroadcastHashJoin" in p  # item join
-    assert "BatchEvalPython" not in p
 
 
 def test_twophase_star_rounds_are_agg_plus_join(spark):

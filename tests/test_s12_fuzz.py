@@ -1,5 +1,5 @@
 """Hypothesis fuzz over the session-12 pure functions: SpotSigs
-extraction, CTPH digests, Fellegi-Sunter EM — structural invariants
+extraction and CTPH digests — structural invariants
 that must hold on ARBITRARY input, not just fixtures."""
 
 from __future__ import annotations
@@ -12,12 +12,6 @@ from mediaduplicatefinder_spark.operators.ctph import (
     DIGEST_LEN,
     block_size,
     ctph_digest,
-)
-from mediaduplicatefinder_spark.operators.fellegi import (
-    _CAP,
-    _EPS,
-    fit_em,
-    pattern_scores,
 )
 from mediaduplicatefinder_spark.operators.spotsigs import (
     ANTECEDENTS,
@@ -74,24 +68,3 @@ def test_block_size_tightness(n):
     assert b * DIGEST_LEN >= n
     if b > 3:
         assert (b // 2) * DIGEST_LEN < n  # smallest such b
-
-
-_counts = st.dictionaries(
-    st.text(alphabet="01", min_size=4, max_size=4),
-    st.integers(min_value=1, max_value=10_000),
-    min_size=1,
-    max_size=16,
-)
-
-
-@settings(max_examples=100, deadline=None)
-@given(_counts)
-def test_em_parameters_bounded(counts):
-    lam, m, u = fit_em(counts)
-    assert _EPS <= lam <= _CAP
-    for k in range(4):
-        assert _EPS <= m[k] <= _CAP
-        assert _EPS <= u[k] <= _CAP
-    for _p, bf, post in pattern_scores(counts):
-        assert bf > 0
-        assert 0.0 <= post <= 1.0
