@@ -19,9 +19,10 @@ parquet with the equivalent atomicity guarantees:
   loaded, everything else recomputes. Outputs are deterministic, so a
   resumed run produces byte-identical tables (tested).
 
-Swapping the ``StageStore`` for an Iceberg catalog writer
-(``df.writeTo(...).createOrReplace()`` / ``MERGE INTO`` keyed on url)
-is a drop-in change — the pipeline only sees ``exists/load/save``.
+The resumable pipeline is ``pipeline.run_dedup(..., store=...)`` itself;
+it only calls ``run_stage(name, build)``, so swapping the ``StageStore``
+for an Iceberg catalog writer (:class:`IcebergStageStore`,
+``df.writeTo(...).createOrReplace()``) is a drop-in change.
 """
 
 from __future__ import annotations
@@ -36,8 +37,24 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mediaduplicatefinder_spark.config import DEFAULT_CONFIG, EngineConfig
+from mediaduplicatefinder_spark.pipeline import run_dedup
 
-class StageStore:
+
+class _Stages:
+    """``run_stage`` over a store's ``is_done``/``load``/``save`` — the
+    one method ``pipeline.run_dedup(store=...)`` calls."""
+
+    def run_stage(self, stage: str, build) -> DataFrame:
+        """Idempotent stage execution: load if done, else build+persist."""
+        if self.is_done(stage):
+            return self.load(stage)
+        t0 = time.time()
+        df = build()
+        return self.save(stage, df, time.time() - t0)
+
+
+class StageStore(_Stages):
     """Atomic parquet-backed stage persistence + lineage ledger."""
 
     def __init__(self, spark: SparkSession, root: str, run_id: str | None = None):
@@ -115,20 +132,12 @@ class StageStore:
         os.rename(tmp_ledger, self._ledger_path(stage))
         return self.load(stage)
 
-    def run_stage(self, stage: str, build) -> DataFrame:
-        """Idempotent stage execution: load if done, else build+persist."""
-        if self.is_done(stage):
-            return self.load(stage)
-        t0 = time.time()
-        df = build()
-        return self.save(stage, df, time.time() - t0)
 
-
-class IcebergStageStore:
+class IcebergStageStore(_Stages):
     """StageStore over an Iceberg catalog — the cluster-deployment
     variant the north rule names (stage outputs + lineage to Iceberg).
 
-    Same ``exists/load/save`` surface as :class:`StageStore`, so the
+    Same ``is_done/load/save`` surface as :class:`StageStore`, so the
     resumable pipeline is storage-agnostic:
 
     - stage outputs publish as Iceberg tables
@@ -222,13 +231,6 @@ class IcebergStageStore:
             row.writeTo(self._lineage_table).createOrReplace()
         return out
 
-    def run_stage(self, stage: str, build) -> DataFrame:
-        if self.is_done(stage):
-            return self.load(stage)
-        t0 = time.time()
-        df = build()
-        return self.save(stage, df, time.time() - t0)
-
 
 def make_stage_store(
     spark: SparkSession,
@@ -240,8 +242,8 @@ def make_stage_store(
     """Storage selection for the resumable pipeline: an Iceberg store
     when the named catalog is configured on the session
     (``spark.sql.catalog.<catalog>`` set — real clusters), else the
-    atomic-parquet store (this sandbox). The pipeline only sees
-    exists/load/save, so the choice is a drop-in."""
+    atomic-parquet store (no catalog). The pipeline only calls
+    ``run_stage``, so the choice is a drop-in."""
     if catalog:
         try:
             configured = spark.conf.get(f"spark.sql.catalog.{catalog}")
@@ -255,97 +257,15 @@ def make_stage_store(
 
 
 def run_dedup_resumable(
-    spark: SparkSession,
-    pages: DataFrame,
-    out_dir: str,
-    cfg=None,
-    scan_root: str = "",
-    use_html: bool = True,
-    run_id: str | None = None,
-    catalog: str | None = None,
-) -> dict[str, DataFrame]:
-    """The flagship pipeline with stage-granular resume. Stage outputs:
-    grouped (signatures + exact-group bookkeeping), exact_clusters,
-    candidates, pairs, clusters — each an atomically-published parquet
-    directory keyed in the lineage ledger. Interrupt at any point; rerunning with the same out_dir
-    completes only the missing stages and yields identical tables."""
-    from mediaduplicatefinder_spark.config import DEFAULT_CONFIG
-    from mediaduplicatefinder_spark.operators import exact as exact_ops
-    from mediaduplicatefinder_spark.operators import keeper as keeper_ops
-    from mediaduplicatefinder_spark.operators import stats as stats_ops
-    from mediaduplicatefinder_spark.operators.candidates import candidate_pairs
-    from mediaduplicatefinder_spark.operators.clustering import connected_components
-    from mediaduplicatefinder_spark.operators.signatures import page_signatures
-    from mediaduplicatefinder_spark.operators.verify import similar_edges, verify_pairs
-
-    cfg = cfg or DEFAULT_CONFIG
+    spark: SparkSession, pages: DataFrame, out_dir: str,
+    cfg: EngineConfig = DEFAULT_CONFIG, scan_root: str = "",
+    use_html: bool = True, run_id: str | None = None, catalog: str | None = None,
+) -> dict:
+    """``run_dedup`` with stage-granular resume: each stage is published
+    atomically and keyed in the lineage ledger. Interrupt at any point;
+    rerunning with the same out_dir completes only the missing stages and
+    yields identical tables."""
     store = make_stage_store(spark, out_dir, catalog=catalog, run_id=run_id)
-    n_par = spark.sparkContext.defaultParallelism
-
-    def build_grouped():
-        # sig-first (see pipeline.py): one fused extract+sha+signature
-        # pass runs narrow, so the sha256 window groups signature rows —
-        # text never shuffles
-        sigs_all = page_signatures(
-            pages, cfg, min_partitions=n_par, use_html=use_html, include_minhash=False
-        )
-        return exact_ops.exact_groups(sigs_all)
-
-    # persisting `grouped` (signatures + group bookkeeping, no text)
-    # covers exact clusters, survivor signatures AND the doc metadata
-    # later stages need — one stage where the old shape needed two
-    grouped = store.run_stage("grouped", build_grouped)
-
-    exact_clusters = store.run_stage(
-        "exact_clusters", lambda: exact_ops.exact_clusters(grouped)
-    )
-
-    sigs = exact_ops.similarity_survivors(grouped).drop("sha256")
-
-    # the bucket cache (collect_list of every LSH bucket — one of the
-    # largest intermediates) is released as soon as the stage's parquet
-    # is published, not held for the rest of the session
-    bucket_cache: list[DataFrame] = []
-
-    def build_cands():
-        cands, bucket_metrics, buckets = candidate_pairs(sigs, cfg)
-        bucket_cache.append(buckets)
-        bucket_metrics.write.mode("overwrite").json(
-            os.path.join(out_dir, "bucket_metrics.json.d")
-        )
-        return cands
-
-    cands = store.run_stage("candidates", build_cands)
-    for b in bucket_cache:
-        b.unpersist()
-    pairs = store.run_stage("pairs", lambda: verify_pairs(cands, sigs, cfg))
-
-    def build_clusters():
-        edges = similar_edges(pairs)
-        labels = connected_components(edges, cfg)
-        member_scores = (
-            edges.select(F.col("url_a").alias("url"), "score")
-            .unionByName(edges.select(F.col("url_b").alias("url"), "score"))
-            .groupBy("url")
-            .agg(F.max("score").alias("score"))
-        )
-        similar_clusters = labels.join(member_scores, "url", "left").select(
-            "url",
-            "cluster_id",
-            F.lit("SIMILAR").alias("kind"),
-            F.when(F.col("url") == F.col("cluster_id"), F.lit(1.0))
-            .otherwise(F.coalesce("score", F.lit(1.0)))
-            .alias("score"),
-        )
-        clusters = exact_clusters.drop("sha256").unionByName(similar_clusters)
-        clusters = keeper_ops.with_keeper_flags(clusters, scan_root)
-        return stats_ops.with_group_avg_score(clusters)
-
-    clusters = store.run_stage("clusters", build_clusters)
-    return {
-        "exact_clusters": exact_clusters,
-        "signatures": sigs,
-        "pairs": pairs,
-        "clusters": clusters,
-        "lineage": store.lineage(),
-    }
+    res = run_dedup(spark, pages, cfg, scan_root, use_html, store=store)
+    keep = ("exact_clusters", "pairs", "clusters", "metrics")
+    return {**{k: getattr(res, k) for k in keep}, "lineage": store.lineage()}

@@ -29,13 +29,20 @@ This is the engine's one composition: candidates come only from the
 MinHash + SimHash LSH bands (operators/candidates.py) and SIMILAR labels
 only from connected components over the verified edges (the reference's
 single linkage). Alternative candidate generators and merge rules stay
-standalone operators (ppjoin, supershingle, kcore, lpa, affinity) and
-are not switchable here. ``perfbench/spans.layered_pass`` replays this
+standalone operators (ppjoin, supershingle, kcore, lpa) and are not
+switchable here. ``perfbench/spans.layered_pass`` replays this
 composition layer by layer and must stay in step with it.
+
+Resume runs through this same function: given a ``store`` (any object
+with ``run_stage(name, build)``, e.g. ``ledger.StageStore``), each stage
+boundary — grouped, exact_clusters, bucket_metrics, candidates, pairs,
+clusters — is published to the store and reloaded on a rerun instead of
+rebuilt (``ledger.run_dedup_resumable``).
 """
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -47,14 +54,12 @@ from mediaduplicatefinder_spark.operators import keeper as keeper_ops
 from mediaduplicatefinder_spark.operators import stats as stats_ops
 from mediaduplicatefinder_spark.operators.candidates import candidate_pairs
 from mediaduplicatefinder_spark.operators.clustering import connected_components
-from mediaduplicatefinder_spark.operators.extract import extracted_or_given_text
 from mediaduplicatefinder_spark.operators.signatures import page_signatures
 from mediaduplicatefinder_spark.operators.verify import similar_edges, verify_pairs
 
 
 @dataclass
 class DedupResult:
-    docs: DataFrame        # url, warc_ts, lang, size_bytes, text
     exact_clusters: DataFrame   # url, cluster_id, kind, score, sha256
     pairs: DataFrame       # verified url_a/url_b with jaccard & flags
     similar_clusters: DataFrame  # url, cluster_id, kind, score
@@ -75,54 +80,78 @@ def run_dedup(
     scan_root: str = "",
     use_html: bool = True,
     sigs_all: DataFrame | None = None,
+    store=None,
 ) -> DedupResult:
     n_par = spark.sparkContext.defaultParallelism
-    # docs is the user-facing extracted view (lazy; not materialized by
-    # the pipeline itself — the fused pass below re-extracts internally)
-    docs = extracted_or_given_text(pages, use_html=use_html, min_partitions=n_par)
 
-    # ---- narrow prefix: ONE fused mapInPandas = extract + sha2 +
-    # signatures, zero exchanges (sig-first: the text column is consumed
-    # map-side; only ~1 KB signature rows reach the exact pass's hash
-    # shuffle. minhash stays internal — slim schema.)
-    # ``sigs_all`` injects precomputed page_signatures rows (same
-    # schema, carry_sha256) — content-keyed reuse: a snapshot-churn job
-    # comparing corpus subsets computes signatures ONCE and filters per
-    # snapshot instead of re-running the Arrow pass per subset
-    # (signatures are a pure per-row function of (url, text), so the
-    # result is identical by construction; parity-tested).
-    if sigs_all is None:
-        sigs_all = page_signatures(
-            pages, cfg, min_partitions=n_par, use_html=use_html,
-            include_minhash=False,
-        )
+    def stage(name: str, build, persist: bool = False) -> DataFrame:
+        # a store publishes the stage and reloads it on a rerun (its
+        # output is a re-read of the published table, so no cache);
+        # without one the stage is just its builder
+        if store is not None:
+            return store.run_stage(name, build)
+        df = build()
+        return df.persist() if persist else df
 
-    # ---- pass 1: exact duplicates (one shuffle on sha256, sig rows) ----
+    def build_grouped() -> DataFrame:
+        # ---- narrow prefix: ONE fused mapInPandas = extract + sha2 +
+        # signatures, zero exchanges (sig-first: the text column is
+        # consumed map-side; only ~1 KB signature rows reach the exact
+        # pass's hash shuffle. minhash stays internal — slim schema.)
+        # ``sigs_all`` injects precomputed page_signatures rows (same
+        # schema, carry_sha256) — content-keyed reuse: a snapshot-churn
+        # job comparing corpus subsets computes signatures ONCE and
+        # filters per snapshot instead of re-running the Arrow pass per
+        # subset (signatures are a pure per-row function of (url, text),
+        # so the result is identical by construction; parity-tested).
+        rows = sigs_all
+        if rows is None:
+            rows = page_signatures(
+                pages, cfg, min_partitions=n_par, use_html=use_html,
+                include_minhash=False,
+            )
+        # ---- pass 1: exact duplicates (one shuffle on sha256, sig rows)
+        return exact_ops.exact_groups(rows)
+
     # persisted: extraction + signatures (Arrow UDF) + hash shuffle run
     # once, then feed both the EXACT branch and the similarity branch
-    grouped = exact_ops.exact_groups(sigs_all).persist()
-    exact_clusters = exact_ops.exact_clusters(grouped)
+    grouped = stage("grouped", build_grouped, persist=True)
+    exact_clusters = stage(
+        "exact_clusters", lambda: exact_ops.exact_clusters(grouped)
+    )
 
     # ---- pass 2: surviving signatures (SE4): rank-1 row per sha group,
     # already on the sha256 shuffle's partitions — no extra exchange
     sigs = exact_ops.similarity_survivors(grouped).drop("sha256")
 
-    cands, bucket_metrics, buckets = candidate_pairs(sigs, cfg)
-    verified = verify_pairs(cands, sigs, cfg).persist()
-    edges = similar_edges(verified)
-    labels = connected_components(edges, cfg)
-
-    # member score = max similarity of any edge that touches the member
-    # (relaxed C3 carry; the cluster_id owner scores 1.0 like a seed)
-    member_scores = (
-        edges.select(F.col("url_a").alias("url"), "score")
-        .unionByName(edges.select(F.col("url_b").alias("url"), "score"))
-        .groupBy("url")
-        .agg(F.max("score").alias("score"))
+    # one LSH pass feeds two stages, built only if one of them is missing
+    lsh = functools.cache(lambda: candidate_pairs(sigs, cfg))
+    bucket_metrics = stage("bucket_metrics", lambda: lsh().bucket_metrics)
+    cands = stage("candidates", lambda: lsh().cands)
+    # the bucket cache (collect_list of every LSH bucket — one of the
+    # largest intermediates) is held until cleanup(); a store has
+    # published both of its outputs by now, so it is released at once
+    buckets = (lsh().buckets,) if lsh.cache_info().currsize else ()
+    if store is not None:
+        for b in buckets:
+            b.unpersist()
+    verified = stage(
+        "pairs", lambda: verify_pairs(cands, sigs, cfg), persist=True
     )
-    similar_clusters = (
-        labels.join(member_scores, "url", "left")
-        .select(
+
+    def build_clusters() -> DataFrame:
+        edges = similar_edges(verified)
+        labels = connected_components(edges, cfg)
+        # member score = max similarity of any edge that touches the
+        # member (relaxed C3 carry; the cluster_id owner scores 1.0 like
+        # a seed)
+        member_scores = (
+            edges.select(F.col("url_a").alias("url"), "score")
+            .unionByName(edges.select(F.col("url_b").alias("url"), "score"))
+            .groupBy("url")
+            .agg(F.max("score").alias("score"))
+        )
+        similar = labels.join(member_scores, "url", "left").select(
             "url",
             "cluster_id",
             F.lit("SIMILAR").alias("kind"),
@@ -130,11 +159,14 @@ def run_dedup(
             .otherwise(F.coalesce("score", F.lit(1.0)))
             .alias("score"),
         )
-    )
+        clusters = exact_clusters.drop("sha256").unionByName(similar)
+        clusters = keeper_ops.with_keeper_flags(clusters, scan_root)
+        return stats_ops.with_group_avg_score(clusters)
 
-    clusters = exact_clusters.drop("sha256").unionByName(similar_clusters)
-    clusters = keeper_ops.with_keeper_flags(clusters, scan_root)
-    clusters = stats_ops.with_group_avg_score(clusters)
+    clusters = stage("clusters", build_clusters)
+    similar_clusters = clusters.filter(F.col("kind") == "SIMILAR").select(
+        "url", "cluster_id", "kind", "score"
+    )
 
     # lazy one-row metrics: one fused aggregate per source table (each
     # persisted), cross-joined — materializes in 3 scans when collected
@@ -156,11 +188,10 @@ def run_dedup(
         )
     )
     return DedupResult(
-        docs=docs,
         exact_clusters=exact_clusters,
         pairs=verified,
         similar_clusters=similar_clusters,
         clusters=clusters,
         metrics=metrics,
-        _persisted=(grouped, verified, buckets),
+        _persisted=(grouped, verified, *buckets),
     )

@@ -6,12 +6,15 @@ at 10-20x bench scale and records walls, doubling-round frontier
 counts, and identical-output invariants across two parallelism levels
 (same input, fresh JVM per run — the scaling_bench methodology).
 
-Corpus: the bench datagen pages corpus (deterministic, seed 42) at
+Corpus: the datagen pages corpus (deterministic, seed 42) at
 --n docs; documents derive as (doc_id = xxhash64(url), lang, text)
 with a uniqueness assert.  Usage:
 
   python scripts/flagship_scale_probe.py [--n 1000000] \
-      [--levels 8,32] [--probes suffix,flow] [--repeat 1]
+      [--levels 8,32] [--probes suffix,flow] [--repeat 1] [--pages-dir DIR]
+
+The corpus is written to --pages-dir, by default a directory under the
+system temp dir.
 
 Appends a results section to BENCH/BASELINE.md (below the
 hand-maintained marker) and prints one JSON line per (probe, level).
@@ -25,6 +28,7 @@ import json
 import os
 import subprocess
 import sys
+import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -65,7 +69,9 @@ docs.count()
 
 if probe == "suffix":
     import os as _os, shutil as _shutil
-    _spill = "/root/spark-local/suffix-spill"
+    _spill = _os.path.join(
+        _os.environ["SPARK_LOCAL_DIRS"].split(",")[0], "suffix-spill"
+    )
     _os.makedirs(_spill, exist_ok=True)
     _os.environ["MDF_SUFFIX_SPILL_DIR"] = _spill
     from mediaduplicatefinder_spark.operators.suffixarray import (
@@ -121,9 +127,11 @@ def run_once(probe: str, cpus: int, pages_path: str, timeout: int, n_target: int
             **os.environ,
             "PYTHONPATH": REPO,
             # tmpfs "spill" consumes RAM and the kernel OOM-kills the
-            # JVM at probe scale (round-5 finding) — force real disk
+            # JVM at probe scale (round-5 finding): the default sits in
+            # the temp dir like the session's; point SPARK_LOCAL_DIRS at
+            # real disk where the temp dir is tmpfs
             "SPARK_LOCAL_DIRS": os.environ.get(
-                "SPARK_LOCAL_DIRS", "/root/spark-local"
+                "SPARK_LOCAL_DIRS", os.path.join(tempfile.gettempdir(), "spark-local")
             ),
         },
     )
@@ -149,13 +157,16 @@ def main() -> None:
     ap.add_argument("--probes", type=str, default="suffix,flow")
     ap.add_argument("--repeat", type=int, default=1)
     ap.add_argument("--timeout", type=int, default=7200)
+    ap.add_argument("--pages-dir", default=None)
     args = ap.parse_args()
 
     sys.path.insert(0, REPO)
-    import bench
+    from mediaduplicatefinder_spark.datagen.pages import write_pages
 
-    bench.PAGES_N = args.n
-    pages_path = f"{bench.bench_pages_path()}/pages.parquet"
+    pages_dir = args.pages_dir or os.path.join(
+        tempfile.gettempdir(), f"mdf-pages-n{args.n}-s42"
+    )
+    pages_path, _ = write_pages(pages_dir, args.n, 42, min_words=50, max_words=300)
 
     levels = [int(x) for x in args.levels.split(",")]
     sections = []

@@ -8,7 +8,10 @@ the pass-2 universe, main_cli.cpp:755-768), runs the Spark engine on
 the same corpus, and reports recall/precision of the engine's verified
 similar pairs against it. Writes BENCH/RECALL.md.
 
-Usage: python scripts/recall_bench.py [--n 5000]
+Usage: python scripts/recall_bench.py [--n 5000] [--pages-dir DIR]
+
+The corpus (datagen pages, seed 42, 50-300 words) is written to
+--pages-dir, by default a directory under the system temp dir.
 """
 
 from __future__ import annotations
@@ -17,6 +20,7 @@ import argparse
 import datetime as dt
 import os
 import sys
+import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -54,15 +58,17 @@ WHERE CASE WHEN greatest(a.sz, b.sz) > 0
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--n", type=int, default=5000)
+    ap.add_argument("--pages-dir", default=None)
     args = ap.parse_args()
 
     import duckdb
 
-    import bench
+    from mediaduplicatefinder_spark.datagen.pages import write_pages
 
-    bench.PAGES_N = args.n
-    pages_dir = bench.bench_pages_path()
-    pages_path = f"{pages_dir}/pages.parquet"
+    pages_dir = args.pages_dir or os.path.join(
+        tempfile.gettempdir(), f"mdf-pages-n{args.n}-s42"
+    )
+    pages_path, _ = write_pages(pages_dir, args.n, 42, min_words=50, max_words=300)
 
     t0 = time.time()
     con = duckdb.connect()

@@ -5,7 +5,10 @@ Runs the full dedup pipeline at both parallelism levels (each in a fresh
 subprocess -> fresh JVM), takes the best of --repeat runs per level to
 damp sandbox CPU-steal noise, and writes BENCH/BASELINE.md.
 
-Usage: python scripts/scaling_bench.py [--n 50000] [--repeat 2]
+Usage: python scripts/scaling_bench.py [--n 50000] [--repeat 2] [--pages-dir DIR]
+
+The corpus (datagen pages, seed 42, 50-300 words) is written to
+--pages-dir, by default a directory under the system temp dir.
 """
 
 from __future__ import annotations
@@ -16,6 +19,7 @@ import json
 import os
 import subprocess
 import sys
+import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -62,14 +66,16 @@ def main() -> None:
     ap.add_argument("--n", type=int, default=50000)
     ap.add_argument("--repeat", type=int, default=4)
     ap.add_argument("--levels", type=str, default="1,4")  # headline pair: hardware ceiling ~1.0 (see BENCH/BASELINE.md)
+    ap.add_argument("--pages-dir", default=None)
     args = ap.parse_args()
 
     sys.path.insert(0, REPO)
-    import bench
+    from mediaduplicatefinder_spark.datagen.pages import write_pages
 
-    bench.PAGES_N = args.n
-    pages_dir = bench.bench_pages_path()
-    pages_path = f"{pages_dir}/pages.parquet"
+    pages_dir = args.pages_dir or os.path.join(
+        tempfile.gettempdir(), f"mdf-pages-n{args.n}-s42"
+    )
+    pages_path, _ = write_pages(pages_dir, args.n, 42, min_words=50, max_words=300)
 
     lo, hi = (int(x) for x in args.levels.split(","))
     results: dict[int, list[dict]] = {lo: [], hi: []}

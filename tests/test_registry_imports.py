@@ -13,6 +13,8 @@ from __future__ import annotations
 
 import ast
 import importlib
+import importlib.util
+import sys
 from pathlib import Path
 
 import __spark_entry__ as entry
@@ -86,3 +88,29 @@ def test_every_engine_import_resolves():
 def test_every_query_has_an_oracle():
     q, o = set(entry.queries()), set(entry.oracle_sql())
     assert q == o, {"no oracle": sorted(q - o), "no query": sorted(o - q)}
+
+
+def _top_level_imports(path: Path):
+    """(lineno, top-level module) for each absolute import in a file."""
+    tree = ast.parse(path.read_text(), filename=str(path))
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for alias in node.names:
+                yield node.lineno, alias.name.split(".")[0]
+        elif isinstance(node, ast.ImportFrom) and not node.level:
+            yield node.lineno, node.module.split(".")[0]
+
+
+def test_every_script_import_resolves(monkeypatch):
+    """A script's imports resolve from the repo root, where the scripts
+    put themselves on the path (an import of a deleted root module, such
+    as the old benchmark script, otherwise fails only when the script is
+    run)."""
+    monkeypatch.setattr(sys, "path", [str(ROOT), *sys.path])
+    bad = [
+        f"{path.relative_to(ROOT)}:{lineno}: {top}"
+        for path in sorted((ROOT / "scripts").glob("*.py"))
+        for lineno, top in _top_level_imports(path)
+        if importlib.util.find_spec(top) is None
+    ]
+    assert not bad, "unresolved script imports:\n" + "\n".join(bad)
