@@ -415,7 +415,7 @@ def _q_metablocking_pairs(spark, sf_dir):
     comparison graph over the band block collection (blocks purged at
     64), weighted node pruning (union variant) — the TKDE'14 candidate
     refinement. Oracle: same blocks / integer weights / exact int-avg
-    pruning re-derived from the SQL mh_bands/sim_bands relations."""
+    pruning re-derived from the SQL mh_bands relation."""
     from mediaduplicatefinder_spark.operators.extract import (
         extracted_or_given_text,
     )
@@ -487,64 +487,6 @@ def _q_bitext_margin_pairs_lsh(spark, sf_dir):
         floor=0.3,
         margin_threshold=1.5,
         cand_pairs=cand,
-    )
-
-
-def _q_salsa_scores(spark, sf_dir):
-    """E209 SALSA (operators/linkgraph.py, Lempel/Moran WWW'00): HITS
-    with every traversal normalized by the crossing node's degree —
-    the random-walk formulation that fixes the Tightly-Knit-Community
-    effect (a mega-hub splits its endorsement instead of flooding a
-    link farm with authority). Same 40-host synthesis, 4 sweeps,
-    integer divisions + max-norm. Oracle: the degree-divided sweep
-    chain unrolled (linkgraph_salsa_sql)."""
-    from mediaduplicatefinder_spark.operators.linkgraph import (
-        linkgraph_salsa,
-    )
-
-    return linkgraph_salsa(_pr_pages_df(spark, sf_dir))
-
-
-def _q_mirror_hosts_structural(spark, sf_dir):
-    """E208 structural mirror detection (operators/linkpred.py):
-    out-neighborhood Jaccard >= 1/2 over host pairs of the shared
-    40-host link graph (E77 synthesis) — mirrors serve the same
-    content so they link the same places; the structural sibling of
-    the content-keyed mirror_hosts (E113). Integer cross-multiplied
-    threshold, one reported division. Oracle: identical extraction +
-    middle-join (neighborhood_jaccard_sql)."""
-    from mediaduplicatefinder_spark.operators.linkgraph import (
-        extract_host_links,
-    )
-    from mediaduplicatefinder_spark.operators.linkpred import (
-        neighborhood_jaccard_pairs,
-    )
-
-    return neighborhood_jaccard_pairs(
-        extract_host_links(_pr_pages_df(spark, sf_dir)),
-        min_common=2,
-        thr_num=1,
-        thr_den=2,
-    )
-
-
-def _q_ra_link_pairs(spark, sf_dir):
-    """E207 resource-allocation link prediction (operators/linkpred.py,
-    Zhou/Lü/Zhang EPJ-B'09) over the pipeline's verified similar
-    edges: non-edges scored by Σ floor(10^6/deg(z)) over shared
-    neighbors z — the recall-repair worklist (likely missed pairs to
-    re-verify). RA over Adamic-Adar because 1/deg needs no libm log —
-    scores are exact integers in both engines. Oracle: identical tail
-    over the dedup twin's edges (ra_tail_sql)."""
-    from mediaduplicatefinder_spark.operators.linkpred import ra_link_pairs
-    from mediaduplicatefinder_spark.operators.verify import similar_edges
-    from mediaduplicatefinder_spark.pipeline import run_dedup
-
-    res = run_dedup(
-        spark, _docs_as_pages(spark, sf_dir), DEFAULT_CONFIG, use_html=False
-    )
-    return ra_link_pairs(
-        similar_edges(res.pairs).select("url_a", "url_b"), min_common=2
     )
 
 
@@ -1212,41 +1154,6 @@ def _q_bbit_minhash_pairs(spark, sf_dir):
     sigs = compute_signatures(docs, DEFAULT_CONFIG, min_partitions=32).persist()
     cands, _, _ = candidate_pairs(sigs, DEFAULT_CONFIG)
     return bbit_minhash_pairs(cands, sigs, DEFAULT_CONFIG)
-
-
-def _pr_pages_df(spark, sf_dir):
-    """The shared 40-host link-graph synthesis (E77/E193/E195): each
-    page links 3 pseudo-random hosts — MUST stay bit-identical to the
-    SQL twin `_pr_pages` for every link-graph oracle to hold."""
-    d = _docs(spark, sf_dir)
-    doc = F.col("doc_id")
-    h = F.pmod(doc, F.lit(40))
-    url = F.format_string("http://site-%03d.example.org/p%07d", h, doc)
-    anchors = [
-        F.format_string(
-            '<a href="http://site-%%03d.example.org/q%d">l</a>' % k,
-            F.pmod(doc * 3 + F.lit(17 * k + 1), F.lit(40)),
-        )
-        for k in range(3)
-    ]
-    html = F.concat(
-        F.lit("<html><body>"), *anchors, F.lit("</body></html>")
-    )
-    return d.select(url.alias("url"), html.alias("html"))
-
-
-def _q_linkgraph_pagerank(spark, sf_dir):
-    """E77 host link graph + fixed-point PageRank (operators/
-    linkgraph.py): anchor-host extraction via regexp_extract_all over
-    synthesized html (each page links 3 pseudo-random hosts), then 5
-    damped GraphFrames-style rank iterations in scaled-integer
-    arithmetic (Spark `div` == DuckDB `//`) — the iterative result is
-    a hard integer check; the oracle unrolls the loop as CTEs."""
-    from mediaduplicatefinder_spark.operators.linkgraph import (
-        linkgraph_pagerank,
-    )
-
-    return linkgraph_pagerank(_pr_pages_df(spark, sf_dir))
 
 
 def _q_cardinality_sketch(spark, sf_dir):
@@ -2771,81 +2678,6 @@ def _q_readability_scores(spark, sf_dir):
     return with_readability(_docs(spark, sf_dir).select("doc_id", "text"))
 
 
-def _q_kcore_nodes(spark, sf_dir):
-    """E190 k-core peel (operators/kcore.py, Seidman 1983) over the
-    full pipeline's verified similar edges: the round-3 state of the
-    3-core iteration — dense dup communities (template farms, mirror
-    rings) survive, chain tails and borderline stars peel away.
-    Oracle: the dedup twin's edges + the identical 3 unrolled peel
-    rounds (kcore_tail_sql)."""
-    from mediaduplicatefinder_spark.operators.kcore import kcore_peel
-    from mediaduplicatefinder_spark.operators.verify import similar_edges
-    from mediaduplicatefinder_spark.pipeline import run_dedup
-
-    res = run_dedup(
-        spark, _docs_as_pages(spark, sf_dir), DEFAULT_CONFIG, use_html=False
-    )
-    return kcore_peel(
-        similar_edges(res.pairs).select("url_a", "url_b", "score"),
-        k=3,
-        rounds=3,
-    )
-
-
-def _q_ktruss_edges(spark, sf_dir):
-    """E191 k-truss peel (operators/kcore.py, Cohen 2008) over the
-    verified similar edges: round-3 state of the 4-truss iteration —
-    every surviving edge sits in >= 2 triangles of the surviving
-    subgraph, so feeding survivors to connected components gives
-    chaining-resistant clusters with no score threshold. Oracle: the
-    dedup twin's edges + 3 unrolled support-filter rounds
-    (ktruss_tail_sql)."""
-    from mediaduplicatefinder_spark.operators.kcore import ktruss_peel
-    from mediaduplicatefinder_spark.operators.verify import similar_edges
-    from mediaduplicatefinder_spark.pipeline import run_dedup
-
-    res = run_dedup(
-        spark, _docs_as_pages(spark, sf_dir), DEFAULT_CONFIG, use_html=False
-    )
-    return ktruss_peel(
-        similar_edges(res.pairs).select("url_a", "url_b", "score"),
-        k=4,
-        rounds=3,
-    )
-
-
-def _q_lpa_communities(spark, sf_dir):
-    """E192 synchronous label propagation (operators/lpa.py, Raghavan
-    2007, determinized: self-vote + min-label ties) over the verified
-    similar edges: round-4 label state — community seams fall inside
-    chained components without any density threshold. Oracle: the
-    dedup twin's sym closure + 4 unrolled vote rounds with the
-    identical (votes DESC, label ASC) window (lpa_tail_sql)."""
-    from mediaduplicatefinder_spark.operators.lpa import lpa_communities
-    from mediaduplicatefinder_spark.operators.verify import similar_edges
-    from mediaduplicatefinder_spark.pipeline import run_dedup
-
-    res = run_dedup(
-        spark, _docs_as_pages(spark, sf_dir), DEFAULT_CONFIG, use_html=False
-    )
-    return lpa_communities(
-        similar_edges(res.pairs).select("url_a", "url_b", "score"), rounds=4
-    )
-
-
-def _q_linkgraph_hits(spark, sf_dir):
-    """E193 HITS hubs & authorities (operators/linkgraph.py, Kleinberg
-    JACM 1999) over the same synthesized host link graph as E77
-    PageRank: 4 integer fixed-point sweeps with L-infinity
-    normalization (max-norm keeps everything in int64 — no sqrt), the
-    per-sweep max broadcast back as a 1-row aggregate. Oracle: the
-    sweeps unrolled as CTEs with scalar-subquery max-norm
-    (linkgraph_hits_sql)."""
-    from mediaduplicatefinder_spark.operators.linkgraph import linkgraph_hits
-
-    return linkgraph_hits(_pr_pages_df(spark, sf_dir))
-
-
 def _wt_pages(spark, sf_dir):
     """Synthesized web-table pages for E196/E197: 5-doc groups where
     table 1 varies by doc (m=1 perturbed cell, m=2 short rows, m=3
@@ -3014,28 +2846,6 @@ def _q_webtable_match_pairs(spark, sf_dir):
         b, (F.col("ga") == F.col("gb")) & (F.col("url_a") < F.col("url_b"))
     ).select("url_a", "url_b")
     return webtable_match_pairs(cells, pairs)
-
-
-def _q_trustrank_scores(spark, sf_dir):
-    """E195 TrustRank (operators/linkgraph.py, Gyöngyi/Garcia-Molina/
-    Pedersen VLDB'04): PageRank with teleport mass restricted to 5
-    vetted seed hosts (site-000..004) over the same synthesized
-    40-host link graph as E77 — trust flows out of seeds, hosts
-    reachable only from the unseeded tail end near zero; low-trust ×
-    high-PR is the link-farm signature. Same integer fixed-point
-    contract; oracle unrolls with a seed CASE on the base term
-    (trustrank_sql)."""
-    from mediaduplicatefinder_spark.operators.linkgraph import (
-        trustrank_fixed,
-        extract_host_links,
-    )
-
-    seeds = spark.createDataFrame(
-        [(f"site-{i:03d}.example.org",) for i in range(5)], "host string"
-    )
-    return trustrank_fixed(
-        extract_host_links(_pr_pages_df(spark, sf_dir)), seeds
-    )
 
 
 def _q_phash_media(spark, sf_dir):
@@ -3595,7 +3405,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         # -- r5 window block 1: sessions-1-3 backlog (SURVEY §8.1) -------
         "jaccard_histogram": _q_jaccard_histogram,
-        "linkgraph_pagerank": _q_linkgraph_pagerank,
         "cdc_dedup": _q_cdc_dedup,
         "audio_fingerprint": _q_audio_fingerprint,
         "video_dup_pairs": _q_video_dup_pairs,
@@ -3619,11 +3428,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "passage_windows": _q_passage_windows,
         "vocab_profile": _q_vocab_profile,
         # -- r5 window block 3: session-13 graph-peel (SURVEY §8.3) -----
-        "kcore_nodes": _q_kcore_nodes,
-        "ktruss_edges": _q_ktruss_edges,
-        "lpa_communities": _q_lpa_communities,
-        "linkgraph_hits": _q_linkgraph_hits,
-        "trustrank_scores": _q_trustrank_scores,
         "html_table_cells": _q_html_table_cells,
         "webtable_match_pairs": _q_webtable_match_pairs,
         "readability_scores": _q_readability_scores,
@@ -3631,9 +3435,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "hilbert_layout": _q_hilbert_layout,
         "bitext_margin_pairs": _q_bitext_margin_pairs,
         "bitext_margin_pairs_lsh": _q_bitext_margin_pairs_lsh,
-        "ra_link_pairs": _q_ra_link_pairs,
-        "mirror_hosts_structural": _q_mirror_hosts_structural,
-        "salsa_scores": _q_salsa_scores,
         # -- sessions 9-12 value-twin block (SURVEY §8.4) ---------------
         "ctph_pairs": _q_ctph_pairs,
         "cc_twophase_groups": _q_cc_twophase_groups,
@@ -4167,8 +3968,7 @@ WHERE jaccard > {DEFAULT_CONFIG.jaccard_threshold}
     out["metablocking_pairs"] = lsh_sql.lsh_base_cte() + """
 , mb_blocks AS (
   SELECT d.lang, b.band, b.bh, b.url
-  FROM (SELECT url, band, bh FROM mh_bands
-        UNION ALL SELECT url, band, bh FROM sim_bands) b
+  FROM mh_bands b
   JOIN doc_stats d USING (url)
 ),
 mb_live AS (
@@ -5410,37 +5210,6 @@ FROM u
     """
     out["cardinality_sketch"] = cardinality_sketch_sql(_sketch_items)
 
-    from mediaduplicatefinder_spark.operators.linkgraph import (
-        linkgraph_pagerank_sql,
-    )
-
-    _pr_pages = """
-        SELECT printf('http://site-%03d.example.org/p%07d',
-                      doc_id % 40, doc_id) AS url,
-               '<html><body>'
-               || printf('<a href="http://site-%03d.example.org/q0">l</a>',
-                         (doc_id * 3 + 1) % 40)
-               || printf('<a href="http://site-%03d.example.org/q1">l</a>',
-                         (doc_id * 3 + 18) % 40)
-               || printf('<a href="http://site-%03d.example.org/q2">l</a>',
-                         (doc_id * 3 + 35) % 40)
-               || '</body></html>' AS html
-        FROM documents
-    """
-    out["linkgraph_pagerank"] = linkgraph_pagerank_sql(_pr_pages)
-
-    from mediaduplicatefinder_spark.operators.linkgraph import (
-        linkgraph_hits_sql,
-    )
-
-    out["linkgraph_hits"] = linkgraph_hits_sql(_pr_pages)
-
-    from mediaduplicatefinder_spark.operators.linkgraph import trustrank_sql
-
-    out["trustrank_scores"] = trustrank_sql(
-        _pr_pages, "host <= 'site-004.example.org'"
-    )
-
     from mediaduplicatefinder_spark.operators.webtables import (
         webtable_match_tail_sql,
     )
@@ -5888,33 +5657,6 @@ LEFT JOIN sizes s ON s.cluster_id = f.cluster_id
     )
     out["paragraph_dedup"] = paragraph_dedup_sql(_para_inject)
 
-    from mediaduplicatefinder_spark.oracle.lsh_sql import (
-        _exact_and_edges_ctes,
-        lsh_base_cte,
-    )
-
-    from mediaduplicatefinder_spark.operators.kcore import (
-        kcore_tail_sql,
-        ktruss_tail_sql,
-    )
-    from mediaduplicatefinder_spark.operators.lpa import lpa_tail_sql
-
-    out["kcore_nodes"] = (
-        lsh_base_cte(DEFAULT_CONFIG)
-        + _exact_and_edges_ctes(DEFAULT_CONFIG)
-        + kcore_tail_sql(k=3, rounds=3)
-    )
-    out["ktruss_edges"] = (
-        lsh_base_cte(DEFAULT_CONFIG)
-        + _exact_and_edges_ctes(DEFAULT_CONFIG)
-        + ktruss_tail_sql(k=4, rounds=3)
-    )
-    out["lpa_communities"] = (
-        lsh_base_cte(DEFAULT_CONFIG)
-        + _exact_and_edges_ctes(DEFAULT_CONFIG)
-        + lpa_tail_sql(rounds=4)
-    )
-
     from mediaduplicatefinder_spark.functions.textstats import (
         readability_sql,
     )
@@ -5988,39 +5730,6 @@ LEFT JOIN sizes s ON s.cluster_id = f.cluster_id
 
     out["bitext_margin_pairs"] = margin_pairs_sql(
         k=4, floor=0.3, margin_threshold=1.2
-    )
-
-    from mediaduplicatefinder_spark.operators.linkgraph import (
-        _HREF_RE,
-        _URL_RE,
-    )
-    from mediaduplicatefinder_spark.operators.linkpred import (
-        neighborhood_jaccard_sql,
-    )
-
-    out["mirror_hosts_structural"] = neighborhood_jaccard_sql(
-        f"""SELECT DISTINCT src, dst FROM (
-              SELECT regexp_extract(url, '{_URL_RE}', 1) AS src,
-                     unnest(regexp_extract_all(html, '{_HREF_RE}', 1)) AS dst
-              FROM ({_pr_pages})
-            ) WHERE src <> dst""",
-        min_common=2,
-        thr_num=1,
-        thr_den=2,
-    )
-
-    from mediaduplicatefinder_spark.operators.linkgraph import (
-        linkgraph_salsa_sql,
-    )
-
-    out["salsa_scores"] = linkgraph_salsa_sql(_pr_pages)
-
-    from mediaduplicatefinder_spark.operators.linkpred import ra_tail_sql
-
-    out["ra_link_pairs"] = (
-        lsh_sql.lsh_base_cte()
-        + lsh_sql._exact_and_edges_ctes(DEFAULT_CONFIG)
-        + ra_tail_sql(min_common=2)
     )
 
     out["bitext_margin_pairs_lsh"] = margin_pairs_sql(

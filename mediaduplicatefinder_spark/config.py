@@ -54,16 +54,11 @@ class EngineConfig:
     # J=0.85 -> 0.99999998; the >0.6 reference threshold means true pairs
     # sit above 0.6, so LSH recall clears the 0.99 bar (verified in tests).
     minhash_seed: int = 0x5EED_0001
-    simhash_bits: int = 64
     simhash_seeds: tuple[int, int] = (0x5EED_A11A, 0x5EED_D11F)
-    # two independent SimHashes play the aHash/dHash pair roles
-    # (main_cli.cpp:161-209): similar iff mean Hamming <= 15 (main_cli.cpp:239)
-    simhash_band_bits: int = 16  # 4 bands x 16 bits per hash for SimHash LSH.
-    # 8-bit bands collide randomly at 1/256 — at n=4k docs/lang that floods
-    # candidate generation with ~300k junk pairs (measured); 16-bit bands
-    # collide at 1/65536, guaranteeing Hamming <= 3 per hash while staying
-    # clean. Near-dup pairs beyond that are caught by the MinHash channel
-    # (they have J > 0.6 by construction of the text decision rule).
+    # two independent 64-bit SimHashes play the aHash/dHash pair roles
+    # (main_cli.cpp:161-209): similar iff mean Hamming <= 15 (main_cli.cpp:239).
+    # They are fingerprints only, not an LSH band channel: the text gate
+    # is Jaccard, so the MinHash bands above are the one candidate channel.
 
     # ---- scale / skew knobs (SURVEY.md §4.3) ----
     doc_key_bits: int = 64  # 64 or 128. The hot path keys docs by
@@ -99,10 +94,6 @@ class EngineConfig:
     @property
     def num_perm(self) -> int:
         return self.minhash_rows * self.minhash_bands
-
-    @property
-    def simhash_bands(self) -> int:
-        return self.simhash_bits // self.simhash_band_bits
 
 
 DEFAULT_CONFIG = EngineConfig()

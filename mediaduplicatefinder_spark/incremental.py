@@ -13,6 +13,10 @@ Iceberg catalog on clusters via the same identifiers):
               size_bytes, n_shingles), **bucketed by (lang, band,
               bh)**: new-vs-old candidate generation reads the store
               co-located; only the new batch's band rows shuffle.
+              Band ids are the MinHash bands 0..b-1. A store built
+              while SimHash chunks were still banded also holds rows
+              with band ids 32-39; no new band row carries those ids,
+              so they join nothing and only take space.
 - ``shas``    (sha256, cluster_id, n_dups) — the exact-dup ledger,
               rewritten whole (unbucketed) on every increment.
 - ``labels``  (url, cluster_id) — current SIMILAR cluster assignment.

@@ -46,12 +46,13 @@ class _Stages:
     one method ``pipeline.run_dedup(store=...)`` calls."""
 
     def run_stage(self, stage: str, build) -> DataFrame:
-        """Idempotent stage execution: load if done, else build+persist."""
+        """Idempotent stage execution: load if done, else build+persist.
+        The builders are lazy, so the stage's work runs inside ``save``'s
+        write; ``save`` stops the clock started here once it is written."""
         if self.is_done(stage):
             return self.load(stage)
-        t0 = time.time()
-        df = build()
-        return self.save(stage, df, time.time() - t0)
+        t0 = time.monotonic()
+        return self.save(stage, build(), t0)
 
 
 class StageStore(_Stages):
@@ -97,13 +98,15 @@ class StageStore(_Stages):
     def load(self, stage: str) -> DataFrame:
         return self.spark.read.parquet(self._stage_dir(stage))
 
-    def save(self, stage: str, df: DataFrame, wall_sec: float) -> DataFrame:
+    def save(self, stage: str, df: DataFrame, t0: float) -> DataFrame:
         """Write df atomically, record lineage (incl. per-partition row
-        counts), return the re-read DataFrame (so downstream reads the
-        persisted bytes, not the lineage-heavy plan)."""
+        counts and ``wall_sec`` from ``t0`` to the end of the write),
+        return the re-read DataFrame (so downstream reads the persisted
+        bytes, not the lineage-heavy plan)."""
         final = self._stage_dir(stage)
         tmp = f"{final}.tmp-{uuid.uuid4().hex[:8]}"
         df.write.mode("overwrite").parquet(tmp)
+        wall_sec = time.monotonic() - t0
         # per-partition progress rows (the "Processed i/n" analog)
         per_part = (
             self.spark.read.parquet(tmp)
@@ -204,9 +207,10 @@ class IcebergStageStore(_Stages):
             return []
         return [r.asDict() for r in self.spark.table(self._lineage_table).collect()]
 
-    def save(self, stage: str, df: DataFrame, wall_sec: float) -> DataFrame:
+    def save(self, stage: str, df: DataFrame, t0: float) -> DataFrame:
         tbl = self._table(stage)
         df.writeTo(tbl).createOrReplace()  # atomic snapshot publish
+        wall_sec = time.monotonic() - t0
         out = self.spark.table(tbl)
         per_part = (
             out.groupBy(F.spark_partition_id().alias("partition_id"))

@@ -2,19 +2,17 @@
 nested-loop J1, main_cli.cpp:598-617) with explicit skew handling
 (SURVEY.md §4.3 item 1).
 
-Two candidate channels, unioned then deduped:
-
-- MinHash bands: equality on (lang, band, band_hash) — P(candidate | J)
-  = 1-(1-J^r)^b, tuned so J > 0.6 pairs (the reference text threshold)
-  are caught with p >= 0.99.
-- SimHash bands: 16-bit chunks of each of the two SimHashes — the
-  Hamming-proximity channel (P4 role); guarantees Hamming <= 3 per hash
-  and avoids the random-collision flood 8-bit chunks produce.
+One candidate channel, the MinHash bands: equality on (lang, band,
+band_hash), P(candidate | J) = 1-(1-J^r)^b, tuned so J > 0.6 pairs (the
+reference text threshold) are caught with p >= 0.988 at J = 0.6 and
+0.993 at J = 0.62. The two SimHash fingerprints are not banded: verify
+gates text on Jaccard alone, so a pair only a SimHash chunk could bring
+in still has to clear J > 0.6, which the MinHash bands already catch.
 
 Plan shape (scale rationale): ONE groupBy shuffle on (lang, band, bh)
 collects each bucket, then an Arrow mapInPandas expands pairs map-side
 with numpy (`triu_indices` for normal buckets) — no window sorts, no
-self-join. Pair dedupe across bands/channels is the one remaining
+self-join. Pair dedupe across bands is the one remaining
 shuffle (SE4: score each pair once). The bucket cap below bounds pair
 expansion, not a hot bucket's ``collect_list`` size, which grows with
 the bucket.
@@ -37,6 +35,16 @@ components converges in O(1) rounds. Dup pairs are counted on cluster
 co-membership, which this preserves for single-cluster hot buckets
 (boilerplate farms); capped bucket/doc counts go to the metrics table
 (no silent caps).
+
+Pair contract: inside a component that a capped bucket joins, the
+verified pairs (``DedupResult.pairs``) are the chain+star edges plus
+whatever pairs its uncapped buckets bring, and a member's SIMILAR
+``score`` is the max over those edges. Cluster co-membership and
+keepers do not depend on which spanning edges were verified. Before the
+SimHash bands were dropped, their uncapped 16-bit buckets verified most
+inner pairs of such components: on ``scripts/recall_bench.py --n 5000``
+the verified pairs fell from 53,968 to 2,428 and 29 member scores from
+0.9497 to 0.9375, with identical clusters and keepers.
 """
 
 from __future__ import annotations
@@ -82,36 +90,12 @@ def pair_key_cols(cfg: EngineConfig) -> list[str]:
     return ["key_a", "key_b"]
 
 
-def _minhash_bands(sigs: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG) -> DataFrame:
-    return sigs.select(
+def lsh_bands(sigs: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG) -> DataFrame:
+    """The MinHash bands of the non-empty docs (band ids 0..b-1) — the
+    one band relation every LSH join in the engine keys on."""
+    return sigs.filter(F.col("n_shingles") > 0).select(
         *_band_cols(cfg), F.posexplode("band_hashes").alias("band", "bh")
     )
-
-
-def _simhash_bands(sigs: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """16-bit chunks of simhash1/simhash2 as extra band channels; band ids
-    offset past the MinHash bands to keep key spaces disjoint."""
-    nb = cfg.simhash_bands
-    chunks = []
-    for which, col in ((0, "simhash1"), (1, "simhash2")):
-        for i in range(nb):
-            band_id = cfg.minhash_bands + which * nb + i
-            chunk = (
-                F.shiftrightunsigned(F.col(col), i * cfg.simhash_band_bits)
-                .bitwiseAND(F.lit((1 << cfg.simhash_band_bits) - 1))
-            )
-            chunks.append(F.struct(F.lit(band_id).alias("band"), chunk.alias("bh")))
-    cols = _band_cols(cfg)
-    return sigs.select(
-        *cols, F.explode(F.array(*chunks)).alias("c")
-    ).select(*cols, F.col("c.band").alias("band"), F.col("c.bh").alias("bh"))
-
-
-def lsh_bands(sigs: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG) -> DataFrame:
-    """Both band channels (MinHash + SimHash) of the non-empty docs —
-    the one band relation every LSH join in the engine keys on."""
-    nonempty = sigs.filter(F.col("n_shingles") > 0)
-    return _minhash_bands(nonempty, cfg).unionByName(_simhash_bands(nonempty, cfg))
 
 
 def _expand_buckets(cfg: EngineConfig):

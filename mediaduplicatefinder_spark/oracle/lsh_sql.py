@@ -18,10 +18,10 @@ is re-expressed in pure SQL over the ``documents`` view:
 - Band hash = splitmix-fold of the r=4 signature rows onto the band
   accumulator (sigcore.SignatureComputer band loop).
 - SimHash = sign-sum of the 64 bits of splitmix64(h ^ sim_seed) over
-  the distinct token set, bit j set iff 2*sum_j > n_tokens; 16-bit
-  chunks are the SimHash band channel (candidates._simhash_bands).
-- Candidates = equality self-join on (lang, band, bh) across both
-  channels with the size-ratio >= 0.3 and shingle-ratio > 0.6
+  the distinct token set, bit j set iff 2*sum_j > n_tokens — a
+  fingerprint for the Hamming output only, not banded.
+- Candidates = equality self-join on the MinHash (lang, band, bh)
+  buckets with the size-ratio >= 0.3 and shingle-ratio > 0.6
   prefilters (candidates._expand_buckets), DISTINCT pairs.
 - Verify = exact Jaccard over the xor-folded 32-bit distinct hash
   sets (hashing.fold32 / verify.jaccard_hashes_udf) and mean SimHash
@@ -258,12 +258,6 @@ simhash AS MATERIALIZED (
   SELECT url, k, sum(fp * (1::HUGEINT << j))::UBIGINT AS s
   FROM sim_bits GROUP BY url, k
 ),
-sim_bands AS (
-  SELECT url, {cfg.minhash_bands} + k * {cfg.simhash_bands} + i AS band,
-         ((s >> (i * {cfg.simhash_band_bits}))
-          % {1 << cfg.simhash_band_bits})::UBIGINT AS bh
-  FROM simhash, unnest(range(0, {cfg.simhash_bands})) AS c(i)
-),
 dkeys AS MATERIALIZED (  -- Spark xxhash64(url): the engine's doc_key
   {xxh64_doc_key_cte()}
 ),
@@ -272,9 +266,7 @@ members AS MATERIALIZED (
          count(*) OVER (PARTITION BY d.lang, b.band, b.bh) AS bcnt,
          row_number() OVER (PARTITION BY d.lang, b.band, b.bh
                             ORDER BY k.dk) AS brn
-  FROM (SELECT url, band, bh FROM mh_bands
-        UNION ALL
-        SELECT url, band, bh FROM sim_bands) b
+  FROM mh_bands b
   JOIN doc_stats d USING (url)
   -- SIGNED int64 order: the engine's expand sorts doc_key as int64
   JOIN (SELECT url, CASE WHEN dk >= {1 << 63}

@@ -26,12 +26,20 @@ Shuffle budget at scale (the plan the judge should see):
   1× exchange on cluster_id     (keeper window + rollups)
 
 This is the engine's one composition: candidates come only from the
-MinHash + SimHash LSH bands (operators/candidates.py) and SIMILAR labels
-only from connected components over the verified edges (the reference's
-single linkage). Alternative candidate generators and merge rules stay
-standalone operators (ppjoin, supershingle, kcore, lpa) and are not
-switchable here. ``perfbench/spans.layered_pass`` replays this
-composition layer by layer and must stay in step with it.
+MinHash LSH bands (operators/candidates.py; the SimHash fingerprints are
+carried for the Hamming output, not banded) and SIMILAR labels only from
+connected components over the verified edges (the reference's single
+linkage). Alternative candidate generators stay standalone operators
+(ppjoin, supershingle) and are not switchable here.
+``perfbench/spans.layered_pass`` replays this composition layer by
+layer and must stay in step with it.
+
+``DedupResult.pairs`` holds the verified pairs the buckets emit, so
+inside a component that a capped bucket joins they are its chain+star
+edges (plus any pairs its uncapped buckets bring), and a member's
+SIMILAR ``score`` is the max over those edges. Co-membership and keepers
+do not depend on which spanning edges were verified (candidates.py
+gives the measured change when the SimHash bands were dropped).
 
 Resume runs through this same function: given a ``store`` (any object
 with ``run_stage(name, build)``, e.g. ``ledger.StageStore``), each stage

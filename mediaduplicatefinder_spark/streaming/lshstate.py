@@ -10,7 +10,9 @@ operator keeps the LSH bucket membership as streaming state:
 
 - each page is signed by the SAME fused mapInPandas front end the batch
   pipeline uses (signatures.page_signatures — identical MinHash/band
-  config, so streaming and batch candidates are comparable 1:1);
+  config) and banded like ``candidates.lsh_bands``: the MinHash bands
+  of the non-empty docs, the batch path's only channel too, so
+  streaming and batch buckets are comparable 1:1;
 - band rows group by (lang, band, bh); per group,
   ``applyInPandasWithState`` holds the member list (doc_key, url) seen
   so far and emits (new x stored) + (new x new) candidate pairs,
@@ -111,11 +113,13 @@ def streaming_lsh_candidates(
     One stateful shuffle on (lang, band, bh) per micro-batch; everything
     upstream is the narrow fused signature pass."""
     sigs = page_signatures(pages, cfg, use_html=False)
-    # unlike the batch band explode (candidates._minhash_bands, which
-    # strips urls and rejoins them at the output edge), the streaming
-    # state must hold urls directly — there is no corpus table to
-    # rejoin against when a pair spans micro-batches
-    bands = sigs.select(
+    # the batch band filter (candidates.lsh_bands): empty docs share one
+    # signature, so they would fill one junk bucket per band and trip
+    # the cap. Unlike lsh_bands, which strips urls and rejoins them at
+    # the output edge, the streaming state must hold urls directly —
+    # there is no corpus table to rejoin against when a pair spans
+    # micro-batches
+    bands = sigs.filter(F.col("n_shingles") > 0).select(
         "doc_key",
         "url",
         "lang",

@@ -51,7 +51,7 @@ def _corpus(n=60, seed=7):
 
 
 def _python_replay(pdf: pd.DataFrame, cfg=CFG):
-    """Engine-kernel replay: sigcore signatures -> banded buckets ->
+    """Engine-kernel replay: sigcore signatures -> MinHash band buckets ->
     prefiltered pairs -> fold32 Jaccard + mean Hamming."""
     comp = SignatureComputer(cfg)
     sigs = comp.compute(list(pdf["text"]))
@@ -66,15 +66,6 @@ def _python_replay(pdf: pd.DataFrame, cfg=CFG):
             continue
         for b, bh in enumerate(sigs["band_hashes"][d]):
             buckets[(langs[d], b, int(bh))].append(d)
-        s1 = np.uint64(np.int64(sigs["simhash1"][d]))
-        s2 = np.uint64(np.int64(sigs["simhash2"][d]))
-        nb, bb = cfg.simhash_bands, cfg.simhash_band_bits
-        for k, s in enumerate((s1, s2)):
-            for i in range(nb):
-                chunk = int((s >> np.uint64(i * bb)) & np.uint64((1 << bb) - 1))
-                buckets[
-                    (langs[d], cfg.minhash_bands + k * nb + i, chunk)
-                ].append(d)
 
     folded = [set(hashing.fold32(np.asarray(t))) for t in sigs["token_hashes"]]
     pairs = {}
@@ -133,8 +124,8 @@ def test_lsh_sql_matches_engine_kernels():
 
 
 def test_lsh_sql_generator_handles_nondefault_config():
-    """The SQL builders are config-parameterized (seeds, r, b, band
-    bits, thresholds are inlined per config) — check a non-default
+    """The SQL builders are config-parameterized (seeds, r, b and
+    thresholds are inlined per config) — check a non-default
     EngineConfig against the python replay so the generator is not
     silently DEFAULT_CONFIG-shaped."""
     import dataclasses

@@ -17,9 +17,9 @@ class _RecordingStore(StageStore):
         super().__init__(*a, **kw)
         self.saved: list[str] = []
 
-    def save(self, stage, df, wall_sec):
+    def save(self, stage, df, t0):
         self.saved.append(stage)
-        return super().save(stage, df, wall_sec)
+        return super().save(stage, df, t0)
 
 
 def _clusters_key(df) -> list[tuple]:

@@ -143,3 +143,30 @@ def test_bucket_cap_bounds_state_and_pairs(spark, tmp_path):
     markers = got.where("key_a IS NULL")
     assert markers.count() > 0
     assert markers.agg({"n_dropped": "max"}).collect()[0][0] == 2
+
+
+def test_empty_pages_never_enter_buckets(spark, tmp_path):
+    """Pages with no token longer than two chars share one signature.
+    Banded like the batch path, they form no bucket: bucket_cap + 1 of
+    them emit no pair rows and no overflow marker rows."""
+    inp, out, ck = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ck")
+    (tmp_path / "in").mkdir()
+    ts = dt.datetime(2025, 1, 1, tzinfo=dt.timezone.utc)
+    texts = ["", "a b c", "ok to"]
+    cfg = EngineConfig(bucket_cap=len(texts) - 1)
+    empty = pd.DataFrame(
+        {
+            "url": [f"u://empty{i}" for i in range(len(texts))],
+            "warc_ts": [ts] * len(texts),
+            "html": [b""] * len(texts),
+            "text": texts,
+            "lang": ["en"] * len(texts),
+        }
+    )
+    _write_pages(empty, inp, "b0.parquet")
+    stream = ingest.read_pages_stream(spark, inp)
+    q = ingest.run_to_parquet(
+        lshstate.streaming_lsh_candidates(stream, cfg), out, ck
+    )
+    q.awaitTermination()
+    assert spark.read.schema(lshstate.OUT_SCHEMA).parquet(out).count() == 0
