@@ -81,11 +81,6 @@ class EngineConfig:
     # chain edges + connected components preserve for single-cluster hot
     # buckets — the dominant skew case (boilerplate farms).
     cc_max_iterations: int = 20   # connected-components driver loop bound
-    cc_shuffle_partitions: int = 8  # FLOOR for the CC loop's exchange
-    # width: parts = clamp(n_edges/100k, cc_shuffle_partitions,
-    # 2*defaultParallelism). Label tables are tiny vs the corpus; small
-    # fixed exchanges keep the driver-loop serial floor low (scale
-    # deployments raise this with label-table size).
     cc_reliable_checkpoint: bool = False  # localCheckpoint stores blocks on
     # executors and LOSES them on executor failure; cluster deployments
     # set True (+ spark.sparkContext.setCheckpointDir) so CC rounds

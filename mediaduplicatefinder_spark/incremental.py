@@ -135,6 +135,8 @@ class IngestResult:
     labels: DataFrame           # full updated url -> cluster_id (SIMILAR)
     new_edges: DataFrame        # verified similar pairs involving new docs
     n_new: int
+    capped_buckets: int         # batch LSH buckets over cfg.bucket_cap
+    capped_docs: int            # band rows in those buckets (chain+star)
 
 
 def _t(db: str, name: str) -> str:
@@ -512,31 +514,6 @@ def _f2_gate(pairs: DataFrame, cfg: EngineConfig) -> DataFrame:
     )
 
 
-def _gate_external_candidates(
-    raw: DataFrame, all_sigs: DataFrame, cfg: EngineConfig
-) -> DataFrame:
-    """Raw externally-generated pairs (lang, key_a, key_b) -> the batch
-    kernel's candidate schema through the same F2 gate the bucket
-    expansion applies, using stats joined from the signature tables.
-    Without it a streaming-found pair could pass verify while the batch
-    path never considered it — breaking cluster parity."""
-    stats = all_sigs.select("doc_key", "size_bytes", "n_shingles")
-    ga = stats.select(
-        F.col("doc_key").alias("key_a"),
-        F.col("size_bytes").alias("sz_a"),
-        F.col("n_shingles").alias("nsh_a"),
-    )
-    gb = stats.select(
-        F.col("doc_key").alias("key_b"),
-        F.col("size_bytes").alias("sz_b"),
-        F.col("n_shingles").alias("nsh_b"),
-    )
-    return _f2_gate(
-        raw.select("lang", "key_a", "key_b").join(ga, "key_a").join(gb, "key_b"),
-        cfg,
-    )
-
-
 def ingest_batch(
     spark: SparkSession,
     pages: DataFrame,
@@ -544,7 +521,6 @@ def ingest_batch(
     cfg: EngineConfig = DEFAULT_CONFIG,
     use_html: bool = True,
     on_recrawl: str = "error",
-    candidates: DataFrame | None = None,
 ) -> IngestResult:
     """Dedup one batch of new pages against (and into) the store.
 
@@ -553,17 +529,11 @@ def ingest_batch(
     store) shuffle ONLY new-batch rows — per-increment shuffle volume is
     O(|batch|), independent of corpus size.
 
-    ``candidates`` (optional, 64-bit key profile only): externally
-    produced raw candidate pairs ``(lang, key_a, key_b)`` — e.g. the
-    streaming LSH state operator's output (streaming/lshstate.py).
-    When given, the store-side band joins are SKIPPED: the pairs are
-    re-canonicalized by key order, gated by the same F2 prefilters the
-    batch kernel applies (size ratio + shingle-count ratio, derived by
-    joining the signature tables), deduplicated, and fed to the normal
-    verify stage.  Pairs whose keys are unknown to (batch survivors ∪
-    stored sigs) — e.g. exact-dup members the state operator tracked —
-    drop out of the verify join exactly as they would never have been
-    generated by the batch path.
+    Candidates come from one source, the store's LSH bands: new-new
+    pairs from banding the batch survivors (the batch kernel, chain+star
+    over ``cfg.bucket_cap``) and new-old pairs from joining their band
+    rows to the ``bands`` table through the same F2 gate. Streaming dedup
+    (streaming/dedupstream.py) calls this once per micro-batch.
     """
     # both doc-key profiles supported: under cfg.doc_key_bits == 128 the
     # sigs/bands tables simply carry the extra doc_key2 column, the
@@ -692,30 +662,10 @@ def ingest_batch(
         merged.select(F.col("cluster_id").alias("url")), "url", "left_semi"
     ).persist()
 
-    if candidates is not None:
-        if wide:
-            raise ValueError(
-                "external candidates are 64-bit key pairs; the 128-bit "
-                "doc-key profile needs the store-side band joins"
-            )
-        all_sigs = (
-            survivors
-            if first
-            else survivors.unionByName(
-                spark.table(_t(db, "sigs")), allowMissingColumns=True
-            )
-        )
-        cands = _gate_external_candidates(candidates, all_sigs, cfg)
-        buckets = None
-        skip_band_joins = True
-    else:
-        skip_band_joins = False
     # ---- candidates: new-new (groupBy banding) + new-old (band join) ----
-    if not skip_band_joins:
-        nn_cands, _metrics, buckets = candidate_pairs(survivors, cfg)
-        all_sigs = survivors
-        cands = nn_cands
-    if not skip_band_joins and not first:
+    cands, bucket_metrics, buckets = candidate_pairs(survivors, cfg)
+    all_sigs = survivors
+    if not first:
         bands_new = lsh_bands(survivors, cfg)
         bands_old = spark.table(_t(db, "bands"))
         a2 = [F.col("doc_key2").alias("key_a2")] if wide else []
@@ -743,7 +693,7 @@ def ingest_batch(
             ),
             cfg,
         )
-        cands = nn_cands.unionByName(no_cands).dropDuplicates(pair_key_cols(cfg))
+        cands = cands.unionByName(no_cands).dropDuplicates(pair_key_cols(cfg))
         all_sigs = survivors.unionByName(
             spark.table(_t(db, "sigs")), allowMissingColumns=True
         )
@@ -753,6 +703,8 @@ def ingest_batch(
     # DataFrames must not lazily re-read tables this ingest replaces
     new_edges = similar_edges(verified).localCheckpoint(eager=True)
     exact_clusters = exact_clusters.localCheckpoint(eager=True)
+    # skew of this increment's new-new banding (read off the bucket cache)
+    capped = bucket_metrics.select("capped_buckets", "capped_docs").first()
 
     # ---- cluster merge: old labels are star edges; CC over the union ----
     if first:
@@ -856,8 +808,7 @@ def ingest_batch(
                 f"ALTER TABLE {labels_tbl} DROP IF EXISTS PARTITION (part={p})"
             )
 
-    if buckets is not None:
-        buckets.unpersist()
+    buckets.unpersist()
     sigs_new.unpersist()
     merged.unpersist()
     survivors.unpersist()
@@ -867,4 +818,6 @@ def ingest_batch(
         labels=spark.table(_t(db, "labels")),
         new_edges=new_edges,
         n_new=n_new,
+        capped_buckets=capped.capped_buckets or 0,
+        capped_docs=capped.capped_docs or 0,
     )

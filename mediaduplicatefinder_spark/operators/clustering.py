@@ -33,6 +33,11 @@ from pyspark.sql import functions as F
 
 from mediaduplicatefinder_spark.config import DEFAULT_CONFIG, EngineConfig
 
+CC_MIN_PARTITIONS = 8  # floor of the loop's exchange width: parts =
+# clamp(n_edges/100k, CC_MIN_PARTITIONS, 2*defaultParallelism). Label
+# tables are tiny vs the corpus; small exchanges keep the loop's serial
+# floor low, and the edge term widens them at scale.
+
 
 def connected_components(
     edges: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG
@@ -69,7 +74,7 @@ def connected_components(
     n_edges = sym.count()
     parts = int(
         min(
-            max(cfg.cc_shuffle_partitions, n_edges // 100_000),
+            max(CC_MIN_PARTITIONS, n_edges // 100_000),
             2 * spark.sparkContext.defaultParallelism,
         )
     )

@@ -87,7 +87,6 @@ def run_dedup(
     cfg: EngineConfig = DEFAULT_CONFIG,
     scan_root: str = "",
     use_html: bool = True,
-    sigs_all: DataFrame | None = None,
     store=None,
 ) -> DedupResult:
     n_par = spark.sparkContext.defaultParallelism
@@ -106,18 +105,10 @@ def run_dedup(
         # signatures, zero exchanges (sig-first: the text column is
         # consumed map-side; only ~1 KB signature rows reach the exact
         # pass's hash shuffle. minhash stays internal — slim schema.)
-        # ``sigs_all`` injects precomputed page_signatures rows (same
-        # schema, carry_sha256) — content-keyed reuse: a snapshot-churn
-        # job comparing corpus subsets computes signatures ONCE and
-        # filters per snapshot instead of re-running the Arrow pass per
-        # subset (signatures are a pure per-row function of (url, text),
-        # so the result is identical by construction; parity-tested).
-        rows = sigs_all
-        if rows is None:
-            rows = page_signatures(
-                pages, cfg, min_partitions=n_par, use_html=use_html,
-                include_minhash=False,
-            )
+        rows = page_signatures(
+            pages, cfg, min_partitions=n_par, use_html=use_html,
+            include_minhash=False,
+        )
         # ---- pass 1: exact duplicates (one shuffle on sha256, sig rows)
         return exact_ops.exact_groups(rows)
 

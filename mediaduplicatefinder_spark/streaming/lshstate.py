@@ -33,9 +33,11 @@ shuffle per micro-batch is O(batch x bands), independent of corpus
 size; this is the streaming twin of incremental.py's bucketed-store
 design (E20) with Spark managing the store.
 
-Downstream, candidates feed the SAME verify stage as the batch path
-(operators/verify.py) via foreachBatch; this module owns candidate
-generation, which is the stateful part.
+This is a standalone operator: no engine path consumes its pairs.
+Streaming dedup to clusters (streaming/dedupstream.py) runs each
+micro-batch through ``incremental.ingest_batch``, whose bucketed band
+store already pairs new pages against everything stored, with
+chain+star expansion instead of dropping arrivals past the cap.
 """
 
 from __future__ import annotations

@@ -57,7 +57,7 @@ def test_streaming_clusters_match_full_recompute(spark, tiny_corpus, tmp_path):
         _write_pages(part, str(inp), f"b{i}.parquet")
 
     # one file per micro-batch: cross-batch pairs must come from the
-    # LSH state, cross-batch groups from the store's label star edges
+    # store's band join, cross-batch groups from its label star edges
     stream = ingest.read_pages_stream(spark, str(inp), max_files_per_trigger=1)
     q = streaming_dedup(
         spark, stream, db, checkpoint=str(tmp_path / "ck")
@@ -100,34 +100,48 @@ def test_streaming_clusters_match_full_recompute(spark, tiny_corpus, tmp_path):
     spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
 
 
-def test_bucket_cap_drops_reported_as_lsh_overflow(spark, tmp_path):
-    db = "stream_overflow_test"
+def test_capped_flood_streams_to_batch_clusters(spark, tmp_path):
+    """A near-dup flood over ``bucket_cap`` streamed in two micro-batches
+    lands in the one cluster ``run_dedup`` gives it: every increment
+    expands its over-cap buckets as chain+star pairs, and no arrival is
+    dropped from a bucket."""
+    db = "stream_flood_test"
+    cfg = EngineConfig(bucket_cap=2)
     spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
     spark.sql(f"CREATE DATABASE {db} LOCATION '{tmp_path / 'store'}'")
     inp = tmp_path / "in"
     inp.mkdir()
+    body = "same boilerplate text for every page here with shared words"
     flood = pd.DataFrame(
         {
-            "url": [f"u://flood{i}" for i in range(4)],
-            "warc_ts": [pd.Timestamp("2025-01-01", tz="UTC")] * 4,
-            "html": [b""] * 4,
-            "text": ["same boilerplate text for every page here"] * 4,
-            "lang": ["en"] * 4,
+            "url": [f"u://flood{i}" for i in range(6)],
+            "warc_ts": [pd.Timestamp("2025-01-01", tz="UTC")] * 6,
+            "html": [b""] * 6,
+            "text": [f"{body} variant{i}" for i in range(6)],
+            "lang": ["en"] * 6,
         }
     )
-    _write_pages(flood, str(inp), "b0.parquet")
+    for i in range(2):
+        _write_pages(flood.iloc[i * 3 : i * 3 + 3], str(inp), f"b{i}.parquet")
     q = streaming_dedup(
         spark,
-        ingest.read_pages_stream(spark, str(inp)),
+        ingest.read_pages_stream(spark, str(inp), max_files_per_trigger=1),
         db,
         checkpoint=str(tmp_path / "ck"),
-        cfg=EngineConfig(bucket_cap=2),
+        cfg=cfg,
     )
     q.awaitTermination()
-    # cap=2 keeps the first two arrivals of every shared bucket; the
-    # other two are reported per capped bucket, not silently dropped
-    overflow = spark.table(f"{db}.lsh_overflow").collect()
-    assert overflow
-    assert {r.n_dropped for r in overflow} == {2}
-    assert {r.batch_id for r in overflow} == {0}
+    got = _label_sets(
+        spark.table(f"{db}.labels").select("url", "cluster_id").collect()
+    )
+
+    full = run_dedup(spark, spark.createDataFrame(flood), cfg, use_html=False)
+    want = _label_sets(
+        full.clusters.filter("kind = 'SIMILAR'")
+        .select("url", "cluster_id")
+        .collect()
+    )
+    full.cleanup()
+    assert want == {"u://flood0": frozenset(flood.url)}
+    assert got == want
     spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")

@@ -709,3 +709,49 @@ def test_interleaved_batches_migrate_graph_ownership(spark, tiny_corpus, tmp_pat
     }
     assert sig_urls == want_owners
     spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+
+
+def test_ingest_reports_capped_buckets(spark, tmp_path):
+    """An increment whose batch fills a bucket past ``bucket_cap``
+    reports it on its IngestResult with the batch pass's own counts; the
+    next increment, with no hot bucket, reports zero."""
+    import datetime
+
+    import pandas as pd
+
+    from mediaduplicatefinder_spark.config import EngineConfig
+
+    cfg = EngineConfig(bucket_cap=2)
+    body = "same boilerplate text for every page here with shared words"
+
+    def pages(urls, texts):
+        return spark.createDataFrame(
+            pd.DataFrame(
+                {
+                    "url": urls,
+                    "warc_ts": [datetime.datetime(2026, 1, 1)] * len(urls),
+                    "lang": ["en"] * len(urls),
+                    "text": texts,
+                }
+            )
+        )
+
+    flood = pages(
+        [f"u://flood{i}" for i in range(4)],
+        [f"{body} variant{i}" for i in range(4)],
+    )
+    db = "incr_capped_metrics_test"
+    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+    init_store(spark, db, location=str(tmp_path / "store"))
+    r1 = ingest_batch(spark, flood, db, cfg=cfg, use_html=False)
+
+    full = run_dedup(spark, flood, cfg, use_html=False)
+    m = full.metrics.collect()[0]
+    full.cleanup()
+    assert r1.capped_buckets > 0
+    assert (r1.capped_buckets, r1.capped_docs) == (m.capped_buckets, m.capped_docs)
+
+    lone = pages(["u://lone"], ["an unrelated page about something else entirely"])
+    r2 = ingest_batch(spark, lone, db, cfg=cfg, use_html=False)
+    assert (r2.capped_buckets, r2.capped_docs) == (0, 0)
+    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
